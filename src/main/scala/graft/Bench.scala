@@ -1,11 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 object Bench {
 
   /** Cumulative hypervisor-steal ticks from /proc/stat (field 8 of the
     * aggregate `cpu` line). The round-13 adjudication instrument
-    * (ProfileSetSimAB), folded into the bench itself: identical
+    * (BASELINE.md *Host-steal adjudication: this round's timing noise
+    * is external*), folded into the bench itself: identical
     * binaries have measured 2-3× apart under neighbor bursts, and a
     * bench artifact without steal metadata cannot distinguish
     * regression from noise.
@@ -119,16 +119,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark =
+      GraftSession.local(GraftSession.cpus(default = 4)).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Silence WindowExec's "No Partition Defined" WARN for this run
     // ONLY: every partition-less window in the engine is bounded by

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions
 import graft.operators.{LineDedup, NbClassifier, NgramLm}
@@ -20,14 +20,8 @@ object ProfileCuration {
     val reps = if (args.length > 1) args(1).toInt else 2
     val factors = (if (args.length > 2) args(2) else "1,10")
       .split(',').map(_.trim.toInt).toSeq
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark =
+      GraftSession.local(GraftSession.cpus(default = 32)).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     val docs = Tables.documents(spark, d)

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.SetSimJoin
 
@@ -49,14 +49,8 @@ object ProfileIncScale {
       .split(',').map(_.trim.toInt).toSeq
     val archFactors = (if (args.length > 3) args(3) else "1,2,4")
       .split(',').map(_.trim.toInt).toSeq
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark =
+      GraftSession.local(GraftSession.cpus(default = 32)).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     // per-run shuffle-byte accounting (VERDICT r16 #2: the
@@ -77,7 +71,7 @@ object ProfileIncScale {
         }
       })
     // GRAFT_INC_STAGES=1: per-stage shuffle attribution (which exchange
-    // moves the bytes — the ProfileSetSimStages drill-down, inlined)
+    // moves the bytes)
     val stageMeter =
       scala.collection.concurrent.TrieMap.empty[Int, (String, Long, Long)]
     if (sys.env.contains("GRAFT_INC_STAGES"))

@@ -1,13 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dump the formatted physical plan of every bench headline (or the
   * names given as trailing args) to `<outDir>/<name>_<suffix>.txt` in
   * ONE JVM — the before/after plan-artifact capture for optimization
   * rounds: `runMain graft.ProfilePlanDumpAll <sfDir> <outDir> <suffix>
-  * [name ...]`. Dev-only instrument (ProfilePlanDump is the single-query
-  * eyeball tool; this one exists so a 32-headline sweep is one session,
-  * not 32 JVM launches).
+  * [name ...]`. Dev-only instrument; pass one name to eyeball a single
+  * query's plan, or none for the whole 32-headline sweep in one session.
   */
 object ProfilePlanDumpAll {
   def main(args: Array[String]): Unit = {
@@ -17,15 +15,8 @@ object ProfilePlanDumpAll {
     val names =
       if (args.length > 3) args.drop(3).toSeq
       else SparkEntry.headlines.map(_.name)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark =
+      GraftSession.local(GraftSession.cpus(default = 32)).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.foreach { name =>

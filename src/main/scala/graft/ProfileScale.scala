@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.Dedup
 
@@ -24,14 +24,8 @@ object ProfileScale {
     val reps = if (args.length > 1) args(1).toInt else 2
     val factors = (if (args.length > 2) args(2) else "1,4,10")
       .split(',').map(_.trim.toInt).toSeq
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark =
+      GraftSession.local(GraftSession.cpus(default = 32)).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     val docs = Tables.documents(spark, d)
@@ -72,7 +66,7 @@ object ProfileScale {
       println(s"k=$k corpus rows=${c.count()}")
       k -> c
     }
-    // INTERLEAVED passes (like ProfileShardSkew): the host shows
+    // INTERLEAVED passes (the standing A/B protocol): the host shows
     // multi-second CPU-steal bursts, and running each factor's reps
     // back-to-back lets one burst bias a whole arm — round-robin over
     // factors puts every arm under the same noise distribution, so the

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Ad-hoc query timer: `runMain graft.TimeQ <sfDir> [namePattern] [reps]`.
   * Runs each matching SparkEntry query `reps` times in one warm JVM and
@@ -11,20 +10,11 @@ object TimeQ {
     val sfDir = args(0)
     val pattern = if (args.length > 1) args(1) else ""
     val reps = if (args.length > 2) args(2).toInt else 1
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // SPARK_GRAFT_SHUFFLE decouples shuffle partitioning from the thread
-    // count — the lever for the shuffle-partition sensitivity sweep
-    // (plans must not depend on the harness's pinned CPU-count value)
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val builder = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
+    val builder = GraftSession.local(GraftSession.cpus(default = 32))
     // SPARK_GRAFT_CONF="k=v;k2=v2" — extra session confs for config
-    // sweeps (e.g. AQE coalescing dials) without recompiling
+    // sweeps (e.g. AQE coalescing dials, or
+    // spark.sql.shuffle.partitions=N to decouple shuffle partitioning
+    // from the thread count) without recompiling
     sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(';').filter(_.nonEmpty)
       .foreach { kv =>
         val i = kv.indexOf('=')
@@ -32,18 +22,13 @@ object TimeQ {
       })
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    // SPARK_GRAFT_ACTION=count reverts to the old pruning-prone action —
-    // only for A/B'ing the action itself.
-    val useCount = sys.env.get("SPARK_GRAFT_ACTION").contains("count")
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filter(_._1.contains(pattern))
       .foreach { case (name, fn) =>
         (1 to reps).foreach { i =>
           val t0 = System.nanoTime()
-          try {
-            val df = fn(spark, sfDir)
-            if (useCount) df.count() else BenchAction.consumeAll(df)
-          } catch { case e: Throwable => println(s"$name ERROR ${e.getMessage.take(80)}") }
+          try BenchAction.consumeAll(fn(spark, sfDir))
+          catch { case e: Throwable => println(s"$name ERROR ${e.getMessage.take(80)}") }
           println(f"$name%-28s it$i ${(System.nanoTime() - t0) / 1e9}%8.2f s")
         }
       }

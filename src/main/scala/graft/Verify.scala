@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -13,20 +12,8 @@ object Verify {
     // comma-separated alternatives, substring match
     val pats = (if (args.length > 2) args(2) else "").split(',').toSeq
     def keep(name: String): Boolean = pats.exists(name.contains)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // non-ANSI: CAST yields null on unparseable input, matching the
-      // reference's errors='coerce' semantics (SURVEY.md §7.4).
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      // events.parquet stores TIMESTAMP(NANOS); read as long, normalized
-      // to micros in graft.Tables.events.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark =
+      GraftSession.local(GraftSession.cpus(default = 4)).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(p => keep(p._1)).foreach { case (name, fn) =>

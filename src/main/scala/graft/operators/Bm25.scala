@@ -1107,47 +1107,6 @@ object Bm25 {
     * [[percolate]] — but with registry capacity bounded by broadcast
     * memory instead of plan size.
     */
-  /** Dev-only instrument: per-doc match-list SIZE via the RETIRED
-    * pre-r18 higher-order-function probe (the before-side of the
-    * percolate kernel A/B). NOTE this is no longer percolateJoin's
-    * plan — the shipped probe/fold is the codegen'd
-    * [[graft.functions.PercolateAlerts]] kernel, and this HOF tower
-    * pays the CodegenFallback boundary copy the kernel exists to
-    * avoid (~50× at cap registry scale, BASELINE round 18) — so its
-    * wall isolates the HOF TAX, not the shipped probe cost.
-    */
-  private[graft] def percolateMatchesOnly(docs: DataFrame,
-                                          compiled: DataFrame,
-                                          k1: Double = 1.2,
-                                          b: Double = 0.75,
-                                          idCol: String = "doc_id",
-                                          textCol: String = "text"): DataFrame = {
-    val tk = col("tk")
-    val dl = size(tk).cast("double")
-    val norm = lit(k1) * (lit(1.0) - lit(b) + lit(b) * dl / col("avgdl"))
-    val noEntries = array().cast(
-      "array<struct<query_id:bigint,idf:double>>")
-    val matches = flatten(transform(array_sort(array_distinct(tk)), t => {
-      val tf = size(filter(tk, x => x === t)).cast("double")
-      val entries = try_element_at(
-        try_element_at(col("qmap"),
-          pmod(xxhash64(t), lit(PercolateBuckets.toLong)).cast("int")), t)
-      transform(coalesce(entries, noEntries), e =>
-        struct(e.getField("query_id").as("qid"),
-          (e.getField("idf") * (tf * (lit(k1) + 1.0)) / (tf + norm))
-            .as("s")))
-    }))
-    val base = docs.filter(col(textCol).isNotNull)
-      .select(col(idCol).as("doc_id"),
-        graft.functions.TextFunctions.tokens(col(textCol)).as("tk"))
-      .crossJoin(broadcast(compiled))
-    if (sys.env.contains("GRAFT_PERC_EXPLODE_ONLY"))
-      base.select(col("doc_id"), explode(matches).as("e"))
-        .select(col("doc_id"), lit(1L).as("nm"))
-    else
-      base.select(col("doc_id"), size(matches).cast("long").as("nm"))
-  }
-
   def percolateJoin(docs: DataFrame, compiled: DataFrame,
                     threshold: Double, k1: Double = 1.2, b: Double = 0.75,
                     idCol: String = "doc_id",
@@ -1188,8 +1147,9 @@ object Bm25 {
   }
 
   /** The pre-r18 higher-order-function probe/fold — kept (dev-only) as
-    * the parity oracle for [[graft.functions.PercolateAlerts]] and the
-    * A/B arm in ProfilePercolate. Linear in registry size per document
+    * the parity oracle for [[graft.functions.PercolateAlerts]] (the
+    * kernel A/B it anchored is BASELINE.md *The CodegenFallback boundary
+    * copy*, round 18). Linear in registry size per document
     * (BASELINE.md round 17/18); do not ship new callers.
     */
   private[graft] def percolateJoinHof(docs: DataFrame, compiled: DataFrame,

@@ -30,11 +30,6 @@ import org.apache.spark.sql.functions._
   */
 object Bpe {
 
-  /** Last iteration-cache slot, evicted on the next train() call —
-    * same caller-owned contract as the [[Dedup]] slots.
-    */
-  private var lastIterCache: Option[DataFrame] = None
-
   /** Character symbols of a word column plus the terminal `endMark`
     * (omitted when empty): in-row, codegen HOFs only.
     */
@@ -109,34 +104,33 @@ object Bpe {
     require(numMerges >= 0, "numMerges must be >= 0")
     var cur = wordSymbolCounts(docs, toksCol, endMark)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    Bpe.synchronized {
-      lastIterCache.foreach(_.unpersist(blocking = false))
-      lastIterCache = Some(cur)
-    }
     val merges = Seq.newBuilder[(String, String)]
     var i = 0
     var done = false
-    while (i < numMerges && !done) {
-      // deterministic argmax: count desc, then lexicographic (a, b)
-      val top = pairCounts(cur)
-        .orderBy(desc("cnt"), asc("a"), asc("b")).limit(1)
-        .collect()
-      if (top.isEmpty) done = true
-      else {
-        val (a, b) = (top(0).getString(0), top(0).getString(1))
-        merges += ((a, b))
-        val next = cur.select(col("word"), col("freq"),
-            mergeOnce(col("syms"), a, b).as("syms"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        // materialize the new table BEFORE releasing the old one so
-        // the fold runs once, not once per downstream consumer
-        next.count()
-        cur.unpersist(blocking = false)
-        cur = next
-        Bpe.synchronized { lastIterCache = Some(cur) }
+    // the merge list is eager, so the last table is dead on return:
+    // release it here, on failure too, rather than leave it cached
+    try {
+      while (i < numMerges && !done) {
+        // deterministic argmax: count desc, then lexicographic (a, b)
+        val top = pairCounts(cur)
+          .orderBy(desc("cnt"), asc("a"), asc("b")).limit(1)
+          .collect()
+        if (top.isEmpty) done = true
+        else {
+          val (a, b) = (top(0).getString(0), top(0).getString(1))
+          merges += ((a, b))
+          val next = cur.select(col("word"), col("freq"),
+              mergeOnce(col("syms"), a, b).as("syms"))
+            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          // materialize the new table BEFORE releasing the old one so
+          // the fold runs once, not once per downstream consumer
+          next.count()
+          cur.unpersist(blocking = false)
+          cur = next
+        }
+        i += 1
       }
-      i += 1
-    }
+    } finally cur.unpersist(blocking = false)
     merges.result()
   }
 

@@ -717,40 +717,6 @@ object SetSimJoin {
     (st.getLong(0), st.getLong(1))
   }
 
-  /** Every pair (a, b, inter, jaccard ≥ t) the BATCH introduces against
-    * a stored corpus — stored×batch and batch-internal pairs, each
-    * once (a < b), recall 1.0. The incremental-dedup lifecycle for the
-    * exact join: the stored corpus' sets are read back, never
-    * re-tokenized and never re-sorted (value order is df-free), and
-    * candidate generation exposes value-order prefixes of BOTH sides —
-    * the same prefix/positional mathematics as [[jaccardPairs]] (any
-    * fixed total order works; the minimal-shared-token argument only
-    * needs "a prefix is a prefix of the global order"). Pairs wholly
-    * inside the stored corpus are the PRIOR audits' output and are not
-    * re-emitted: incremental(stored, batch) ∪ prior == rebuild over
-    * stored ∪ batch (spec-pinned).
-    */
-  /** @param bloomItems sizing for the batch-token Bloom that prunes
-    *                    the union-side prefix exchange (see below);
-    *                    ≤ 0 disables the prune — the measurement
-    *                    escape hatch ProfileIncPrune A/Bs with.
-    */
-  /** Survivors-only array fetch for the incremental audits, with
-    * SIZE-CONDITIONED tiny-side hints (VERDICT r17 #2 / ADVICE r17
-    * medium). The r17 fix hinted `candIds` and its a-fetch
-    * intermediate unconditionally — correct in the audit regime
-    * (candidates are batch-proportional) but a hard runtime failure
-    * waiting on a high-duplication batch: an unbounded candidate set
-    * forced into a driver-side broadcast can exceed Spark's 8 GB
-    * broadcast limit where the unhinted shuffle plan would have
-    * completed (slowly). Now the candidate set is lineage-cut and
-    * COUNTED first (the fetch reuses the checkpoint, so candidate
-    * generation still runs once), the hints engage only when the
-    * measured EXACT count fits a safety ceiling — the fitsBroadcast
-    * discipline of the candidate joins above, with a measured count in
-    * place of an estimate — and the fallback to the unhinted joins is
-    * loud.
-    */
   /** Safety ceiling for the ids-only fetch broadcast: the `sides`
     * frame carries ~120 B per candidate pair (ids + lengths, never a
     * token array), so this admits ~2M pairs while staying two orders
@@ -767,6 +733,22 @@ object SetSimJoin {
     */
   private[graft] val FetchTokenBytes: Long = 64L
 
+  /** Survivors-only array fetch for the incremental audits, with
+    * SIZE-CONDITIONED tiny-side hints (VERDICT r17 #2 / ADVICE r17
+    * medium). The r17 fix hinted `candIds` and its a-fetch
+    * intermediate unconditionally — correct in the audit regime
+    * (candidates are batch-proportional) but a hard runtime failure
+    * waiting on a high-duplication batch: an unbounded candidate set
+    * forced into a driver-side broadcast can exceed Spark's 8 GB
+    * broadcast limit where the unhinted shuffle plan would have
+    * completed (slowly). Now the candidate set is lineage-cut and
+    * COUNTED first (the fetch reuses the checkpoint, so candidate
+    * generation still runs once), the hints engage only when the
+    * measured EXACT count fits a safety ceiling — the fitsBroadcast
+    * discipline of the candidate joins above, with a measured count in
+    * place of an estimate — and the fallback to the unhinted joins is
+    * loud.
+    */
   private def fetchCandidateArrays(spark: org.apache.spark.sql.SparkSession,
                                    candIds: DataFrame, union: DataFrame,
                                    caller: String): DataFrame = {
@@ -844,6 +826,25 @@ object SetSimJoin {
     }
   }
 
+  /** Every pair (a, b, inter, jaccard ≥ t) the BATCH introduces against
+    * a stored corpus — stored×batch and batch-internal pairs, each
+    * once (a < b), recall 1.0. The incremental-dedup lifecycle for the
+    * exact join: the stored corpus' sets are read back, never
+    * re-tokenized and never re-sorted (value order is df-free), and
+    * candidate generation exposes value-order prefixes of BOTH sides —
+    * the same prefix/positional mathematics as [[jaccardPairs]] (any
+    * fixed total order works; the minimal-shared-token argument only
+    * needs "a prefix is a prefix of the global order"). Pairs wholly
+    * inside the stored corpus are the PRIOR audits' output and are not
+    * re-emitted: incremental(stored, batch) ∪ prior == rebuild over
+    * stored ∪ batch (spec-pinned).
+    *
+    * @param bloomItems sizing for the batch-token Bloom that prunes the
+    *                   union-side prefix exchange (see below); ≤ 0
+    *                   disables the prune — the measurement escape hatch
+    *                   of the Bloom A/B (BASELINE.md *Adaptive Bloom
+    *                   pruning across the set-similarity family*, round 14).
+    */
   def incrementalJaccardPairs(spark: org.apache.spark.sql.SparkSession,
                               path: String, newDocs: DataFrame,
                               idCol: String, toksCol: String,
@@ -908,8 +909,9 @@ object SetSimJoin {
     // stats): when the batch's slim prefix rows fit the broadcast
     // threshold the planner broadcasts them, the a-side never
     // exchanges, and the Bloom would be pure measured overhead
-    // (ProfileIncPrune: +0.9 s on the gate corpus for zero exchange
-    // saved) — so the prune engages only above it. The batch stats
+    // (+0.9 s on the gate corpus for zero exchange saved: BASELINE.md
+    // *Adaptive Bloom pruning across the set-similarity family*) — so
+    // the prune engages only above it. The batch stats
     // came from the fused disjoint-check job above, which also
     // materialized the batch checkpoint the main query reuses.
     val batchSlimBytes = 24L * (bRows + bToks)
@@ -1440,7 +1442,8 @@ object SetSimJoin {
     // the batch's slim instance rows fit the broadcast threshold, both
     // branches broadcast their batch-sized input, no archive exchange
     // exists, and every Bloom is measured pure overhead (+1.5–2 s on
-    // the gate corpus, ProfileIncPrune) — engage only above it. The
+    // the gate corpus, BASELINE.md *Adaptive Bloom pruning across the
+    // set-similarity family*) — engage only above it. The
     // batch stats came from the fused disjoint-check job above, which
     // also materialized the batch checkpoint the main query reuses.
     val batchSlimBytes = 24L * (bRows + bToks)

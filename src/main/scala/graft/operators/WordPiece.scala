@@ -29,11 +29,6 @@ import org.apache.spark.sql.functions._
   */
 object WordPiece {
 
-  /** Last iteration-cache slot, evicted on the next train() call —
-    * same caller-owned contract as the [[Bpe]] / [[Dedup]] slots.
-    */
-  private var lastIterCache: Option[DataFrame] = None
-
   /** Character symbols of a word with the WordPiece continuation
     * prefix: "scan" → ["s", "##c", "##a", "##n"]. In-row codegen HOFs
     * only (the [[Bpe.symbols]] pattern with a positional prefix instead
@@ -108,41 +103,40 @@ object WordPiece {
     require(numMerges >= 0, "numMerges must be >= 0")
     var cur = wordSymbolCounts(docs, toksCol, contPrefix)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    WordPiece.synchronized {
-      lastIterCache.foreach(_.unpersist(blocking = false))
-      lastIterCache = Some(cur)
-    }
     val merges = Seq.newBuilder[(String, String)]
     var i = 0
     var done = false
-    while (i < numMerges && !done) {
-      val syms = symbolCounts(cur)
-      // the ONE pinned score expression: double division of double
-      // product — trainLocal computes the same three casts in the same
-      // order, so double rounding cannot flip the argmax between engines
-      val top = pairCounts(cur)
-        .join(syms.select(col("sym").as("a"), col("cnt").as("ca")), "a")
-        .join(syms.select(col("sym").as("b"), col("cnt").as("cb")), "b")
-        .select(col("a"), col("b"),
-          (col("cnt").cast("double") /
-            (col("ca").cast("double") * col("cb").cast("double")))
-            .as("score"))
-        .orderBy(desc("score"), asc("a"), asc("b")).limit(1)
-        .collect()
-      if (top.isEmpty) done = true
-      else {
-        val (a, b) = (top(0).getString(0), top(0).getString(1))
-        merges += ((a, b))
-        val next = cur.select(col("word"), col("freq"),
-            mergeOnce(col("syms"), a, b, contPrefix).as("syms"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        next.count()
-        cur.unpersist(blocking = false)
-        cur = next
-        WordPiece.synchronized { lastIterCache = Some(cur) }
+    // the merge list is eager, so the last table is dead on return:
+    // release it here, on failure too, rather than leave it cached
+    try {
+      while (i < numMerges && !done) {
+        val syms = symbolCounts(cur)
+        // the ONE pinned score expression: double division of double
+        // product — trainLocal computes the same three casts in the same
+        // order, so double rounding cannot flip the argmax between engines
+        val top = pairCounts(cur)
+          .join(syms.select(col("sym").as("a"), col("cnt").as("ca")), "a")
+          .join(syms.select(col("sym").as("b"), col("cnt").as("cb")), "b")
+          .select(col("a"), col("b"),
+            (col("cnt").cast("double") /
+              (col("ca").cast("double") * col("cb").cast("double")))
+              .as("score"))
+          .orderBy(desc("score"), asc("a"), asc("b")).limit(1)
+          .collect()
+        if (top.isEmpty) done = true
+        else {
+          val (a, b) = (top(0).getString(0), top(0).getString(1))
+          merges += ((a, b))
+          val next = cur.select(col("word"), col("freq"),
+              mergeOnce(col("syms"), a, b, contPrefix).as("syms"))
+            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          next.count()
+          cur.unpersist(blocking = false)
+          cur = next
+        }
+        i += 1
       }
-      i += 1
-    }
+    } finally cur.unpersist(blocking = false)
     merges.result()
   }
 

@@ -570,7 +570,8 @@ object SimilaritySuite extends QuerySuite {
   // mixer — the Ge et al. 2013 "unbalanced variance" regime, the one
   // corpus shape where a rotation provably has something to win), raw
   // ADC recall is capped by inter-subspace correlation and a trained
-  // rotation recovers it. Measured (ProfileOpqGain, rho = 0.95):
+  // rotation recovers it. Measured (BASELINE.md *Rotation-gain
+  // measurements*, round 15; rho = 0.95):
   // identity/none/Givens all read 0.53 / 0.54 / 0.355 at
   // sf0.001/0.01/0.1 while trained reads 0.63 / 0.70 / 0.43 — gain
   // +0.075..+0.16, identical across same-config reps. The gate pins
@@ -1085,8 +1086,8 @@ object SimilaritySuite extends QuerySuite {
   // rotation is deterministic only up to float summation order, so the
   // oracle is the q_kmeans_centroids convention: SQL-decidable shape
   // facts (query count, exactly k rows per query) plus a recall floor
-  // against the exact top-k with wide margin. Measured (ProfileOpqGate
-  // decomposition): plain ADC@5 reads 0.11–0.20 on this fixture at
+  // against the exact top-k with wide margin. Measured (BASELINE.md
+  // *Trained-OPQ gate decomposition*, round 14): plain ADC@5 reads 0.11–0.20 on this fixture at
   // every rotation incl. NONE (within-cluster points are near-ties m=16
   // codes cannot split — the fixture has 35 distinct positions per
   // cluster), while shortlist-200 + exact rerank reads 0.95 triple-SF

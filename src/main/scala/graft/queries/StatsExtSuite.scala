@@ -551,9 +551,11 @@ object StatsExtSuite extends QuerySuite {
   // that is the whole point of mergeable sketches: shard states are
   // written to a parquet table once (the one corpus-sized pass, eager),
   // and every answer below is derived from the STORED table — the
-  // returned plan never touches the corpus again (ExplainQ: the only
-  // scan subtree is the KB-sized states parquet, or a LocalRelation
-  // where the merge is driver-side). Paths are per-gate/per-SF so the
+  // returned plan never touches the corpus again (in the physical plan
+  // the only scan subtree is the KB-sized states parquet, or a
+  // LocalRelation where the merge is driver-side; BASELINE.md
+  // *Third-session TimeQ floors and new headline bands* records the
+  // double corpus scan the lifecycle replaces). Paths are per-gate/per-SF so the
   // driver's triple-SF sweep can't cross-contaminate.
 
   private def statesPath(gate: String, d: String): String =
@@ -710,8 +712,9 @@ object StatsExtSuite extends QuerySuite {
   // Bottom-k answers as a DISTRIBUTED plan over the stored states —
   // the one sketch whose merge is itself a DataFrame program. The
   // loaded table is lineage-cut so per-shard AND merged answers share
-  // ONE parquet scan (the r10 ExplainQ finding on q_bottomk_sketch was
-  // exactly the double scan subtree); no exact_distinct companion —
+  // ONE parquet scan (the r10 plan audit of q_bottomk_sketch, BASELINE.md
+  // *Third-session TimeQ floors and new headline bands*, found exactly
+  // the double scan subtree); no exact_distinct companion —
   // that column is what forced the original gate back to the corpus.
   private val kmvStoredQ = GraftQuery(
     "q_kmv_stored",

@@ -22,7 +22,8 @@ import graft.operators.Dedup
   * rendering of the batch skew guard's anti-join (pathological
   * boilerplate buckets must not go quadratic in STATE either). State
   * beyond heap is the measured RocksDB-provider territory
-  * (ProfileStreamState: 30M live keys on 4 GB heap).
+  * (BASELINE.md *Streaming state beyond heap — measured*, round 10:
+  * 30M live keys on 4 GB heap).
   *
   * Determinism contract: while every bucket stays under `maxBucket`,
   * the emitted pair SET is exactly the co-bucket pair set — identical

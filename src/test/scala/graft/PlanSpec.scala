@@ -1,7 +1,12 @@
 package graft
 
-import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
+import org.apache.spark.sql.execution.{QueryExecution, RDDScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.execution.joins.BaseJoinExec
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Physical-plan invariants (SURVEY.md §4.2): these are the properties
@@ -31,6 +36,56 @@ class PlanSpec extends AnyFunSuite {
   private def finalPlan(p: SparkPlan): SparkPlan = p match {
     case a: AdaptiveSparkPlanExec => a.executedPlan
     case other => other
+  }
+
+  /** The plan that materializes packing's own lineage cut, the narrow
+    * `(id, n_tokens)` frame its range exchange samples, while gate
+    * `name` is built. A cut is a lazy `localCheckpoint`, which reports
+    * to query-execution listeners under that action name; the events
+    * arrive asynchronously, so this waits for the first matching one.
+    */
+  private def packingCutPlan(name: String): SparkPlan = {
+    val seen = new LinkedBlockingQueue[SparkPlan]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(action: String, qe: QueryExecution,
+                             durationNs: Long): Unit =
+        if (action == "localCheckpoint" &&
+            qe.analyzed.output.map(_.name) == Seq("id", "n_tokens"))
+          seen.add(finalPlan(qe.executedPlan))
+      override def onFailure(action: String, qe: QueryExecution,
+                             e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      SparkEntry.queries(name)(spark, sf)
+      Option(seen.poll(30, TimeUnit.SECONDS))
+        .getOrElse(fail(s"$name: packing's (id, n_tokens) cut never ran"))
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  /** The survivor-cut contract of a packing pipeline. Packing always
+    * cuts its narrow input before the range exchange, so the final plan
+    * holds an ExistingRDD with or without the caller's cut. The
+    * caller's cut decides what packing's cut materializes: with it, a
+    * projection over the survivors' checkpoint; without it, the dedup
+    * join itself, which q_html_pipeline's title join-back then derives
+    * a second time.
+    */
+  private def assertSurvivorsCut(name: String): Unit = {
+    // AQE query stages are leaves; look inside them
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case q: QueryStageExec => nodes(q.plan)
+      case other => other +: other.children.flatMap(nodes)
+    }
+    val p = packingCutPlan(name)
+    val all = nodes(p)
+    val rederived = all.filter {
+      case _: BaseJoinExec | _: BaseAggregateExec | _: Exchange => true
+      case _ => false
+    }
+    val leaves = all.filter(_.children.isEmpty)
+    assert(rederived.isEmpty && leaves.forall(_.isInstanceOf[RDDScanExec]),
+      s"$name: packing's cut re-derives the dedup survivors:\n$p")
   }
 
   test("q_filter_sort: predicate pushed to parquet scan, schema pruned") {
@@ -300,18 +355,14 @@ class PlanSpec extends AnyFunSuite {
   test("q_html_pipeline: dedup survivors are cut before packing") {
     // packByTokenBudget's repartitionByRange SAMPLES its child for
     // range bounds; uncut, the HTML-extraction tower under the
-    // semi-join executes three times (sampler, exchange, title
-    // join-back). The survivors boundary must stay a checkpoint scan.
-    val s = planNoExec("q_html_pipeline")
-    assert(s.contains("ExistingRDD"),
-      s"survivor-boundary localCheckpoint missing — plan:\n$s")
+    // semi-join runs inside packing's own cut and again for the title
+    // join-back. The survivors boundary must stay a checkpoint scan.
+    assertSurvivorsCut("q_html_pipeline")
   }
 
   test("q_pretrain_pipeline: dedup survivors are cut before packing") {
     // same contract as q_html_pipeline for the fixed-length packer
-    val s = planNoExec("q_pretrain_pipeline")
-    assert(s.contains("ExistingRDD"),
-      s"survivor-boundary localCheckpoint missing — plan:\n$s")
+    assertSurvivorsCut("q_pretrain_pipeline")
   }
 
   test("parquet MIN/MAX/COUNT aggregates push down to the scan") {

@@ -152,6 +152,21 @@ class Bm25Spec extends AnyFunSuite {
     assert(before == after)
   }
 
+  test("a null-text doc counts in n and adds 0 to sum_dl") {
+    // saveIndex's stats contract: n is a direct corpus count, while
+    // sum_dl folds out of the postings, where a null text is a
+    // zero-token doc (fixture lengths 3 + 2 + 4 + 8 = 17)
+    val path = freshPath("nulltext")
+    val withNull = fixture.unionByName(
+      Seq((4L, None: Option[String])).toDF("doc_id", "text"))
+    Bm25.saveIndex(withNull, path)
+    val stats = Bm25.loadIndex(spark, path).stats
+      .selectExpr("CAST(n AS BIGINT)", "CAST(sum_dl AS BIGINT)").head()
+    assert(stats.getLong(0) == 5L, s"n must count the null-text doc: $stats")
+    assert(stats.getLong(1) == 17L,
+      s"the null-text doc must add 0 to sum_dl: $stats")
+  }
+
   test("percolate excludes null-text docs instead of scoring garbage") {
     val path = freshPath("pnull")
     Bm25.saveIndex(fixture, path)

@@ -120,4 +120,18 @@ class CacheEvictionSpec extends AnyFunSuite {
     // hygiene: leave nothing behind for other suites
     spark.sharedState.cacheManager.clearCache()
   }
+
+  test("sequential Bpe.train and WordPiece.train leave no cache entry") {
+    // both return an eager merge list, so the persisted per-iteration
+    // symbol table is dead on return and must not outlive the call
+    spark.sharedState.cacheManager.clearCache()
+    val docs = Seq(Seq("low", "lower", "newest", "widest"),
+      Seq("low", "lowest", "newer")).toDF("toks")
+    assert(Bpe.train(docs, "toks", numMerges = 3).size == 3)
+    assert(cacheEntries == 0,
+      "Bpe.train must release its last symbol table before returning")
+    assert(WordPiece.train(docs, "toks", numMerges = 3).size == 3)
+    assert(cacheEntries == 0,
+      "WordPiece.train must release its last symbol table before returning")
+  }
 }
