@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions
+import graft.plans.SideJobs
 
 /** Okapi BM25 ranked retrieval — the SPARSE member of the similarity
   * family (reference scope: the engine's document retrieval/selection
@@ -178,27 +179,14 @@ object Bm25 {
         // postings write just materialized — overlap their write jobs
         // (guide §2.6) instead of serializing two more job floors; the
         // mutation marker already brackets all three tables.
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-        try {
-          val jobs = Seq(
-            pool.submit(new Runnable {
-              override def run(): Unit =
-                dfreq.withColumn("index_format", lit(IndexFormatPrefix))
-                  .write.mode("overwrite").parquet(s"$path/dfreq")
-            }),
-            pool.submit(new Runnable {
-              override def run(): Unit =
-                stats.withColumn("index_format", lit(IndexFormatPrefix))
-                  .write.mode("overwrite").parquet(s"$path/stats")
-            }))
-          jobs.foreach { j =>
-            try j.get()
-            catch {
-              case e: java.util.concurrent.ExecutionException =>
-                throw e.getCause
-            }
-          }
-        } finally pool.shutdown()
+        Seq(
+          SideJobs.fork(
+            dfreq.withColumn("index_format", lit(IndexFormatPrefix))
+              .write.mode("overwrite").parquet(s"$path/dfreq")),
+          SideJobs.fork(
+            stats.withColumn("index_format", lit(IndexFormatPrefix))
+              .write.mode("overwrite").parquet(s"$path/stats"))
+        ).foreach(_())
       } finally tf.unpersist(blocking = false)
     }
   }
@@ -266,24 +254,12 @@ object Bm25 {
     // sequentially they serialize three planning+scheduling floors at
     // the head of every index load. Spark's scheduler runs concurrent
     // jobs fine (guide §2.6 overlap-independent-jobs) — submit them
-    // from a 3-thread pool and join.
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
-    try {
-      val fs3 = Seq("postings", "dfreq", "stats").map { sub =>
-        pool.submit(new java.util.concurrent.Callable[DataFrame] {
-          override def call(): DataFrame = checkedRead(spark, path, sub)
-        })
-      }
-      def await(f: java.util.concurrent.Future[DataFrame]): DataFrame =
-        try f.get()
-        catch {
-          // surface the stamp check's own require() failure, not the
-          // pool's wrapper (callers and specs match on the message/type)
-          case e: java.util.concurrent.ExecutionException =>
-            throw e.getCause
-        }
-      Bm25Index(await(fs3(0)), await(fs3(1)), await(fs3(2)))
-    } finally pool.shutdown()
+    // from three side threads and join (a stamp check's own require()
+    // failure surfaces as itself).
+    val Seq(postings, dfreq, stats) = Seq("postings", "dfreq", "stats")
+      .map(sub => SideJobs.fork(checkedRead(spark, path, sub)))
+      .map(_())
+    Bm25Index(postings, dfreq, stats)
   }
 
   /** Append a NEW batch of documents to a stored index without
@@ -651,34 +627,21 @@ object Bm25 {
     // Only the registry TOKENIZE guard stays sequential, behind the
     // row-count cap: an oversized registry must refuse before paying
     // its tokenize pass.
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
-    def submit[T](f: => T) =
-      pool.submit(new java.util.concurrent.Callable[T] {
-        override def call(): T = f
-      })
-    def await[T](fu: java.util.concurrent.Future[T]): T =
-      try fu.get()
-      catch {
-        case e: java.util.concurrent.ExecutionException => throw e.getCause
-      }
-    val (qguard, stats, dfh) =
-      try {
-        val qgF = submit(
-          queries.select(col("query_id").cast("long").as("qid"))
-            .groupBy("qid").agg(count(lit(1)).as("c"))
-            .agg(coalesce(sum(col("c")), lit(0L)).as("qn"),
-              coalesce(sum(when(col("qid").isNull, col("c"))), lit(0L))
-                .as("n_null"),
-              coalesce(max(when(col("qid").isNotNull, col("c"))), lit(0L))
-                .as("max_c"))
-            .head())
-        val stF = submit(index.stats
-          .select(col("n").cast("long"), col("sum_dl").cast("long")).head())
-        val dfF = submit(index.dfreq
-          .agg(coalesce(sum(xxhash64(col("tok"), col("df"))), lit(0L)))
-          .head().getLong(0))
-        (await(qgF), await(stF), await(dfF))
-      } finally pool.shutdown()
+    val qgF = SideJobs.fork(
+      queries.select(col("query_id").cast("long").as("qid"))
+        .groupBy("qid").agg(count(lit(1)).as("c"))
+        .agg(coalesce(sum(col("c")), lit(0L)).as("qn"),
+          coalesce(sum(when(col("qid").isNull, col("c"))), lit(0L))
+            .as("n_null"),
+          coalesce(max(when(col("qid").isNotNull, col("c"))), lit(0L))
+            .as("max_c"))
+        .head())
+    val stF = SideJobs.fork(index.stats
+      .select(col("n").cast("long"), col("sum_dl").cast("long")).head())
+    val dfF = SideJobs.fork(index.dfreq
+      .agg(coalesce(sum(xxhash64(col("tok"), col("df"))), lit(0L)))
+      .head().getLong(0))
+    val (qguard, stats, dfh) = (qgF(), stF(), dfF())
     val qn = qguard.getLong(0)
     require(qn > 0 && qn <= maxQueries,
       s"compilePercolateTable: query side must have 1..$maxQueries rows, " +

@@ -34,27 +34,6 @@ object Dedup {
     */
   val DefaultShingleK: Int = 5
 
-  /** Last [[nearDuplicatePairs]] signature cache, evicted on the next call
-    * so repeated invocations can't accumulate dead persisted plans.
-    *
-    * Eviction (for all the slots below) assumes the common one-caller-at-a-
-    * time usage: two CONCURRENT calls can interleave persist/unpersist so
-    * one caller's in-flight job loses its cache — safe (an unpersisted
-    * plan lazily recomputes, it never fails) but no longer accelerated.
-    */
-  private var lastSigCache: Option[DataFrame] = None
-
-  /** Last [[connectedComponents]] result cache, same eviction contract. */
-  private var lastLabelsCache: Option[DataFrame] = None
-
-  /** Last [[simhashNearPairs]] packed-signature cache, same contract. */
-  private var lastPackedCache: Option[DataFrame] = None
-
-  /** Last [[crossShardDedupClusters]] label caches (within-shard + rep
-    * level — both feed the returned lazy stitch join), same contract.
-    */
-  private var lastCrossShardCaches: Seq[DataFrame] = Nil
-
   // ---------- exact ---------------------------------------------------
 
   /** One row per distinct content: keeper id (min), duplicate count. */
@@ -609,16 +588,11 @@ object Dedup {
   private def nearDupFromAttrs(attrFrame: DataFrame, minJaccard: Double,
                                numHashes: Int, shardCols: Seq[String],
                                maxBucket: Int): DataFrame = {
-    val attrs = attrFrame
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // CacheManager pins persisted plans until an explicit unpersist, so a
-    // long-lived session calling this operator repeatedly would accumulate
-    // one dead signature cache per call. Evict the previous call's cache
-    // (safe for laziness: an unpersisted plan recomputes, it doesn't fail).
-    Dedup.synchronized {
-      lastSigCache.foreach(_.unpersist(blocking = false))
-      lastSigCache = Some(attrs)
-    }
+    // read by banding and both verify joins of the returned lazy plan,
+    // so it outlives the call: GC-owned (the graft.plans.Lineage rule).
+    // The attribute projection is narrow: no job runs here unless the
+    // caller's input plan holds an exchange.
+    val attrs = attrFrame.localCheckpoint(false)
     val pairs = lshCandidatePairsFromSigs(attrs, numHashes,
       maxBucket = maxBucket, shardCols = shardCols)
     verifyCandidates(pairs, attrs, minJaccard)
@@ -755,47 +729,39 @@ object Dedup {
       attrFrame(docs, idCol, textCol, shingleK, numHashes,
         carryCols = shardCols))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // pass 1: within-shard pairs → within-shard clusters. Labels are
-    // caller-owned (registerCache=false): the default slot would be
-    // evicted by the SECOND connectedComponents call below while the
-    // stitch join still needs these labels live.
+    // pass 1: within-shard pairs → within-shard clusters. Both label
+    // frames feed the returned lazy stitch join; connectedComponents
+    // hands them back GC-owned, so they live exactly as long as it.
     val withinPairs = verifyCandidates(
       lshCandidatePairsFromSigs(attrs, numHashes, maxBucket = maxBucket,
         shardCols = shardCols),
       attrs, minJaccard)
     // node counts for the CC dense-graph probe come from frames this
     // operator materializes anyway (one attr row per doc, labels
-    // cached by CC) — never a fresh corpus scan (ADVICE r8): counting
+    // checkpointed by CC) — never a fresh corpus scan (ADVICE r8): counting
     // `attrs` triggers the signature computation both passes reuse.
     val nDocs = attrs.count()
     val shardLabels = connectedComponents(
       docs.select(col(idCol).as("id")), withinPairs,
-      registerCache = false, nodesCount = Some(nDocs))
+      nodesCount = Some(nDocs))
     // representatives: the min-id doc of each within-shard cluster is
     // exactly the doc whose id == its label (singletons represent
     // themselves)
     val reps = shardLabels.filter(col("id") === col("label")).select("id")
     val repAttrs = attrs.join(reps, Seq("id"), "left_semi")
     // pass 2: GLOBAL pairs over representatives (no shard key in the
-    // bucket join) → rep-level clusters; the rep count scans the cached
-    // label frame only
+    // bucket join) → rep-level clusters; the rep count scans the
+    // checkpointed label frame only
     val repPairs = verifyCandidates(
       lshCandidatePairsFromSigs(repAttrs, numHashes, maxBucket = maxBucket),
       repAttrs, minJaccard)
     val repLabels = connectedComponents(reps, repPairs,
-      registerCache = false, nodesCount = Some(reps.count()))
+      nodesCount = Some(reps.count()))
     // both passes have materialized through the attribute cache by now
     // (connectedComponents rounds are eager actions); the cache is this
     // operator's own in both branches (the caller-provided signature
     // table itself was only read to build it)
     attrs.unpersist(blocking = false)
-    // the two label frames feed the lazy stitch join the caller consumes;
-    // evict the previous call's pair so repeated invocations can't
-    // accumulate dead caches (same contract as the other slots).
-    Dedup.synchronized {
-      lastCrossShardCaches.foreach(_.unpersist(blocking = false))
-      lastCrossShardCaches = Seq(shardLabels, repLabels)
-    }
     // stitch: doc → its within-shard rep → the rep's global cluster
     shardLabels.select(col("id"), col("label").as("rep"))
       .join(repLabels.select(col("id").as("rep"), col("label").as("cluster")),
@@ -835,11 +801,6 @@ object Dedup {
       .drop("__fp")
   }
 
-  /** Last [[incrementalNearDupPairs]] corpus-signature cache, same
-    * eviction contract as the other slots.
-    */
-  private var lastIncSigCache: Option[DataFrame] = None
-
   /** Incremental-ingest NEAR-dup: the (batch doc, corpus doc) pairs whose
     * token-set jaccard meets `minJaccard` — "which batch docs are
     * near-duplicates of content already in the corpus", the natural
@@ -854,7 +815,7 @@ object Dedup {
     *
     *  - signatures are computed per side; the corpus signature pass is
     *    one scan (in production they are precomputed and stored — the
-    *    persisted frame here stands in for that signature table);
+    *    checkpointed frame here stands in for that signature table);
     *  - the corpus's banded rows are pruned by a Bloom filter over the
     *    BATCH's (band, bandHash) keys, delivered to the corpus stream as
     *    a scalar subquery ([[BloomJoin]] machinery): only corpus rows
@@ -898,17 +859,14 @@ object Dedup {
       expectedBatchBands: Long = 1000000L,
       corpusSigs: Option[DataFrame] = None): DataFrame = {
     val rowsPerBand = numHashes / numBands
+    // both signature sides are read several times by the returned lazy
+    // plan, so they outlive the call: GC-owned (the graft.plans.Lineage
+    // rule; narrow projections, so no job runs here on narrow inputs)
     val bSigs = signatures(newBatch, idCol, textCol, shingleK, numHashes)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .localCheckpoint(false)
     val cSigs = corpusSigs.map(checkSigFamily).getOrElse(
       signatures(corpus, idCol, textCol, shingleK, numHashes)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    Dedup.synchronized {
-      lastIncSigCache.foreach(_.unpersist(blocking = false))
-      lastIncSigCache = if (corpusSigs.isEmpty) Some(cSigs) else None
-      lastSigCache.foreach(_.unpersist(blocking = false))
-      lastSigCache = Some(bSigs)
-    }
+        .localCheckpoint(false))
     val bBand = bandedRows(bSigs, numBands, rowsPerBand)
     val cBand = bandedRows(cSigs, numBands, rowsPerBand)
     // Bloom over the batch's bucket keys; both sides fold (band, bh) into
@@ -1054,10 +1012,9 @@ object Dedup {
     * fixpoint test (one cheap action per round — the driver never
     * collects the labels themselves).
     */
-  /** @param registerCache when false the caller takes ownership of the
-    *   returned persisted frame's eviction (used by multi-CC operators
-    *   like [[crossShardDedupClusters]], where the default slot would
-    *   evict a frame the composed plan still needs).
+  /** The returned labels frame is GC-owned (the [[graft.plans.Lineage]]
+    * lifetime rule): its blocks live as long as the caller holds it.
+    *
     * @param nodesCount known node count, enabling the dense-graph probe
     *   WITHOUT a corpus-sized action: callers that already hold the
     *   count (e.g. from a cached signature frame) pass it and dense
@@ -1070,28 +1027,23 @@ object Dedup {
     */
   def connectedComponents(nodes: DataFrame, edges: DataFrame,
                           maxIter: Int = 30,
-                          usePersist: Boolean = true,
-                          registerCache: Boolean = true,
                           nodesCount: Option[Long] = None): DataFrame = {
-    // Iterative plans MUST truncate lineage each round (localCheckpoint,
-    // eager): chaining round N's plan into round N+1 doubles the logical
-    // plan per round — exponential planning cost that OOMs the driver
-    // near ~12 rounds. On a real cluster use spark.checkpoint.dir-backed
-    // checkpoint() for fault tolerance; local mode keeps blocks in the
-    // block manager.
+    // Iterative plans MUST truncate lineage each round: chaining round
+    // N's plan into round N+1 doubles the logical plan per round —
+    // exponential planning cost that OOMs the driver near ~12 rounds.
     //
-    // usePersist=true (default; NOTES_r3 candidate #2, interleaved-A/B
-    // measured faster at sf0.1 — BASELINE.md round 4): cut the logical
-    // lineage via LogicalRDD (createDataFrame over the round's RDD) +
-    // persist, with the previous round explicitly unpersisted once the
-    // new round is materialized — checkpointed rounds otherwise stay in
-    // the block manager until GC. Same O(1) logical plan per round;
+    // Rounds die inside this call, so they are persisted and released
+    // (the graft.plans.Lineage lifetime rule): the logical lineage is cut
+    // via LogicalRDD (createDataFrame over the round's RDD) + persist,
+    // with the previous round explicitly unpersisted once the new round
+    // is materialized. Interleaved-A/B measured faster at sf0.1 than
+    // eager localCheckpoint rounds (BASELINE.md *connectedComponents
+    // round materialization A/B*). Same O(1) logical plan per round;
     // blocks stay recoverable (lineage kept; eviction recomputes instead
-    // of failing the job, localCheckpoint's documented hazard).
+    // of failing the job, localCheckpoint's documented hazard). The
+    // LogicalRDD leaf is lazy; the per-round Σlabel action is what
+    // populates the cache, so no extra job is paid.
     val spark = nodes.sparkSession
-    // persist mode: LogicalRDD leaf (lazy) + cache; the per-round Σlabel
-    // action is what populates the cache, so no extra job is paid.
-    // checkpoint mode: eager localCheckpoint (materialization IS the job).
     // width > 0 ⇒ bytes-targeted COALESCE before materializing: a
     // materialized round otherwise freezes at the configured shuffle
     // width, below AQE's coalescing reach — the measured shuffle=128
@@ -1100,15 +1052,12 @@ object Dedup {
     // comes from the row count, never from spark.sql.shuffle.partitions.
     // Coalesce, not repartition: the merge is narrow (no exchange) —
     // the Lineage.cut lesson measured on the llm pipeline.
-    def materialize(df: DataFrame, width: Int = 0): DataFrame = {
-      val sized = if (width > 0) df.coalesce(width) else df
-      if (usePersist)
-        spark.createDataFrame(sized.rdd, df.schema)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else sized.localCheckpoint(true)
-    }
-    def release(df: DataFrame): Unit =
-      if (usePersist) df.unpersist(blocking = false)
+    def sized(df: DataFrame, width: Int): DataFrame =
+      if (width > 0) df.coalesce(width) else df
+    def materialize(df: DataFrame, width: Int = 0): DataFrame =
+      spark.createDataFrame(sized(df, width).rdd, df.schema)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    def release(df: DataFrame): Unit = df.unpersist(blocking = false)
     val sym = materialize(edges.select(col("a"), col("b"))
       .unionByName(edges.select(col("b").as("a"), col("a").as("b"))))
     // Propagation runs over edge PARTICIPANTS only when the dup graph is
@@ -1171,7 +1120,7 @@ object Dedup {
                 least(col("label"), coalesce(col("nl"), col("label")))
                   .as("label")), labelWidth)
       i += 1
-      // one action per round: fixpoint test + (persist mode) cache fill.
+      // one action per round: fixpoint test + cache fill.
       // Only after it may the previous round's blocks be dropped — the
       // new round computes FROM them.
       val s = BigDecimal(updated.agg(sum("label")).head().getLong(0))
@@ -1181,35 +1130,29 @@ object Dedup {
       prevSum = s
     }
     release(sym)
-    // Sparse path: rejoin isolated nodes as identity labels — one linear
-    // pass, materialized EAGERLY (count) so the participant frame can be
-    // released immediately: a lazy hand-off would leave the returned
-    // frame's lineage rooted in blocks we are about to free, turning
-    // the caller's first action into a full loop recompute. Dense path:
-    // the loop already ran over every node, so the labels frame IS the
-    // result — no rejoin pass to pay (that pass is exactly what the
-    // adaptive probe exists to avoid on dup-dense corpora).
+    // The returned frame outlives the call, so it is checkpointed
+    // EAGERLY: the round caches it derives from are released right
+    // after, and a lazy hand-off would leave its lineage rooted in
+    // freed blocks, turning the caller's first action into a full loop
+    // recompute. Sparse path: rejoin isolated nodes as identity labels
+    // — one linear pass. Dense path: the loop already ran over every
+    // node, so the labels ARE the result — no rejoin pass to pay (that
+    // pass is exactly what the adaptive probe exists to avoid on
+    // dup-dense corpora); one narrow job copies the in-memory round.
     val full =
-      if (dense) labels
+      if (dense) labels.localCheckpoint(true)
       else {
-        val f = materialize(nodes.select(col("id"))
+        val f = sized(nodes.select(col("id"))
           .join(labels.select(col("id"), col("label").as("plabel")),
                 Seq("id"), "left")
           .select(col("id"), coalesce(col("plabel"), col("id")).as("label")),
           nodesCount.map(n => graft.plans.Lineage
             .widthForBytes(spark, BigInt(n) * 48L)).getOrElse(0))
-        f.count()
+          .localCheckpoint(true)
         release(participants)
-        release(labels)
         f
       }
-    // the returned frame stays persisted (callers consume it next);
-    // evict the previous call's result so repeated invocations can't
-    // accumulate dead caches — same contract as the signature cache.
-    if (registerCache) Dedup.synchronized {
-      lastLabelsCache.foreach(_.unpersist(blocking = false))
-      lastLabelsCache = if (usePersist) Some(full) else None
-    }
+    release(labels)
     full
   }
 
@@ -1348,15 +1291,10 @@ object Dedup {
       maxBucket: Int = 2000): DataFrame = {
     val packed = simhashSignatures(docs, idCol, textCol)
       .select(col("id"), packBits(col("sig")).as("words"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // same eviction contract as the minhash signature cache: CacheManager
-    // pins persisted plans until an explicit unpersist, so the previous
-    // call's cache is released here (recomputes if still referenced —
-    // laziness makes that safe, never wrong).
-    Dedup.synchronized {
-      lastPackedCache.foreach(_.unpersist(blocking = false))
-      lastPackedCache = Some(packed)
-    }
+      // read by banding and the skew guard of the returned lazy plan:
+      // GC-owned (the graft.plans.Lineage rule). The signature plan
+      // aggregates and joins, so its exchanges run here, at call time.
+      .localCheckpoint(false)
     // Words travel WITH the banded rows (32 bytes/row) so the Hamming
     // verify evaluates inside the bucket join's projection — BEFORE the
     // distinct. On template-heavy corpora the 16-bit bands are loose

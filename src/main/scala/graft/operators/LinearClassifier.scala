@@ -80,43 +80,31 @@ object LinearClassifier {
 
   private def sigmoid(s: Column): Column = lit(1.0) / (lit(1.0) + exp(-s))
 
-  /** Last prepared-feature-frame cache, evicted on the next call —
-    * the caller-owned [[Dedup]] slot contract. Keeping it persisted
-    * past return lets [[trainScoreBinary]]'s scoring pass reuse the
-    * SAME materialized stream the training loop consumed instead of
-    * re-running tokenize+hash+explode over the corpus.
-    */
-  private var lastFeatsCache: Option[DataFrame] = None
-
   private[operators] def preparedFeatures(docs: DataFrame, idCol: String,
                                toksCol: String, labelCol: String,
                                numBuckets: Int): DataFrame = {
-    // one materialization, pre-partitioned on the doc id: every
-    // iteration's doc-keyed reduce and residual join (and the final
-    // scoring pass) reuse this partitioning instead of re-shuffling
-    // the corpus. localCheckpoint, NOT the LogicalRDD round-trip: the
-    // round-trip erases the output partitioning to UnknownPartitioning
-    // (plans/r18/q_linear_classify_before.txt — Scan ExistingRDD,
-    // UnknownPartitioning(0)), so every doc-keyed reduce and the
-    // gradient join re-shuffled the full feature stream each
-    // iteration; the checkpointed LogicalRDD keeps hash(idCol) visible
-    // to the planner (interleaved A/B: 4.08 vs 4.92 s gate floor at
-    // sf0.1). A PLAIN persist also keeps the partitioning but measured
-    // 2-5x WORSE here with wild variance (9-42 s) — the visible
-    // full lineage under the cache re-optimizes per consumer and
-    // interacts pathologically with the per-iteration uncache calls —
-    // so partitioning-preserving cuts in this loop must be
-    // checkpoint-shaped. Eviction: the slot's unpersist is a no-op on
-    // a checkpointed frame; blocks are reclaimed by the ContextCleaner
-    // once the slot drops the reference (the Lineage.cut convention).
-    val cutDf = features(docs, idCol, toksCol, labelCol, numBuckets)
+    // One materialization, hash-repartitioned on the doc id, read by
+    // every training iteration and by trainScoreBinary's scoring pass
+    // (re-deriving it re-runs tokenize+hash+explode over the corpus).
+    // The planner does NOT see that partitioning: in the
+    // q_linear_classify plan dump (ProfilePlanDumpAll, sf0.01; the same
+    // shape as plans/r18/q_linear_classify_after.txt) this frame scans
+    // as `Scan ExistingRDD ... localCheckpoint ... UnknownPartitioning(0)`
+    // and the scoring pass's doc-keyed aggregate still exchanges on
+    // hashpartitioning(doc_id) above it, so every doc-keyed reduce here
+    // re-shuffles. What the repartition does buy is co-location: a
+    // doc's unigram, bigram and intercept rows share one partition, so
+    // the partial aggregate below each exchange emits one row per doc.
+    // The interleaved A/B against the LogicalRDD round-trip (4.08 vs
+    // 4.92 s gate floor at sf0.1) therefore did not come from a kept
+    // partitioning. A PLAIN persist measured 2-5x WORSE here with wild
+    // variance (9-42 s) — the visible full lineage under the cache
+    // re-optimizes per consumer and interacts pathologically with the
+    // per-iteration uncache calls. The frame outlives the call, so it
+    // is GC-owned (the graft.plans.Lineage lifetime rule).
+    features(docs, idCol, toksCol, labelCol, numBuckets)
       .repartition(col(idCol))
       .localCheckpoint(false)
-    LinearClassifier.synchronized {
-      lastFeatsCache.foreach(_.unpersist(blocking = false))
-      lastFeatsCache = Some(cutDf)
-    }
-    cutDf
   }
 
   /** Train the weight vector: returns `(weights (bucket, wt), loss
@@ -159,10 +147,9 @@ object LinearClassifier {
     // compounding across up to MaxIters rounds) — truncate ITS lineage
     // with the LogicalRDD round-trip; it is ≤ B+1 rows, so the row
     // conversion and the lost partitioning cost nothing. `resid` is
-    // rebuilt per iteration from (feats, w_i) — no compounding — and a
-    // plain persist keeps its hash(idCol) partitioning (inherited from
-    // the feats cache through the broadcast join + aggregate), so the
-    // gradient join needs no exchange on either side.
+    // rebuilt per iteration from (feats, w_i) — no compounding. The
+    // returned weights outlive the call: the last round is checkpointed
+    // GC-owned instead (the graft.plans.Lineage lifetime rule).
     def cut(df: DataFrame): DataFrame =
       spark.createDataFrame(df.rdd, df.schema).persist(lvl)
     val nDocs = feats.select(col(idCol)).distinct().count().toDouble
@@ -183,14 +170,12 @@ object LinearClassifier {
           .select(col("bucket"), coalesce(col("pw"), lit(0.0)).as("wt"))
     })
     val history = scala.collection.mutable.ArrayBuffer.empty[Double]
-    for (_ <- 0 until iters) {
+    for (it <- 0 until iters) {
       // residuals r_d = p_d − y_d at the CURRENT weights (one doc-keyed
-      // reduce, no exchange thanks to the id partitioning). With loss
-      // tracking the frame is consumed twice (loss agg + gradient join)
-      // and gets the checkpoint+persist boundary; without, the gradient
-      // join is its only consumer and the residuals inline into that
-      // one pass (the agg preserves the hash(idCol) partitioning either
-      // way, so the gradient join pays no exchange in both shapes).
+      // reduce). With loss tracking the frame is consumed twice (loss
+      // agg + gradient join) and gets the checkpoint+persist boundary;
+      // without, the gradient join is its only consumer and the
+      // residuals inline into that one pass.
       val residRaw = feats.join(broadcast(w), Seq("bucket"))
         .groupBy(col(idCol))
         .agg(first(col("y")).as("y"), sum(col("wt") * col("x")).as("s"))
@@ -211,18 +196,18 @@ object LinearClassifier {
               Seq(idCol))
         .groupBy(col("bucket"))
         .agg(round(sum(col("r") * col("x")) / nDocs, 9).as("g"))
-      val wNew = cut(w.join(grads, Seq("bucket"), "left")
+      val stepped = w.join(grads, Seq("bucket"), "left")
         .select(col("bucket"),
           round(col("wt") - lit(lr) * coalesce(col("g"), lit(0.0)), 9)
-            .as("wt")))
-      wNew.count() // materialize (≤ B+1 rows) before parents release
+            .as("wt"))
+      // materialize (≤ B+1 rows) before parents release
+      val wNew =
+        if (it == iters - 1) stepped.localCheckpoint(true)
+        else { val c = cut(stepped); c.count(); c }
       w.unpersist(blocking = false)
       if (trackLoss) resid.unpersist(blocking = false)
       w = wNew
     }
-    // feats stays persisted — the lastFeatsCache slot owns its
-    // lifecycle (evicted on the next train/trainScoreBinary call), so
-    // trainScoreBinary's scoring pass can reuse the materialized stream
     (w, history.toSeq)
   }
 

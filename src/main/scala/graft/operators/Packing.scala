@@ -34,17 +34,15 @@ import graft.functions.TextFunctions
   */
 object Packing {
 
-  /** Last [[packByTokenBudget]] counted-frame cache, evicted on the next
-    * call — same contract as the [[Dedup]] slots.
-    */
-  private var lastCountCache: Option[DataFrame] = None
-
   /** Shared two-pass distributed prefix sum: `id, n_tokens, prefix,
     * local_cum` with global exclusive prefix = prefix + local_cum.
     * The partitioned counted frame feeds BOTH the local-cumsum window
-    * and the per-partition totals — persisted (narrow: id, tokens,
-    * part) so the tokenize scan runs once, not once per consumer
-    * (plans are trees; an unpersisted shared subtree recomputes).
+    * and the per-partition totals — checkpointed (narrow: id, tokens,
+    * part) so the range exchange runs once, not once per consumer
+    * (plans are trees; an unmaterialized shared subtree recomputes).
+    * It outlives the call, so it is GC-owned like the counted cut
+    * below (the [[graft.plans.Lineage]] lifetime rule); the range
+    * exchange runs when this is called, not when the result is read.
     */
   private def withGlobalPrefix(docs: DataFrame, idCol: String,
                                textCol: String): DataFrame = {
@@ -61,11 +59,7 @@ object Packing {
     val parted = counted
       .repartitionByRange(col("id"))
       .withColumn("part", spark_partition_id())
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    Packing.synchronized {
-      lastCountCache.foreach(_.unpersist(blocking = false))
-      lastCountCache = Some(parted)
-    }
+      .localCheckpoint(false)
     val localW = Window.partitionBy("part").orderBy("id")
     val local = parted.withColumn("local_cum",
       sum(col("n_tokens")).over(localW) - col("n_tokens"))

@@ -531,18 +531,10 @@ object SetSimJoin {
       batchCut: DataFrame, op: String): (DataFrame, Long, Long) = {
     val raw = readSetsSchemaChecked(spark, path)
     val stored = raw.drop("setsim_format")
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(1)
-    try {
-      val stampF = pool.submit(new Runnable {
-        override def run(): Unit = requireSetsStamp(raw, path)
-      })
-      val (bRows, bToks) = batchStatsRequireDisjoint(stored, batchCut, op)
-      try stampF.get()
-      catch {
-        case e: java.util.concurrent.ExecutionException => throw e.getCause
-      }
-      (stored, bRows, bToks)
-    } finally pool.shutdown()
+    val stamp = graft.plans.SideJobs.fork(requireSetsStamp(raw, path))
+    val (bRows, bToks) = batchStatsRequireDisjoint(stored, batchCut, op)
+    stamp()
+    (stored, bRows, bToks)
   }
 
   /** Append a new batch's sets after an id-collision check (duplicate

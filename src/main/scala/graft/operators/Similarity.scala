@@ -22,15 +22,6 @@ import org.apache.spark.sql.functions._
   */
 object Similarity {
 
-  /** Last [[kmeansFit]] centroid cache, evicted on the next call — same
-    * contract as the [[Dedup]] cache slots: CacheManager pins persisted
-    * plans until an explicit unpersist, so without this slot every fit
-    * would pin a dead k-row cache forever. Eviction assumes the common
-    * one-caller-at-a-time usage; a concurrent caller merely loses the
-    * cache benefit (an unpersisted plan recomputes, it never fails).
-    */
-  private var lastCentroidCache: Option[DataFrame] = None
-
   /** Cast any numeric array to array<double> for stable arithmetic. */
   def asDouble(v: Column): Column = v.cast("array<double>")
 
@@ -310,7 +301,8 @@ object Similarity {
     *    is the stop test, the driver never sees vectors;
     *  - rounds use the LogicalRDD + persist/unpersist pattern measured
     *    in [[graft.operators.Dedup.connectedComponents]]: O(1) logical
-    *    plan per round, previous round's blocks released explicitly.
+    *    plan per round, previous round's blocks released explicitly;
+    *    the returned centroids are GC-owned ([[graft.plans.Lineage]]).
     *
     * Empty cells keep their previous centroid. Objective history is
     * exposed for tests; float summation order makes exact centroid
@@ -369,16 +361,14 @@ object Similarity {
       history += objective
       i += 1
     }
+    // the returned centroids outlive the call (ivfTopK consumes them in
+    // both the assignment and the query-probe join), so they are copied
+    // into a GC-owned checkpoint (one k-row job) before the last round
+    // and the vectors are released (the graft.plans.Lineage rule)
+    val fitted = cents.localCheckpoint(true)
+    cents.unpersist(blocking = false)
     vecs.unpersist(blocking = false)
-    // the returned centroid frame stays persisted (ivfTopK consumes it in
-    // both the assignment and the query-probe join); evict the PREVIOUS
-    // fit's frame so repeated fits can't accumulate dead k-row caches —
-    // the same eviction contract as Dedup.lastSigCache/lastPackedCache.
-    Similarity.synchronized {
-      lastCentroidCache.foreach(_.unpersist(blocking = false))
-      lastCentroidCache = Some(cents)
-    }
-    (cents, history.toSeq)
+    (fitted, history.toSeq)
   }
 
   /** IVF probe: score only corpus vectors in the query's `nProbe`

@@ -33,6 +33,21 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * that KNOW their cardinality (e.g. connected-components rounds, which
   * hold the participant count) should use [[widthForBytes]] directly
   * instead of trusting stats on a stats-less leaf.
+  *
+  * Lifetime rule for every frame an operator materializes:
+  *  - a frame that OUTLIVES the call (it is returned, or the returned
+  *    lazy plan reads it) is materialized with `localCheckpoint`, as
+  *    [[cut]] does. That adds no CacheManager entry: its blocks are an
+  *    RDD-level persist that Spark's ContextCleaner frees once no
+  *    caller can reach the frame. It is GC-owned, so two callers
+  *    sharing a session never evict each other's frames and repeated
+  *    calls accumulate nothing.
+  *  - a frame that DIES inside the call (loop rounds, an input shared
+  *    by jobs the call itself runs) is persisted and explicitly
+  *    unpersisted before the call returns.
+  * Lazy `localCheckpoint(false)` runs no job when called, unless its
+  * plan holds an exchange: AQE then materializes that stage at call
+  * time (the same work, run earlier).
   */
 object Lineage {
 

@@ -46,6 +46,61 @@ class EntryPointsSpec extends AnyFunSuite {
       s"added: ${mains -- keptMains}; removed: ${keptMains -- mains}")
   }
 
+  /** Line numbers of the `var`s declared directly in an `object` body
+    * (process-global mutable state) in comment-stripped `code`. String
+    * and char literals are blanked first so their braces do not count;
+    * a brace opens an object body when the text since the previous
+    * brace or semicolon declares an object.
+    */
+  private def objectLevelVars(code: String): Seq[Int] = {
+    val blanked = code
+      .replaceAll("(?s)\"\"\".*?\"\"\"", "\"\"")
+      .replaceAll("\"(?:[^\"\\\\\n]|\\\\.)*\"", "\"\"")
+      .replaceAll("'(?:[^'\\\\\n]|\\\\.)'", "' '")
+    val objectHeader = """\bobject\s+\w+""".r
+    var inObject = List.empty[Boolean]
+    var headerStart = 0
+    """\bvar\b|[{};]""".r.findAllMatchIn(blanked).flatMap { m =>
+      m.matched match {
+        case "{" =>
+          inObject = objectHeader
+            .findFirstIn(blanked.substring(headerStart, m.start))
+            .nonEmpty :: inObject
+          headerStart = m.end
+          None
+        case "}" =>
+          inObject = inObject.drop(1)
+          headerStart = m.end
+          None
+        case ";" =>
+          headerStart = m.end
+          None
+        case _ =>
+          if (inObject.headOption.contains(true))
+            Some(blanked.take(m.start).count(_ == '\n') + 1)
+          else None
+      }
+    }.toSeq
+  }
+
+  test("operators hold no process-global mutable state") {
+    // the detector itself: an object-level slot is found, while locals,
+    // anonymous-class fields and braces inside strings are not
+    val probe =
+      "object O {\n  private var slot: Option[Int] = None\n" +
+      "  def f = { var i = 0; new Iterator[Int] { var j = 0 }; i }\n" +
+      "  val s = \"} {\"\n  var t = 1\n}\nclass C { var k = 0 }\n"
+    assert(objectLevelVars(probe) == Seq(2, 5))
+    val found = sources(Paths.get("src/main/scala/graft/operators"))
+      .toSeq.sortBy(_._1).flatMap { case (f, code) =>
+        objectLevelVars(code).map(l => s"$f:$l var") ++
+          (if ("""\bsynchronized\b""".r.findFirstIn(code).nonEmpty)
+             Seq(s"$f synchronized") else Nil)
+      }
+    assert(found.isEmpty,
+      s"object-level var or synchronized under graft/operators: $found")
+  }
+
   test("session builders are created only in GraftSession") {
     val builderCall = """SparkSession\s*\.\s*builder\b""".r
     val callers = Seq("src/main/scala", "src/test/scala").flatMap { root =>

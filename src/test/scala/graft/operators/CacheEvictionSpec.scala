@@ -1,25 +1,27 @@
 package graft.operators
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.scalatest.concurrent.Eventually._
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.{Millis, Seconds, Span}
 import graft.SparkTestSession
 
-/** Pins the previous-call cache-eviction contract for every operator
-  * that persists internally and returns (or retains) a cached frame:
-  * [[Dedup.nearDuplicatePairs]] (signature cache),
-  * [[Dedup.simhashNearPairs]] (packed-signature cache),
-  * [[Dedup.connectedComponents]] (returned labels),
-  * [[Similarity.kmeansFit]] (returned centroids), and
-  * [[Dedup.crossShardDedupClusters]] (a TWO-frame slot: the within-shard
-  * and rep-level label frames the stitch join consumes).
+/** Pins the lifetime rule of [[graft.plans.Lineage]] for every operator
+  * that hands back (or whose returned lazy plan reads) a frame it
+  * materialized: the frame is GC-owned. For each operator:
   *
-  * CacheManager pins persisted plans until an explicit unpersist, so
-  * without eviction a long-lived session calling these repeatedly
-  * accumulates one dead cache per call. Each operator is invoked twice
-  * with DISTINCT inputs (the realistic repeated-use shape — identical
-  * plans coalesce in CacheManager and never accumulate in the first
-  * place) and the spec asserts the manager holds exactly the live
-  * entries: the latest call's cache, never the previous one's.
+  *  - once the result is consumed, CacheManager holds no entry (frames
+  *    that die inside the call were released, and the surviving ones
+  *    are checkpoints, not cached plans);
+  *  - `A = op(x)`, then `B = op(y)`, then consuming `A` returns the rows
+  *    `op(x)` returns alone, and the materializations created by A's
+  *    call are still registered: a second caller does not evict them;
+  *  - once both results are dropped, a GC returns the registered
+  *    persistent RDDs to what they were before the calls.
+  *
+  * Frames are kept inside [[overlappedCalls]] so that nothing in the
+  * test body still reaches them when the GC runs.
   */
 class CacheEvictionSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -35,6 +37,16 @@ class CacheEvictionSpec extends AnyFunSuite {
     f.get(cm).asInstanceOf[IndexedSeq[_]].size
   }
 
+  /** Ids of the RDDs the context holds as persistent. A fresh set of
+    * ints: keeping the returned map (or a view of it) would keep its
+    * RDDs reachable.
+    */
+  private def persistentIds(): Set[Int] =
+    spark.sparkContext.getPersistentRDDs.keysIterator.toSet
+
+  private def rows(df: DataFrame): Seq[String] =
+    df.collect().map(_.toString).toSeq.sorted
+
   private def corpus(tag: String) = Seq(
     (1L, s"the quick brown fox jumps over the lazy dog $tag"),
     (2L, s"the quick brown fox jumps over the lazy dog $tag"),
@@ -42,84 +54,104 @@ class CacheEvictionSpec extends AnyFunSuite {
     (4L, s"yet another unrelated piece of text content here $tag"))
     .toDF("doc_id", "text")
 
-  private def vectors(shift: Double) = Seq(
-    (0L, Array(1.0 + shift, 0.1, 0.0)),
-    (1L, Array(0.0, 1.0 + shift, 0.2)),
-    (2L, Array(0.9, 0.1, 0.1)),
-    (3L, Array(0.1, 0.9, 0.1)),
-    (4L, Array(0.8, 0.2, 0.0)))
-    .toDF("vec_id", "embedding")
+  private def sharded(tag: String) = corpus(tag)
+    .withColumn("shard", when($"doc_id" % 2 === 0, "s2").otherwise("s1"))
 
-  test("repeated calls leave exactly one live cache entry per operator") {
-    spark.sharedState.cacheManager.clearCache()
-    assert(cacheEntries == 0)
+  /** A disjoint-id batch holding a near twin of corpus doc 1. */
+  private def batch(tag: String) = Seq(
+    (11L, s"the quick brown fox jumps over the lazy dog $tag"),
+    (12L, s"something unrelated to every corpus document $tag"))
+    .toDF("doc_id", "text")
 
-    Dedup.nearDuplicatePairs(corpus("a")).count()
-    Dedup.nearDuplicatePairs(corpus("b")).count()
-    assert(cacheEntries == 1,
-      "nearDuplicatePairs must evict the previous call's signature cache")
+  private val nodes = Seq(1L, 2L, 3L, 4L, 5L, 6L).toDF("id")
 
-    Dedup.simhashNearPairs(corpus("a")).count()
-    Dedup.simhashNearPairs(corpus("b")).count()
-    assert(cacheEntries == 2,
-      "simhashNearPairs must evict the previous call's packed cache")
+  private def edges(tag: String) =
+    (if (tag == "a") Seq((1L, 2L), (3L, 4L)) else Seq((1L, 3L)))
+      .toDF("a", "b")
 
-    val nodes = Seq(1L, 2L, 3L, 4L).toDF("id")
-    val edges = Seq((1L, 2L), (3L, 4L)).toDF("a", "b")
-    Dedup.connectedComponents(nodes, edges).count()
-    Dedup.connectedComponents(nodes, edges.limit(1)).count()
-    assert(cacheEntries == 3,
-      "connectedComponents must evict the previous call's labels cache")
+  private def denseEdges(tag: String) =
+    (if (tag == "a") Seq((1L, 2L), (3L, 4L), (5L, 6L))
+     else Seq((1L, 3L), (3L, 5L), (2L, 4L))).toDF("a", "b")
 
-    Similarity.kmeansFit(vectors(0.0), k = 2, maxIter = 2).count()
-    Similarity.kmeansFit(vectors(0.5), k = 2, maxIter = 2).count()
-    assert(cacheEntries == 4,
-      "kmeansFit must evict the previous fit's centroid cache")
-
-    // crossShardDedupClusters owns TWO caller-owned CC label frames per
-    // call (registerCache=false inside), tracked in a 2-frame slot; the
-    // signature cache it persists internally is released before return.
-    // So two calls must leave exactly the latest call's two frames live.
-    def sharded(tag: String) = Seq(
-      (1L, s"the quick brown fox jumps over the lazy dog $tag", "s1"),
-      (2L, s"the quick brown fox jumps over the lazy dog $tag", "s2"),
-      (3L, s"an entirely different document about spark engines $tag", "s1"),
-      (4L, s"yet another unrelated piece of text content here $tag", "s2"))
-      .toDF("doc_id", "text", "shard")
-    Dedup.crossShardDedupClusters(sharded("a"), shardCols = Seq("shard")).count()
-    Dedup.crossShardDedupClusters(sharded("b"), shardCols = Seq("shard")).count()
-    assert(cacheEntries == 6,
-      "crossShardDedupClusters must evict the previous call's two label " +
-      "frames and leave exactly the latest call's pair live")
-
-    // incrementalNearDupPairs persists BOTH sides' signatures (batch in
-    // the shared signature slot — evicting the nearDuplicatePairs entry
-    // from above, by contract — corpus in its own slot): two calls must
-    // leave exactly the latest call's pair live (6 − 1 + 2 = 7).
-    Dedup.incrementalNearDupPairs(corpus("x"), corpus("a")).count()
-    Dedup.incrementalNearDupPairs(corpus("y"), corpus("b")).count()
-    assert(cacheEntries == 7,
-      "incrementalNearDupPairs must evict the previous call's batch and " +
-      "corpus signature caches")
-
-    // caller-provided corpus signatures are NOT registered for eviction
-    // (their storage is the caller's): the corpus slot EMPTIES (previous
-    // call's corpus cache evicted, nothing replaces it) and the batch
-    // slot turns over → 7 − 1 = 6
-    val stored = Dedup.signatures(corpus("b"), "doc_id", "text", 5, 64)
-    Dedup.incrementalNearDupPairs(corpus("z"), corpus("b"),
-      corpusSigs = Some(stored)).count()
-    assert(cacheEntries == 6,
-      "caller-owned corpus signatures must not enter the eviction slot")
-
-    Packing.packByTokenBudget(corpus("a"), budget = 5L).count()
-    Packing.packByTokenBudget(corpus("b"), budget = 5L).count()
-    assert(cacheEntries == 7,
-      "packByTokenBudget must evict the previous call's counted frame")
-
-    // hygiene: leave nothing behind for other suites
-    spark.sharedState.cacheManager.clearCache()
+  private def vectors(tag: String) = {
+    val shift = if (tag == "a") 0.0 else 0.5
+    Seq(
+      (0L, Array(1.0 + shift, 0.1, 0.0)),
+      (1L, Array(0.0, 1.0 + shift, 0.2)),
+      (2L, Array(0.9, 0.1, 0.1)),
+      (3L, Array(0.1, 0.9, 0.1)),
+      (4L, Array(0.8, 0.2, 0.0)))
+      .toDF("vec_id", "embedding")
   }
+
+  private def labeled(tag: String) = corpus(tag)
+    .select($"doc_id", ($"doc_id" % 2).cast("int").as("y"),
+      split($"text", " ").as("toks"))
+
+  /** A = op("a"), B = op("b"), then A consumed: the first two checks.
+    * Returns nothing, so every frame is unreachable once it returns.
+    */
+  private def overlappedCalls(op: String => DataFrame): Unit = {
+    val expected = rows(op("a"))
+    assert(expected.nonEmpty, "fixture must give the operator rows")
+    assert(cacheEntries == 0,
+      "a consumed result must leave no CacheManager entry")
+    val before = persistentIds()
+    val a = op("a")
+    val ownedByA = persistentIds() -- before
+    assert(ownedByA.nonEmpty,
+      "the call must register the materialization its result reads")
+    val b = op("b")
+    assert(rows(a) == expected,
+      "a second call must not change the first call's rows")
+    assert(ownedByA.subsetOf(persistentIds()),
+      "a second call must not release the first call's materialization")
+    assert(rows(b).nonEmpty)
+    assert(cacheEntries == 0,
+      "consumed results must leave no CacheManager entry")
+  }
+
+  private def lifetime(name: String)(op: String => DataFrame): Unit =
+    test(s"$name: result is GC-owned, outlives a second call, freed by GC") {
+      spark.sharedState.cacheManager.clearCache()
+      val baseline = persistentIds()
+      overlappedCalls(op)
+      eventually(timeout(Span(60, Seconds)), interval(Span(200, Millis))) {
+        System.gc()
+        val leaked = persistentIds() -- baseline
+        assert(leaked.isEmpty,
+          s"persistent RDDs $leaked outlived every reference to them")
+      }
+    }
+
+  lifetime("nearDuplicatePairs")(t => Dedup.nearDuplicatePairs(corpus(t)))
+
+  lifetime("simhashNearPairs")(t => Dedup.simhashNearPairs(corpus(t)))
+
+  lifetime("connectedComponents, sparse path")(t =>
+    Dedup.connectedComponents(nodes, edges(t)))
+
+  lifetime("connectedComponents, dense path")(t =>
+    Dedup.connectedComponents(nodes, denseEdges(t), nodesCount = Some(6L)))
+
+  lifetime("crossShardDedupClusters")(t =>
+    Dedup.crossShardDedupClusters(sharded(t), shardCols = Seq("shard")))
+
+  lifetime("incrementalNearDupPairs")(t =>
+    Dedup.incrementalNearDupPairs(batch(t), corpus(t)))
+
+  lifetime("packByTokenBudget")(t =>
+    Packing.packByTokenBudget(corpus(t), budget = 5L))
+
+  // centroid sums are order-sensitive at the last ulp: compare rounded
+  lifetime("kmeansFit")(t =>
+    Similarity.kmeansFit(vectors(t), k = 2, maxIter = 2)
+      .select($"cell", transform($"cv", v => round(v, 6)).as("cv")))
+
+  lifetime("LinearClassifier.trainScoreBinary")(t =>
+    LinearClassifier.trainScoreBinary(labeled(t), "doc_id", "toks", "y",
+      numBuckets = 64, iters = 2)
+      .select($"doc_id", $"n_features", round($"score", 3), $"pred_label"))
 
   test("sequential Bpe.train and WordPiece.train leave no cache entry") {
     // both return an eager merge list, so the persisted per-iteration

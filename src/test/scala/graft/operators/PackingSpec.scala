@@ -1,6 +1,9 @@
 package graft.operators
 
+import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
 
@@ -118,16 +121,41 @@ class PackingSpec extends AnyFunSuite {
     assert(mismatches == 0L)
   }
 
+  /** `build`'s result with the plan of the `(id, n_tokens, part)`
+    * checkpoint packing takes while it runs. The range exchange and the
+    * partition-id column are materialized there, so the returned
+    * frame's plan only scans them. Listener events arrive
+    * asynchronously; this waits for the first matching one.
+    */
+  private def withPartedPlan[T](build: => T): (T, String) = {
+    val seen = new LinkedBlockingQueue[String]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(action: String, qe: QueryExecution,
+                             durationNs: Long): Unit =
+        if (action == "localCheckpoint" &&
+            qe.analyzed.output.map(_.name) == Seq("id", "n_tokens", "part"))
+          seen.add(qe.executedPlan.toString)
+      override def onFailure(action: String, qe: QueryExecution,
+                             e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val out = build
+      (out, Option(seen.poll(30, TimeUnit.SECONDS))
+        .getOrElse(fail("packing's (id, n_tokens, part) checkpoint never ran")))
+    } finally spark.listenerManager.unregister(listener)
+  }
+
   test("plan shape: range-partitioned, never a global single-partition sort") {
-    val plan = Packing.packByTokenBudget(docs, budget = 5L)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("rangepartitioning"),
-      s"expected a range exchange in:\n$plan")
+    val (plan, parted) = withPartedPlan(Packing.packByTokenBudget(
+      docs, budget = 5L).queryExecution.executedPlan.toString)
+    assert(parted.contains("rangepartitioning"),
+      s"expected a range exchange in:\n$parted")
     // the doc-level window must partition by the physical partition id —
     // a global `Window [.. ORDER BY id]` with no partition spec would be
     // the 100 TB killer this operator exists to avoid
-    assert(plan.toLowerCase.contains("spark_partition_id"),
-      s"expected partition-id-scoped window in:\n$plan")
+    assert(parted.toLowerCase.contains("spark_partition_id"),
+      s"expected a partition-id column in:\n$parted")
     // the only SinglePartition exchange allowed is the per-partition
     // TOTALS frame (≤ shuffle.partitions rows); the doc-level window
     // must not funnel the corpus through one partition

@@ -178,6 +178,28 @@ class SetSimJoinSpec extends AnyFunSuite {
     assert(ex.getMessage.contains("rebuild"))
   }
 
+  test("incremental audits surface a foreign stamp from the side thread") {
+    // the stamp-value check runs on a side thread while the caller runs
+    // the batch-stats job; its require() must reach the caller as itself
+    val good = java.nio.file.Files.createTempDirectory("setsim_ok").toString
+    SetSimJoin.saveSets(toks(Seq((1L, "a b c"), (2L, "d e f"))),
+      "doc_id", "toks", good)
+    val bad = java.nio.file.Files.createTempDirectory("setsim_v9").toString
+    spark.read.parquet(good).withColumn("setsim_format", lit("other-v9"))
+      .write.mode("overwrite").parquet(bad)
+    val batch = toks(Seq((9L, "a b c")))
+    val e1 = intercept[IllegalArgumentException] {
+      SetSimJoin.incrementalJaccardPairs(spark, bad, batch,
+        "doc_id", "toks", 0.8)
+    }
+    assert(e1.getMessage.contains("other-v9"))
+    val e2 = intercept[IllegalArgumentException] {
+      SetSimJoin.incrementalContainmentPairs(spark, bad, batch,
+        "doc_id", "toks", 0.8)
+    }
+    assert(e2.getMessage.contains("other-v9"))
+  }
+
   test("prefix-bucket skew guard trips loudly at execution, lazily at call") {
     val rows = (0L until 20L).map(id => id -> s"common x$id")
     // construction is lazy — no job runs, no error yet. hotBucketSalt
