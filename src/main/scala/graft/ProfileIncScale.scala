@@ -175,11 +175,8 @@ object ProfileIncScale {
         try {
           val txt = copies(k).localCheckpoint(true)
           // tmp-build + rename (the DedupSuite.stagedSetsPath
-          // convention, ADVICE r17): a build killed mid-write at the
-          // FINAL path can leave part-files that all carry a valid
-          // stamp, so loadSets succeeds and later runs silently adopt
-          // a partial archive — corrupting the very scaling curve this
-          // instrument exists to measure. The rename is metadata-only.
+          // convention): two JVMs staging the same archive race only
+          // across the metadata rename, not the build.
           val tmp = path + "_build_" +
             java.util.UUID.randomUUID().toString.take(8)
           SetSimJoin.saveSets(shingled(txt), "doc_id", "shingles", tmp)

@@ -59,7 +59,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * INPUT CONTRACT: `qmap` must come from this build's compile fold —
   * outer keys are `pmod(xxhash64(tok), B)` radix buckets and inner
   * entry arrays are sorted by token (binary UTF8 order). Stored
-  * registries are stamp-checked on load; every in-build producer
+  * registries' manifest stamps are checked on load; every in-build producer
   * re-folds through the same code path.
   */
 case class PercolateAlerts(

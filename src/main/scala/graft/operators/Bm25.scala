@@ -1,9 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import graft.functions.TextFunctions
 import graft.plans.SideJobs
+import graft.store.{Manifest, Store}
 
 /** Okapi BM25 ranked retrieval — the SPARSE member of the similarity
   * family (reference scope: the engine's document retrieval/selection
@@ -122,259 +124,146 @@ object Bm25 {
 
   // ---- stored index: tokenize once, answer forever -------------------
 
-  /** Stored-index layout marker (the sig_family / ivfpq convention):
-    * the postings, document-frequency, and corpus-stats tables each
-    * carry the stamp with the scoring constants baked in — scoring a
-    * stored index under different (k1, b) than it was built for is NOT
-    * an error (they are query-time knobs), but a layout change is.
+  /** Stored-index layout stamp, the format of the index's manifest
+    * (the sig_family / ivfpq convention): scoring a stored index under
+    * different (k1, b) than it was built for is NOT an error (they are
+    * query-time knobs), but a layout change is.
     */
   private[graft] val IndexFormatPrefix = "graft-bm25-v1"
 
-  /** Persist the postings (doc, term, tf, dl), document frequencies,
-    * and corpus stats under `path`. The corpus is tokenized ONCE here;
-    * every later query batch joins into the stored postings and never
-    * rescans text — the sparse analogue of [[Pq.saveIndex]].
+  private val Postings = "postings"
+  private val Dfreq = "dfreq"
+
+  /** `tf` with Σ tf (= Σ dl over the docs with ≥ 1 token) observed;
+    * no metrics means the optimizer proved `tf` empty. */
+  private def observeSumDl(tf: DataFrame): (DataFrame, () => Long) = {
+    val obs = Observation()
+    (tf.observe(obs, coalesce(sum(col("tf")), lit(0L)).as("sum_dl")),
+      () => obs.get.get("sum_dl").fold(0L)(_.asInstanceOf[Long]))
+  }
+
+  /** Persist the postings (doc, term, tf, dl) and document frequencies
+    * under `path`, with the corpus stats (`n`, `sum_dl`) as manifest
+    * values. The corpus is tokenized ONCE here; every later query
+    * batch joins into the stored postings and never rescans text — the
+    * sparse analogue of [[Pq.saveIndex]].
+    *
+    * Two jobs: the postings write observes `n` (a direct corpus count —
+    * postings drop zero-token docs, but n must count every document)
+    * and `sum_dl` (Σ tf over postings ≡ Σ dl over docs with ≥ 1 token;
+    * a null-text doc is a zero-token doc and adds 0); dfreq then
+    * derives from the written postings file-set, so the corpus is
+    * tokenized once. Both commit together or not at all.
     */
   def saveIndex(docs: DataFrame, path: String,
                 idCol: String = "doc_id", textCol: String = "text"): Unit = {
-    // a rebuild is the documented remediation for an interrupted
-    // mutation — clear any leftover marker so the fresh build can
-    // proceed, then run the three overwrites UNDER the marker: a
-    // crash mid-rebuild over an existing index otherwise leaves
-    // mixed old/new tables (each with a valid per-table stamp) that
-    // loadIndex would accept silently (ADVICE r16).
-    val mk = pendingMarker(path)
-    mk.getFileSystem(docs.sparkSession.sparkContext.hadoopConfiguration)
-      .delete(mk, false)
-    withMutationMarker(docs.sparkSession, path, "saveIndex") {
-      // dfreq derives from the SAME tf pass as the postings (r18 opt:
-      // the lazy `tf` was referenced twice, and DataFrame plans are
-      // trees — the whole term-frequency pipeline ran twice per save).
-      // Persisted for the save's duration rather than read back from
-      // the postings parquet written one statement earlier (ADVICE r18
-      // low): the read-back coupled index internal consistency to
-      // filesystem read-after-write visibility — a partial postings
-      // write inside the marker window would have yielded a dfreq
-      // consistent with the partial postings instead of failing the
-      // save. One tokenize pass either way; dfreq == the old groupBy
-      // by construction (one postings row per (doc, tok)).
-      val tf = termFrequencies(docs, idCol, textCol)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        tf.withColumn("index_format", lit(IndexFormatPrefix))
-          .write.mode("overwrite").parquet(s"$path/postings")
-        val dfreq = tf.groupBy("tok").agg(count(lit(1)).as("df"))
-        // stats (r19): `n` stays a direct corpus count (postings drop
-        // zero-token docs, but n must count every document) — a
-        // column-pruned scan, no tokenize. sum_dl folds out of the SAME
-        // persisted tf pass: Σ tf over postings ≡ Σ dl over docs with
-        // ≥ 1 token, exactly what the old sum(size(tokens(text)))
-        // computed — that shape re-tokenized the whole corpus a second
-        // time per save. (Delta confined to null-text docs, where
-        // size(null) = -1 used to contribute -1; they now contribute 0,
-        // the zero-token doc they are for scoring.)
-        val stats = docs.agg(count(lit(1)).as("n")).crossJoin(
-          tf.agg(coalesce(sum(col("tf")), lit(0L)).as("sum_dl")))
-        // dfreq and stats are independent reads of the tf cache the
-        // postings write just materialized — overlap their write jobs
-        // (guide §2.6) instead of serializing two more job floors; the
-        // mutation marker already brackets all three tables.
-        Seq(
-          SideJobs.fork(
-            dfreq.withColumn("index_format", lit(IndexFormatPrefix))
-              .write.mode("overwrite").parquet(s"$path/dfreq")),
-          SideJobs.fork(
-            stats.withColumn("index_format", lit(IndexFormatPrefix))
-              .write.mode("overwrite").parquet(s"$path/stats"))
-        ).foreach(_())
-      } finally tf.unpersist(blocking = false)
-    }
+    val spark = docs.sparkSession
+    val (counted, docStats) = Store.observeIds(docs, None)
+    val (tf, sumDl) = observeSumDl(termFrequencies(counted, idCol, textCol))
+    val posted = Store.writeFileSet(path, Postings, tf, Some("doc_id"))
+    val dfreq = Store.read(spark, path, tf.schema, Seq(posted))
+      .groupBy("tok").agg(count(lit(1)).as("df"))
+    val counts = Store.writeFileSet(path, Dfreq, dfreq, None)
+    Store.commit(spark, path, Store.manifest(spark, path), IndexFormatPrefix,
+      Map(Postings -> tf.schema, Dfreq -> dfreq.schema), Seq(posted, counts),
+      Map("n" -> docStats()._1.toString, "sum_dl" -> sumDl().toString))
   }
 
   final case class Bm25Index(postings: DataFrame, dfreq: DataFrame,
                              stats: DataFrame)
 
-  private def checkedRead(spark: org.apache.spark.sql.SparkSession,
-                          path: String, sub: String): DataFrame = {
-    val df = spark.read.parquet(s"$path/$sub")
-    require(df.columns.contains("index_format"),
-      s"stored BM25 $sub table at $path has no index_format column — " +
-      "not an index table or a pre-versioning build; rebuild with " +
-      "Bm25.saveIndex")
-    val stamps = StoreStamp.distinctVals(df, "index_format")
-    require(stamps.length == 1 && stamps.head == IndexFormatPrefix,
-      s"stored BM25 $sub table at $path has layout " +
-      s"'${stamps.mkString(",")}', this build reads '$IndexFormatPrefix' " +
-      "— rebuild with Bm25.saveIndex")
-    df.drop("index_format")
-  }
+  /** The live manifest, its layout stamp checked — no job. */
+  private def indexManifest(spark: org.apache.spark.sql.SparkSession,
+                            path: String): Manifest =
+    Store.live(spark, path, s"stored BM25 index at $path has no manifest " +
+      "— not an index or a pre-manifest build; rebuild with Bm25.saveIndex")(
+      _ == IndexFormatPrefix,
+      f => s"stored BM25 index at $path has layout '$f', this build reads " +
+        s"'$IndexFormatPrefix' — rebuild with Bm25.saveIndex")
 
-  /** Pending-mutation marker: every multi-table mutation ([[appendDocs]]
-    * / [[removeDocs]] / [[compactIndex]]) creates `_mutation_pending`
-    * before its first table write and deletes it after its last, so a
-    * crash mid-sequence leaves the marker behind and [[loadIndex]]
-    * rejects the mutually-inconsistent tables LOUDLY instead of
-    * scoring silently wrong (ADVICE r15: each table carries a valid
-    * per-table stamp, so stamp checks alone cannot see a
-    * mid-sequence-failed index). [[saveIndex]] clears a stale marker
-    * and then runs its own three overwrites under a fresh one — a
-    * COMPLETED rebuild is the documented remediation, and a rebuild
-    * that itself dies mid-sequence is detected like any mutation.
-    */
-  private def pendingMarker(path: String) =
-    new org.apache.hadoop.fs.Path(s"$path/_mutation_pending")
+  private def statsOf(m: Manifest): (Long, Long) =
+    (m.values("n").toLong, m.values("sum_dl").toLong)
 
-  private def withMutationMarker(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      op: String)(body: => Unit): Unit = {
-    val mk = pendingMarker(path)
-    val fs = mk.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.createNewFile(mk),
-      s"bm25 $op: a mutation marker already exists at $mk — another " +
-      "mutation is running or a previous one died mid-sequence; " +
-      "rebuild with saveIndex (or restore the tables and delete the " +
-      "marker) before mutating again")
-    body
-    require(fs.delete(mk, false),
-      s"bm25 $op: completed, but the mutation marker at $mk could not " +
-      "be deleted — remove it by hand or the next load will reject the " +
-      "index")
-  }
-
+  /** Loads the index from its manifest: postings and dfreq are lazy
+    * frames over their file-sets, stats a one-row local frame of the
+    * manifest's `n` and `sum_dl`. Runs no job. */
   def loadIndex(spark: org.apache.spark.sql.SparkSession,
                 path: String): Bm25Index = {
-    val mk = pendingMarker(path)
-    val fs = mk.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(!fs.exists(mk),
-      s"stored BM25 index at $path has a pending-mutation marker — a " +
-      "mutation died mid-sequence and the postings/dfreq/stats tables " +
-      "may be mutually inconsistent; rebuild with Bm25.saveIndex (or " +
-      s"restore the tables and delete $mk)")
-    // The three stamp checks each run a tiny distinct-limit job; done
-    // sequentially they serialize three planning+scheduling floors at
-    // the head of every index load. Spark's scheduler runs concurrent
-    // jobs fine (guide §2.6 overlap-independent-jobs) — submit them
-    // from three side threads and join (a stamp check's own require()
-    // failure surfaces as itself).
-    val Seq(postings, dfreq, stats) = Seq("postings", "dfreq", "stats")
-      .map(sub => SideJobs.fork(checkedRead(spark, path, sub)))
-      .map(_())
-    Bm25Index(postings, dfreq, stats)
+    val m = indexManifest(spark, path)
+    val (n, sumDl) = statsOf(m)
+    Bm25Index(Store.table(spark, path, m, Postings),
+      Store.table(spark, path, m, Dfreq),
+      spark.createDataFrame(java.util.List.of(Row(n, sumDl)),
+        StructType(Seq(StructField("n", LongType), StructField("sum_dl", LongType)))))
   }
 
   /** Append a NEW batch of documents to a stored index without
     * re-tokenizing the stored corpus — the [[Pq.appendVectors]]
-    * lifecycle for the sparse index. Only the BATCH is tokenized; the
-    * three stored tables update as:
+    * lifecycle for the sparse index. Only the BATCH is tokenized:
     *
-    *  - postings: plain parquet append of the batch's (doc, tok, tf,
-    *    dl) rows — corpus-sized but batch-bounded work;
+    *  - postings: the batch's (doc, tok, tf, dl) rows as a new
+    *    file-set; its write observes the batch's `n`, id range and
+    *    `sum_dl`;
     *  - dfreq: df is ADDITIVE across disjoint doc sets, so the merge is
-    *    stored ∪ batch → groupBy(tok).sum — vocab-sized end to end.
-    *    Spark cannot overwrite a path its own plan is reading, so the
-    *    merged table writes through `dfreq_tmp` and swaps in with a
-    *    Hadoop-FS rename (metadata-only at any scale, works on
-    *    hdfs://s3a://file: alike);
-    *  - stats: one stored row + one batch row added on the driver.
+    *    stored ∪ batch → groupBy(tok).sum — vocab-sized — written as a
+    *    new file-set replacing the stored one;
+    *  - stats: the manifest's `n` and `sum_dl` plus the batch's.
     *
     * New ids must not collide with stored doc ids (duplicates would
-    * double-score; checked with a column-pruned semi-join). The update
-    * is NOT transactional, but it IS fail-detected: the table writes
-    * run under the pending-mutation marker, so an append that dies
-    * midway leaves an index [[loadIndex]] rejects loudly — rebuild
-    * with [[saveIndex]]. With fresh ids, append-then-query ==
-    * rebuild-from-scratch (spec-pinned, the appendVectors convention).
+    * double-score): the semi-join runs only when the batch's id range
+    * overlaps the stored one. All of it commits in one manifest, so an
+    * append that dies midway leaves the old index loadable. With fresh
+    * ids, append-then-query == rebuild-from-scratch (spec-pinned, the
+    * appendVectors convention).
     */
   def appendDocs(spark: org.apache.spark.sql.SparkSession, path: String,
                  newDocs: DataFrame, idCol: String = "doc_id",
                  textCol: String = "text"): Unit = {
-    val idx = loadIndex(spark, path)
-    val overlap = newDocs.select(col(idCol).as("doc_id"))
-      .join(idx.postings.select("doc_id"), Seq("doc_id"), "left_semi")
-      .limit(1).count()
-    require(overlap == 0L,
+    val m = indexManifest(spark, path)
+    val (counted, docStats) = Store.observeIds(newDocs, Some(idCol))
+    val (tf, sumDl) = observeSumDl(Store.conform(
+      termFrequencies(counted, idCol, textCol), m.schemas(Postings)))
+    val posted = Store.writeFileSet(path, Postings, tf, Some("doc_id"))
+    val (n, range) = docStats()
+    Store.requireFresh(spark, path, m, Postings, "doc_id",
+      newDocs.select(col(idCol).as("doc_id")), n, range, Seq(posted),
       "bm25 appendDocs: new batch ids collide with stored doc ids — " +
       "duplicates would double-score queries; re-id the batch or rebuild")
-    val tf = termFrequencies(newDocs, idCol, textCol)
-    // dfreq merge first: it must read the OLD dfreq, and the swapped
-    // write below invalidates that read path
-    val mergedDf = idx.dfreq.unionByName(
-        tf.groupBy("tok").agg(count(lit(1)).cast("long").as("df")))
+    val merged = Store.table(spark, path, m, Dfreq)
+      .unionByName(Store.read(spark, path, m.schemas(Postings), Seq(posted))
+        .groupBy("tok").agg(count(lit(1)).cast("long").as("df")))
       .groupBy("tok").agg(sum(col("df")).as("df"))
-    // stats inputs collected BEFORE any table mutates
-    val old = idx.stats.select(col("n").cast("long"),
-      col("sum_dl").cast("long")).head()
-    val batch = newDocs.agg(
-      count(lit(1)).as("n"),
-      // coalesce: an EMPTY batch sums to null, and a null sum_dl would
-      // NPE the driver-side add below — empty appends are legal no-ops
-      coalesce(sum(size(TextFunctions.tokens(col(textCol)))), lit(0L))
-        .cast("long").as("sum_dl"))
-      .head()
-    withMutationMarker(spark, path, "appendDocs") {
-      val tmp = s"$path/dfreq_tmp"
-      mergedDf.withColumn("index_format", lit(IndexFormatPrefix))
-        .write.mode("overwrite").parquet(tmp)
-      val hp = new org.apache.hadoop.fs.Path(s"$path/dfreq")
-      val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.delete(hp, true)
-      require(fs.rename(new org.apache.hadoop.fs.Path(tmp), hp),
-        s"bm25 appendDocs: dfreq swap rename failed under $path")
-      spark.range(1).select(
-          lit(old.getLong(0) + batch.getLong(0)).as("n"),
-          lit(old.getLong(1) + batch.getLong(1)).as("sum_dl"),
-          lit(IndexFormatPrefix).as("index_format"))
-        .write.mode("overwrite").parquet(s"$path/stats")
-      tf.withColumn("index_format", lit(IndexFormatPrefix))
-        .write.mode("append").parquet(s"$path/postings")
-    }
+    val counts = Store.writeFileSet(path, Dfreq, merged, None)
+    val (oldN, oldDl) = statsOf(m)
+    Store.commit(spark, path, Some(m), m.format, m.schemas,
+      m.sets(Postings) :+ posted :+ counts,
+      m.values ++ Map("n" -> (oldN + n).toString,
+        "sum_dl" -> (oldDl + sumDl()).toString))
   }
 
   /** Rewrite the stored postings and dfreq tables into
-    * ~`targetFileBytes` parquet files — [[appendDocs]] appends one
+    * ~`targetFileBytes` parquet files — [[appendDocs]] adds one
     * file-set per batch, and at daily cadence the index becomes a
     * small-files problem (the [[graft.operators.SetSimJoin.compactSets]]
     * maintenance shape, applied to the sparse index). Row sets are
     * untouched (spec-pinned); COALESCE only (a file-layout change must
-    * not pay an exchange); tmp write + Hadoop-FS swap rename per
-    * sub-table. The one-row stats table never needs compaction.
+    * not pay an exchange); both tables commit in one manifest.
     */
   def compactIndex(spark: org.apache.spark.sql.SparkSession, path: String,
                    targetFileBytes: Long = 128L * 1024 * 1024): Unit = {
     require(targetFileBytes > 0,
       s"bm25 compactIndex: targetFileBytes must be > 0, got " +
       s"$targetFileBytes")
-    val idx = loadIndex(spark, path) // stamp-checked
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def swapCompact(sub: String, df: DataFrame): Unit = {
-      val dst = new org.apache.hadoop.fs.Path(s"$path/$sub")
-      val bytes = fs.getContentSummary(dst).getLength
-      val n = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes)
-        .min(Int.MaxValue.toLong).toInt
-      val tmp = new org.apache.hadoop.fs.Path(s"$path/${sub}_compact_tmp")
-      df.withColumn("index_format", lit(IndexFormatPrefix))
-        .coalesce(n)
-        .write.mode("overwrite").parquet(tmp.toString)
-      require(fs.delete(dst, true),
-        s"bm25 compactIndex: could not delete $dst for the swap")
-      require(fs.rename(tmp, dst),
-        s"bm25 compactIndex: $sub swap rename failed — data is at $tmp")
-    }
-    withMutationMarker(spark, path, "compactIndex") {
-      swapCompact("postings", idx.postings)
-      swapCompact("dfreq", idx.dfreq)
-    }
+    Store.compact(spark, path, indexManifest(spark, path),
+      Seq(Postings, Dfreq), targetFileBytes)
   }
 
   /** Remove documents from a stored index by id — the retraction /
     * GDPR-delete member of the sparse-index lifecycle ([[saveIndex]] /
-    * [[appendDocs]] / [[queryIndex]]). All three stored tables update
-    * EXACTLY (so remove == rebuild-over-the-difference, spec-pinned):
+    * [[appendDocs]] / [[queryIndex]]). Everything updates EXACTLY (so
+    * remove == rebuild-over-the-difference, spec-pinned):
     *
-    *  - postings: the removed ids' rows drop (tmp + swap rename — the
-    *    [[appendDocs]] dfreq convention, both tables are read by their
-    *    own rewrite plans);
+    *  - postings: the surviving rows as one new file-set;
     *  - dfreq: df is additive over disjoint doc sets, so the removed
     *    postings' per-term counts subtract; terms reaching df = 0 drop;
     *  - stats: n and Σdl decrement by the removed docs' counts (per-doc
@@ -384,70 +273,44 @@ object Bm25 {
     * postings: a token-less doc contributes no postings, so its
     * membership is not reconstructible from the index — it cannot be
     * removed individually (rebuild instead). Removing every posting-
-    * bearing doc is also loud (an emptied index is unloadable). The
-    * update is NOT transactional, but it IS fail-detected: the
-    * three-table sequence runs under the pending-mutation marker, so
-    * a removal that dies mid-sequence leaves an index [[loadIndex]]
-    * rejects loudly; rebuild with [[saveIndex]].
+    * bearing doc is also loud (an emptied index is a rebuild). All of
+    * it commits in one manifest.
     *
     * @param removeIds one column of ids (any name); null ids rejected.
     */
   def removeDocs(spark: org.apache.spark.sql.SparkSession, path: String,
                  removeIds: DataFrame): Unit = {
-    val idx = loadIndex(spark, path)
+    val m = indexManifest(spark, path)
+    val postings = Store.table(spark, path, m, Postings)
     val ids = removeIds.select(removeIds.columns.head).toDF("doc_id")
     require(ids.filter(col("doc_id").isNull).limit(1).count() == 0L,
       "bm25 removeDocs: removal list contains null ids")
-    val missing = ids.join(idx.postings.select("doc_id"), Seq("doc_id"),
+    val missing = ids.join(postings.select("doc_id"), Seq("doc_id"),
         "left_anti")
       .limit(1).collect()
     require(missing.isEmpty,
       s"bm25 removeDocs: id '${missing.headOption.map(_.get(0)).orNull}' " +
       "has no stored postings — unknown or token-less; a retraction " +
       "must fail loudly, and token-less docs need a rebuild")
-    val removed = idx.postings.join(ids, Seq("doc_id"), "left_semi")
-    val remaining = idx.postings.join(ids, Seq("doc_id"), "left_anti")
-    require(remaining.limit(1).count() == 1L,
+    val removed = postings.join(ids, Seq("doc_id"), "left_semi")
+    val left = Store.writeKept(spark, path, Postings,
+      postings.join(ids, Seq("doc_id"), "left_anti"), "doc_id",
       "bm25 removeDocs: removal would empty the index — delete the " +
       "path and rebuild with saveIndex instead")
-    // removed-side facts, collected BEFORE any table is swapped
     val del = removed.groupBy("doc_id").agg(first(col("dl")).as("dl"))
       .agg(count(lit(1)).as("n"),
         coalesce(sum(col("dl")), lit(0L)).cast("long").as("sdl"))
       .head()
-    val old = idx.stats.select(col("n").cast("long"),
-      col("sum_dl").cast("long")).head()
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def swapIn(df: DataFrame, sub: String): Unit = {
-      val tmp = new org.apache.hadoop.fs.Path(s"$path/${sub}_remove_tmp")
-      val dst = new org.apache.hadoop.fs.Path(s"$path/$sub")
-      df.withColumn("index_format", lit(IndexFormatPrefix))
-        .write.mode("overwrite").parquet(tmp.toString)
-      require(fs.delete(dst, true),
-        s"bm25 removeDocs: could not delete $dst for the swap")
-      require(fs.rename(tmp, dst),
-        s"bm25 removeDocs: $sub swap rename failed — data is at $tmp")
-    }
-    // dfreq first: its rewrite reads the OLD postings (the removed
-    // rows), which the postings swap below invalidates. The whole
-    // three-table sequence runs under the pending-mutation marker: a
-    // failure between swaps is DETECTED at the next loadIndex instead
-    // of scoring silently wrong (each table alone still carries a
-    // valid stamp — ADVICE r15).
-    withMutationMarker(spark, path, "removeDocs") {
-      val dfDelta = removed.groupBy("tok").agg(count(lit(1)).as("ddf"))
-      swapIn(idx.dfreq.join(dfDelta, Seq("tok"), "left")
+    val dfDelta = removed.groupBy("tok").agg(count(lit(1)).as("ddf"))
+    val counts = Store.writeFileSet(path, Dfreq,
+      Store.table(spark, path, m, Dfreq).join(dfDelta, Seq("tok"), "left")
         .select(col("tok"),
           (col("df") - coalesce(col("ddf"), lit(0L))).as("df"))
-        .filter(col("df") > 0), "dfreq")
-      swapIn(remaining, "postings")
-      spark.range(1).select(
-          lit(old.getLong(0) - del.getLong(0)).as("n"),
-          lit(old.getLong(1) - del.getLong(1)).as("sum_dl"),
-          lit(IndexFormatPrefix).as("index_format"))
-        .write.mode("overwrite").parquet(s"$path/stats")
-    }
+        .filter(col("df") > 0), None)
+    val (oldN, oldDl) = statsOf(m)
+    Store.commit(spark, path, Some(m), m.format, m.schemas, Seq(left, counts),
+      m.values ++ Map("n" -> (oldN - del.getLong(0)).toString,
+        "sum_dl" -> (oldDl - del.getLong(1)).toString))
   }
 
   /** Answer top-k from a stored index — no text access, no tokenize. */
@@ -747,31 +610,25 @@ object Bm25 {
       "savePercolateTable: frame lacks qmap/avgdl/stats_fp — not a " +
       "compiled percolate registry from this build; rebuild with " +
       "compilePercolateTable")
-    require(compiled.limit(2).count() == 1L,
+    Store.saveOneRow(compiled.select(col("qmap"), col("avgdl"), col("stats_fp")),
+      path, PercolateFormatStamp,
       "savePercolateTable: compiled registry must be exactly one row — " +
       "this frame is not a compile output")
-    compiled.select(col("qmap"), col("avgdl"), col("stats_fp"))
-      .withColumn("registry_format", lit(PercolateFormatStamp))
-      .coalesce(1).write.mode("overwrite").parquet(path)
   }
 
   def loadPercolateTable(spark: org.apache.spark.sql.SparkSession,
                          path: String): DataFrame = {
-    val df = spark.read.parquet(path)
-    require(df.columns.contains("registry_format"),
-      s"stored percolate registry at $path has no registry_format " +
-      "column — not a savePercolateTable table; rebuild with " +
-      "compilePercolateTable + savePercolateTable")
-    val stamps = StoreStamp.distinctVals(df, "registry_format")
-    require(stamps.length == 1 && stamps.head == PercolateFormatStamp,
-      s"stored percolate registry at $path has layout " +
-      s"'${stamps.mkString(",")}', this build reads " +
-      s"'$PercolateFormatStamp' (the radix bucket assignment is frozen " +
-      "at compile time) — recompile and re-save")
-    require(df.limit(2).count() == 1L,
+    val m = Store.live(spark, path, s"stored percolate registry at $path has " +
+      "no manifest — not a savePercolateTable table; rebuild with " +
+      "compilePercolateTable + savePercolateTable")(
+      _ == PercolateFormatStamp,
+      f => s"stored percolate registry at $path has layout '$f', this build " +
+        s"reads '$PercolateFormatStamp' (the radix bucket assignment is " +
+        "frozen at compile time) — recompile and re-save")
+    require(m.rows(Store.OneRowTable) == 1L,
       s"stored percolate registry at $path is not exactly one row — " +
-      "partially written; recompile and re-save")
-    df.drop("registry_format")
+      "recompile and re-save")
+    Store.table(spark, path, m, Store.OneRowTable)
   }
 
   // ---- sharded percolate registries (round 18) -----------------------
@@ -836,30 +693,26 @@ object Bm25 {
         .forall(compiled.columns.contains),
       "saveShardedPercolateTable: frame lacks shard/qmap/avgdl/stats_fp " +
       "— not a compileShardedPercolateTable output")
-    compiled.select(col("shard"), col("qmap"), col("avgdl"),
-        col("stats_fp"))
-      .withColumn("registry_format", lit(ShardedPercolateFormatStamp))
-      .repartition(col("shard"))
-      .write.mode("overwrite").parquet(path)
+    val dup = compiled.groupBy("shard").agg(count(lit(1)).as("c"))
+      .filter(col("c") > 1).limit(1).count()
+    require(dup == 0L,
+      "saveShardedPercolateTable: frame has duplicate shard rows — not a " +
+      "compileShardedPercolateTable output")
+    Store.save(compiled.sparkSession, path, ShardedPercolateFormatStamp,
+      Seq((Shards, compiled.select(col("shard"), col("qmap"), col("avgdl"),
+        col("stats_fp")).repartition(col("shard")), None)))
   }
+
+  private val Shards = "shards"
 
   def loadShardedPercolateTable(spark: org.apache.spark.sql.SparkSession,
                                 path: String): DataFrame = {
-    val df = spark.read.parquet(path)
-    require(df.columns.contains("registry_format"),
-      s"stored sharded percolate registry at $path has no " +
-      "registry_format column — not a saveShardedPercolateTable table")
-    val stamps = StoreStamp.distinctVals(df, "registry_format")
-    require(stamps.length == 1 && stamps.head == ShardedPercolateFormatStamp,
-      s"stored sharded percolate registry at $path has layout " +
-      s"'${stamps.mkString(",")}', this build reads " +
-      s"'$ShardedPercolateFormatStamp' — recompile and re-save")
-    val dup = df.groupBy("shard").agg(count(lit(1)).as("c"))
-      .filter(col("c") > 1).limit(1).count()
-    require(dup == 0L,
-      s"stored sharded percolate registry at $path has duplicate shard " +
-      "rows — partially written; recompile and re-save")
-    df.drop("registry_format")
+    Store.table(spark, path, Store.live(spark, path, s"stored sharded percolate " +
+      s"registry at $path has no manifest — not a saveShardedPercolateTable table")(
+      _ == ShardedPercolateFormatStamp,
+      f => s"stored sharded percolate registry at $path has layout '$f', this " +
+        s"build reads '$ShardedPercolateFormatStamp' — recompile and re-save"),
+      Shards)
   }
 
   /** Percolate `docs` against a SHARDED registry: one

@@ -85,60 +85,11 @@ object Bpe {
         concat(slice(out, lit(1), size(out) - 1), array(lit(a + b))))
         .otherwise(concat(out, array(s))))
 
-  /** Train `numMerges` BPE merges: returns the ordered merge list.
-    * Driver work per iteration is ONE two-column row (the argmax) —
-    * never a table collect; the vocab-bounded symbol table is
-    * persisted per iteration with the previous one released.
-    *
-    * LATENCY NOTE: each merge is a separate Spark job (argmax collect +
-    * merged-table materialization), so at real tokenizer scale
-    * (30k–50k merges) the per-job scheduling floor dominates the
-    * vocab-bounded compute. [[trainFast]] is the production path —
-    * identical merge list (parity property in BpeSpec), one corpus
-    * pass, wall ∝ corpus instead of ∝ numMerges. This sequential
-    * variant stays as the distributed reference implementation the
-    * parity property checks against.
-    */
-  def train(docs: DataFrame, toksCol: String, numMerges: Int,
-            endMark: String = "</w>"): Seq[(String, String)] = {
-    require(numMerges >= 0, "numMerges must be >= 0")
-    var cur = wordSymbolCounts(docs, toksCol, endMark)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val merges = Seq.newBuilder[(String, String)]
-    var i = 0
-    var done = false
-    // the merge list is eager, so the last table is dead on return:
-    // release it here, on failure too, rather than leave it cached
-    try {
-      while (i < numMerges && !done) {
-        // deterministic argmax: count desc, then lexicographic (a, b)
-        val top = pairCounts(cur)
-          .orderBy(desc("cnt"), asc("a"), asc("b")).limit(1)
-          .collect()
-        if (top.isEmpty) done = true
-        else {
-          val (a, b) = (top(0).getString(0), top(0).getString(1))
-          merges += ((a, b))
-          val next = cur.select(col("word"), col("freq"),
-              mergeOnce(col("syms"), a, b).as("syms"))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          // materialize the new table BEFORE releasing the old one so
-          // the fold runs once, not once per downstream consumer
-          next.count()
-          cur.unpersist(blocking = false)
-          cur = next
-        }
-        i += 1
-      }
-    } finally cur.unpersist(blocking = false)
-    merges.result()
-  }
-
   // ---- fast training: one corpus pass + driver-side merge loop ------
 
   /** Spark string ordering is binary (UTF8String byte compare); the
     * driver-side tie-break must match it exactly or trainFast could
-    * diverge from [[train]] on non-ASCII symbols (Java's String
+    * diverge from the sequential reference trainer on non-ASCII symbols (Java's String
     * compareTo orders by UTF-16 code unit, which disagrees with code
     * points for supplementary characters).
     */
@@ -157,7 +108,7 @@ object Bpe {
 
   private case class PairEntry(cnt: Long, a: String, b: String)
 
-  /** Max-heap ordering = [[train]]'s argmax: count desc, then
+  /** Max-heap ordering = the sequential reference trainer's argmax: count desc, then
     * lexicographic (a, b) ascending in binary collation.
     */
   private val entryOrd: Ordering[PairEntry] = new Ordering[PairEntry] {
@@ -186,7 +137,8 @@ object Bpe {
     out.toIndexedSeq
   }
 
-  /** Production-path BPE training: identical merge list to [[train]]
+  /** Production-path BPE training: identical merge list to the
+    * sequential one-job-per-merge reference trainer (test scope)
     * (BpeSpec pins the parity property), but the merge loop runs on the
     * driver over the collected word-frequency table — the rare case
     * where driver-side IS the scale-safe shape, because that table is

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions
+import graft.store.{Manifest, Store}
 
 /** Deduplication operators for training-data pipelines, Spark-first and
   * shuffle-aware:
@@ -160,18 +161,21 @@ object Dedup {
     * built with a different shingleK or numHashes carries the same
     * family yet its signatures are incomparable (a k=5 signature never
     * collides with a k=9 one except by luck, so recall silently
-    * dies). The store bakes (k, h) into the stamp; append/audit derive
-    * their geometry FROM the stamp, making a mismatch unrepresentable.
+    * dies). The store bakes (k, h) into the manifest's format stamp;
+    * append/audit derive their geometry FROM the stamp, making a
+    * mismatch unrepresentable.
     */
   private[graft] def sigStoreStamp(shingleK: Int, numHashes: Int): String =
     s"graft-minhashsig-v$signatureFamilyVersion;k=$shingleK;h=$numHashes"
 
-  /** A loaded signature store: the stamped frame (sig_family kept — the
-    * downstream `corpusSigs` consumers re-verify it) plus the parsed
-    * geometry every consumer must call with.
+  /** A loaded signature store: the signature frame (sig_family kept —
+    * the downstream `corpusSigs` consumers re-verify it) plus the
+    * parsed geometry every consumer must call with.
     */
   final case class SignatureStore(sigs: DataFrame, shingleK: Int,
                                   numHashes: Int)
+
+  private val SigTable = "sigs"
 
   /** Persist the corpus' signature table under `path` — the build-once
     * state of the incremental NEAR-dup audit (the
@@ -184,52 +188,53 @@ object Dedup {
                          path: String,
                          shingleK: Int = DefaultShingleK,
                          numHashes: Int = 64): Unit =
-    signatureTable(docs, idCol, textCol, shingleK, numHashes)
-      .withColumn("sig_store", lit(sigStoreStamp(shingleK, numHashes)))
-      .write.mode("overwrite").parquet(path)
+    Store.save(docs.sparkSession, path, sigStoreStamp(shingleK, numHashes),
+      Seq((SigTable, signatureTable(docs, idCol, textCol, shingleK, numHashes),
+        Some("id"))))
+
+  /** The live manifest, its format and geometry checked — no job. */
+  private def sigManifest(spark: org.apache.spark.sql.SparkSession,
+                          path: String): (Manifest, Int, Int) = {
+    val m = Store.live(spark, path,
+      s"stored signature table at $path has no manifest — not a " +
+      "saveSignatureStore table; rebuild with Dedup.saveSignatureStore")(
+      _.startsWith(s"graft-minhashsig-v$signatureFamilyVersion;"),
+      f => s"stored signature table at $path has stamp '$f', this build " +
+        s"writes 'graft-minhashsig-v$signatureFamilyVersion;…' — signatures " +
+        "are not comparable across families/layouts; rebuild with " +
+        "Dedup.saveSignatureStore")
+    val geom = m.format.split(';').drop(1)
+      .map(_.split('=')).map(kv => kv(0) -> kv(1).toInt).toMap
+    (m, geom("k"), geom("h"))
+  }
 
   def loadSignatureStore(spark: org.apache.spark.sql.SparkSession,
                          path: String): SignatureStore = {
-    val df = spark.read.parquet(path)
-    require(df.columns.contains("sig_store"),
-      s"stored signature table at $path has no sig_store column — not a " +
-      "saveSignatureStore table; rebuild with Dedup.saveSignatureStore")
-    val stamps = StoreStamp.distinctVals(df, "sig_store")
-    require(stamps.length == 1 && stamps.head != null &&
-        stamps.head.startsWith(s"graft-minhashsig-v$signatureFamilyVersion;"),
-      s"stored signature table at $path has stamp " +
-      s"'${stamps.mkString(",")}', this build writes " +
-      s"'graft-minhashsig-v$signatureFamilyVersion;…' — signatures are " +
-      "not comparable across families/layouts; rebuild with " +
-      "Dedup.saveSignatureStore")
-    val geom = stamps.head.split(';').drop(1)
-      .map(_.split('=')).map(kv => kv(0) -> kv(1).toInt).toMap
-    SignatureStore(df.drop("sig_store"), geom("k"), geom("h"))
+    val (m, k, h) = sigManifest(spark, path)
+    SignatureStore(Store.table(spark, path, m, SigTable), k, h)
   }
 
   /** Append a new batch's signatures under the STORED geometry (derived
-    * from the stamp — a mismatched call is unrepresentable) after an
-    * eager id-collision check (the [[SetSimJoin.appendSets]] contract:
-    * a duplicate id double-answers every downstream audit).
+    * from the stamp — a mismatched call is unrepresentable), refused
+    * on an id collision (the [[SetSimJoin.appendSets]] contract: a
+    * duplicate id double-answers every downstream audit). The id
+    * semi-join runs only when the batch's id range, observed on the
+    * write, overlaps the stored range.
     */
   def appendSignatureStore(spark: org.apache.spark.sql.SparkSession,
                            path: String, newDocs: DataFrame,
                            idCol: String, textCol: String): Unit = {
-    val st = loadSignatureStore(spark, path)
-    val overlap = newDocs.select(col(idCol).as("id"))
-      .join(st.sigs.select("id"), Seq("id"), "left_semi")
-      .limit(1).count()
-    require(overlap == 0L,
+    val (m, k, h) = sigManifest(spark, path)
+    Store.append(spark, path, m, SigTable,
+      signatureTable(newDocs, idCol, textCol, k, h), "id",
       "appendSignatureStore: new batch ids collide with stored ids — " +
       "re-id the batch or rebuild with saveSignatureStore")
-    signatureTable(newDocs, idCol, textCol, st.shingleK, st.numHashes)
-      .withColumn("sig_store", lit(sigStoreStamp(st.shingleK, st.numHashes)))
-      .write.mode("append").parquet(path)
   }
 
   /** Compact the store's accumulated per-batch file-sets — coalesce
-    * only (no exchange), tmp write + Hadoop-FS swap rename, rows
-    * spec-pinned identical (the [[SetSimJoin.compactSets]] contract).
+    * only (no exchange), one new file-set committed in place of the
+    * old ones, rows spec-pinned identical (the
+    * [[SetSimJoin.compactSets]] contract).
     */
   def compactSignatureStore(spark: org.apache.spark.sql.SparkSession,
                             path: String,
@@ -237,21 +242,8 @@ object Dedup {
     require(targetFileBytes > 0,
       s"compactSignatureStore: targetFileBytes must be > 0, got " +
       s"$targetFileBytes")
-    val st = loadSignatureStore(spark, path)
-    val hp = new org.apache.hadoop.fs.Path(path)
-    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val bytes = fs.getContentSummary(hp).getLength
-    val nFiles = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes)
-      .min(Int.MaxValue.toLong).toInt
-    val tmp = new org.apache.hadoop.fs.Path(path + "_compact_tmp")
-    st.sigs
-      .withColumn("sig_store", lit(sigStoreStamp(st.shingleK, st.numHashes)))
-      .coalesce(nFiles)
-      .write.mode("overwrite").parquet(tmp.toString)
-    require(fs.delete(hp, true),
-      s"compactSignatureStore: could not delete $path for the swap")
-    require(fs.rename(tmp, hp),
-      s"compactSignatureStore: swap rename failed — data is at $tmp")
+    Store.compact(spark, path, sigManifest(spark, path)._1, Seq(SigTable),
+      targetFileBytes)
   }
 
   /** Remove stored signatures by id — the retraction member (loud on
@@ -260,31 +252,22 @@ object Dedup {
     */
   def removeSignatureStore(spark: org.apache.spark.sql.SparkSession,
                            path: String, removeIds: DataFrame): Unit = {
-    val st = loadSignatureStore(spark, path)
+    val (m, _, _) = sigManifest(spark, path)
+    val sigs = Store.table(spark, path, m, SigTable)
     val ids = removeIds.select(removeIds.columns.head).toDF("id")
     require(ids.filter(col("id").isNull).limit(1).count() == 0L,
       "removeSignatureStore: removal list contains null ids")
-    val missing = ids.join(st.sigs.select("id"), Seq("id"), "left_anti")
+    val missing = ids.join(sigs.select("id"), Seq("id"), "left_anti")
       .limit(1).collect()
     require(missing.isEmpty,
       s"removeSignatureStore: id " +
       s"'${missing.headOption.map(_.get(0)).orNull}' is not in the store " +
       "— a typo'd retraction must fail loudly, not report success")
-    val remaining = st.sigs.join(ids, Seq("id"), "left_anti")
-    require(remaining.limit(1).count() == 1L,
+    val left = Store.writeKept(spark, path, SigTable,
+      sigs.join(ids, Seq("id"), "left_anti"), "id",
       "removeSignatureStore: removal would empty the store — delete the " +
       "path and rebuild with saveSignatureStore instead")
-    val hp = new org.apache.hadoop.fs.Path(path)
-    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(path + "_remove_tmp")
-    remaining
-      .withColumn("sig_store", lit(sigStoreStamp(st.shingleK, st.numHashes)))
-      .write.mode("overwrite").parquet(tmp.toString)
-    require(fs.delete(hp, true),
-      s"removeSignatureStore: could not delete $path for the swap")
-    require(fs.rename(tmp, hp),
-      s"removeSignatureStore: swap rename failed — surviving data is " +
-      s"at $tmp")
+    Store.commit(spark, path, Some(m), m.format, m.schemas, Seq(left), m.values)
   }
 
   /** Incremental near-dup audit answered FROM the store: load (stamp +
@@ -1130,6 +1113,16 @@ object Dedup {
       prevSum = s
     }
     release(sym)
+    // A round cap that binds leaves labels between fixpoints: part of a
+    // component still carries a larger label, so the components come
+    // back split with no sign of it. Refuse instead.
+    if (!done) {
+      release(labels)
+      if (!dense) release(participants)
+      throw new IllegalStateException(
+        s"connectedComponents: no fixpoint after maxIter = $maxIter rounds " +
+        "— the labels would split components; raise maxIter")
+    }
     // The returned frame outlives the call, so it is checkpointed
     // EAGERLY: the round caches it derives from are released right
     // after, and a lazy hand-off would leave its lineage rooted in

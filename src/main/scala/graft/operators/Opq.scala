@@ -410,14 +410,14 @@ object Opq {
   private[graft] val RotationFormatPrefix = "graft-opq-v1"
 
   /** Persist rotation + the PQ index of the ROTATED corpus under
-    * `path` (`rotation` parquet + the [[Pq.saveIndex]] layout under
-    * `path/pq`). The rotation table is stamped like every stored
-    * artifact here; a query answered under the wrong rotation is
+    * `path`: the [[Pq.saveIndex]] store, with the rotation (its stamp
+    * and its d×d matrix) as values of the same manifest, so the two
+    * commit together. A query answered under the wrong rotation is
     * plausible garbage, so load rejects mismatches loudly.
     */
   /** @param chosen provenance metadata from [[acceptRotation]]
     *               ("trained" | "identity"; "" omits the field) —
-    *               stamped into the rotation table so an operator can
+    *               stamped into the rotation stamp so an operator can
     *               tell a deliberately-identity index (acceptance
     *               rejected the trained rotation) from an untrained one.
     */
@@ -427,50 +427,43 @@ object Opq {
                 vecCol: String = "embedding",
                 residual: Boolean = false,
                 chosen: String = ""): Unit = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
     val dim = rotation.length
     val stamp = s"$RotationFormatPrefix;dim=$dim" +
       (if (chosen.nonEmpty) s";chosen=$chosen" else "")
-    rotation.zipWithIndex.map { case (row, i) => (i, row) }
-      .toDF("row_idx", "rv")
-      .withColumn("rotation_format", lit(stamp))
-      .write.mode("overwrite").parquet(s"$path/rotation")
     val rc = rotateVectors(corpus.select(col(idCol), col(vecCol)), vecCol,
         rotation, "rot")
       .select(col(idCol), col("rot").as(vecCol))
-    Pq.saveIndex(rc, s"$path/pq", nCells, m, ksub, trainIters, idCol,
-      vecCol, residual)
+    Pq.saveIndexWith(rc, path, nCells, m, ksub, trainIters, idCol,
+      vecCol, residual, Map(RotationKey -> stamp,
+        RotationRowsKey -> rotation.map(_.mkString(",")).mkString(";")))
   }
+
+  private val RotationKey = "rotation"
+  private val RotationRowsKey = "rotation_rows"
 
   final case class OpqIndex(rotation: Seq[Seq[Double]], pq: Pq.IvfPqIndex,
                             chosen: Option[String] = None)
 
+  /** Loads the rotation from the manifest and the PQ tables as lazy
+    * frames — no job. */
   def loadIndex(spark: org.apache.spark.sql.SparkSession,
                 path: String): OpqIndex = {
-    val rdf = spark.read.parquet(s"$path/rotation")
-    require(rdf.columns.contains("rotation_format"),
-      s"stored OPQ rotation at $path has no rotation_format column — " +
-      "not an OPQ index; rebuild with Opq.saveIndex")
-    val stamps = StoreStamp.distinctVals(rdf, "rotation_format")
-    require(stamps.length == 1 && stamps.head != null &&
-        stamps.head.startsWith(RotationFormatPrefix),
-      s"stored OPQ rotation at $path has layout '${stamps.mkString(",")}', " +
+    val values = Pq.indexManifest(spark, path).values
+    val stamp = values.get(RotationKey)
+    require(stamp.exists(_.startsWith(RotationFormatPrefix + ";")),
+      s"stored OPQ rotation at $path has layout '${stamp.orNull}', " +
       s"this build reads '$RotationFormatPrefix' — rebuild with " +
       "Opq.saveIndex")
-    val dim = stamps.head.split(';')(1).stripPrefix("dim=").toInt
-    val rows = rdf.select(col("row_idx"), col("rv")).collect()
-      .map(r => r.getInt(0) -> r.getSeq[Double](1)).toMap
-    require(rows.size == dim && (0 until dim).forall(rows.contains),
-      s"stored OPQ rotation at $path has ${rows.size} rows, stamp says " +
-      s"$dim — partially written; rebuild with Opq.saveIndex")
-    val pqIdx = Pq.loadIndex(spark, s"$path/pq")
-    require(pqIdx.dim == dim,
+    val dim = stamp.get.split(';')(1).stripPrefix("dim=").toInt
+    val rows = values(RotationRowsKey)
+      .split(';').toSeq.map(_.split(',').toSeq.map(_.toDouble))
+    val pqIdx = Pq.loadIndex(spark, path)
+    require(pqIdx.dim == dim && rows.length == dim,
       s"stored OPQ rotation dim $dim != PQ index dim ${pqIdx.dim} — " +
       "mixed artifacts; rebuild with Opq.saveIndex")
-    val chosen = stamps.head.split(';').collectFirst {
+    val chosen = stamp.get.split(';').collectFirst {
       case f if f.startsWith("chosen=") => f.stripPrefix("chosen=") }
-    OpqIndex((0 until dim).map(rows), pqIdx, chosen)
+    OpqIndex(rows, pqIdx, chosen)
   }
 
   /** Append a new vector batch to a stored OPQ index: rotate the batch
@@ -510,24 +503,24 @@ object Opq {
         newCorpus.select(col(idCol), col(vecCol)), vecCol,
         idx.rotation, "rot")
       .select(col(idCol), col("rot").as(vecCol))
-    Pq.appendVectors(spark, s"$path/pq", rotated, idCol, vecCol)
+    Pq.appendVectors(spark, path, rotated, idCol, vecCol)
   }
 
-  /** Remove vectors from a stored OPQ index by id — codes live under
-    * `path/pq` and the rotation is membership-independent, so removal
-    * delegates to [[Pq.removeVectors]] verbatim (same loud unknown-id /
-    * would-empty guards, same swap-rename write).
+  /** Remove vectors from a stored OPQ index by id — the rotation is
+    * membership-independent, so removal delegates to
+    * [[Pq.removeVectors]] verbatim (same loud unknown-id / would-empty
+    * guards; the commit keeps the rotation values).
     */
   def removeVectors(spark: org.apache.spark.sql.SparkSession, path: String,
                     removeIds: DataFrame): Unit =
-    Pq.removeVectors(spark, s"$path/pq", removeIds)
+    Pq.removeVectors(spark, path, removeIds)
 
-  /** Compact a stored OPQ index's codes table — [[Pq.compactCodes]]
-    * under `path/pq`; the rotation table is d rows and never needs it.
+  /** Compact a stored OPQ index's codes table — [[Pq.compactCodes]];
+    * the rotation lives in the manifest and never needs it.
     */
   def compactCodes(spark: org.apache.spark.sql.SparkSession, path: String,
                    targetFileBytes: Long = 128L * 1024 * 1024): Unit =
-    Pq.compactCodes(spark, s"$path/pq", targetFileBytes)
+    Pq.compactCodes(spark, path, targetFileBytes)
 
   /** Answer from a stored OPQ index: rotate the queries with the STORED
     * rotation, then [[Pq.queryIndex]] — no corpus access, no encode.

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.store.{Manifest, Store}
 
 /** Product quantization (PQ) for embedding similarity search at 100 TB
   * memory budgets — the compressed-corpus member of the [[Similarity]]
@@ -498,11 +499,12 @@ object Pq {
 
   // ---- stored index: build once, answer forever, append-only ---------
 
-  /** Stored-index layout version + geometry, stamped on every sub-table
-    * (the `sig_family` / `sketch_format` convention): an index written
-    * by a different layout, or whose geometry disagrees across
-    * sub-tables, must fail loudly on load — ADC against mismatched
-    * codebooks returns plausible garbage, not an error.
+  /** Stored-index layout version + geometry, the format stamp of the
+    * index's manifest (the `sig_family` convention): an index written
+    * by a different layout must fail loudly on load — ADC against
+    * mismatched codebooks returns plausible garbage, not an error. One
+    * manifest stamps all three tables, so their geometry cannot
+    * disagree.
     */
   private[graft] val IndexFormatPrefix = "graft-ivfpq-v1"
 
@@ -511,8 +513,7 @@ object Pq {
     s"$IndexFormatPrefix;m=$m;ksub=$ksub;nCells=$nCells;dim=$dim" +
       s";res=${if (residual) 1 else 0}"
 
-  /** A loaded index: the three stored frames (format column stripped)
-    * plus the parsed geometry.
+  /** A loaded index: the three stored frames plus the parsed geometry.
     */
   final case class IvfPqIndex(centroids: DataFrame, codebooks: DataFrame,
                               codes: DataFrame, m: Int, ksub: Int,
@@ -521,20 +522,28 @@ object Pq {
 
   /** Build the corpus-side index ONCE and persist it: `centroids`
     * (nCells rows), `codebooks` (m·ksub rows), `codes` (one row per
-    * vector, m BYTES of payload) under `path`, each stamped with the
-    * layout+geometry marker. At 100 TB this is the whole point of PQ —
-    * the corpus is scanned once at build time; every later query batch
-    * reads codes (64× smaller than vectors) and never rescans
-    * embeddings.
+    * vector, m BYTES of payload) under `path`, committed in one
+    * manifest stamped with the layout+geometry marker. At 100 TB this
+    * is the whole point of PQ — the corpus is scanned once at build
+    * time; every later query batch reads codes (64× smaller than
+    * vectors) and never rescans embeddings.
     */
   def saveIndex(corpus: DataFrame, path: String, nCells: Int = 16,
                 m: Int = 8, ksub: Int = 16, trainIters: Int = 0,
                 idCol: String = "vec_id",
                 vecCol: String = "embedding",
-                residual: Boolean = false): Unit = {
+                residual: Boolean = false): Unit =
+    saveIndexWith(corpus, path, nCells, m, ksub, trainIters, idCol, vecCol,
+      residual, Map.empty)
+
+  /** [[saveIndex]] with extra manifest values (the OPQ rotation). */
+  private[operators] def saveIndexWith(corpus: DataFrame, path: String,
+                                       nCells: Int, m: Int, ksub: Int,
+                                       trainIters: Int, idCol: String,
+                                       vecCol: String, residual: Boolean,
+                                       values: Map[String, String]): Unit = {
     val dsub = dsubOf(corpus, m, vecCol)
     val dim = dsub * m
-    val st = stampOf(m, ksub, nCells, dim, residual)
     val cents = corpus.select(col(idCol).as("cell"),
         asDouble(col(vecCol)).as("cellv"))
       .filter(col("cell") < nCells)
@@ -554,75 +563,55 @@ object Pq {
         .join(Similarity.ivfAssign(corpus, nCells, idCol, vecCol)
           .select(col("ivf_id").as("pq_id"), col("cell")), Seq("pq_id"))
         .select(col("cell"), col("pq_id"), col("codes"))
-    cents.withColumn("index_format", lit(st))
-      .write.mode("overwrite").parquet(s"$path/centroids")
-    cb.withColumn("index_format", lit(st))
-      .write.mode("overwrite").parquet(s"$path/codebooks")
-    encoded.withColumn("index_format", lit(st))
-      .write.mode("overwrite").parquet(s"$path/codes")
+    Store.save(corpus.sparkSession, path, stampOf(m, ksub, nCells, dim, residual),
+      Seq(("centroids", cents, None), ("codebooks", cb, None),
+        (Codes, encoded, Some("pq_id"))), values)
   }
 
-  private def checkedRead(spark: org.apache.spark.sql.SparkSession,
-                          path: String, sub: String): (DataFrame, String) = {
-    val df = spark.read.parquet(s"$path/$sub")
-    require(df.columns.contains("index_format"),
-      s"stored IVF-PQ $sub table at $path has no index_format column — " +
-      "written by a pre-versioning build or not an index table; rebuild " +
-      "with Pq.saveIndex")
-    val stamps = df.select(col("index_format")).distinct().limit(3)
-      .collect().map(_.getString(0))
-    require(stamps.length == 1,
-      s"stored IVF-PQ $sub table at $path carries ${stamps.length} " +
-      s"distinct index_format stamps (${stamps.mkString(", ")}) — mixed " +
-      "layouts cannot be answered; rebuild with Pq.saveIndex")
-    require(stamps.head != null && stamps.head.startsWith(IndexFormatPrefix),
-      s"stored IVF-PQ $sub table at $path has layout '${stamps.head}', " +
-      s"this build reads '$IndexFormatPrefix' — rebuild with Pq.saveIndex")
-    (df.drop("index_format"), stamps.head)
-  }
+  private val Codes = "codes"
 
-  /** Load a stored index, rejecting unstamped/mismatched tables loudly
-    * and parsing the geometry out of the stamp.
+  /** The live manifest, its layout stamp checked — no job. */
+  private[operators] def indexManifest(spark: org.apache.spark.sql.SparkSession,
+                                       path: String): Manifest =
+    Store.live(spark, path, s"stored IVF-PQ index at $path has no manifest " +
+      "— written by a pre-manifest build or not an index; rebuild with " +
+      "Pq.saveIndex")(
+      _.startsWith(IndexFormatPrefix + ";"),
+      f => s"stored IVF-PQ index at $path has layout '$f', this build reads " +
+        s"'$IndexFormatPrefix' — rebuild with Pq.saveIndex")
+
+  /** Load a stored index from its manifest, rejecting a missing or
+    * foreign one loudly and parsing the geometry out of the stamp. Runs
+    * no job.
     */
   def loadIndex(spark: org.apache.spark.sql.SparkSession,
                 path: String): IvfPqIndex = {
-    val (cents, s1) = checkedRead(spark, path, "centroids")
-    val (cb, s2) = checkedRead(spark, path, "codebooks")
-    val (codes, s3) = checkedRead(spark, path, "codes")
-    require(s1 == s2 && s2 == s3,
-      s"stored IVF-PQ index at $path has disagreeing sub-table stamps " +
-      s"($s1 / $s2 / $s3) — partially rewritten index; rebuild with " +
-      "Pq.saveIndex")
-    val params = s1.stripPrefix(IndexFormatPrefix + ";").split(';')
+    val mf = indexManifest(spark, path)
+    val params = mf.format.stripPrefix(IndexFormatPrefix + ";").split(';')
       .map(_.split('=')).map(kv => kv(0) -> kv(1).toInt).toMap
-    IvfPqIndex(cents, cb, codes, params("m"), params("ksub"),
-      params("nCells"), params("dim"),
-      // pre-residual indexes carry no res key — they are raw-encoded
-      residual = params.getOrElse("res", 0) == 1)
+    def t(name: String) = Store.table(spark, path, mf, name)
+    IvfPqIndex(t("centroids"), t("codebooks"), t(Codes), params("m"),
+      params("ksub"), params("nCells"), params("dim"),
+      residual = params("res") == 1)
   }
 
   /** Append a NEW batch of vectors to a stored index without touching
     * the existing codes: encode with the STORED codebooks, assign to
     * the STORED centroids, append (the incremental-dedup convention).
     * New ids must not collide with stored ids — duplicates would
-    * double-answer; the overlap check is one column-pruned semi-join
-    * over the codes table. With the deterministic seed convention and
-    * fresh ids, append-then-query equals rebuild-from-scratch
-    * (spec-pinned).
+    * double-answer; the semi-join over the codes ids runs only when the
+    * batch's id range, observed on the write, overlaps the stored one.
+    * With the deterministic seed convention and fresh ids,
+    * append-then-query equals rebuild-from-scratch (spec-pinned).
     */
   def appendVectors(spark: org.apache.spark.sql.SparkSession, path: String,
                     newCorpus: DataFrame, idCol: String = "vec_id",
                     vecCol: String = "embedding"): Unit = {
+    val mf = indexManifest(spark, path)
     val idx = loadIndex(spark, path)
     val newDim = newCorpus.select(size(col(vecCol))).head().getInt(0)
     require(newDim == idx.dim,
       s"appendVectors: new batch width $newDim != index width ${idx.dim}")
-    val overlap = newCorpus.select(col(idCol).as("pq_id"))
-      .join(idx.codes.select("pq_id"), Seq("pq_id"), "left_semi")
-      .limit(1).count()
-    require(overlap == 0L,
-      "appendVectors: new batch ids collide with stored ids — duplicate " +
-      "ids would double-answer queries; re-id the batch or rebuild")
     val encoded =
       if (idx.residual)
         // residual append: residuals against the STORED centroids
@@ -640,37 +629,23 @@ object Pq {
           .join(assigned, Seq("pq_id"))
           .select(col("cell"), col("pq_id"), col("codes"))
       }
-    encoded.withColumn("index_format",
-        lit(stampOf(idx.m, idx.ksub, idx.nCells, idx.dim, idx.residual)))
-      .write.mode("append").parquet(s"$path/codes")
+    Store.append(spark, path, mf, Codes, encoded, "pq_id",
+      "appendVectors: new batch ids collide with stored ids — duplicate " +
+      "ids would double-answer queries; re-id the batch or rebuild")
   }
 
   /** Rewrite the stored codes table into ~`targetFileBytes` parquet
     * files — [[appendVectors]] appends one file-set per batch (the
     * [[graft.operators.SetSimJoin.compactSets]] small-files shape,
     * applied to the dense index; centroids/codebooks are tiny and
-    * write-once). Row set untouched; COALESCE only; tmp write +
-    * Hadoop-FS swap rename.
+    * write-once). Row set untouched; COALESCE only; one commit.
     */
   def compactCodes(spark: org.apache.spark.sql.SparkSession, path: String,
                    targetFileBytes: Long = 128L * 1024 * 1024): Unit = {
     require(targetFileBytes > 0,
       s"compactCodes: targetFileBytes must be > 0, got $targetFileBytes")
-    val idx = loadIndex(spark, path) // stamp-checked
-    val dst = new org.apache.hadoop.fs.Path(s"$path/codes")
-    val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val bytes = fs.getContentSummary(dst).getLength
-    val n = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes)
-      .min(Int.MaxValue.toLong).toInt
-    val tmp = new org.apache.hadoop.fs.Path(s"$path/codes_compact_tmp")
-    idx.codes.withColumn("index_format",
-        lit(stampOf(idx.m, idx.ksub, idx.nCells, idx.dim, idx.residual)))
-      .coalesce(n)
-      .write.mode("overwrite").parquet(tmp.toString)
-    require(fs.delete(dst, true),
-      s"compactCodes: could not delete $dst for the swap")
-    require(fs.rename(tmp, dst),
-      s"compactCodes: swap rename failed — compacted codes are at $tmp")
+    Store.compact(spark, path, indexManifest(spark, path), Seq(Codes),
+      targetFileBytes)
   }
 
   /** Remove vectors from a stored index by id — the retraction /
@@ -683,42 +658,31 @@ object Pq {
     * pre-removal answers with the removed ids excluded and ranks
     * recomputed (spec-pinned). Unknown ids are a LOUD error (a typo'd
     * retraction must not report success); removing every vector is too
-    * (an empty codes table is unloadable by the stamp check — that is a
-    * delete-the-path operation, not a removal). The codes table
-    * rewrites through a sibling tmp dir + Hadoop-FS swap rename
-    * (Spark cannot overwrite a path its own plan reads); not
-    * transactional — a failure between delete and rename leaves the
-    * surviving rows at the tmp path.
+    * (that is a delete-the-path operation, not a removal). The
+    * surviving codes commit as one new file-set.
     *
     * @param removeIds one column of ids (any name); null ids rejected.
     */
   def removeVectors(spark: org.apache.spark.sql.SparkSession, path: String,
                     removeIds: DataFrame): Unit = {
-    val idx = loadIndex(spark, path)
+    val mf = indexManifest(spark, path)
+    val codes = Store.table(spark, path, mf, Codes)
     val ids = removeIds.select(removeIds.columns.head).toDF("pq_id")
     require(ids.filter(col("pq_id").isNull).limit(1).count() == 0L,
       "removeVectors: removal list contains null ids")
-    val missing = ids.join(idx.codes.select("pq_id"), Seq("pq_id"),
+    val missing = ids.join(codes.select("pq_id"), Seq("pq_id"),
         "left_anti")
       .limit(1).collect()
     require(missing.isEmpty,
       s"removeVectors: id '${missing.headOption.map(_.get(0)).orNull}' " +
       "is not in the stored index — a typo'd retraction must fail " +
       "loudly, not report success")
-    val remaining = idx.codes.join(ids, Seq("pq_id"), "left_anti")
-    require(remaining.limit(1).count() == 1L,
+    val left = Store.writeKept(spark, path, Codes,
+      codes.join(ids, Seq("pq_id"), "left_anti"), "pq_id",
       "removeVectors: removal would empty the index — delete the path " +
       "and rebuild with saveIndex instead")
-    val hp = new org.apache.hadoop.fs.Path(s"$path/codes")
-    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(s"$path/codes_remove_tmp")
-    remaining.withColumn("index_format",
-        lit(stampOf(idx.m, idx.ksub, idx.nCells, idx.dim, idx.residual)))
-      .write.mode("overwrite").parquet(tmp.toString)
-    require(fs.delete(hp, true),
-      s"removeVectors: could not delete $hp for the swap")
-    require(fs.rename(tmp, hp),
-      s"removeVectors: swap rename failed — surviving codes are at $tmp")
+    Store.commit(spark, path, Some(mf), mf.format, mf.schemas,
+      mf.fileSets.filterNot(_.table == Codes) :+ left, mf.values)
   }
 
   /** Answer top-k from a stored index — no corpus access, no encode:

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.store.{Manifest, Store}
 
 /** Exact all-pairs set-similarity join via PREFIX FILTERING (the
   * PPJoin/AllPairs family — Bayardo et al. 2007, Xiao et al. 2008;
@@ -476,6 +477,8 @@ object SetSimJoin {
                           toksCol: String): DataFrame =
     orderedSetsRaw(docs, idCol, toksCol).filter(col("n") >= 1)
 
+  private val SetsTable = "sets"
+
   /** Persist the corpus' value-ordered sets under `path` — the
     * build-once state of the incremental near-dup audit (the
     * [[Dedup]] stored-signatures convention, exact instead of
@@ -483,76 +486,45 @@ object SetSimJoin {
     */
   def saveSets(docs: DataFrame, idCol: String, toksCol: String,
                path: String): Unit =
-    orderedSets(docs, idCol, toksCol)
-      .withColumn("setsim_format", lit(SetsFormatStamp))
-      .write.mode("overwrite").parquet(path)
+    Store.save(docs.sparkSession, path, SetsFormatStamp,
+      Seq((SetsTable, orderedSets(docs, idCol, toksCol), Some("sid"))))
+
+  /** The live manifest, its layout stamp checked — no job. */
+  private def setsManifest(spark: org.apache.spark.sql.SparkSession,
+                           path: String): Manifest =
+    Store.live(spark, path, s"stored set-similarity state at $path has no " +
+      "manifest — not a saveSets table; rebuild with SetSimJoin.saveSets")(
+      _ == SetsFormatStamp,
+      f => s"stored set-similarity state at $path has layout '$f', this " +
+        s"build reads '$SetsFormatStamp' — rebuild with SetSimJoin.saveSets")
 
   def loadSets(spark: org.apache.spark.sql.SparkSession,
-               path: String): DataFrame = {
-    val df = readSetsSchemaChecked(spark, path)
-    requireSetsStamp(df, path)
-    df.drop("setsim_format")
-  }
+               path: String): DataFrame =
+    Store.table(spark, path, setsManifest(spark, path), SetsTable)
 
-  /** Schema half of the loadSets check — metadata-only, no job. */
-  private def readSetsSchemaChecked(spark: org.apache.spark.sql.SparkSession,
-                                    path: String): DataFrame = {
-    val df = spark.read.parquet(path)
-    require(df.columns.contains("setsim_format"),
-      s"stored set-similarity state at $path has no setsim_format column " +
-      "— not a saveSets table; rebuild with SetSimJoin.saveSets")
-    df
-  }
-
-  /** Stamp-value half of the loadSets check — one partial-aggregating
-    * job. Split out (r19) so the incremental audits can overlap it
-    * with their batch-stats job (two independent one-row aggregates;
-    * guide §2.6) instead of serializing another job floor at the head
-    * of every audit.
-    */
-  private def requireSetsStamp(df: DataFrame, path: String): Unit = {
-    val stamps = StoreStamp.distinctVals(df, "setsim_format")
-    require(stamps.length == 1 && stamps.head == SetsFormatStamp,
-      s"stored set-similarity state at $path has layout " +
-      s"'${stamps.mkString(",")}', this build reads '$SetsFormatStamp' — " +
-      "rebuild with SetSimJoin.saveSets")
-  }
-
-  /** The audits' overlapped load + head measurement (r19): runs the
-    * stamp-value job on a side thread while the caller thread runs the
-    * fused batch-stats/disjoint job, then joins both. Failure contract
-    * unchanged up to ordering: schema problems still surface eagerly
-    * before any job; a foreign stamp still aborts the audit with
-    * loadSets' message (now possibly after the disjoint check's, both
-    * are loud requires).
+  /** The audits' load + head measurement: the manifest load runs no
+    * job, so the fused batch-stats/disjoint job is the only head job.
     */
   private def loadSetsWithBatchStats(
       spark: org.apache.spark.sql.SparkSession, path: String,
       batchCut: DataFrame, op: String): (DataFrame, Long, Long) = {
-    val raw = readSetsSchemaChecked(spark, path)
-    val stored = raw.drop("setsim_format")
-    val stamp = graft.plans.SideJobs.fork(requireSetsStamp(raw, path))
+    val stored = loadSets(spark, path)
     val (bRows, bToks) = batchStatsRequireDisjoint(stored, batchCut, op)
-    stamp()
     (stored, bRows, bToks)
   }
 
-  /** Append a new batch's sets after an id-collision check (duplicate
-    * ids would pair with themselves and double-answer audits).
+  /** Append a new batch's sets, refused on an id collision (duplicate
+    * ids would pair with themselves and double-answer audits). The id
+    * semi-join runs only when the batch's id range, observed on the
+    * write, overlaps the stored range.
     */
   def appendSets(spark: org.apache.spark.sql.SparkSession, path: String,
                  newDocs: DataFrame, idCol: String,
                  toksCol: String): Unit = {
-    val stored = loadSets(spark, path)
-    val batch = orderedSets(newDocs, idCol, toksCol)
-    val overlap = batch.select("sid")
-      .join(stored.select("sid"), Seq("sid"), "left_semi")
-      .limit(1).count()
-    require(overlap == 0L,
+    Store.append(spark, path, setsManifest(spark, path), SetsTable,
+      orderedSets(newDocs, idCol, toksCol), "sid",
       "setsim appendSets: new batch ids collide with stored ids — " +
       "re-id the batch or rebuild with saveSets")
-    batch.withColumn("setsim_format", lit(SetsFormatStamp))
-      .write.mode("append").parquet(path)
   }
 
   /** Rewrite the stored sets into ~`targetFileBytes` parquet files —
@@ -561,35 +533,18 @@ object SetSimJoin {
     * stored corpus becomes a small-files problem (every [[loadSets]]
     * pays per-file open/footer costs; at 1000 executors the driver
     * pays listing). Contract: the ROW SET is untouched (same sids, same
-    * arrays, same stamp — spec-pinned), only the file layout changes.
+    * arrays — spec-pinned), only the file layout changes.
     *
-    * Plan shape: one stamped read, a COALESCE (no shuffle — compaction
-    * must not pay an exchange to merge files), a write to a sibling
-    * tmp dir, then a Hadoop-FS swap rename (metadata-only on
-    * hdfs:// s3a:// file: alike — the [[Bm25.appendDocs]] dfreq-swap
-    * convention, because Spark cannot overwrite a path its own plan is
-    * reading). Not transactional: a failure between delete and rename
-    * leaves the tmp dir next to nothing — rebuild with [[saveSets]] or
-    * rename by hand.
+    * Plan shape: one read, a COALESCE (no shuffle — compaction must not
+    * pay an exchange to merge files), one new file-set committed in
+    * place of the old ones ([[graft.store.Store.compact]]).
     */
   def compactSets(spark: org.apache.spark.sql.SparkSession, path: String,
                   targetFileBytes: Long = 128L * 1024 * 1024): Unit = {
     require(targetFileBytes > 0,
       s"compactSets: targetFileBytes must be > 0, got $targetFileBytes")
-    val stored = loadSets(spark, path) // stamp-checked
-    val hp = new org.apache.hadoop.fs.Path(path)
-    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val bytes = fs.getContentSummary(hp).getLength
-    val nFiles = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes)
-      .min(Int.MaxValue.toLong).toInt
-    val tmp = new org.apache.hadoop.fs.Path(path + "_compact_tmp")
-    stored.withColumn("setsim_format", lit(SetsFormatStamp))
-      .coalesce(nFiles)
-      .write.mode("overwrite").parquet(tmp.toString)
-    require(fs.delete(hp, true),
-      s"compactSets: could not delete $path for the swap")
-    require(fs.rename(tmp, hp),
-      s"compactSets: swap rename failed — compacted data is at $tmp")
+    Store.compact(spark, path, setsManifest(spark, path), Seq(SetsTable),
+      targetFileBytes)
   }
 
   /** Remove stored sets by id — the retraction/GDPR-delete member of
@@ -599,13 +554,14 @@ object SetSimJoin {
     * IS the rebuild), and removed ids stop answering every downstream
     * audit. Unknown ids are a LOUD error, not a no-op: a takedown list
     * with a typo'd id must not report success while the doc keeps
-    * answering. Same tmp + swap-rename write as [[compactSets]].
+    * answering. The surviving rows commit as one new file-set.
     *
     * @param removeIds one column of ids (any name); null ids rejected.
     */
   def removeSets(spark: org.apache.spark.sql.SparkSession, path: String,
                  removeIds: DataFrame): Unit = {
-    val stored = loadSets(spark, path)
+    val m = setsManifest(spark, path)
+    val stored = Store.table(spark, path, m, SetsTable)
     val ids = removeIds.select(removeIds.columns.head).toDF("sid")
     require(ids.filter(col("sid").isNull).limit(1).count() == 0L,
       "removeSets: removal list contains null ids")
@@ -615,21 +571,11 @@ object SetSimJoin {
       s"removeSets: id '${missing.headOption.map(_.get(0)).orNull}' is not " +
       "in the stored state — a typo'd retraction must fail loudly, not " +
       "report success")
-    val remaining = stored.join(ids, Seq("sid"), "left_anti")
-    // an emptied store is unloadable by the stamp check (no rows ⇒ no
-    // stamp) — removing EVERYTHING is a rebuild-shaped operation
-    require(remaining.limit(1).count() == 1L,
+    val left = Store.writeKept(spark, path, SetsTable,
+      stored.join(ids, Seq("sid"), "left_anti"), "sid",
       "removeSets: removal would empty the store — delete the path and " +
       "rebuild with saveSets instead")
-    val hp = new org.apache.hadoop.fs.Path(path)
-    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(path + "_remove_tmp")
-    remaining.withColumn("setsim_format", lit(SetsFormatStamp))
-      .write.mode("overwrite").parquet(tmp.toString)
-    require(fs.delete(hp, true),
-      s"removeSets: could not delete $path for the swap")
-    require(fs.rename(tmp, hp),
-      s"removeSets: swap rename failed — surviving data is at $tmp")
+    Store.commit(spark, path, Some(m), m.format, m.schemas, Seq(left), m.values)
   }
 
   /** Token-keyed candidate join with the hot-bucket salted split (the
@@ -678,8 +624,7 @@ object SetSimJoin {
     * verify-join rows into silently wrong pair output, and the
     * worst case (an identical re-sent doc) produces EMPTY output, so a
     * lazy output-riding guard (the maxBucket convention) would never
-    * evaluate exactly when it matters. Eager is consistent here:
-    * [[loadSets]] already runs its stamp-check jobs at call time.
+    * evaluate exactly when it matters.
     *
     * Takes the batch's LINEAGE-CUT (sid, stoks, n) frame, not the raw
     * newDocs (r19): checking raw newDocs re-ran the caller's whole
@@ -1074,30 +1019,24 @@ object SetSimJoin {
     require(compiled.columns.contains("qmap"),
       "saveContainmentRegistry: frame has no qmap column — not a " +
       "compiled registry; build one with compileContainmentRegistry")
-    require(compiled.limit(2).count() == 1L,
+    Store.saveOneRow(compiled.select(col("qmap")), path, RegistryFormatStamp,
       "saveContainmentRegistry: compiled registry must be exactly one " +
       "row — this frame is not a compile output")
-    compiled.select(col("qmap"))
-      .withColumn("registry_format", lit(RegistryFormatStamp))
-      .coalesce(1).write.mode("overwrite").parquet(path)
   }
 
   def loadContainmentRegistry(spark: org.apache.spark.sql.SparkSession,
                               path: String): DataFrame = {
-    val df = spark.read.parquet(path)
-    require(df.columns.contains("registry_format"),
-      s"stored registry at $path has no registry_format column — not a " +
-      "saveContainmentRegistry table; rebuild with " +
-      "compileContainmentRegistry + saveContainmentRegistry")
-    val stamps = StoreStamp.distinctVals(df, "registry_format")
-    require(stamps.length == 1 && stamps.head == RegistryFormatStamp,
-      s"stored registry at $path has layout '${stamps.mkString(",")}', " +
-      s"this build reads '$RegistryFormatStamp' (the radix bucket " +
-      "assignment is frozen at compile time) — recompile and re-save")
-    require(df.limit(2).count() == 1L,
-      s"stored registry at $path is not exactly one row — partially " +
-      "written; recompile and re-save")
-    df.drop("registry_format")
+    val m = Store.live(spark, path, s"stored registry at $path has no " +
+      "manifest — not a saveContainmentRegistry table; rebuild with " +
+      "compileContainmentRegistry + saveContainmentRegistry")(
+      _ == RegistryFormatStamp,
+      f => s"stored registry at $path has layout '$f', this build reads " +
+        s"'$RegistryFormatStamp' (the radix bucket assignment is frozen at " +
+        "compile time) — recompile and re-save")
+    require(m.rows(Store.OneRowTable) == 1L,
+      s"stored registry at $path is not exactly one row — " +
+      "recompile and re-save")
+    Store.table(spark, path, m, Store.OneRowTable)
   }
 
   /** Explode a compiled registry row back into its (query_id, tok, nq)

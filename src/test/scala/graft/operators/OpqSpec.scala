@@ -281,11 +281,13 @@ class OpqSpec extends AnyFunSuite {
         nProbe = 4)
       .orderBy("query_id", "rank").collect().map(_.toSeq).toSeq
     assert(stored == direct)
-    // a foreign stamp is rejected loudly
+    // a foreign rotation stamp is rejected loudly
     val bad = java.nio.file.Files.createTempDirectory("opq_bad").toString
-    spark.range(1).select(lit(0).as("row_idx"),
-        array(lit(1.0)).as("rv"), lit("other-format-v9").as("rotation_format"))
-      .write.mode("overwrite").parquet(s"$bad/rotation")
+    Opq.saveIndex(corpus.filter($"vec_id" < 40), bad, r, nCells = 8, m = 8,
+      ksub = 16)
+    val m = graft.store.Store.manifest(spark, bad).get
+    graft.store.Store.commit(spark, bad, Some(m), m.format, m.schemas,
+      m.fileSets, m.values + ("rotation" -> "other-format-v9"))
     val ex = intercept[IllegalArgumentException] {
       Opq.loadIndex(spark, bad)
     }

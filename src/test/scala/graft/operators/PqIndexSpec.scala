@@ -94,44 +94,25 @@ class PqIndexSpec extends AnyFunSuite {
   test("an unstamped codes table is rejected with rebuild instructions") {
     val path = freshPath("unstamped")
     Pq.saveIndex(corpus, path, nCells = 8, m = 8, ksub = 16)
-    val bare = spark.read.parquet(s"$path/codes").drop("index_format")
-    bare.write.mode("overwrite").parquet(s"$path/codes_tmp")
-    spark.read.parquet(s"$path/codes_tmp").write.mode("overwrite")
-      .parquet(s"$path/codes")
+    // the codes written as plain parquet, with no manifest
+    val bare = freshPath("unstamped_bare")
+    Pq.loadIndex(spark, path).codes.write.mode("overwrite")
+      .parquet(s"$bare/codes")
     val ex = intercept[IllegalArgumentException] {
-      Pq.loadIndex(spark, path)
+      Pq.loadIndex(spark, bare)
     }
-    assert(ex.getMessage.contains("index_format"))
+    assert(ex.getMessage.contains("no manifest"))
     assert(ex.getMessage.contains("saveIndex"))
   }
 
   test("a foreign layout stamp is rejected") {
     val path = freshPath("foreign")
     Pq.saveIndex(corpus, path, nCells = 8, m = 8, ksub = 16)
-    spark.read.parquet(s"$path/codebooks")
-      .withColumn("index_format", lit("someones-else-v9;m=8"))
-      .write.mode("overwrite").parquet(s"$path/cb_tmp")
-    spark.read.parquet(s"$path/cb_tmp").write.mode("overwrite")
-      .parquet(s"$path/codebooks")
+    graft.store.StoreTestKit.stampForeign(spark, path, "someones-else-v9;m=8")
     val ex = intercept[IllegalArgumentException] {
       Pq.loadIndex(spark, path)
     }
     assert(ex.getMessage.contains("layout"))
-  }
-
-  test("disagreeing sub-table geometry is rejected") {
-    val path = freshPath("mixed")
-    Pq.saveIndex(corpus, path, nCells = 8, m = 8, ksub = 16)
-    val doctored = spark.read.parquet(s"$path/centroids")
-      .withColumn("index_format",
-        lit(s"${Pq.IndexFormatPrefix};m=16;ksub=16;nCells=8;dim=64"))
-    doctored.write.mode("overwrite").parquet(s"$path/cent_tmp")
-    spark.read.parquet(s"$path/cent_tmp").write.mode("overwrite")
-      .parquet(s"$path/centroids")
-    val ex = intercept[IllegalArgumentException] {
-      Pq.loadIndex(spark, path)
-    }
-    assert(ex.getMessage.contains("disagreeing"))
   }
 
   test("append rejects colliding ids and mismatched width loudly") {
@@ -161,7 +142,7 @@ class PqIndexSpec extends AnyFunSuite {
           corpus.filter($"vec_id" >= lo && $"vec_id" < hi))
     }
     def nParquetFiles(): Int = {
-      val hp = new org.apache.hadoop.fs.Path(s"$path/codes")
+      val hp = new org.apache.hadoop.fs.Path(path)
       val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
       val it = fs.listFiles(hp, true)
       var n = 0

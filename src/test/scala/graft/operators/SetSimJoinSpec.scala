@@ -168,25 +168,21 @@ class SetSimJoinSpec extends AnyFunSuite {
       SetSimJoin.appendSets(spark, path, toks(Seq((3L, "zz"))),
         "doc_id", "toks")
     }
-    // foreign stamps are rejected loudly
+    // foreign manifests are rejected loudly
     val bad = java.nio.file.Files.createTempDirectory("setsim_bad").toString
-    toks(rows1).withColumn("setsim_format", lit("other-v9"))
-      .write.mode("overwrite").parquet(bad)
+    SetSimJoin.saveSets(toks(rows1), "doc_id", "toks", bad)
+    graft.store.StoreTestKit.stampForeign(spark, bad, "other-v9")
     val ex = intercept[IllegalArgumentException] {
       SetSimJoin.loadSets(spark, bad)
     }
     assert(ex.getMessage.contains("rebuild"))
   }
 
-  test("incremental audits surface a foreign stamp from the side thread") {
-    // the stamp-value check runs on a side thread while the caller runs
-    // the batch-stats job; its require() must reach the caller as itself
-    val good = java.nio.file.Files.createTempDirectory("setsim_ok").toString
-    SetSimJoin.saveSets(toks(Seq((1L, "a b c"), (2L, "d e f"))),
-      "doc_id", "toks", good)
+  test("incremental audits refuse a foreign manifest") {
     val bad = java.nio.file.Files.createTempDirectory("setsim_v9").toString
-    spark.read.parquet(good).withColumn("setsim_format", lit("other-v9"))
-      .write.mode("overwrite").parquet(bad)
+    SetSimJoin.saveSets(toks(Seq((1L, "a b c"), (2L, "d e f"))),
+      "doc_id", "toks", bad)
+    graft.store.StoreTestKit.stampForeign(spark, bad, "other-v9")
     val batch = toks(Seq((9L, "a b c")))
     val e1 = intercept[IllegalArgumentException] {
       SetSimJoin.incrementalJaccardPairs(spark, bad, batch,

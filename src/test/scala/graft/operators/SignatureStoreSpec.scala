@@ -79,14 +79,15 @@ class SignatureStoreSpec extends AnyFunSuite {
     val corpus = mkCorpus(0 until 5)
     val bad =
       java.nio.file.Files.createTempDirectory("sigstore_bad").toString
-    Dedup.signatureTable(df(corpus), "doc_id", "text", 5, 32)
-      .withColumn("sig_store", lit("graft-minhashsig-v1;k=5;h=32"))
-      .write.mode("overwrite").parquet(bad)
+    Dedup.saveSignatureStore(df(corpus), "doc_id", "text", bad,
+      numHashes = 32)
+    graft.store.StoreTestKit.stampForeign(spark, bad,
+      "graft-minhashsig-v1;k=5;h=32")
     val ex = intercept[IllegalArgumentException] {
       Dedup.loadSignatureStore(spark, bad)
     }
     assert(ex.getMessage.contains("rebuild"))
-    // a table without the store stamp at all
+    // a signature table written without a manifest at all
     val bare =
       java.nio.file.Files.createTempDirectory("sigstore_bare").toString
     Dedup.signatureTable(df(corpus), "doc_id", "text", 5, 32)
@@ -94,7 +95,7 @@ class SignatureStoreSpec extends AnyFunSuite {
     val ex2 = intercept[IllegalArgumentException] {
       Dedup.loadSignatureStore(spark, bare)
     }
-    assert(ex2.getMessage.contains("sig_store"))
+    assert(ex2.getMessage.contains("no manifest"))
   }
 
   test("remove: retracted ids stop pairing; loud guards; compact keeps rows") {

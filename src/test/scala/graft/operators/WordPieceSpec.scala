@@ -46,7 +46,7 @@ class WordPieceSpec extends AnyFunSuite {
   }
 
   test("train: picks the highest-SCORE pair, not the highest-count one") {
-    assert(WordPiece.train(discriminator, "toks", numMerges = 1)
+    assert(WordPieceReference.train(discriminator, "toks", numMerges = 1)
       == Seq(("d", "##c")))
     // same corpus through BPE semantics picks the count argmax instead
     assert(Bpe.trainFast(discriminator, "toks", numMerges = 1,
@@ -60,7 +60,7 @@ class WordPieceSpec extends AnyFunSuite {
   }
 
   test("trainFast: identical merge list to train, run to exhaustion") {
-    val seq = WordPiece.train(sennrich, "toks", numMerges = 50)
+    val seq = WordPieceReference.train(sennrich, "toks", numMerges = 50)
     val fast = WordPiece.trainFast(sennrich, "toks", numMerges = 50)
     assert(fast == seq, s"fast=$fast\nseq=$seq")
     assert(fast.size < 50, "corpus exhausts before 50 merges")
@@ -76,7 +76,7 @@ class WordPieceSpec extends AnyFunSuite {
         (1 to (1 + rnd.nextInt(5))).map(_ => ('a' + rnd.nextInt(3)).toChar)
           .mkString)
       val docs = docsOf(words, trial.toLong)
-      val seq = WordPiece.train(docs, "toks", numMerges = 6)
+      val seq = WordPieceReference.train(docs, "toks", numMerges = 6)
       val fast = WordPiece.trainFast(docs, "toks", numMerges = 6)
       assert(fast == seq,
         s"trial $trial diverged on $words:\nfast=$fast\nseq=$seq")
