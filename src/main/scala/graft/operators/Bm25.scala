@@ -282,16 +282,11 @@ object Bm25 {
                  removeIds: DataFrame): Unit = {
     val m = indexManifest(spark, path)
     val postings = Store.table(spark, path, m, Postings)
-    val ids = removeIds.select(removeIds.columns.head).toDF("doc_id")
-    require(ids.filter(col("doc_id").isNull).limit(1).count() == 0L,
-      "bm25 removeDocs: removal list contains null ids")
-    val missing = ids.join(postings.select("doc_id"), Seq("doc_id"),
-        "left_anti")
-      .limit(1).collect()
-    require(missing.isEmpty,
-      s"bm25 removeDocs: id '${missing.headOption.map(_.get(0)).orNull}' " +
-      "has no stored postings — unknown or token-less; a retraction " +
-      "must fail loudly, and token-less docs need a rebuild")
+    val ids = Store.removalIds(postings, "doc_id", removeIds,
+      "bm25 removeDocs: removal list contains null ids",
+      id => s"bm25 removeDocs: id '$id' has no stored postings — unknown " +
+        "or token-less; a retraction must fail loudly, and token-less " +
+        "docs need a rebuild")
     val removed = postings.join(ids, Seq("doc_id"), "left_semi")
     val left = Store.writeKept(spark, path, Postings,
       postings.join(ids, Seq("doc_id"), "left_anti"), "doc_id",
@@ -693,14 +688,17 @@ object Bm25 {
         .forall(compiled.columns.contains),
       "saveShardedPercolateTable: frame lacks shard/qmap/avgdl/stats_fp " +
       "— not a compileShardedPercolateTable output")
-    val dup = compiled.groupBy("shard").agg(count(lit(1)).as("c"))
-      .filter(col("c") > 1).limit(1).count()
-    require(dup == 0L,
-      "saveShardedPercolateTable: frame has duplicate shard rows — not a " +
-      "compileShardedPercolateTable output")
-    Store.save(compiled.sparkSession, path, ShardedPercolateFormatStamp,
-      Seq((Shards, compiled.select(col("shard"), col("qmap"), col("avgdl"),
-        col("stats_fp")).repartition(col("shard")), None)))
+    val rows = compiled.select(col("shard"), col("qmap"), col("avgdl"),
+      col("stats_fp"))
+    // checked on the R written rows, so the compile runs once
+    Store.saveChecked(rows.repartition(col("shard")), path,
+        ShardedPercolateFormatStamp, Shards) { written =>
+      if (Store.read(rows.sparkSession, path, rows.schema, Seq(written))
+          .groupBy("shard").count().filter(col("count") > 1)
+          .limit(1).count() == 0L) None
+      else Some("saveShardedPercolateTable: frame has duplicate shard rows " +
+        "— not a compileShardedPercolateTable output")
+    }
   }
 
   private val Shards = "shards"

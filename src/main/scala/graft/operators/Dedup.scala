@@ -252,22 +252,12 @@ object Dedup {
     */
   def removeSignatureStore(spark: org.apache.spark.sql.SparkSession,
                            path: String, removeIds: DataFrame): Unit = {
-    val (m, _, _) = sigManifest(spark, path)
-    val sigs = Store.table(spark, path, m, SigTable)
-    val ids = removeIds.select(removeIds.columns.head).toDF("id")
-    require(ids.filter(col("id").isNull).limit(1).count() == 0L,
-      "removeSignatureStore: removal list contains null ids")
-    val missing = ids.join(sigs.select("id"), Seq("id"), "left_anti")
-      .limit(1).collect()
-    require(missing.isEmpty,
-      s"removeSignatureStore: id " +
-      s"'${missing.headOption.map(_.get(0)).orNull}' is not in the store " +
-      "— a typo'd retraction must fail loudly, not report success")
-    val left = Store.writeKept(spark, path, SigTable,
-      sigs.join(ids, Seq("id"), "left_anti"), "id",
+    Store.remove(spark, path, sigManifest(spark, path)._1, SigTable, "id",
+      removeIds, "removeSignatureStore: removal list contains null ids",
+      id => s"removeSignatureStore: id '$id' is not in the store — a " +
+        "typo'd retraction must fail loudly, not report success",
       "removeSignatureStore: removal would empty the store — delete the " +
       "path and rebuild with saveSignatureStore instead")
-    Store.commit(spark, path, Some(m), m.format, m.schemas, Seq(left), m.values)
   }
 
   /** Incremental near-dup audit answered FROM the store: load (stamp +
@@ -1084,7 +1074,9 @@ object Dedup {
     var prevSum = BigDecimal(-1)
     var i = 0
     var done = nParts == 0L
-    while (!done && i < maxIter) {
+    // A round sees the fixpoint only when it changes nothing, so labels
+    // that settle in round maxIter get one more, confirming round.
+    while (!done && i <= maxIter) {
       val neighborMin = sym
         .join(labels.select(col("id").as("b"), col("label").as("bl")), "b")
         .groupBy(col("a").as("id")).agg(min("bl").as("nmin"))
@@ -1113,9 +1105,9 @@ object Dedup {
       prevSum = s
     }
     release(sym)
-    // A round cap that binds leaves labels between fixpoints: part of a
-    // component still carries a larger label, so the components come
-    // back split with no sign of it. Refuse instead.
+    // A round cap that binds leaves labels short of the fixpoint: part
+    // of a component still carries a larger label, so the components
+    // come back split with no sign of it. Refuse instead.
     if (!done) {
       release(labels)
       if (!dense) release(participants)

@@ -188,11 +188,13 @@ object Opq {
   private def identity(dim: Int): Array[Array[Double]] =
     Array.tabulate(dim, dim)((i, j) => if (i == j) 1.0 else 0.0)
 
-  /** A rotation as a nested-array plan literal (d² doubles — plan-sized
-    * like the JL sign matrix, far under the percolation literal cap).
+  /** A rotation as one nested-array plan literal (d² doubles — plan-sized
+    * like the JL sign matrix, far under the percolation literal cap). One
+    * literal node, not d² of them under `array(...)` calls: an unfolded
+    * array tree is rebuilt on every `element_at`, d³ work per row.
     */
   def rotationColumn(r: Seq[Seq[Double]]): Column =
-    array(r.map(row => array(row.map(lit): _*)): _*)
+    typedLit(r.map(_.toArray).toArray)
 
   /** out[i] = Σ_j R[i][j]·v[j], each output coordinate one
     * left-to-right fold (the [[Pq.l2sq]] order convention — zero terms
@@ -434,12 +436,15 @@ object Opq {
         rotation, "rot")
       .select(col(idCol), col("rot").as(vecCol))
     Pq.saveIndexWith(rc, path, nCells, m, ksub, trainIters, idCol,
-      vecCol, residual, Map(RotationKey -> stamp,
-        RotationRowsKey -> rotation.map(_.mkString(",")).mkString(";")))
+      vecCol, residual, Map(RotationKey -> stamp) ++
+        rotation.zipWithIndex.map { case (row, i) =>
+          rotationRowKey(i) -> row.mkString(",") })
   }
 
   private val RotationKey = "rotation"
-  private val RotationRowsKey = "rotation_rows"
+  // one manifest value per row: a d×d matrix in one JSON string would
+  // pass the JSON reader's string-length cap near d = 1000
+  private def rotationRowKey(i: Int) = s"rotation_row_$i"
 
   final case class OpqIndex(rotation: Seq[Seq[Double]], pq: Pq.IvfPqIndex,
                             chosen: Option[String] = None)
@@ -455,8 +460,8 @@ object Opq {
       s"this build reads '$RotationFormatPrefix' — rebuild with " +
       "Opq.saveIndex")
     val dim = stamp.get.split(';')(1).stripPrefix("dim=").toInt
-    val rows = values(RotationRowsKey)
-      .split(';').toSeq.map(_.split(',').toSeq.map(_.toDouble))
+    val rows = Seq.tabulate(dim)(i => values.get(rotationRowKey(i)))
+      .takeWhile(_.isDefined).map(_.get.split(',').toSeq.map(_.toDouble))
     val pqIdx = Pq.loadIndex(spark, path)
     require(pqIdx.dim == dim && rows.length == dim,
       s"stored OPQ rotation dim $dim != PQ index dim ${pqIdx.dim} — " +

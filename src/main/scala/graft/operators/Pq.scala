@@ -665,24 +665,12 @@ object Pq {
     */
   def removeVectors(spark: org.apache.spark.sql.SparkSession, path: String,
                     removeIds: DataFrame): Unit = {
-    val mf = indexManifest(spark, path)
-    val codes = Store.table(spark, path, mf, Codes)
-    val ids = removeIds.select(removeIds.columns.head).toDF("pq_id")
-    require(ids.filter(col("pq_id").isNull).limit(1).count() == 0L,
-      "removeVectors: removal list contains null ids")
-    val missing = ids.join(codes.select("pq_id"), Seq("pq_id"),
-        "left_anti")
-      .limit(1).collect()
-    require(missing.isEmpty,
-      s"removeVectors: id '${missing.headOption.map(_.get(0)).orNull}' " +
-      "is not in the stored index — a typo'd retraction must fail " +
-      "loudly, not report success")
-    val left = Store.writeKept(spark, path, Codes,
-      codes.join(ids, Seq("pq_id"), "left_anti"), "pq_id",
+    Store.remove(spark, path, indexManifest(spark, path), Codes, "pq_id",
+      removeIds, "removeVectors: removal list contains null ids",
+      id => s"removeVectors: id '$id' is not in the stored index — a " +
+        "typo'd retraction must fail loudly, not report success",
       "removeVectors: removal would empty the index — delete the path " +
       "and rebuild with saveIndex instead")
-    Store.commit(spark, path, Some(mf), mf.format, mf.schemas,
-      mf.fileSets.filterNot(_.table == Codes) :+ left, mf.values)
   }
 
   /** Answer top-k from a stored index — no corpus access, no encode:

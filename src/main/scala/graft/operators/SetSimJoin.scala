@@ -560,22 +560,12 @@ object SetSimJoin {
     */
   def removeSets(spark: org.apache.spark.sql.SparkSession, path: String,
                  removeIds: DataFrame): Unit = {
-    val m = setsManifest(spark, path)
-    val stored = Store.table(spark, path, m, SetsTable)
-    val ids = removeIds.select(removeIds.columns.head).toDF("sid")
-    require(ids.filter(col("sid").isNull).limit(1).count() == 0L,
-      "removeSets: removal list contains null ids")
-    val missing = ids.join(stored.select("sid"), Seq("sid"), "left_anti")
-      .limit(1).collect()
-    require(missing.isEmpty,
-      s"removeSets: id '${missing.headOption.map(_.get(0)).orNull}' is not " +
-      "in the stored state — a typo'd retraction must fail loudly, not " +
-      "report success")
-    val left = Store.writeKept(spark, path, SetsTable,
-      stored.join(ids, Seq("sid"), "left_anti"), "sid",
+    Store.remove(spark, path, setsManifest(spark, path), SetsTable, "sid",
+      removeIds, "removeSets: removal list contains null ids",
+      id => s"removeSets: id '$id' is not in the stored state — a typo'd " +
+        "retraction must fail loudly, not report success",
       "removeSets: removal would empty the store — delete the path and " +
       "rebuild with saveSets instead")
-    Store.commit(spark, path, Some(m), m.format, m.schemas, Seq(left), m.values)
   }
 
   /** Token-keyed candidate join with the hot-bucket salted split (the

@@ -257,17 +257,28 @@ object Store {
   /** The table of the one-row stores (compiled registries). */
   val OneRowTable = "row"
 
+  /** Replaces whatever `path` holds with `df` as the one table
+    * `table`, unless `refusal` returns a message for the written
+    * file-set: then that file-set is deleted, nothing is committed, and
+    * the save refuses with the message. */
+  def saveChecked(df: DataFrame, path: String, format: String, table: String)(
+      refusal: FileSet => Option[String]): Manifest = {
+    val spark = df.sparkSession
+    val written = writeFileSet(path, table, df, None)
+    val msg = refusal(written)
+    refuseIf(msg.isDefined, spark, path, Seq(written), msg.get)
+    commit(spark, path, manifest(spark, path), format,
+      Map(table -> df.schema), Seq(written), Map.empty)
+  }
+
   /** Replaces whatever `path` holds with the one-row frame `df`,
     * refusing with `refusal` (and committing nothing) unless the write
     * observed exactly one row. */
   def saveOneRow(df: DataFrame, path: String, format: String,
-                 refusal: String): Unit = {
-    val spark = df.sparkSession
-    val written = writeFileSet(path, OneRowTable, df.coalesce(1), None)
-    refuseIf(written.rows != 1L, spark, path, Seq(written), refusal)
-    commit(spark, path, manifest(spark, path), format,
-      Map(OneRowTable -> df.schema), Seq(written), Map.empty)
-  }
+                 refusal: String): Unit =
+    saveChecked(df.coalesce(1), path, format, OneRowTable) { written =>
+      if (written.rows != 1L) Some(refusal) else None
+    }
 
   /** Appends `df`, cast to the stored schema of `table`, as a new
     * file-set and commits it, refusing with `collision` when its ids
@@ -279,6 +290,35 @@ object Store {
       read(spark, path, m.schemas(table), Seq(added)),
       added.rows, added.minId.zip(added.maxId), Seq(added), collision)
     commit(spark, path, Some(m), m.format, m.schemas, m.fileSets :+ added, m.values)
+  }
+
+  /** The first column of `removeIds`, named `idCol`, after checking it
+    * against `stored`: refused with `nullIds` when it holds a null and
+    * with `unknown(id)` when an id is not stored (a typo'd retraction
+    * must fail loudly, not report success). Two small jobs, no write. */
+  def removalIds(stored: DataFrame, idCol: String, removeIds: DataFrame,
+                 nullIds: String, unknown: Any => String): DataFrame = {
+    val ids = removeIds.select(removeIds.columns.head).toDF(idCol)
+    require(ids.filter(col(idCol).isNull).limit(1).count() == 0L, nullIds)
+    val missing = ids.join(stored.select(idCol), Seq(idCol), "left_anti")
+      .limit(1).collect()
+    require(missing.isEmpty, unknown(missing.head.get(0)))
+    ids
+  }
+
+  /** Removes the rows of `table` whose `idCol` is listed in
+    * `removeIds` ([[removalIds]] checks the list), committing the kept
+    * rows as the table's one file-set; the other tables and the values
+    * are untouched. Refuses with `emptied` when no row would be left. */
+  def remove(spark: SparkSession, path: String, m: Manifest, table: String,
+             idCol: String, removeIds: DataFrame, nullIds: String,
+             unknown: Any => String, emptied: String): Manifest = {
+    val stored = Store.table(spark, path, m, table)
+    val ids = removalIds(stored, idCol, removeIds, nullIds, unknown)
+    val left = writeKept(spark, path, table,
+      stored.join(ids, Seq(idCol), "left_anti"), idCol, emptied)
+    commit(spark, path, Some(m), m.format, m.schemas,
+      m.fileSets.filterNot(_.table == table) :+ left, m.values)
   }
 
   /** Writes `kept`, the rows a removal leaves of `table`, as a new

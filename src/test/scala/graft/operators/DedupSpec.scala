@@ -390,6 +390,14 @@ class DedupSpec extends AnyFunSuite {
     assert(ex.getMessage.contains("maxIter = 3"))
   }
 
+  test("connectedComponents: labels that settle in round maxIter are returned") {
+    // one round joins the pair; only a second round sees no change
+    val got = Dedup.connectedComponents(Seq(5L, 9L).toDF("id"),
+        Seq((9L, 5L)).toDF("a", "b"), maxIter = 1)
+      .as[(Long, Long)].collect().toMap
+    assert(got == Map(5L -> 5L, 9L -> 5L))
+  }
+
   test("connectedComponents: a star and a clique are one component each") {
     val star = (1L to 20L).map(i => (0L, i)).toDF("a", "b")
     val clique = (for (a <- 100L to 107L; b <- a + 1 to 107L) yield (a, b))

@@ -293,4 +293,20 @@ class OpqSpec extends AnyFunSuite {
     }
     assert(ex.getMessage.contains("rebuild"))
   }
+
+  test("a dense 1024-dim rotation round-trips through save, re-save and load") {
+    // ~20 characters per entry: as one manifest string the matrix would
+    // pass the JSON reader's 20M-character cap and break every later load
+    val dim = 1024
+    val rnd = new scala.util.Random(7)
+    val r = Seq.fill(dim, dim)(rnd.nextGaussian() / 32.0)
+    val vecs = (0L until 24L).map(i => (i, Array.fill(dim)(rnd.nextGaussian())))
+      .toDF("vec_id", "embedding")
+    val path = java.nio.file.Files.createTempDirectory("opq_dense").toString
+    Opq.saveIndex(vecs, path, r, nCells = 2, m = 8, ksub = 4)
+    Opq.saveIndex(vecs, path, r, nCells = 2, m = 8, ksub = 4)
+    val idx = Opq.loadIndex(spark, path)
+    assert(idx.rotation == r)
+    assert(idx.pq.dim == dim && idx.pq.codes.count() == 24L)
+  }
 }

@@ -96,6 +96,16 @@ class ShardedPercolateSpec extends AnyFunSuite {
       Bm25.saveShardedPercolateTable(
         Bm25.compilePercolateTable(index, registry), s"$p/bad")
     }
+    // duplicate shard rows are refused from the written rows: the saved
+    // registry stays live and the refused file-set is deleted
+    val live = graft.store.StoreTestKit.live(spark, s"$p/store")
+    val ex = intercept[IllegalArgumentException] {
+      Bm25.saveShardedPercolateTable(sharded.unionByName(sharded), s"$p/store")
+    }
+    assert(ex.getMessage.contains("duplicate shard rows"))
+    assert(graft.store.StoreTestKit.entries(s"$p/store") == live)
+    assert(Bm25.loadShardedPercolateTable(spark, s"$p/store").count() ==
+      sharded.count())
   }
 
   test("compile guards fire: duplicate ids, bad shard counts") {
