@@ -125,9 +125,9 @@ object Bm25 {
   // ---- stored index: tokenize once, answer forever -------------------
 
   /** Stored-index layout stamp, the format of the index's manifest
-    * (the sig_family / ivfpq convention): scoring a stored index under
-    * different (k1, b) than it was built for is NOT an error (they are
-    * query-time knobs), but a layout change is.
+    * (the signature-store / ivfpq convention): scoring a stored index
+    * under different (k1, b) than it was built for is NOT an error (they
+    * are query-time knobs), but a layout change is.
     */
   private[graft] val IndexFormatPrefix = "graft-bm25-v1"
 
@@ -811,56 +811,6 @@ object Bm25 {
     foldPercolate(union, oldAvgdl, oldFp)
   }
 
-  /** Upgrade a LEGACY compiled percolate registry — pre-`stats_fp`
-    * builds persisted (qmap, avgdl) with no stats fingerprint and are
-    * therefore append-ineligible — to the current layout: the
-    * mechanical upgrade path VERDICT r16 #7 asked for, instead of
-    * "recompile from the original query texts" (which the compiled
-    * frame does not carry).
-    *
-    * The fingerprint is a CLAIM that the baked idf/avgdl came from
-    * `index`'s statistics, so the upgrade VERIFIES before stamping:
-    * every baked idf is recomputed from the index's dfreq (idf is
-    * strictly decreasing in df at fixed n, so idf equality ⟺ df
-    * equality) and avgdl is recomputed from the stats table — both
-    * compared exactly, same expression over the same longs. A
-    * registry compiled against an index that has since drifted fails
-    * here LOUDLY; it cannot be upgraded, only recompiled. Verified
-    * postings re-fold under the index's fingerprint, so
-    * upgraded == a fresh [[compilePercolateTable]] over the same
-    * queries (spec-pinned).
-    */
-  def upgradePercolateTable(index: Bm25Index, legacy: DataFrame): DataFrame = {
-    require(!legacy.columns.contains("stats_fp"),
-      "upgradePercolateTable: registry already carries stats_fp — " +
-      "nothing to upgrade")
-    require(Seq("qmap", "avgdl").forall(legacy.columns.contains),
-      "upgradePercolateTable: frame lacks qmap/avgdl — not a compiled " +
-      "percolate registry")
-    val stats = index.stats
-      .select(col("n").cast("long"), col("sum_dl").cast("long")).head()
-    val n = stats.getLong(0)
-    val avgdl = stats.getLong(1).toDouble / n
-    val oldAvgdl = legacy.select(col("avgdl")).head().getDouble(0)
-    require(oldAvgdl == avgdl,
-      s"upgradePercolateTable: registry avgdl $oldAvgdl != index avgdl " +
-      s"$avgdl — the index drifted since the legacy compile; recompile " +
-      "the registry from its query texts instead")
-    val post = percolatePostings(legacy)
-    val drifted = post.join(index.dfreq, Seq("tok"), "left")
-      .select(col("query_id"), col("tok"), col("idf"),
-        idf(lit(n), coalesce(col("df"), lit(0L))).as("idf_now"))
-      .filter(col("idf") =!= col("idf_now"))
-      .limit(1).collect()
-    require(drifted.isEmpty,
-      s"upgradePercolateTable: baked idf for token " +
-      s"'${drifted.headOption.map(_.getString(1)).orNull}' does not " +
-      "match this index's statistics — the index drifted since the " +
-      "legacy compile; recompile the registry from its query texts")
-    foldPercolate(post.select(col("query_id"), col("tok"), col("idf")),
-      avgdl, statsFingerprint(index, n, stats.getLong(1)))
-  }
-
   /** Remove queries from a COMPILED percolate registry by id — loud on
     * unknown ids and on emptying the registry (the
     * [[graft.operators.SetSimJoin.removeFromContainmentRegistry]]
@@ -870,13 +820,8 @@ object Bm25 {
   def removeFromPercolateTable(compiled: DataFrame,
                                removeIds: DataFrame): DataFrame = {
     // the fingerprint rides through unchanged: removal never touches
-    // the baked statistics (legacy no-fp frames keep an empty marker
-    // and stay append-ineligible, which is the safe side)
-    val fp =
-      if (compiled.columns.contains("stats_fp"))
-        compiled.select(col("stats_fp")).head().getString(0)
-      else ""
-    val avgdl = compiled.select(col("avgdl")).head().getDouble(0)
+    // the baked statistics
+    val kept = compiled.select(col("avgdl"), col("stats_fp")).head()
     val ids = removeIds.select(removeIds.columns.head).toDF("raw")
       .select(col("raw").cast("long").as("query_id"))
     require(ids.filter(col("query_id").isNull).limit(1).count() == 0L,
@@ -894,7 +839,7 @@ object Bm25 {
     require(remaining.limit(1).count() == 1L,
       "removeFromPercolateTable: removal would empty the registry — an " +
       "empty registry cannot alert; recompile instead")
-    foldPercolate(remaining, avgdl, fp)
+    foldPercolate(remaining, kept.getDouble(0), kept.getString(1))
   }
 
   /** Percolation against a COMPILED REGISTRY TABLE: each arriving

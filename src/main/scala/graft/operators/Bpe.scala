@@ -251,26 +251,6 @@ object Bpe {
     merges.result()
   }
 
-  /** Persist a trained merge list as a tiny (rank, a, b) parquet
-    * artifact — the tokenizer file a training pipeline ships to the
-    * tokenization fleet. KBs, written as one file.
-    */
-  def saveMerges(spark: org.apache.spark.sql.SparkSession,
-                 merges: Seq[(String, String)], path: String): Unit = {
-    import spark.implicits._
-    merges.zipWithIndex
-      .map { case ((a, b), i) => (i + 1L, a, b) }
-      .toDF("rank", "a", "b")
-      .coalesce(1).write.mode("overwrite").parquet(path)
-  }
-
-  /** Load a merge list saved by [[saveMerges]], in rank order. */
-  def loadMerges(spark: org.apache.spark.sql.SparkSession,
-                 path: String): Seq[(String, String)] =
-    spark.read.parquet(path).orderBy("rank")
-      .select("a", "b").collect()
-      .map(r => (r.getString(0), r.getString(1))).toSeq
-
   /** Tokenize a token-array column with a trained merge list: each
     * word's symbols folded through the merges IN ORDER (merge rank =
     * priority), entirely in-row — the merge list is a literal array

@@ -136,41 +136,26 @@ object Dedup {
     * affine-xorshift permutations (v2) silently invalidated every
     * signature built before it — a stale stored table yields near-zero
     * recall with no error. Bump this whenever [[seedPerm]]'s math or
-    * constants change, and persist it alongside stored signature tables
-    * ([[signatureTable]]) so consumers fail LOUDLY instead
-    * ([[checkSigFamily]]).
+    * constants change; it rides in the signature store's format stamp
+    * ([[saveSignatureStore]]), so a load refuses a stale store loudly.
     */
   val signatureFamilyVersion: Int = 2
 
-  /** The production signature-table shape: [[signatures]] plus a
-    * `sig_family` column recording [[signatureFamilyVersion]]. Stored
-    * corpus signature tables should be built (and re-built after any
-    * family bump) through this — operators that accept `corpusSigs`
-    * verify the recorded family and reject a stale table.
-    */
-  def signatureTable(docs: DataFrame, idCol: String, textCol: String,
-                     shingleK: Int, numHashes: Int,
-                     carryCols: Seq[String] = Nil): DataFrame =
-    signatures(docs, idCol, textCol, shingleK, numHashes, carryCols)
-      .withColumn("sig_family", lit(signatureFamilyVersion))
-
   // ---- stored signature table: the full lifecycle ---------------------
 
-  /** Path-store stamp: family version PLUS the signature GEOMETRY.
-    * `sig_family` alone is not enough for a persisted table — an append
-    * built with a different shingleK or numHashes carries the same
-    * family yet its signatures are incomparable (a k=5 signature never
-    * collides with a k=9 one except by luck, so recall silently
-    * dies). The store bakes (k, h) into the manifest's format stamp;
-    * append/audit derive their geometry FROM the stamp, making a
-    * mismatch unrepresentable.
+  /** Store stamp: family version PLUS the signature GEOMETRY. The
+    * family alone is not enough for a persisted table — an append built
+    * with a different shingleK or numHashes has the same family yet its
+    * signatures are incomparable (a k=5 signature never collides with a
+    * k=9 one except by luck, so recall silently dies). The store bakes
+    * (k, h) into the manifest's format stamp; append/audit derive their
+    * geometry FROM the stamp, making a mismatch unrepresentable.
     */
   private[graft] def sigStoreStamp(shingleK: Int, numHashes: Int): String =
     s"graft-minhashsig-v$signatureFamilyVersion;k=$shingleK;h=$numHashes"
 
-  /** A loaded signature store: the signature frame (sig_family kept —
-    * the downstream `corpusSigs` consumers re-verify it) plus the
-    * parsed geometry every consumer must call with.
+  /** A loaded signature store: the `(id, sig)` frame plus the parsed
+    * geometry every consumer must call with.
     */
   final case class SignatureStore(sigs: DataFrame, shingleK: Int,
                                   numHashes: Int)
@@ -189,10 +174,13 @@ object Dedup {
                          shingleK: Int = DefaultShingleK,
                          numHashes: Int = 64): Unit =
     Store.save(docs.sparkSession, path, sigStoreStamp(shingleK, numHashes),
-      Seq((SigTable, signatureTable(docs, idCol, textCol, shingleK, numHashes),
+      Seq((SigTable, signatures(docs, idCol, textCol, shingleK, numHashes),
         Some("id"))))
 
-  /** The live manifest, its format and geometry checked — no job. */
+  /** The live manifest, its format, geometry and columns checked — no
+    * job. A store of an older layout (one whose rows carried a
+    * per-row family column) is refused with the rebuild call.
+    */
   private def sigManifest(spark: org.apache.spark.sql.SparkSession,
                           path: String): (Manifest, Int, Int) = {
     val m = Store.live(spark, path,
@@ -203,6 +191,11 @@ object Dedup {
         s"writes 'graft-minhashsig-v$signatureFamilyVersion;…' — signatures " +
         "are not comparable across families/layouts; rebuild with " +
         "Dedup.saveSignatureStore")
+    val cols = m.schemas(SigTable).fieldNames.mkString("(", ", ", ")")
+    require(cols == "(id, sig)",
+      s"stored signature table at $path has columns $cols, this build " +
+      "stores (id, sig) — written by an older build; rebuild with " +
+      "Dedup.saveSignatureStore")
     val geom = m.format.split(';').drop(1)
       .map(_.split('=')).map(kv => kv(0) -> kv(1).toInt).toMap
     (m, geom("k"), geom("h"))
@@ -226,7 +219,7 @@ object Dedup {
                            idCol: String, textCol: String): Unit = {
     val (m, k, h) = sigManifest(spark, path)
     Store.append(spark, path, m, SigTable,
-      signatureTable(newDocs, idCol, textCol, k, h), "id",
+      signatures(newDocs, idCol, textCol, k, h), "id",
       "appendSignatureStore: new batch ids collide with stored ids — " +
       "re-id the batch or rebuild with saveSignatureStore")
   }
@@ -261,10 +254,11 @@ object Dedup {
   }
 
   /** Incremental near-dup audit answered FROM the store: load (stamp +
-    * geometry checked), then [[incrementalNearDupPairs]] with the
-    * stored signatures as the corpus side — the corpus signature pass
-    * (its dominant cost) never re-runs; only batch signatures and the
-    * candidate-bounded exact verify touch text.
+    * geometry checked from the manifest, no job), then
+    * [[incrementalNearDupPairs]] with the stored signatures as the
+    * corpus side — the corpus signature pass (its dominant cost) never
+    * re-runs; only batch signatures and the candidate-bounded exact
+    * verify touch text.
     */
   def incrementalNearDupFromStore(spark: org.apache.spark.sql.SparkSession,
                                   path: String, newBatch: DataFrame,
@@ -281,26 +275,6 @@ object Dedup {
       st.shingleK, st.numHashes, numBands, maxBucket, expectedBatchBands,
       corpusSigs = Some(st.sigs))
   }
-
-  /** Validate a caller-provided signature frame's recorded family (one
-    * single-row fetch — never a corpus scan) and strip the marker
-    * column. Tables without the column are accepted as-is for
-    * compatibility with plain [[signatures]] output — the version
-    * contract then rests on the caller, as documented at `corpusSigs`.
-    */
-  private def checkSigFamily(sigs: DataFrame): DataFrame =
-    if (!sigs.columns.contains("sig_family")) sigs
-    else {
-      sigs.select("sig_family").take(1).foreach { r =>
-        val v = r.getInt(0)
-        require(v == signatureFamilyVersion,
-          s"stored signature table was built with minhash family v$v, " +
-          s"but this build uses v$signatureFamilyVersion — signatures are " +
-          "not comparable across families (a stale table silently loses " +
-          s"recall); rebuild the table with Dedup.signatureTable")
-      }
-      sigs.drop("sig_family")
-    }
 
   /** MinHash signature from a shingle-hash array ([[shingleHashes]]):
     * element s = min over shingles of the seed-s permutation
@@ -665,11 +639,12 @@ object Dedup {
     * @param corpusSigs precomputed signature frame (`id`, `sig`, plus
     *   the `shardCols` columns) — the same stored-signature-table shape
     *   [[incrementalNearDupPairs]] accepts, so ONE maintained table
-    *   serves both the ingest-time and the full-corpus operator. A
-    *   [[signatureTable]]-built frame carries its family version and is
-    *   rejected loudly if stale; must have been built with the same
-    *   shingleK/numHashes. Joined once to the tokenize pass into this
-    *   operator's own cached attribute frame (released before return);
+    *   serves both the ingest-time and the full-corpus operator. Must
+    *   have been built with the same shingleK/numHashes and minhash
+    *   family ([[loadSignatureStore]] checks both from the store's
+    *   stamp; for any other frame the contract is the caller's). Joined
+    *   once to the tokenize pass into this operator's own cached
+    *   attribute frame (released before return);
     *   both LSH passes then skip the corpus signature pass, the
     *   dominant corpus-side cost.
     */
@@ -694,7 +669,7 @@ object Dedup {
     // the tokenize pass and the product is cached here (the join runs
     // at cache build, not per consumer).
     val attrs = corpusSigs.map { cs =>
-      checkSigFamily(cs).join(
+      cs.join(
         docs.select(col(idCol).as("id"),
           TextFunctions.distinctTokens(col(textCol)).as("toks")),
         Seq("id"))
@@ -813,11 +788,10 @@ object Dedup {
     *   — the production shape: a stored signature table maintained at
     *   ingest means repeated batches skip the corpus signature pass
     *   entirely (the dominant corpus-side cost). Must have been built
-    *   with the same shingleK/numHashes AND the same minhash family — a
-    *   [[signatureTable]]-built frame carries its family version and a
-    *   stale one is rejected loudly ([[checkSigFamily]]); a bare
-    *   [[signatures]] frame is accepted with the contract on the
-    *   caller. Used as-is (not persisted here — its storage is the
+    *   with the same shingleK/numHashes AND the same minhash family —
+    *   [[incrementalNearDupFromStore]] takes both from the store's
+    *   stamp; for a caller's own [[signatures]] frame the contract is
+    *   the caller's. Used as-is (not persisted here — its storage is the
     *   caller's).
     */
   def incrementalNearDupPairs(
@@ -837,7 +811,7 @@ object Dedup {
     // rule; narrow projections, so no job runs here on narrow inputs)
     val bSigs = signatures(newBatch, idCol, textCol, shingleK, numHashes)
       .localCheckpoint(false)
-    val cSigs = corpusSigs.map(checkSigFamily).getOrElse(
+    val cSigs = corpusSigs.getOrElse(
       signatures(corpus, idCol, textCol, shingleK, numHashes)
         .localCheckpoint(false))
     val bBand = bandedRows(bSigs, numBands, rowsPerBand)
@@ -915,8 +889,8 @@ object Dedup {
     * Scale shape: eval bucket keys → Bloom → prune the train-side band
     * stream (train never shuffles against itself); skew guard on both
     * sides; verify joins the (bounded) candidate set back to the two
-    * text columns. `trainSigs` reuses a stored family-checked signature
-    * table (the incremental-dedup convention) so repeated eval drops
+    * text columns. `trainSigs` reuses a stored [[signatures]] table
+    * (the incremental-dedup convention) so repeated eval drops
     * never re-sign the corpus.
     *
     * Returns (eval_id, doc_id, ngram_jaccard) — one row per flagged
@@ -935,7 +909,7 @@ object Dedup {
       trainSigs: Option[DataFrame] = None): DataFrame = {
     val rowsPerBand = numHashes / numBands
     val eSigs = signatures(evalSet, idCol, textCol, shingleK, numHashes)
-    val tSigs = trainSigs.map(checkSigFamily).getOrElse(
+    val tSigs = trainSigs.getOrElse(
       signatures(train, idCol, textCol, shingleK, numHashes))
     val eBand = bandedRows(eSigs, numBands, rowsPerBand)
     val tBand = bandedRows(tSigs, numBands, rowsPerBand)

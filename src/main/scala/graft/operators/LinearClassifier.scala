@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.store.Store
 
 /** fastText-shape linear quality classifier — the trained counterpart
   * of [[NbClassifier]] on the same keep/drop axis (CCNet / GPT-3-style
@@ -351,42 +352,37 @@ object LinearClassifier {
   def calibrated(score: Column, a: Double, b: Double): Column =
     sigmoid(lit(a) * score + lit(b))
 
-  // ---- versioned model persistence (the stored-artifact convention) --
+  // ---- versioned model persistence (a graft.store store) -----------
 
   private[graft] val ModelFormatPrefix = "graft-linear-v1"
+  private val Weights = "weights"
 
-  /** Persist a trained weight table. `numBuckets` rides in the stamp:
-    * a model warm-started or scored under a different bucket count
-    * would silently mis-bucket every feature — geometry is part of the
-    * artifact, not a caller convention.
+  /** Persist a trained weight table as a manifest-committed store.
+    * `numBuckets` rides in the format stamp: a model warm-started or
+    * scored under a different bucket count would silently mis-bucket
+    * every feature — geometry is part of the artifact, not a caller
+    * convention.
     */
   def saveModel(spark: org.apache.spark.sql.SparkSession, w: DataFrame,
                 path: String, numBuckets: Int): Unit =
-    w.withColumn("model_format",
-        lit(s"$ModelFormatPrefix;buckets=$numBuckets"))
-      .repartition(1)
-      .write.mode("overwrite").parquet(path)
+    Store.save(spark, path, s"$ModelFormatPrefix;buckets=$numBuckets",
+      Seq((Weights, w.repartition(1), None)))
 
-  /** Load a stored model: (weights, numBuckets). Rejects unstamped or
-    * foreign tables loudly; callers MUST train/score with the returned
-    * bucket count.
+  /** Load a stored model: (weights, numBuckets), stamp checked from the
+    * manifest (no job). Rejects a missing or foreign manifest loudly;
+    * callers MUST train/score with the returned bucket count.
     */
   def loadModel(spark: org.apache.spark.sql.SparkSession,
                 path: String): (DataFrame, Int) = {
-    val df = spark.read.parquet(path)
-    require(df.columns.contains("model_format"),
-      s"stored linear model at $path has no model_format column — " +
-      "written by a pre-versioning build or not a model table; retrain " +
-      "and re-save with LinearClassifier.saveModel")
-    val stamps = df.select(col("model_format")).distinct().limit(3)
-      .collect().map(_.getString(0))
-    require(stamps.length == 1 && stamps.head != null &&
-        stamps.head.startsWith(ModelFormatPrefix),
-      s"stored linear model at $path has layout " +
-      s"'${stamps.mkString(", ")}', this build reads " +
-      s"'$ModelFormatPrefix' — retrain and re-save")
-    val b = stamps.head.stripPrefix(ModelFormatPrefix + ";buckets=").toInt
-    (df.drop("model_format"), b)
+    val stamp = ModelFormatPrefix + ";buckets="
+    val m = Store.live(spark, path, s"stored linear model at $path has no " +
+      "manifest — written by a pre-manifest build or not a model; retrain " +
+      "and re-save with LinearClassifier.saveModel")(
+      _.startsWith(stamp),
+      f => s"stored linear model at $path has layout '$f', this build " +
+        s"reads '$ModelFormatPrefix' — retrain and re-save with " +
+        "LinearClassifier.saveModel")
+    (Store.table(spark, path, m, Weights), m.format.stripPrefix(stamp).toInt)
   }
 
   /** Loud cap for [[scoreColumns]]'s weight-array literal: the whole

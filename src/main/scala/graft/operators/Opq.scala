@@ -474,23 +474,24 @@ object Opq {
   /** Append a new vector batch to a stored OPQ index: rotate the batch
     * with the STORED rotation (the index answers queries it also
     * rotates — a batch appended unrotated would be plausible garbage),
-    * then [[Pq.appendVectors]] encodes it with the stored codebooks/
-    * centroids and enforces the id-collision and width guards. The
+    * then the [[Pq.appendVectors]] path encodes it with the stored
+    * codebooks/centroids and enforces the id-collision guard. The
     * incremental lifecycle member of the OPQ family: the archive is
     * never re-trained or re-encoded for an arriving batch.
     */
   def appendVectors(spark: org.apache.spark.sql.SparkSession, path: String,
                     newCorpus: DataFrame, idCol: String = "vec_id",
                     vecCol: String = "embedding"): Unit = {
+    val mf = Pq.indexManifest(spark, path)
     val idx = loadIndex(spark, path)
     // The width MUST be checked BEFORE rotating, and on EVERY row:
     // rotateVectors coerces any input width to rotation.length
     // (zip_with null-pads the short side and a null product nulls the
     // whole aggregate coordinate), so a wrong-width row — even one
     // hiding past a well-formed first row (ADVICE r15) — would sail
-    // through Pq.appendVectors' own newDim == idx.dim check as a
-    // dim-long array of nulls/garbage and poison the persisted codes
-    // instead of failing loudly here.
+    // through as a dim-long array of nulls/garbage and poison the
+    // persisted codes instead of failing loudly here. Checked here, the
+    // rotated batch needs no second probe in the PQ append.
     val dim = idx.rotation.length
     val badWidth = newCorpus
       .filter(col(vecCol).isNull || size(col(vecCol)) =!= dim)
@@ -508,7 +509,7 @@ object Opq {
         newCorpus.select(col(idCol), col(vecCol)), vecCol,
         idx.rotation, "rot")
       .select(col(idCol), col("rot").as(vecCol))
-    Pq.appendVectors(spark, path, rotated, idCol, vecCol)
+    Pq.appendChecked(spark, path, mf, rotated, idCol, vecCol)
   }
 
   /** Remove vectors from a stored OPQ index by id — the rotation is

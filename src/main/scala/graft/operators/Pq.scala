@@ -204,11 +204,14 @@ object Pq {
     */
   def encode(corpus: DataFrame, codebooks: DataFrame, m: Int,
              idCol: String = "vec_id",
-             vecCol: String = "embedding"): DataFrame = {
-    val dsub = dsubOf(corpus, m, vecCol)
+             vecCol: String = "embedding"): DataFrame =
+    encodeDsub(corpus, codebooks, m, dsubOf(corpus, m, vecCol), idCol, vecCol)
+
+  /** [[encode]] at a known subvector width (no width probe). */
+  private def encodeDsub(corpus: DataFrame, codebooks: DataFrame, m: Int,
+                         dsub: Int, idCol: String, vecCol: String): DataFrame =
     encodeSubs(subVectors(normalizedVecs(corpus, idCol, vecCol), m, dsub),
       codebooks)
-  }
 
   /** Per-cell residual vectors: `rv = nv(vec) − nv(cell)` under the
     * seed-centroid convention (cells are the raw vectors with
@@ -283,8 +286,15 @@ object Pq {
                      nCells: Int,
                      idCol: String = "vec_id",
                      vecCol: String = "embedding",
-                     centroids: Option[DataFrame] = None): DataFrame = {
-    val dsub = dsubOf(corpus, m, vecCol)
+                     centroids: Option[DataFrame] = None): DataFrame =
+    encodeResidualDsub(corpus, codebooks, m, dsubOf(corpus, m, vecCol),
+      nCells, idCol, vecCol, centroids)
+
+  /** [[encodeResidual]] at a known subvector width (no width probe). */
+  private def encodeResidualDsub(corpus: DataFrame, codebooks: DataFrame,
+                                 m: Int, dsub: Int, nCells: Int,
+                                 idCol: String, vecCol: String,
+                                 centroids: Option[DataFrame]): DataFrame = {
     val res = residualFrames(corpus, nCells, idCol, vecCol, centroids)
     val subs = subVectors(res.select(col("pq_id"), col("rv").as("nv")),
       m, dsub)
@@ -500,7 +510,7 @@ object Pq {
   // ---- stored index: build once, answer forever, append-only ---------
 
   /** Stored-index layout version + geometry, the format stamp of the
-    * index's manifest (the `sig_family` convention): an index written
+    * index's manifest (the signature-store convention): an index written
     * by a different layout must fail loudly on load — ADC against
     * mismatched codebooks returns plausible garbage, not an error. One
     * manifest stamps all three tables, so their geometry cannot
@@ -585,8 +595,11 @@ object Pq {
     * no job.
     */
   def loadIndex(spark: org.apache.spark.sql.SparkSession,
-                path: String): IvfPqIndex = {
-    val mf = indexManifest(spark, path)
+                path: String): IvfPqIndex =
+    indexOf(spark, path, indexManifest(spark, path))
+
+  private def indexOf(spark: org.apache.spark.sql.SparkSession, path: String,
+                      mf: Manifest): IvfPqIndex = {
     val params = mf.format.stripPrefix(IndexFormatPrefix + ";").split(';')
       .map(_.split('=')).map(kv => kv(0) -> kv(1).toInt).toMap
     def t(name: String) = Store.table(spark, path, mf, name)
@@ -601,6 +614,7 @@ object Pq {
     * New ids must not collide with stored ids — duplicates would
     * double-answer; the semi-join over the codes ids runs only when the
     * batch's id range, observed on the write, overlaps the stored one.
+    * Every row's width is checked by one probe before the write.
     * With the deterministic seed convention and fresh ids,
     * append-then-query equals rebuild-from-scratch (spec-pinned).
     */
@@ -608,16 +622,37 @@ object Pq {
                     newCorpus: DataFrame, idCol: String = "vec_id",
                     vecCol: String = "embedding"): Unit = {
     val mf = indexManifest(spark, path)
-    val idx = loadIndex(spark, path)
-    val newDim = newCorpus.select(size(col(vecCol))).head().getInt(0)
-    require(newDim == idx.dim,
-      s"appendVectors: new batch width $newDim != index width ${idx.dim}")
+    val dim = indexOf(spark, path, mf).dim
+    // ONE probe over every row before anything is written: encoding
+    // slices each vector by the stored dsub, so a wrong-width row, even
+    // one past a well-formed first row, would otherwise be encoded and
+    // committed as plausible garbage
+    val badWidth = newCorpus
+      .filter(col(vecCol).isNull || size(col(vecCol)) =!= dim)
+      .select(col(idCol), size(col(vecCol)).as("w")).limit(1).collect()
+    require(badWidth.isEmpty, {
+      val r = badWidth.head
+      s"appendVectors: batch row id '${r.get(0)}' has vector width " +
+      s"${r.get(1)} != index width $dim — re-embed the batch or rebuild " +
+      "with Pq.saveIndex"
+    })
+    appendChecked(spark, path, mf, newCorpus, idCol, vecCol)
+  }
+
+  /** [[appendVectors]] for a batch whose every vector is known to have
+    * the index width (the OPQ append checks it before rotating). */
+  private[operators] def appendChecked(spark: org.apache.spark.sql.SparkSession,
+                                       path: String, mf: Manifest,
+                                       newCorpus: DataFrame, idCol: String,
+                                       vecCol: String): Unit = {
+    val idx = indexOf(spark, path, mf)
+    val dsub = idx.dim / idx.m
     val encoded =
       if (idx.residual)
         // residual append: residuals against the STORED centroids
         // (ĉ = cellv/‖cellv‖ — identical to the seed-id nv, so
         // append-then-query == rebuild holds in residual mode too)
-        encodeResidual(newCorpus, broadcast(idx.codebooks), idx.m,
+        encodeResidualDsub(newCorpus, broadcast(idx.codebooks), idx.m, dsub,
             idx.nCells, idCol, vecCol, centroids = Some(idx.centroids))
           .select(col("cell"), col("pq_id"), col("codes"))
       else {
@@ -625,7 +660,8 @@ object Pq {
             vecCol, centroids = Some(idx.centroids
               .select(col("cell"), col("cellv").as("cv"))))
           .select(col("ivf_id").as("pq_id"), col("cell"))
-        encode(newCorpus, broadcast(idx.codebooks), idx.m, idCol, vecCol)
+        encodeDsub(newCorpus, broadcast(idx.codebooks), idx.m, dsub, idCol,
+            vecCol)
           .join(assigned, Seq("pq_id"))
           .select(col("cell"), col("pq_id"), col("codes"))
       }

@@ -445,7 +445,8 @@ object SetSimJoin {
 
   // ---- incremental: stored sets, arriving batches ----------------------
 
-  /** Stored-state layout marker (the sig_family / ivfpq convention).
+  /** Stored-state layout marker, the format stamp of the sets store
+    * (the signature-store / ivfpq convention).
     * `order=value` is part of the contract: stored arrays sort by TOKEN
     * VALUE, not global rarity — rarity (df) DRIFTS as the corpus grows,
     * which would stale every stored prefix; value order is

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.store.{Manifest, Store}
 
 /** Mergeable cardinality sketches for incremental corpus statistics —
   * the shard-resumable counterpart of `COUNT(DISTINCT …)`. At 100 TB a
@@ -10,7 +11,7 @@ import org.apache.spark.sql.functions._
   * once (map-side partial agg, one row per shard), stores it next to
   * the shard, and answers corpus-wide (or any shard-subset) questions
   * later by UNIONING states — no rescan, associative, idempotent, the
-  * same pattern as [[Dedup.signatureTable]]'s stored signatures.
+  * same pattern as [[Dedup.saveSignatureStore]]'s stored signatures.
   *
   * Built on Spark's native Apache DataSketches HLL functions
   * (`hll_sketch_agg` / `hll_union_agg` / `hll_sketch_estimate`,
@@ -23,77 +24,70 @@ object SketchStats {
 
   // ---- stored-state lifecycle ----------------------------------------
   // The whole point of a mergeable sketch is that the state OUTLIVES the
-  // pass that built it: per-shard rows land in a parquet table next to
-  // the shard, and every later question is answered from that table —
-  // never by rescanning the corpus. saveStates/loadStates make the
-  // lifecycle literal; the q_*_stored gates drive it end-to-end
-  // (build → write → read → answer, with the answer oracled).
+  // pass that built it: per-shard rows land in a manifest-committed
+  // store ([[graft.store.Store]]) next to the shard, and every later
+  // question is answered from that store — never by rescanning the
+  // corpus. saveStates/appendStates/loadStates make the lifecycle
+  // literal; the q_*_stored gates drive it end-to-end (build → write →
+  // read → answer, with the answer oracled).
 
   /** Serialized-layout version of the binary state columns this file
     * writes (DataSketches theta/KLL/FI images, Spark HLL/CMS states,
     * the KMV row shape). States are only mergeable WITHIN one format:
     * a stored table re-read by a build whose sketch layout changed
-    * would mis-merge silently — the exact failure mode the minhash
-    * family already hit and versioned away ([[Dedup.signatureTable]]'s
-    * `sig_family` v2 precedent). Bump whenever any `shard*` builder's
-    * serialization, seed, or library layout changes, and rebuild stored
-    * tables through [[saveStates]].
+    * would mis-merge silently, so the version rides in the store's
+    * format stamp and a load refuses any other. Bump whenever any
+    * `shard*` builder's serialization, seed, or library layout
+    * changes, and rebuild stored tables through [[saveStates]].
     */
   val sketchFormatVersion: Int = 1
 
+  private val statesStamp = s"graft-sketch-v$sketchFormatVersion"
+  private val States = "states"
+
   /** Persist a shard-states frame (any of this file's `shard*` shapes —
-    * the binary state column round-trips through parquet unchanged),
-    * stamped with a `sketch_format` column recording
-    * [[sketchFormatVersion]] so a later build can refuse a stale table
-    * loudly instead of mis-merging it.
+    * the binary state column round-trips through parquet unchanged) as
+    * a store stamped with [[sketchFormatVersion]], replacing whatever
+    * `path` held. The first column is the shard key.
     */
   def saveStates(states: DataFrame, path: String): Unit =
-    states.withColumn("sketch_format", lit(sketchFormatVersion))
-      .write.mode("overwrite").parquet(path)
+    Store.save(states.sparkSession, path, statesStamp,
+      Seq((States, states, Some(states.columns.head))))
 
-  /** Append new shard states to an existing [[saveStates]] table — the
+  /** Append new shard states to an existing [[saveStates]] store — the
     * incremental half of the lifecycle (yesterday's states untouched,
-    * today's shard stamped and added). A raw `.mode("append")` around
-    * this would write UNSTAMPED rows that [[loadStates]] then rejects —
-    * appends must carry the same marker the table was created with.
+    * today's shard added as a new file-set in one commit). A shard key
+    * that is already stored is refused: merging would count that shard
+    * twice.
     */
-  def appendStates(states: DataFrame, path: String): Unit =
-    states.withColumn("sketch_format", lit(sketchFormatVersion))
-      .write.mode("append").parquet(path)
+  def appendStates(states: DataFrame, path: String): Unit = {
+    val spark = states.sparkSession
+    val m = statesManifest(spark, path)
+    Store.append(spark, path, m, States, states, m.schemas(States).fieldNames.head,
+      s"appendStates: new shard keys collide with stored shards at $path — " +
+        "a merge would count them twice; append only new shards or rebuild " +
+        "with SketchStats.saveStates")
+  }
 
-  /** Read back a shard-states table written by [[saveStates]] /
-    * [[appendStates]], checking EVERY row's recorded format version and
-    * stripping the marker. The check is a marker-column-only scan — a
-    * states table is |shards| rows of KB states by construction, so
-    * this is metadata-cheap, and a single-row probe would miss a
-    * mixed table (e.g. a stamped base with a raw un-stamped append).
-    * STRICT: loadStates is the paired reader of the writers above, so a
-    * missing or mismatched marker means the table was written outside
-    * the lifecycle — rejected with instructions rather than trusted.
+  private def statesManifest(spark: org.apache.spark.sql.SparkSession,
+                             path: String): Manifest =
+    Store.live(spark, path, s"stored sketch-state table at $path has no " +
+      "manifest — it was not written by SketchStats.saveStates (or by a " +
+      "pre-manifest build); rebuild it with SketchStats.saveStates")(
+      _ == statesStamp,
+      f => s"stored sketch-state table at $path has format '$f', but this " +
+        s"build reads '$statesStamp' — binary states are not mergeable " +
+        "across formats (a stale table mis-merges silently); rebuild it " +
+        "with SketchStats.saveStates")
+
+  /** Read back a shard-states store written by [[saveStates]] /
+    * [[appendStates]]: the format is checked from the manifest (no
+    * job), so a missing or foreign stamp is refused before any state
+    * is merged.
     */
   def loadStates(spark: org.apache.spark.sql.SparkSession,
-                 path: String): DataFrame = {
-    val df = spark.read.parquet(path)
-    require(df.columns.contains("sketch_format"),
-      s"stored sketch-state table at $path has no sketch_format column — " +
-      "it was not written by SketchStats.saveStates; rebuild it through " +
-      "saveStates so the serialized layout is verifiable")
-    val bad = df.select(col("sketch_format"))
-      .filter(col("sketch_format").isNull ||
-        col("sketch_format") =!= sketchFormatVersion)
-      .take(1)
-    bad.foreach { r =>
-      val v = if (r.isNullAt(0)) "absent (un-stamped rows)"
-              else s"v${r.getInt(0)}"
-      require(requirement = false,
-        s"stored sketch-state table at $path contains rows with sketch " +
-        s"format $v, but this build reads v$sketchFormatVersion — " +
-        "binary states are not mergeable across formats (a stale table " +
-        "mis-merges silently); rebuild it with SketchStats.saveStates " +
-        "and append through SketchStats.appendStates")
-    }
-    df.drop("sketch_format")
-  }
+                 path: String): DataFrame =
+    Store.table(spark, path, statesManifest(spark, path), States)
 
   /** One row per shard: `shardCol, n_rows, sketch` (binary HLL state of
     * the key column). The ONE corpus-sized pass; everything after works

@@ -1,58 +1,62 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.store.Store
 
 /** Versioned persistence for TRAINED tokenizer artifacts — BPE merge
   * lists, unigram-LM vocabularies, WordPiece vocabularies. A production
   * pipeline trains a tokenizer once and ships the artifact to every
   * later job; a stale, foreign, or wrong-kind table read back silently
-  * would change the tokenization of the entire corpus — the exact
-  * failure mode the `sig_family` (minhash) and `sketch_format`
-  * (sketches) and `index_format` (IVF-PQ) stamps already guard, applied
-  * here to the fourth stored-artifact family.
+  * would change the tokenization of the entire corpus.
   *
-  * Layout: one parquet table per artifact, a `tokenizer_format` column
-  * on every row carrying layout version + kind + the parameters that
-  * change encode semantics (endMark for BPE; nothing for unigram —
-  * logp doubles round-trip bit-exactly through parquet; contPrefix/unk
-  * for WordPiece). Order-bearing artifacts (the BPE merge LIST) carry
-  * an explicit `rank` column — parquet read order is not a contract.
+  * Layout: one manifest-committed store ([[graft.store.Store]]) per
+  * artifact, one table of rows. The manifest's format stamp carries the
+  * layout version + kind + the parameters that change encode semantics
+  * (endMark for BPE; nothing for unigram — logp doubles round-trip
+  * bit-exactly through parquet; contPrefix/unk for WordPiece), so the
+  * stamp check reads the manifest and runs no job; a load runs one job,
+  * the collect of the rows, and sorts them on the driver (artifacts are
+  * KBs). Order-bearing artifacts (the BPE merge LIST, the WordPiece
+  * vocab) carry an explicit `rank` column — parquet read order is not a
+  * contract.
   */
 object TokenizerStore {
 
   private[graft] val FormatPrefix = "graft-tokenizer-v1"
+  private val Rows = "artifact"
+  private val SaveCalls = Map("bpe-merges" -> "saveBpeMerges",
+    "unigram-vocab" -> "saveUnigramVocab", "wordpiece-vocab" -> "saveWordPieceVocab")
 
-  private def stampOf(kind: String, params: Seq[(String, String)]): String =
-    (s"$FormatPrefix;kind=$kind" +: params.map { case (k, v) => s"$k=$v" })
-      .mkString(";")
+  private def save(rows: DataFrame, path: String, kind: String,
+                   params: Seq[(String, String)]): Unit =
+    Store.save(rows.sparkSession, path,
+      (s"$FormatPrefix;kind=$kind" +: params.map { case (k, v) => s"$k=$v" })
+        .mkString(";"),
+      Seq((Rows, rows.repartition(1), None)))
 
-  private def checkedRead(spark: SparkSession, path: String,
-                          expectKind: String)
-      : (org.apache.spark.sql.DataFrame, Map[String, String]) = {
-    val df = spark.read.parquet(path)
-    require(df.columns.contains("tokenizer_format"),
-      s"stored tokenizer table at $path has no tokenizer_format column — " +
-      "written by a pre-versioning build or not a tokenizer artifact; " +
-      "retrain and re-save with TokenizerStore")
-    val stamps = df.select(col("tokenizer_format")).distinct().limit(3)
-      .collect().map(_.getString(0))
-    require(stamps.length == 1,
-      s"stored tokenizer table at $path carries ${stamps.length} distinct " +
-      "tokenizer_format stamps — mixed artifacts; retrain and re-save")
-    require(stamps.head != null && stamps.head.startsWith(FormatPrefix),
-      s"stored tokenizer table at $path has layout '${stamps.head}', this " +
-      s"build reads '$FormatPrefix' — retrain and re-save")
-    val params = stamps.head.stripPrefix(FormatPrefix + ";").split(';')
+  /** The rows of the `kind` artifact stored at `path` with its stamp
+    * parameters: a lazy frame, stamp and kind checked from the manifest
+    * (no job). The `load*` calls below collect it.
+    */
+  def artifact(spark: SparkSession, path: String,
+               kind: String): (DataFrame, Map[String, String]) = {
+    val resave = "retrain and re-save with TokenizerStore." +
+      SaveCalls.getOrElse(kind, "save*")
+    val m = Store.live(spark, path, s"stored tokenizer artifact at $path " +
+      "has no manifest — written by a pre-manifest build or not a " +
+      s"tokenizer artifact; $resave")(
+      _.startsWith(FormatPrefix + ";"),
+      f => s"stored tokenizer artifact at $path has layout '$f', this " +
+        s"build reads '$FormatPrefix' — $resave")
+    val params = m.format.stripPrefix(FormatPrefix + ";").split(';')
       .map { kv =>
         val i = kv.indexOf('=')
         kv.substring(0, i) -> kv.substring(i + 1)
       }.toMap
-    require(params.get("kind").contains(expectKind),
-      s"stored tokenizer table at $path is kind '${params("kind")}', " +
-      s"caller asked for '$expectKind' — wrong artifact for this encode " +
-      "path")
-    (df.drop("tokenizer_format"), params)
+    require(params.get("kind").contains(kind),
+      s"stored tokenizer artifact at $path is kind '${params("kind")}', " +
+      s"caller asked for '$kind' — wrong artifact for this encode path")
+    (Store.table(spark, path, m, Rows), params)
   }
 
   // ---- BPE (and byte-level BPE) merge lists --------------------------
@@ -64,20 +68,15 @@ object TokenizerStore {
   def saveBpeMerges(spark: SparkSession, merges: Seq[(String, String)],
                     path: String, endMark: String = "</w>"): Unit = {
     import spark.implicits._
-    merges.zipWithIndex
-      .map { case ((a, b), i) => (i, a, b) }
-      .toDF("rank", "a", "b")
-      .withColumn("tokenizer_format",
-        lit(stampOf("bpe-merges", Seq("end_mark" -> endMark))))
-      .repartition(1)
-      .write.mode("overwrite").parquet(path)
+    save(merges.zipWithIndex.map { case ((a, b), i) => (i, a, b) }
+      .toDF("rank", "a", "b"), path, "bpe-merges", Seq("end_mark" -> endMark))
   }
 
   /** Load a merge list in rank order; returns (merges, endMark). */
   def loadBpeMerges(spark: SparkSession,
                     path: String): (Seq[(String, String)], String) = {
-    val (df, params) = checkedRead(spark, path, "bpe-merges")
-    val merges = df.orderBy(asc("rank")).collect()
+    val (df, params) = artifact(spark, path, "bpe-merges")
+    val merges = df.collect().sortBy(_.getAs[Int]("rank"))
       .map(r => (r.getAs[String]("a"), r.getAs[String]("b"))).toSeq
     (merges, params.getOrElse("end_mark", "</w>"))
   }
@@ -87,10 +86,7 @@ object TokenizerStore {
   def saveUnigramVocab(spark: SparkSession, vocab: Seq[(String, Double)],
                        path: String): Unit = {
     import spark.implicits._
-    vocab.toDF("piece", "logp")
-      .withColumn("tokenizer_format", lit(stampOf("unigram-vocab", Nil)))
-      .repartition(1)
-      .write.mode("overwrite").parquet(path)
+    save(vocab.toDF("piece", "logp"), path, "unigram-vocab", Nil)
   }
 
   /** Load a unigram vocabulary. Order within the vocab is not
@@ -99,9 +95,10 @@ object TokenizerStore {
     */
   def loadUnigramVocab(spark: SparkSession,
                        path: String): Seq[(String, Double)] = {
-    val (df, _) = checkedRead(spark, path, "unigram-vocab")
-    df.orderBy(asc("piece")).collect()
+    val (df, _) = artifact(spark, path, "unigram-vocab")
+    df.collect()
       .map(r => (r.getAs[String]("piece"), r.getAs[Double]("logp"))).toSeq
+      .sortBy(_._1)
   }
 
   // ---- WordPiece vocabularies ----------------------------------------
@@ -110,12 +107,8 @@ object TokenizerStore {
                          path: String, contPrefix: String = "##",
                          unk: String = "[UNK]"): Unit = {
     import spark.implicits._
-    vocab.zipWithIndex.map { case (p, i) => (i, p) }.toDF("rank", "piece")
-      .withColumn("tokenizer_format",
-        lit(stampOf("wordpiece-vocab",
-          Seq("cont_prefix" -> contPrefix, "unk" -> unk))))
-      .repartition(1)
-      .write.mode("overwrite").parquet(path)
+    save(vocab.zipWithIndex.map { case (p, i) => (i, p) }.toDF("rank", "piece"),
+      path, "wordpiece-vocab", Seq("cont_prefix" -> contPrefix, "unk" -> unk))
   }
 
   /** Load a WordPiece vocab in stored order; returns
@@ -123,8 +116,8 @@ object TokenizerStore {
     */
   def loadWordPieceVocab(spark: SparkSession,
                          path: String): (Seq[String], String, String) = {
-    val (df, params) = checkedRead(spark, path, "wordpiece-vocab")
-    val vocab = df.orderBy(asc("rank")).collect()
+    val (df, params) = artifact(spark, path, "wordpiece-vocab")
+    val vocab = df.collect().sortBy(_.getAs[Int]("rank"))
       .map(_.getAs[String]("piece")).toSeq
     (vocab, params.getOrElse("cont_prefix", "##"),
       params.getOrElse("unk", "[UNK]"))

@@ -580,8 +580,8 @@ object StatsExtSuite extends QuerySuite {
         graft.operators.SketchStats.shardSketches(
           docs.filter(col("source") =!= "src0"), "source", "doc_id"), path)
       // append-only state update: ONE new shard sketched, old untouched
-      // (appendStates, not a raw write — appends must carry the same
-      // sketch_format marker the table was created with)
+      // (appendStates, not a raw write — it commits the shard to the
+      // store's manifest and refuses a shard that is already stored)
       graft.operators.SketchStats.appendStates(
         graft.operators.SketchStats.shardSketches(
           docs.filter(col("source") === "src0"), "source", "doc_id"), path)

@@ -580,32 +580,6 @@ object TextMiningSuite extends QuerySuite {
     },
     Some(percolateReplaySql))
 
-  // ---- legacy registry upgrade (round 18, VERDICT r17 #6): a
-  // pre-stats_fp registry frame goes through upgradePercolateTable's
-  // verify-then-stamp path (every baked idf recomputed from the index's
-  // dfreq, avgdl from the stats table) and the UPGRADED registry
-  // percolates the corpus — alerts must hash-match the same SQL replay
-  // as a fresh compile, so an upgrade that perturbed any posting or
-  // mis-stamped the fold fails on values across all three SFs.
-  private val percolateUpgrade = GraftQuery(
-    "q_percolate_upgrade",
-    (s, d) => {
-      val path = s"${GateStates.dir}/" +
-        s"bm25regup_${d.replaceAll("[^A-Za-z0-9]", "_")}"
-      val sh = percolateShingled(s, d)
-      graft.operators.Bm25.saveIndex(sh, s"$path/index")
-      val idx = graft.operators.Bm25.loadIndex(s, s"$path/index")
-      // a faithful legacy artifact: same compiled postings, no stats
-      // fingerprint column (what pre-r16 builds persisted)
-      val legacy = graft.operators.Bm25
-        .compilePercolateTable(idx, percolateRegQueries(sh))
-        .drop("stats_fp")
-      val upgraded = graft.operators.Bm25.upgradePercolateTable(idx, legacy)
-      graft.operators.Bm25.percolateJoin(sh, upgraded, threshold = 5.0)
-        .orderBy(asc("query_id"), asc("doc_id"))
-    },
-    Some(percolateReplaySql))
-
   // ---- hybrid retrieval: BM25 ⊕ dense cosine via RRF ------------------
   // The standard two-tower production shape: sparse (BM25 over
   // documents) and dense (exact cosine over embeddings, same id space)
@@ -751,6 +725,6 @@ object TextMiningSuite extends QuerySuite {
   override val queries: Seq[GraftQuery] =
     Seq(tfidf, piiRedact, dedupClusters, fuzzyMatch, clusterKeep, bm25,
         bm25Stored, bm25Appended, streamPercolate, percolateRegistry,
-        percolateStore, percolateSharded, percolateUpgrade,
+        percolateStore, percolateSharded,
         hybridRetrieval, htmlExtract)
 }

@@ -101,31 +101,28 @@ class EntryPointsSpec extends AnyFunSuite {
       s"object-level var or synchronized under graft/operators: $found")
   }
 
-  /** Stamp columns still written by stores that do not commit through
-    * `graft.store` (the classifier model, tokenizer and sketch tables). */
-  private val stampColumnsNotYetMoved =
-    Set("model_format", "tokenizer_format", "sketch_format")
-
   /** The store idioms that `graft.store` replaced, found in
     * comment-stripped `code`: a filesystem rename (the delete-then-rename
-    * swap), the stamp-scan helper, and a stamp-column literal. */
+    * swap), the stamp-scan helper, a stamp-column literal, and a raw
+    * append into a live directory. */
   private def storeIdioms(code: String): Seq[String] =
     ("""\.rename\s*\(""".r.findAllIn(code).map(_ => "rename") ++
       """\bStoreStamp\b""".r.findAllIn(code) ++
-      "\"(sig_store|\\w+_format)\"".r.findAllMatchIn(code).map(_.group(1))
-        .filterNot(stampColumnsNotYetMoved)).toSeq
+      "\"(sig_store|sig_family|\\w+_format)\"".r.findAllMatchIn(code).map(_.group(1)) ++
+      """\.mode\s*\(\s*"append"\s*\)""".r.findAllIn(code).map(_ => "append")).toSeq
 
   test("stores commit through graft.store: no swaps or stamp columns in operators") {
-    // the detector itself: each replaced idiom is found, while the
-    // stamp columns of the stores not yet moved and lookalike names
-    // are not
+    // the detector itself: each replaced idiom is found, while
+    // lookalike names are not
     val probe =
       "object O {\n  fs.rename(tmp, hp)\n  StoreStamp.distinctVals(df, c)\n" +
       "  df.withColumn(\"index_format\", s)\n  df.drop(\"sig_store\")\n" +
-      "  df.drop(\"model_format\")\n  sigStoreStamp(5, 64)\n" +
+      "  df.drop(\"model_format\")\n  sigs.select(\"sig_family\")\n" +
+      "  df.write.mode(\"append\").parquet(p)\n  sigStoreStamp(5, 64)\n" +
+      "  df.write.mode(\"overwrite\").parquet(p)\n" +
       "  date_format(col(\"ts\"), \"yyyy\")\n}\n"
     assert(storeIdioms(probe) == Seq("rename", "StoreStamp", "index_format",
-      "sig_store"))
+      "sig_store", "model_format", "sig_family", "append"))
     val found = sources(Paths.get("src/main/scala/graft/operators"))
       .toSeq.sortBy(_._1).flatMap { case (f, code) =>
         storeIdioms(code).map(i => s"$f: $i")

@@ -471,48 +471,4 @@ class Bm25Spec extends AnyFunSuite {
     }
     assert(ex.getMessage.contains("1..5") && ex.getMessage.contains("6"))
   }
-
-  test("upgradePercolateTable: verified legacy == fresh compile; drift rejects") {
-    val path = java.nio.file.Files.createTempDirectory("bm25_up").toString
-    Bm25.saveIndex(fixture, path)
-    val idx = Bm25.loadIndex(spark, path)
-    val qs = Seq((1L, "a b"), (2L, "c")).toDF("query_id", "query_text")
-    val fresh = Bm25.compilePercolateTable(idx, qs)
-    // a pre-stats_fp build: same compile output, fingerprint column
-    // absent — exactly what loadPercolateTable hands back for a store
-    // written before the fingerprint existed
-    val legacy = fresh.drop("stats_fp")
-    // legacy frames stay append-INELIGIBLE (the safe side)...
-    val ex = intercept[IllegalArgumentException] {
-      Bm25.appendToPercolateTable(idx, legacy,
-        Seq((10L, "b b")).toDF("query_id", "query_text"))
-    }
-    assert(ex.getMessage.contains("recompile"))
-    // ...and the upgrade is the mechanical way out: verified postings
-    // re-fold under the index fingerprint, equal to a fresh compile
-    val upgraded = Bm25.upgradePercolateTable(idx, legacy)
-    def posts(c: org.apache.spark.sql.DataFrame) =
-      Bm25.percolatePostings(c).as[(Long, String, Double)].collect().toSet
-    assert(posts(upgraded) == posts(fresh))
-    assert(upgraded.select("avgdl", "stats_fp").head() ==
-      fresh.select("avgdl", "stats_fp").head())
-    // the upgraded registry is append-eligible again
-    val appended = Bm25.appendToPercolateTable(idx, upgraded,
-      Seq((10L, "b b")).toDF("query_id", "query_text"))
-    assert(Bm25.percolatePostings(appended)
-      .filter(col("query_id") === 10L).count() > 0)
-    // an index that drifted since the legacy compile cannot be
-    // upgraded — the fingerprint would be a forgery
-    Bm25.appendDocs(spark, path, Seq((90L, "f g h")).toDF("doc_id", "text"))
-    val driftedIdx = Bm25.loadIndex(spark, path)
-    val ex2 = intercept[IllegalArgumentException] {
-      Bm25.upgradePercolateTable(driftedIdx, legacy)
-    }
-    assert(ex2.getMessage.contains("drifted"))
-    // already-current frames are not an upgrade target
-    val ex3 = intercept[IllegalArgumentException] {
-      Bm25.upgradePercolateTable(idx, fresh)
-    }
-    assert(ex3.getMessage.contains("nothing to upgrade"))
-  }
 }

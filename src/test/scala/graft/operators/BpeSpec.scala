@@ -113,14 +113,6 @@ class BpeSpec extends AnyFunSuite {
     }
   }
 
-  test("saveMerges/loadMerges: rank-ordered parquet round trip") {
-    val merges = Bpe.trainFast(corpus, "toks", numMerges = 5)
-    val dir = java.nio.file.Files
-      .createTempDirectory("bpe_merges").resolve("m").toString
-    Bpe.saveMerges(spark, merges, dir)
-    assert(Bpe.loadMerges(spark, dir) == merges)
-  }
-
   test("trainFast: maxVocab cap fails loudly instead of truncating") {
     val e = intercept[IllegalArgumentException] {
       Bpe.trainFast(corpus, "toks", numMerges = 1, maxVocab = 2)

@@ -211,8 +211,8 @@ class DedupSpec extends AnyFunSuite {
       (4L, "entirely novel text with no relation to anything else here ok", "s2"))
       .toDF("doc_id", "text", "source")
     // the SAME maintained table shape incrementalNearDupPairs accepts:
-    // signatureTable with the shard key carried
-    val stored = Dedup.signatureTable(corpus, "doc_id", "text", 5, 64,
+    // signatures with the shard key carried
+    val stored = Dedup.signatures(corpus, "doc_id", "text", 5, 64,
       carryCols = Seq("source"))
     val viaStored = Dedup.crossShardDedupClusters(corpus, minJaccard = 0.9,
         shardCols = Seq("source"), corpusSigs = Some(stored))
@@ -223,25 +223,6 @@ class DedupSpec extends AnyFunSuite {
     assert(viaStored == recomputed)
     // and the cross-shard clone group really clustered
     assert(viaStored.filter(_._1 <= 2L).map(_._2).distinct == Seq(1L))
-  }
-
-  test("stale signature-family version is rejected loudly") {
-    val corpus = Seq((1L, "alpha beta gamma delta epsilon"))
-      .toDF("doc_id", "text")
-    val batch = Seq((10L, "alpha beta gamma delta epsilon"))
-      .toDF("doc_id", "text")
-    val stale = Dedup.signatureTable(corpus, "doc_id", "text", 5, 64)
-      .withColumn("sig_family", lit(1))
-    val e = intercept[IllegalArgumentException] {
-      Dedup.incrementalNearDupPairs(batch, corpus,
-        corpusSigs = Some(stale)).count()
-    }
-    assert(e.getMessage.contains("family"))
-    // current-version table passes the check and pairs the clone
-    val fresh = Dedup.signatureTable(corpus, "doc_id", "text", 5, 64)
-    val pairs = Dedup.incrementalNearDupPairs(batch, corpus,
-      corpusSigs = Some(fresh)).as[(Long, Long, Double)].collect()
-    assert(pairs.map(p => (p._1, p._2)).toSeq == Seq((10L, 1L)))
   }
 
   test("incrementalNearDupPairs plan: bloom prunes the corpus band stream") {
@@ -368,7 +349,7 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("fuzzyDecontaminate: stored train signatures answer identically") {
-    val stored = Dedup.signatureTable(decontamTrain, "doc_id", "text",
+    val stored = Dedup.signatures(decontamTrain, "doc_id", "text",
       shingleK = 2, numHashes = 64)
     val fresh = Dedup.fuzzyDecontaminate(decontamTrain, decontamEval)
       .collect().map(_.toSeq).toSet

@@ -134,26 +134,26 @@ class LinearClassifierSpec extends AnyFunSuite {
     val B = 64
     val (w, _) = LinearClassifier.train(planted, "doc_id", "toks", "y",
       numBuckets = B, iters = 1, lr = 5.0)
-    val good = java.nio.file.Files.createTempDirectory("lc_good").toString
-    LinearClassifier.saveModel(spark, w, good, B)
 
+    // a weight table written as plain parquet: no manifest
     val bare = java.nio.file.Files.createTempDirectory("lc_bare").toString
-    spark.read.parquet(good).drop("model_format")
-      .write.mode("overwrite").parquet(bare)
+    w.write.mode("overwrite").parquet(bare)
     val e1 = intercept[IllegalArgumentException] {
       LinearClassifier.loadModel(spark, bare)
     }
-    assert(e1.getMessage.contains("model_format"))
+    assert(e1.getMessage.contains("no manifest"))
+    assert(e1.getMessage.contains("LinearClassifier.saveModel"))
 
+    // a model store whose manifest carries another layout's stamp
     val foreign = java.nio.file.Files
       .createTempDirectory("lc_foreign").toString
-    spark.read.parquet(good)
-      .withColumn("model_format", lit("other-v9;buckets=64"))
-      .write.mode("overwrite").parquet(foreign)
+    LinearClassifier.saveModel(spark, w, foreign, B)
+    graft.store.StoreTestKit.stampForeign(spark, foreign, "other-v9;buckets=64")
     val e2 = intercept[IllegalArgumentException] {
       LinearClassifier.loadModel(spark, foreign)
     }
     assert(e2.getMessage.contains("layout"))
+    assert(e2.getMessage.contains("LinearClassifier.saveModel"))
   }
 
   test("plattCalibrate matches an independent local replica exactly") {

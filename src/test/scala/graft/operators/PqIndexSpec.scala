@@ -6,8 +6,8 @@ import graft.SparkTestSession
 
 /** Stored IVF-PQ index lifecycle: build-once/answer-forever parity with
   * the direct operator, append-only growth equal to a rebuild, and the
-  * loud version/geometry rejection contract (the sig_family /
-  * sketch_format convention applied to ANN indexes).
+  * loud version/geometry rejection contract (the manifest-stamp
+  * convention of every stored table, applied to ANN indexes).
   */
 class PqIndexSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -129,6 +129,25 @@ class PqIndexSpec extends AnyFunSuite {
       Pq.appendVectors(spark, path, narrowed)
     }
     assert(width.getMessage.contains("width"))
+  }
+
+  test("append refuses a batch whose second row is short; the old version stays") {
+    val path = freshPath("short")
+    Pq.saveIndex(corpus.filter($"vec_id" < 30), path, nCells = 8, m = 8,
+      ksub = 16)
+    def rows(): Long = Pq.loadIndex(spark, path).codes.count()
+    val before = rows()
+    // a well-formed first row hides the short second one from any
+    // first-row width check
+    val batch = corpus.filter($"vec_id" >= 30 && $"vec_id" < 33)
+      .select($"vec_id", when($"vec_id" === 31L, slice($"embedding", 1, 60))
+        .otherwise($"embedding").as("embedding"))
+      .orderBy("vec_id")
+    val ex = intercept[IllegalArgumentException] {
+      Pq.appendVectors(spark, path, batch)
+    }
+    assert(ex.getMessage.contains("'31' has vector width 60"))
+    assert(rows() == before)
   }
 
   test("compactCodes: identical answers back, fewer files") {

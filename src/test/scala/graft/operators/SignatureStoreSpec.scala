@@ -90,12 +90,34 @@ class SignatureStoreSpec extends AnyFunSuite {
     // a signature table written without a manifest at all
     val bare =
       java.nio.file.Files.createTempDirectory("sigstore_bare").toString
-    Dedup.signatureTable(df(corpus), "doc_id", "text", 5, 32)
+    Dedup.signatures(df(corpus), "doc_id", "text", 5, 32)
       .write.mode("overwrite").parquet(bare)
     val ex2 = intercept[IllegalArgumentException] {
       Dedup.loadSignatureStore(spark, bare)
     }
     assert(ex2.getMessage.contains("no manifest"))
+  }
+
+  test("a store of the per-row family-column layout is refused with the rebuild call") {
+    // what earlier builds committed: the right stamp, but a sig_family
+    // column on every stored row
+    val corpus = mkCorpus(0 until 5)
+    val old =
+      java.nio.file.Files.createTempDirectory("sigstore_old").toString
+    graft.store.Store.save(spark, old, Dedup.sigStoreStamp(5, 64),
+      Seq(("sigs", Dedup.signatures(df(corpus), "doc_id", "text", 5, 64)
+        .withColumn("sig_family", lit(Dedup.signatureFamilyVersion)), Some("id"))))
+    val refusals = Seq[() => Unit](
+      () => Dedup.loadSignatureStore(spark, old),
+      () => Dedup.incrementalNearDupFromStore(spark, old,
+        df(clonesOf(corpus, 100L)), df(corpus)),
+      () => Dedup.appendSignatureStore(spark, old, df(mkCorpus(50 until 52)),
+        "doc_id", "text"))
+    refusals.foreach { call =>
+      val ex = intercept[IllegalArgumentException](call())
+      assert(ex.getMessage.contains("(id, sig, sig_family)"))
+      assert(ex.getMessage.contains("rebuild with Dedup.saveSignatureStore"))
+    }
   }
 
   test("remove: retracted ids stop pairing; loud guards; compact keeps rows") {

@@ -302,14 +302,12 @@ class SketchStatsSpec extends AnyFunSuite {
     val path = s"$dir/states"
     val states = SketchStats.shardSketches(df, "shard", "key")
     SketchStats.saveStates(states, path)
-    // raw table carries the marker...
-    val raw = spark.read.parquet(path)
-    assert(raw.columns.contains("sketch_format"))
-    assert(raw.select("sketch_format").distinct().as[Int].collect().toSeq
-      == Seq(SketchStats.sketchFormatVersion))
-    // ...and the paired reader strips it and answers identically
+    // the format version is stamped in the manifest, not in the rows...
+    val m = graft.store.Store.manifest(spark, path).get
+    assert(m.format == s"graft-sketch-v${SketchStats.sketchFormatVersion}")
+    // ...so the loaded frame is exactly the states and answers identically
     val loaded = SketchStats.loadStates(spark, path)
-    assert(loaded.columns.sorted.toSeq == states.columns.sorted.toSeq)
+    assert(loaded.columns.toSeq == states.columns.toSeq)
     val m1 = SketchStats.mergedEstimate(loaded).as[Double].head()
     val m2 = SketchStats.mergedEstimate(states).as[Double].head()
     assert(m1 == m2)
@@ -318,21 +316,51 @@ class SketchStatsSpec extends AnyFunSuite {
   test("stale or unstamped stored-state tables are rejected loudly") {
     val dir = java.nio.file.Files.createTempDirectory("sketch_stale").toString
     val states = SketchStats.shardSketches(df, "shard", "key")
-    // a table written OUTSIDE saveStates (no marker) is refused
+    // a table written OUTSIDE saveStates (no manifest) is refused
     val bare = s"$dir/bare"
     states.write.mode("overwrite").parquet(bare)
     val e1 = intercept[IllegalArgumentException] {
       SketchStats.loadStates(spark, bare)
     }
-    assert(e1.getMessage.contains("sketch_format"))
-    // a table stamped by a FUTURE/other format version is refused
+    assert(e1.getMessage.contains("no manifest"))
+    // a store stamped by a FUTURE/other format version is refused, and
+    // so is an append to it
     val stale = s"$dir/stale"
-    states.withColumn("sketch_format",
-        lit(SketchStats.sketchFormatVersion + 1))
-      .write.mode("overwrite").parquet(stale)
+    SketchStats.saveStates(states, stale)
+    graft.store.StoreTestKit.stampForeign(spark, stale,
+      s"graft-sketch-v${SketchStats.sketchFormatVersion + 1}")
     val e2 = intercept[IllegalArgumentException] {
       SketchStats.loadStates(spark, stale)
     }
     assert(e2.getMessage.contains("not mergeable across formats"))
+    val e3 = intercept[IllegalArgumentException] {
+      SketchStats.appendStates(states, stale)
+    }
+    assert(e3.getMessage.contains("not mergeable across formats"))
+    Seq(e1, e2).foreach(e => assert(e.getMessage.contains("SketchStats.saveStates")))
+  }
+
+  test("appending a shard that is already stored is refused; the old version stays") {
+    val path = java.nio.file.Files.createTempDirectory("sketch_dup").toString
+    val states = SketchStats.shardSketches(df, "shard", "key")
+    SketchStats.saveStates(states.filter(col("shard") =!= "6"), path)
+    SketchStats.appendStates(states.filter(col("shard") === "6"), path)
+    val before = SketchStats.loadStates(spark, path)
+      .select("shard", "n_rows").as[(String, Long)].collect().toSet
+    assert(before.map(_._1) == (0 until 7).map(_.toString).toSet)
+    // shard 3 again, next to a new shard: merged, shard 3 would count twice
+    val again = SketchStats.shardSketches(
+      df.filter(col("shard") === "3").union(
+        df.filter(col("shard") === "0").withColumn("shard", lit("7"))),
+      "shard", "key")
+    val ex = intercept[IllegalArgumentException] {
+      SketchStats.appendStates(again, path)
+    }
+    assert(ex.getMessage.contains("collide"))
+    assert(SketchStats.loadStates(spark, path)
+      .select("shard", "n_rows").as[(String, Long)].collect().toSet == before)
+    assert(graft.store.StoreTestKit.entries(path) ==
+      graft.store.StoreTestKit.live(spark, path),
+      "the refused file-set was left behind")
   }
 }

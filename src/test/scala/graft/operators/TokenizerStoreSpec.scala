@@ -6,7 +6,8 @@ import graft.SparkTestSession
 
 /** Versioned tokenizer artifacts: exact round-trip for all three
   * families (merge ORDER, logp bits, WordPiece params), and the loud
-  * rejection contract for unstamped / foreign / wrong-kind tables.
+  * rejection contract for unstamped / foreign / wrong-kind stores
+  * (the stamp lives in the store's manifest).
   */
 class TokenizerStoreSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -77,24 +78,26 @@ class TokenizerStoreSpec extends AnyFunSuite {
     val good = freshPath("good")
     TokenizerStore.saveBpeMerges(spark, merges, good)
 
-    // unstamped
+    // unstamped: the artifact's rows as plain parquet, no manifest
     val bare = freshPath("bare")
-    spark.read.parquet(good).drop("tokenizer_format")
+    TokenizerStore.artifact(spark, good, "bpe-merges")._1
       .write.mode("overwrite").parquet(bare)
     val e1 = intercept[IllegalArgumentException] {
       TokenizerStore.loadBpeMerges(spark, bare)
     }
-    assert(e1.getMessage.contains("tokenizer_format"))
+    assert(e1.getMessage.contains("no manifest"))
 
-    // foreign layout
+    // foreign layout in the manifest
     val foreign = freshPath("foreign")
-    spark.read.parquet(good)
-      .withColumn("tokenizer_format", lit("other-tool-v3;kind=bpe-merges"))
-      .write.mode("overwrite").parquet(foreign)
+    TokenizerStore.saveBpeMerges(spark, merges, foreign)
+    graft.store.StoreTestKit.stampForeign(spark, foreign,
+      "other-tool-v3;kind=bpe-merges")
     val e2 = intercept[IllegalArgumentException] {
       TokenizerStore.loadBpeMerges(spark, foreign)
     }
     assert(e2.getMessage.contains("layout"))
+    Seq(e1, e2).foreach(e =>
+      assert(e.getMessage.contains("re-save with TokenizerStore.saveBpeMerges")))
 
     // wrong kind: a merge table read as a unigram vocab
     val e3 = intercept[IllegalArgumentException] {

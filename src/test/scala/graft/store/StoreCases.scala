@@ -3,7 +3,8 @@ package graft.store
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Bm25, Dedup, Opq, Pq, SetSimJoin}
+import graft.operators.{Bm25, Dedup, LinearClassifier, Opq, Pq, SetSimJoin,
+  SketchStats, TokenizerStore}
 
 /** One stored-table family driven through its public lifecycle. A
   * store is built from a set of document ids; `snapshot` renders what
@@ -135,6 +136,54 @@ object StoreCases {
         def load(path: String): Unit = SetSimJoin.loadContainmentRegistry(spark, path)
         def snapshot(path: String): Set[String] = rowsOf(SetSimJoin.registryPostings(
           SetSimJoin.loadContainmentRegistry(spark, path)))
+      },
+      new StoreCase("linear model") {
+        def save(path: String, ids: Seq[Long]): Unit =
+          LinearClassifier.saveModel(spark, ids.map(i => (i, i * 0.25)).toDF("bucket", "wt"),
+            path, numBuckets = 128 + ids.size)
+        def load(path: String): Unit = LinearClassifier.loadModel(spark, path)
+        def snapshot(path: String): Set[String] = {
+          val (w, b) = LinearClassifier.loadModel(spark, path)
+          rowsOf(w) + s"buckets:$b"
+        }
+      },
+      // the tokenizer loads collect their rows into driver-side lists;
+      // the load measured here is the stamp check and the lazy frame
+      new StoreCase("BPE merges") {
+        def save(path: String, ids: Seq[Long]): Unit =
+          TokenizerStore.saveBpeMerges(spark, ids.map(i => (s"a$i", s"b$i")), path)
+        def load(path: String): Unit = TokenizerStore.artifact(spark, path, "bpe-merges")
+        def snapshot(path: String): Set[String] = {
+          val (merges, endMark) = TokenizerStore.loadBpeMerges(spark, path)
+          Set(merges.mkString(",") + s"|$endMark")
+        }
+      },
+      new StoreCase("unigram vocab") {
+        def save(path: String, ids: Seq[Long]): Unit =
+          TokenizerStore.saveUnigramVocab(spark, ids.map(i => (s"p$i", -1.0 - i)), path)
+        def load(path: String): Unit = TokenizerStore.artifact(spark, path, "unigram-vocab")
+        def snapshot(path: String): Set[String] =
+          TokenizerStore.loadUnigramVocab(spark, path).map(_.toString).toSet
+      },
+      new StoreCase("WordPiece vocab") {
+        def save(path: String, ids: Seq[Long]): Unit =
+          TokenizerStore.saveWordPieceVocab(spark, ids.map(i => s"w$i"), path)
+        def load(path: String): Unit = TokenizerStore.artifact(spark, path, "wordpiece-vocab")
+        def snapshot(path: String): Set[String] = {
+          val (vocab, cont, unk) = TokenizerStore.loadWordPieceVocab(spark, path)
+          Set(vocab.mkString(",") + s"|$cont|$unk")
+        }
+      },
+      new StoreCase("sketch states") {
+        // one HLL state per shard; the shard key (first column) is the id
+        def states(ids: Seq[Long]): DataFrame = SketchStats.shardSketches(
+          ids.flatMap(i => (0L until 3L).map(j => (i, i * 3 + j))).toDF("shard", "key"),
+          "shard", "key")
+        def save(path: String, ids: Seq[Long]): Unit = SketchStats.saveStates(states(ids), path)
+        def load(path: String): Unit = SketchStats.loadStates(spark, path)
+        def snapshot(path: String): Set[String] =
+          rowsOf(SketchStats.shardEstimates(SketchStats.loadStates(spark, path), "shard"))
+        override def append = Some((p, ids) => SketchStats.appendStates(states(ids), p))
       })
   }
 }
