@@ -668,53 +668,52 @@ object Dedup {
     // signature table skips the signature pass: its rows join once to
     // the tokenize pass and the product is cached here (the join runs
     // at cache build, not per consumer).
-    val attrs = corpusSigs.map { cs =>
-      cs.join(
-        docs.select(col(idCol).as("id"),
-          TextFunctions.distinctTokens(col(textCol)).as("toks")),
-        Seq("id"))
-    }.getOrElse(
-      attrFrame(docs, idCol, textCol, shingleK, numHashes,
-        carryCols = shardCols))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // pass 1: within-shard pairs → within-shard clusters. Both label
-    // frames feed the returned lazy stitch join; connectedComponents
-    // hands them back GC-owned, so they live exactly as long as it.
-    val withinPairs = verifyCandidates(
-      lshCandidatePairsFromSigs(attrs, numHashes, maxBucket = maxBucket,
-        shardCols = shardCols),
-      attrs, minJaccard)
-    // node counts for the CC dense-graph probe come from frames this
-    // operator materializes anyway (one attr row per doc, labels
-    // checkpointed by CC) — never a fresh corpus scan (ADVICE r8): counting
-    // `attrs` triggers the signature computation both passes reuse.
-    val nDocs = attrs.count()
-    val shardLabels = connectedComponents(
-      docs.select(col(idCol).as("id")), withinPairs,
-      nodesCount = Some(nDocs))
-    // representatives: the min-id doc of each within-shard cluster is
-    // exactly the doc whose id == its label (singletons represent
-    // themselves)
-    val reps = shardLabels.filter(col("id") === col("label")).select("id")
-    val repAttrs = attrs.join(reps, Seq("id"), "left_semi")
-    // pass 2: GLOBAL pairs over representatives (no shard key in the
-    // bucket join) → rep-level clusters; the rep count scans the
-    // checkpointed label frame only
-    val repPairs = verifyCandidates(
-      lshCandidatePairsFromSigs(repAttrs, numHashes, maxBucket = maxBucket),
-      repAttrs, minJaccard)
-    val repLabels = connectedComponents(reps, repPairs,
-      nodesCount = Some(reps.count()))
-    // both passes have materialized through the attribute cache by now
-    // (connectedComponents rounds are eager actions); the cache is this
-    // operator's own in both branches (the caller-provided signature
-    // table itself was only read to build it)
-    attrs.unpersist(blocking = false)
-    // stitch: doc → its within-shard rep → the rep's global cluster
-    shardLabels.select(col("id"), col("label").as("rep"))
-      .join(repLabels.select(col("id").as("rep"), col("label").as("cluster")),
-            Seq("rep"), "left")
-      .select(col("id"), coalesce(col("cluster"), col("rep")).as("cluster"))
+    graft.plans.Lineage.scoped { scope =>
+      val attrs = scope.persist(corpusSigs.map { cs =>
+        cs.join(
+          docs.select(col(idCol).as("id"),
+            TextFunctions.distinctTokens(col(textCol)).as("toks")),
+          Seq("id"))
+      }.getOrElse(
+        attrFrame(docs, idCol, textCol, shingleK, numHashes,
+          carryCols = shardCols)))
+      // pass 1: within-shard pairs → within-shard clusters. Both label
+      // frames feed the returned lazy stitch join; connectedComponents
+      // hands them back GC-owned, so they live exactly as long as it.
+      val withinPairs = verifyCandidates(
+        lshCandidatePairsFromSigs(attrs, numHashes, maxBucket = maxBucket,
+          shardCols = shardCols),
+        attrs, minJaccard)
+      // node counts for the CC dense-graph probe come from frames this
+      // operator materializes anyway (one attr row per doc, labels
+      // checkpointed by CC) — never a fresh corpus scan (ADVICE r8): counting
+      // `attrs` triggers the signature computation both passes reuse.
+      val nDocs = attrs.count()
+      val shardLabels = connectedComponents(
+        docs.select(col(idCol).as("id")), withinPairs,
+        nodesCount = Some(nDocs))
+      // representatives: the min-id doc of each within-shard cluster is
+      // exactly the doc whose id == its label (singletons represent
+      // themselves)
+      val reps = shardLabels.filter(col("id") === col("label")).select("id")
+      val repAttrs = attrs.join(reps, Seq("id"), "left_semi")
+      // pass 2: GLOBAL pairs over representatives (no shard key in the
+      // bucket join) → rep-level clusters; the rep count scans the
+      // checkpointed label frame only
+      val repPairs = verifyCandidates(
+        lshCandidatePairsFromSigs(repAttrs, numHashes, maxBucket = maxBucket),
+        repAttrs, minJaccard)
+      val repLabels = connectedComponents(reps, repPairs,
+        nodesCount = Some(reps.count()))
+      // stitch: doc → its within-shard rep → the rep's global cluster.
+      // Both passes have materialized through the attribute cache by now
+      // (connectedComponents rounds are eager actions), so the stitch
+      // reads checkpoints only.
+      shardLabels.select(col("id"), col("label").as("rep"))
+        .join(repLabels.select(col("id").as("rep"), col("label").as("cluster")),
+              Seq("rep"), "left")
+        .select(col("id"), coalesce(col("cluster"), col("rep")).as("cluster"))
+    }
   }
 
   // ---------- incremental (batch-vs-corpus) dedup ---------------------
@@ -979,140 +978,126 @@ object Dedup {
     // N's plan into round N+1 doubles the logical plan per round —
     // exponential planning cost that OOMs the driver near ~12 rounds.
     //
-    // Rounds die inside this call, so they are persisted and released
-    // (the graft.plans.Lineage lifetime rule): the logical lineage is cut
-    // via LogicalRDD (createDataFrame over the round's RDD) + persist,
-    // with the previous round explicitly unpersisted once the new round
-    // is materialized. Interleaved-A/B measured faster at sf0.1 than
-    // eager localCheckpoint rounds (BASELINE.md *connectedComponents
-    // round materialization A/B*). Same O(1) logical plan per round;
-    // blocks stay recoverable (lineage kept; eviction recomputes instead
-    // of failing the job, localCheckpoint's documented hazard). The
+    // Rounds are Lineage.scoped rounds (LogicalRDD + persist), the
+    // previous round released once the new round is materialized.
+    // Interleaved-A/B measured faster at sf0.1 than eager
+    // localCheckpoint rounds (BASELINE.md *connectedComponents round
+    // materialization A/B*). Same O(1) logical plan per round; blocks
+    // stay recoverable (lineage kept; eviction recomputes instead of
+    // failing the job, localCheckpoint's documented hazard). The
     // LogicalRDD leaf is lazy; the per-round Σlabel action is what
     // populates the cache, so no extra job is paid.
     val spark = nodes.sparkSession
-    // width > 0 ⇒ bytes-targeted COALESCE before materializing: a
-    // materialized round otherwise freezes at the configured shuffle
-    // width, below AQE's coalescing reach — the measured shuffle=128
-    // over-partitioning tax (see graft.plans.Lineage). Round frames are
-    // (id,label) pairs whose cardinality the loop KNOWS, so their width
-    // comes from the row count, never from spark.sql.shuffle.partitions.
-    // Coalesce, not repartition: the merge is narrow (no exchange) —
-    // the Lineage.cut lesson measured on the llm pipeline.
-    def sized(df: DataFrame, width: Int): DataFrame =
-      if (width > 0) df.coalesce(width) else df
-    def materialize(df: DataFrame, width: Int = 0): DataFrame =
-      spark.createDataFrame(sized(df, width).rdd, df.schema)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    def release(df: DataFrame): Unit = df.unpersist(blocking = false)
-    val sym = materialize(edges.select(col("a"), col("b"))
-      .unionByName(edges.select(col("b").as("a"), col("a").as("b"))))
-    // Propagation runs over edge PARTICIPANTS only when the dup graph is
-    // SPARSE: an isolated node can never change label (no neighbor, and
-    // the label chase starts from identity), so carrying it through
-    // every round pays |nodes|-sized self-join and left-join rounds for
-    // rows that are already at their fixpoint. On a real corpus
-    // duplicates are sparse — CC must scale with the DUP GRAPH, not the
-    // corpus (100 TB of docs vs the few percent that pair). The
-    // restriction is ADAPTIVE (round 8, gated round 9): on a DENSE
-    // graph (≥ half the nodes touch an edge — planted test corpora,
-    // heavily duplicated crawls) restricting buys nothing while paying
-    // an eager rejoin pass, so the probe routes dense graphs down the
-    // full-node path — but ONLY when the caller supplied `nodesCount`:
-    // probing blind would mean a corpus-sized nodes.count() action on
-    // every call, against this operator's own scaling rationale
-    // (ADVICE r8). The participant count is NOT extra work — the sparse
-    // path needs the frame anyway and the count fills its cache. The
-    // semi-join keeps the current semantics for edges naming unknown
-    // ids (they influence nothing, as before).
-    val participants = materialize(sym.select(col("a").as("id")).distinct()
-      .join(nodes.select(col("id")), Seq("id"), "left_semi"))
-    val nParts = participants.count()
-    val dense = nodesCount.exists(n => nParts * 2 >= n && n > 0)
-    // ~48 B per materialized (id,label) UnsafeRow — the width only needs
-    // the order of magnitude (64 MB target ⇒ ~1.4M rows/partition)
-    val labelRows = if (dense) nodesCount.get else nParts
-    val labelWidth = graft.plans.Lineage.widthForBytes(
-      spark, BigInt(labelRows) * 48L)
-    var labels = materialize(
-      (if (dense) nodes.select(col("id")) else participants)
-        .select(col("id"), col("id").as("label")), labelWidth)
-    if (dense) release(participants)
-    // Edgeless graphs short-circuit: every node is its own cluster, so
-    // the identity labels ARE the fixpoint — skip the propagation loop.
-    // Common in composed operators: a well-sharded corpus reaches the
-    // rep pass with few or zero cross-shard pairs, and an
-    // already-deduped batch has none at all. nParts == 0 covers both
-    // the edgeless frame and edges naming only unknown ids (identity is
-    // the fixpoint there too) without an extra isEmpty probe.
-    var prevSum = BigDecimal(-1)
-    var i = 0
-    var done = nParts == 0L
-    // A round sees the fixpoint only when it changes nothing, so labels
-    // that settle in round maxIter get one more, confirming round.
-    while (!done && i <= maxIter) {
-      val neighborMin = sym
-        .join(labels.select(col("id").as("b"), col("label").as("bl")), "b")
-        .groupBy(col("a").as("id")).agg(min("bl").as("nmin"))
-      val chased = labels
-        .join(labels.select(col("id").as("label"),
-                            col("label").as("ll")), Seq("label"), "left")
-        .select(col("id"), least(col("label"), col("ll")).as("label"))
-      // EAGER materialization, measured choice: a lazy round would let
-      // two rounds run per job, but the un-materialized previous round
-      // is referenced 3× per round (label self-join + neighbor join) and
-      // DataFrame plans are trees, not DAGs — the subtree recomputes per
-      // reference (~2× slower end-to-end when tried at sf0.1).
-      val updated = materialize(chased
-        .join(neighborMin.withColumnRenamed("nmin", "nl"), Seq("id"), "left")
-        .select(col("id"),
-                least(col("label"), coalesce(col("nl"), col("label")))
-                  .as("label")), labelWidth)
-      i += 1
-      // one action per round: fixpoint test + cache fill.
-      // Only after it may the previous round's blocks be dropped — the
-      // new round computes FROM them.
-      val s = BigDecimal(updated.agg(sum("label")).head().getLong(0))
-      release(labels)
-      labels = updated
-      done = s == prevSum
-      prevSum = s
-    }
-    release(sym)
-    // A round cap that binds leaves labels short of the fixpoint: part
-    // of a component still carries a larger label, so the components
-    // come back split with no sign of it. Refuse instead.
-    if (!done) {
-      release(labels)
-      if (!dense) release(participants)
-      throw new IllegalStateException(
-        s"connectedComponents: no fixpoint after maxIter = $maxIter rounds " +
-        "— the labels would split components; raise maxIter")
-    }
-    // The returned frame outlives the call, so it is checkpointed
-    // EAGERLY: the round caches it derives from are released right
-    // after, and a lazy hand-off would leave its lineage rooted in
-    // freed blocks, turning the caller's first action into a full loop
-    // recompute. Sparse path: rejoin isolated nodes as identity labels
-    // — one linear pass. Dense path: the loop already ran over every
-    // node, so the labels ARE the result — no rejoin pass to pay (that
-    // pass is exactly what the adaptive probe exists to avoid on
-    // dup-dense corpora); one narrow job copies the in-memory round.
-    val full =
+    graft.plans.Lineage.scoped { scope =>
+      val sym = scope.round(edges.select(col("a"), col("b"))
+        .unionByName(edges.select(col("b").as("a"), col("a").as("b"))))
+      // Propagation runs over edge PARTICIPANTS only when the dup graph is
+      // SPARSE: an isolated node can never change label (no neighbor, and
+      // the label chase starts from identity), so carrying it through
+      // every round pays |nodes|-sized self-join and left-join rounds for
+      // rows that are already at their fixpoint. On a real corpus
+      // duplicates are sparse — CC must scale with the DUP GRAPH, not the
+      // corpus (100 TB of docs vs the few percent that pair). The
+      // restriction is ADAPTIVE (round 8, gated round 9): on a DENSE
+      // graph (≥ half the nodes touch an edge — planted test corpora,
+      // heavily duplicated crawls) restricting buys nothing while paying
+      // an eager rejoin pass, so the probe routes dense graphs down the
+      // full-node path — but ONLY when the caller supplied `nodesCount`:
+      // probing blind would mean a corpus-sized nodes.count() action on
+      // every call, against this operator's own scaling rationale
+      // (ADVICE r8). The participant count is NOT extra work — the sparse
+      // path needs the frame anyway and the count fills its cache. The
+      // semi-join keeps the current semantics for edges naming unknown
+      // ids (they influence nothing, as before).
+      val participants = scope.round(sym.select(col("a").as("id")).distinct()
+        .join(nodes.select(col("id")), Seq("id"), "left_semi"))
+      val nParts = participants.count()
+      val dense = nodesCount.exists(n => nParts * 2 >= n && n > 0)
+      // Round frames are (id,label) pairs whose cardinality the loop
+      // KNOWS, so they are COALESCED to a width from the row count before
+      // materializing: a materialized round otherwise freezes at the
+      // configured shuffle width, below AQE's coalescing reach — the
+      // measured shuffle=128 over-partitioning tax (see
+      // graft.plans.Lineage). Coalesce, not repartition: the merge is
+      // narrow (no exchange) — the Lineage.cut lesson measured on the llm
+      // pipeline. ~48 B per materialized (id,label) UnsafeRow — the width
+      // only needs the order of magnitude (64 MB target ⇒ ~1.4M
+      // rows/partition).
+      val labelRows = if (dense) nodesCount.get else nParts
+      val labelWidth = graft.plans.Lineage.widthForBytes(
+        spark, BigInt(labelRows) * 48L)
+      var labels = scope.round(
+        (if (dense) nodes.select(col("id")) else participants)
+          .select(col("id"), col("id").as("label")).coalesce(labelWidth))
+      if (dense) scope.release(participants)
+      // Edgeless graphs short-circuit: every node is its own cluster, so
+      // the identity labels ARE the fixpoint — skip the propagation loop.
+      // Common in composed operators: a well-sharded corpus reaches the
+      // rep pass with few or zero cross-shard pairs, and an
+      // already-deduped batch has none at all. nParts == 0 covers both
+      // the edgeless frame and edges naming only unknown ids (identity is
+      // the fixpoint there too) without an extra isEmpty probe.
+      var prevSum = BigDecimal(-1)
+      var i = 0
+      var done = nParts == 0L
+      // A round sees the fixpoint only when it changes nothing, so labels
+      // that settle in round maxIter get one more, confirming round.
+      while (!done && i <= maxIter) {
+        val neighborMin = sym
+          .join(labels.select(col("id").as("b"), col("label").as("bl")), "b")
+          .groupBy(col("a").as("id")).agg(min("bl").as("nmin"))
+        val chased = labels
+          .join(labels.select(col("id").as("label"),
+                              col("label").as("ll")), Seq("label"), "left")
+          .select(col("id"), least(col("label"), col("ll")).as("label"))
+        // EAGER materialization, measured choice: a lazy round would let
+        // two rounds run per job, but the un-materialized previous round
+        // is referenced 3× per round (label self-join + neighbor join) and
+        // DataFrame plans are trees, not DAGs — the subtree recomputes per
+        // reference (~2× slower end-to-end when tried at sf0.1).
+        val updated = scope.round(chased
+          .join(neighborMin.withColumnRenamed("nmin", "nl"), Seq("id"), "left")
+          .select(col("id"),
+                  least(col("label"), coalesce(col("nl"), col("label")))
+                    .as("label")).coalesce(labelWidth))
+        i += 1
+        // one action per round: fixpoint test + cache fill.
+        // Only after it may the previous round's blocks be dropped — the
+        // new round computes FROM them.
+        val s = BigDecimal(updated.agg(sum("label")).head().getLong(0))
+        scope.release(labels)
+        labels = updated
+        done = s == prevSum
+        prevSum = s
+      }
+      scope.release(sym)
+      // A round cap that binds leaves labels short of the fixpoint: part
+      // of a component still carries a larger label, so the components
+      // come back split with no sign of it. Refuse instead.
+      if (!done)
+        throw new IllegalStateException(
+          s"connectedComponents: no fixpoint after maxIter = $maxIter rounds " +
+          "— the labels would split components; raise maxIter")
+      // The returned frame outlives the call, so it is checkpointed
+      // EAGERLY: the round caches it derives from are released right
+      // after, and a lazy hand-off would leave its lineage rooted in
+      // freed blocks, turning the caller's first action into a full loop
+      // recompute. Sparse path: rejoin isolated nodes as identity labels
+      // — one linear pass. Dense path: the loop already ran over every
+      // node, so the labels ARE the result — no rejoin pass to pay (that
+      // pass is exactly what the adaptive probe exists to avoid on
+      // dup-dense corpora); one narrow job copies the in-memory round.
       if (dense) labels.localCheckpoint(true)
       else {
-        val f = sized(nodes.select(col("id"))
+        val full = nodes.select(col("id"))
           .join(labels.select(col("id"), col("label").as("plabel")),
                 Seq("id"), "left")
-          .select(col("id"), coalesce(col("plabel"), col("id")).as("label")),
-          nodesCount.map(n => graft.plans.Lineage
-            .widthForBytes(spark, BigInt(n) * 48L)).getOrElse(0))
+          .select(col("id"), coalesce(col("plabel"), col("id")).as("label"))
+        nodesCount.fold(full)(n => full.coalesce(graft.plans.Lineage
+          .widthForBytes(spark, BigInt(n) * 48L)))
           .localCheckpoint(true)
-        release(participants)
-        f
       }
-    release(labels)
-    full
+    }
   }
 
   // ---------- SimHash -------------------------------------------------

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.plans.Lineage
 import graft.store.Store
 
 /** fastText-shape linear quality classifier — the trained counterpart
@@ -142,74 +143,71 @@ object LinearClassifier {
       : (DataFrame, Seq[Double]) = {
     require(iters >= 1 && iters <= MaxIters,
       s"linearClassifier: iters must be in [1, $MaxIters]")
-    val spark = feats.sparkSession
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     // Only `w` is ITERATED (w_{i+1}'s plan would embed w_i's full plan,
-    // compounding across up to MaxIters rounds) — truncate ITS lineage
-    // with the LogicalRDD round-trip; it is ≤ B+1 rows, so the row
-    // conversion and the lost partitioning cost nothing. `resid` is
-    // rebuilt per iteration from (feats, w_i) — no compounding. The
-    // returned weights outlive the call: the last round is checkpointed
-    // GC-owned instead (the graft.plans.Lineage lifetime rule).
-    def cut(df: DataFrame): DataFrame =
-      spark.createDataFrame(df.rdd, df.schema).persist(lvl)
-    val nDocs = feats.select(col(idCol)).distinct().count().toDouble
-    require(nDocs > 0, "linearClassifier: no documents with >= 1 token")
-    // zero weights over the corpus' buckets, overlaid with the init
-    // model where provided: buckets the stored model never saw start at
-    // 0; stored buckets absent from THIS corpus keep their weight
-    // (gradients never touch them — the left join below)
-    val zeros = feats.select(col("bucket")).distinct()
-      .withColumn("wt", lit(0.0))
-    var w = cut(init match {
-      case None => zeros
-      case Some(prev) =>
-        zeros.select(col("bucket"))
-          .unionByName(prev.select(col("bucket"))).distinct()
-          .join(prev.select(col("bucket"), col("wt").as("pw")),
-            Seq("bucket"), "left")
-          .select(col("bucket"), coalesce(col("pw"), lit(0.0)).as("wt"))
-    })
-    val history = scala.collection.mutable.ArrayBuffer.empty[Double]
-    for (it <- 0 until iters) {
-      // residuals r_d = p_d − y_d at the CURRENT weights (one doc-keyed
-      // reduce). With loss tracking the frame is consumed twice (loss
-      // agg + gradient join) and gets the checkpoint+persist boundary;
-      // without, the gradient join is its only consumer and the
-      // residuals inline into that one pass.
-      val residRaw = feats.join(broadcast(w), Seq("bucket"))
-        .groupBy(col(idCol))
-        .agg(first(col("y")).as("y"), sum(col("wt") * col("x")).as("s"))
-        .select(col(idCol), col("y").cast("double").as("yd"),
-                sigmoid(col("s")).as("p"))
-      val resid = if (trackLoss) cut(residRaw) else residRaw
-      if (trackLoss) {
-        val loss = resid.agg(avg(
-          -(col("yd") * log(col("p")) +
-            (lit(1.0) - col("yd")) * log(lit(1.0) - col("p")))))
-          .head().getDouble(0)
-        history += loss
+    // compounding across up to MaxIters rounds) — it is a lineage-
+    // truncating round; it is ≤ B+1 rows, so the row conversion and the
+    // lost partitioning cost nothing. `resid` is rebuilt per iteration
+    // from (feats, w_i) — no compounding.
+    Lineage.scoped { scope =>
+      val nDocs = feats.select(col(idCol)).distinct().count().toDouble
+      require(nDocs > 0, "linearClassifier: no documents with >= 1 token")
+      // zero weights over the corpus' buckets, overlaid with the init
+      // model where provided: buckets the stored model never saw start at
+      // 0; stored buckets absent from THIS corpus keep their weight
+      // (gradients never touch them — the left join below)
+      val zeros = feats.select(col("bucket")).distinct()
+        .withColumn("wt", lit(0.0))
+      var w = scope.round(init match {
+        case None => zeros
+        case Some(prev) =>
+          zeros.select(col("bucket"))
+            .unionByName(prev.select(col("bucket"))).distinct()
+            .join(prev.select(col("bucket"), col("wt").as("pw")),
+              Seq("bucket"), "left")
+            .select(col("bucket"), coalesce(col("pw"), lit(0.0)).as("wt"))
+      })
+      val history = scala.collection.mutable.ArrayBuffer.empty[Double]
+      for (it <- 0 until iters) {
+        // residuals r_d = p_d − y_d at the CURRENT weights (one doc-keyed
+        // reduce). With loss tracking the frame is consumed twice (loss
+        // agg + gradient join) and is a round; without, the gradient
+        // join is its only consumer and the residuals inline into that
+        // one pass.
+        val residRaw = feats.join(broadcast(w), Seq("bucket"))
+          .groupBy(col(idCol))
+          .agg(first(col("y")).as("y"), sum(col("wt") * col("x")).as("s"))
+          .select(col(idCol), col("y").cast("double").as("yd"),
+                  sigmoid(col("s")).as("p"))
+        val resid = if (trackLoss) scope.round(residRaw) else residRaw
+        if (trackLoss) {
+          val loss = resid.agg(avg(
+            -(col("yd") * log(col("p")) +
+              (lit(1.0) - col("yd")) * log(lit(1.0) - col("p")))))
+            .head().getDouble(0)
+          history += loss
+        }
+        // mean gradient per bucket, rounded 9 dp (cross-engine step
+        // determinism); partial agg collapses to ≤ B+1 rows per partition
+        val grads = feats
+          .join(resid.select(col(idCol), (col("p") - col("yd")).as("r")),
+                Seq(idCol))
+          .groupBy(col("bucket"))
+          .agg(round(sum(col("r") * col("x")) / nDocs, 9).as("g"))
+        val stepped = w.join(grads, Seq("bucket"), "left")
+          .select(col("bucket"),
+            round(col("wt") - lit(lr) * coalesce(col("g"), lit(0.0)), 9)
+              .as("wt"))
+        // materialize (≤ B+1 rows) before parents release; the returned
+        // weights outlive the call
+        val wNew =
+          if (it == iters - 1) stepped.localCheckpoint(true)
+          else { val c = scope.round(stepped); c.count(); c }
+        scope.release(w)
+        if (trackLoss) scope.release(resid)
+        w = wNew
       }
-      // mean gradient per bucket, rounded 9 dp (cross-engine step
-      // determinism); partial agg collapses to ≤ B+1 rows per partition
-      val grads = feats
-        .join(resid.select(col(idCol), (col("p") - col("yd")).as("r")),
-              Seq(idCol))
-        .groupBy(col("bucket"))
-        .agg(round(sum(col("r") * col("x")) / nDocs, 9).as("g"))
-      val stepped = w.join(grads, Seq("bucket"), "left")
-        .select(col("bucket"),
-          round(col("wt") - lit(lr) * coalesce(col("g"), lit(0.0)), 9)
-            .as("wt"))
-      // materialize (≤ B+1 rows) before parents release
-      val wNew =
-        if (it == iters - 1) stepped.localCheckpoint(true)
-        else { val c = cut(stepped); c.count(); c }
-      w.unpersist(blocking = false)
-      if (trackLoss) resid.unpersist(blocking = false)
-      w = wNew
+      (w, history.toSeq)
     }
-    (w, history.toSeq)
   }
 
   /** Train and score every document under the final weights:
@@ -296,15 +294,13 @@ object LinearClassifier {
     * 9 dp per step, so the whole fit replays as SQL CTEs. Scale shape:
     * ONE aggregation pass per iteration over the (id, s, t) frame
     * producing exactly two doubles; the frame is materialized once
-    * ([[graft.plans.Lineage]]-style cut) so iterations never re-derive
-    * the score column. All driver state is the two scalars.
+    * (a [[graft.plans.Lineage.scoped]] round) so iterations never
+    * re-derive the score column. All driver state is the two scalars.
     */
   def plattCalibrate(scored: DataFrame, scoreCol: String, labelCol: String,
                      iters: Int = 2, lr: Double = 1.0): (Double, Double) = {
     require(iters >= 1 && iters <= MaxIters,
       s"plattCalibrate: iters must be in [1, $MaxIters]")
-    val spark = scored.sparkSession
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     // null scores/labels are EXCLUDED up front: they would silently
     // vanish from the gradient sums while still counting in n (sums
     // skip nulls, count(*) doesn't), deflating every step
@@ -320,11 +316,6 @@ object LinearClassifier {
     val n = np + nn
     val tPos = (np + 1.0) / (np + 2.0)
     val tNeg = 1.0 / (nn + 2.0)
-    val frame = spark.createDataFrame(
-      base.select(col("s"),
-        when(col("y") === 1, lit(tPos)).otherwise(lit(tNeg)).as("t")).rdd,
-      new org.apache.spark.sql.types.StructType()
-        .add("s", "double").add("t", "double")).persist(lvl)
     // HALF_UP to match Spark's round() and DuckDB's ROUND on the oracle
     // side (math.rint would round half-to-even and disagree at exact
     // boundaries)
@@ -332,7 +323,9 @@ object LinearClassifier {
       BigDecimal(x).setScale(9, BigDecimal.RoundingMode.HALF_UP).toDouble
     var a = 0.0
     var b = r9(math.log((np + 1.0) / (nn + 1.0)))
-    try {
+    Lineage.scoped { scope =>
+      val frame = scope.round(base.select(col("s"),
+        when(col("y") === 1, lit(tPos)).otherwise(lit(tNeg)).as("t")))
       for (_ <- 0 until iters) {
         val g = frame.agg(
           sum((sigmoid(lit(a) * col("s") + lit(b)) - col("t")) * col("s"))
@@ -342,7 +335,7 @@ object LinearClassifier {
         a = r9(a - lr * r9(g.getDouble(0) / n))
         b = r9(b - lr * r9(g.getDouble(1) / n))
       }
-    } finally frame.unpersist(blocking = false)
+    }
     (a, b)
   }
 

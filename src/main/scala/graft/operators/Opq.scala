@@ -239,7 +239,6 @@ object Opq {
       val rot = rotateVectors(base, "nv", rSeq, "rv")
         .select(col("pq_id"), col("rv"))
       cb = Pq.trainCodebooks(rot, m, ksub, lloydIters, "pq_id", "rv")._1
-        .localCheckpoint(true)
       val enc = Pq.encode(rot, cb, m, "pq_id", "rv").localCheckpoint(true)
       history += enc.agg(sum(col("qerr"))).head().getDouble(0)
       if (it < outerIters) {
@@ -491,20 +490,21 @@ object Opq {
     // hiding past a well-formed first row (ADVICE r15) — would sail
     // through as a dim-long array of nulls/garbage and poison the
     // persisted codes instead of failing loudly here. Checked here, the
-    // rotated batch needs no second probe in the PQ append.
+    // rotated batch needs no second probe in the PQ append. One probe
+    // answers both refusals: it returns the lowest-id bad-width row if
+    // there is one, some row otherwise, and no row for an empty batch.
     val dim = idx.rotation.length
-    val badWidth = newCorpus
-      .filter(col(vecCol).isNull || size(col(vecCol)) =!= dim)
-      .select(col(idCol), size(col(vecCol)).as("w")).limit(1).collect()
-    require(badWidth.isEmpty, {
-      val r = badWidth.head
-      s"opq appendVectors: batch row id '${r.get(0)}' has vector width " +
-      s"${r.get(1)} != stored rotation width $dim — the batch cannot be " +
-      "rotated into this index; re-embed the batch or rebuild with " +
-      "Opq.saveIndex"
-    })
-    require(newCorpus.limit(1).count() == 1L,
+    val probe = newCorpus
+      .select(col(idCol), size(col(vecCol)).as("w"),
+        (col(vecCol).isNull || size(col(vecCol)) =!= dim).as("bad"))
+      .orderBy(col("bad").desc, col(idCol)).limit(1).collect()
+    require(probe.nonEmpty,
       "opq appendVectors: empty batch — nothing to append")
+    require(!probe.head.getBoolean(2),
+      s"opq appendVectors: batch row id '${probe.head.get(0)}' has vector " +
+      s"width ${probe.head.get(1)} != stored rotation width $dim — the " +
+      "batch cannot be rotated into this index; re-embed the batch or " +
+      "rebuild with Opq.saveIndex")
     val rotated = rotateVectors(
         newCorpus.select(col(idCol), col(vecCol)), vecCol,
         idx.rotation, "rot")

@@ -122,8 +122,9 @@ object Pq {
     *    round for the spec, the [[Similarity.kmeansFitWithHistory]]
     *    convention.
     *
-    * Returns (codebooks, objective history). The LogicalRDD
-    * persist/unpersist round pattern keeps the plan O(1) per round.
+    * Returns (codebooks, objective history). Each round is a
+    * [[graft.plans.Lineage.scoped]] round, so the plan stays O(1) per
+    * round.
     */
   def trainCodebooks(corpus: DataFrame, m: Int, ksub: Int,
                      maxIter: Int = 5,
@@ -156,44 +157,43 @@ object Pq {
     */
   private def lloydOnSubs(subs0: DataFrame, seed: DataFrame,
                           maxIter: Int): (DataFrame, Seq[Double]) = {
-    val spark = subs0.sparkSession
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    def cut(df: DataFrame): DataFrame =
-      spark.createDataFrame(df.rdd, df.schema).persist(lvl)
-    val subs = cut(subs0)
-    var cb = cut(seed)
-    val history = scala.collection.mutable.ArrayBuffer.empty[Double]
-    var i = 0
-    var done = false
-    while (!done && i < maxIter) {
-      val assigned = cut(subs.join(broadcast(cb), Seq("sub"))
-        .select(col("pq_id"), col("sub"), col("sv"),
-                struct(l2sq(col("sv"), col("cv")).as("d"),
-                       col("code")).as("dc"))
-        .groupBy("pq_id", "sub")
-        .agg(min(col("dc")).as("best"), first(col("sv")).as("sv"))
-        .select(col("sub"), col("best.code").as("code"),
-                col("best.d").as("d"), col("sv")))
-      val objective = assigned.agg(sum(col("d"))).head().getDouble(0)
-      val means = assigned
-        .select(col("sub"), col("code"), posexplode(col("sv")).as(Seq("pos", "x")))
-        .groupBy("sub", "code", "pos").agg(avg(col("x")).as("mu"))
-        .groupBy("sub", "code")
-        .agg(transform(array_sort(collect_list(struct(col("pos"), col("mu")))),
-                       s => s.getField("mu")).as("ncv"))
-      val newCb = cut(cb.join(means, Seq("sub", "code"), "left")
-        .select(col("sub"), col("code"),
-                coalesce(col("ncv"), col("cv")).as("cv")))
-      newCb.count() // materialize (m·ksub rows) before parents release
-      cb.unpersist(blocking = false)
-      assigned.unpersist(blocking = false)
-      cb = newCb
-      done = history.nonEmpty && history.last - objective < 1e-12
-      history += objective
-      i += 1
+    graft.plans.Lineage.scoped { scope =>
+      val subs = scope.round(subs0)
+      var cb = scope.round(seed)
+      val history = scala.collection.mutable.ArrayBuffer.empty[Double]
+      var i = 0
+      var done = false
+      while (!done && i < maxIter) {
+        val assigned = scope.round(subs.join(broadcast(cb), Seq("sub"))
+          .select(col("pq_id"), col("sub"), col("sv"),
+                  struct(l2sq(col("sv"), col("cv")).as("d"),
+                         col("code")).as("dc"))
+          .groupBy("pq_id", "sub")
+          .agg(min(col("dc")).as("best"), first(col("sv")).as("sv"))
+          .select(col("sub"), col("best.code").as("code"),
+                  col("best.d").as("d"), col("sv")))
+        val objective = assigned.agg(sum(col("d"))).head().getDouble(0)
+        val means = assigned
+          .select(col("sub"), col("code"), posexplode(col("sv")).as(Seq("pos", "x")))
+          .groupBy("sub", "code", "pos").agg(avg(col("x")).as("mu"))
+          .groupBy("sub", "code")
+          .agg(transform(array_sort(collect_list(struct(col("pos"), col("mu")))),
+                         s => s.getField("mu")).as("ncv"))
+        val newCb = scope.round(cb.join(means, Seq("sub", "code"), "left")
+          .select(col("sub"), col("code"),
+                  coalesce(col("ncv"), col("cv")).as("cv")))
+        newCb.count() // materialize (m·ksub rows) before parents release
+        scope.release(cb)
+        scope.release(assigned)
+        cb = newCb
+        done = history.nonEmpty && history.last - objective < 1e-12
+        history += objective
+        i += 1
+      }
+      // the returned codebooks outlive the call: one m·ksub-row job
+      // copies the last round into a checkpoint
+      (cb.localCheckpoint(true), history.toSeq)
     }
-    subs.unpersist(blocking = false)
-    (cb, history.toSeq)
   }
 
   /** Encode every corpus vector as `m` codes: per-subspace squared-L2

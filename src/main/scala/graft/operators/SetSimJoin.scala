@@ -51,6 +51,11 @@ import graft.store.{Manifest, Store}
   */
 object SetSimJoin {
 
+  /** Expected distinct tokens the prefix-token Bloom filters are sized
+    * for — the filters that prune the container-side and archive-side
+    * exchanges. */
+  private val BloomItems = 1000000L
+
   /** Hot-bucket salting arithmetic, shared by every member. A
     * one-sided salted split of a bucket of c rows into s sub-buckets
     * leaves per-task candidate volume at (c/s)·c = c²/s — the salted
@@ -327,7 +332,6 @@ object SetSimJoin {
   def containmentPairs(docs: DataFrame, idCol: String, toksCol: String,
                        threshold: Double,
                        maxBucket: Int = 10000,
-                       bloomItems: Long = 1000000L,
                        hotBucketSalt: Int = -1,
                        observeSalt: Option[String] = None): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0,
@@ -364,8 +368,7 @@ object SetSimJoin {
     // exchange, and is semantics-free by construction: no false
     // negatives (recall 1.0 intact), false positives only inflate
     // candidates the exact verify already removes. Bounded memory at
-    // any corpus size (`bloomItems` sizes the bits — pass the expected
-    // DISTINCT prefix-token count at scale), unlike a broadcast
+    // any corpus size ([[BloomItems]] sizes the bits), unlike a broadcast
     // semi-join on the raw prefix-token set. The build aggregates
     // pref's tok column directly — no distinct() first: Bloom
     // insertion is idempotent, and the dedup exchange would cost more
@@ -386,13 +389,13 @@ object SetSimJoin {
     // tokens corpus-common); on df≈1-dominated web shingles survival
     // approaches the prefix fraction itself.
     val bThr = docs.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
-    val prune = bloomItems > 0 && (bThr < 0 ||
-      graft.plans.Lineage.estimateBytes(docs).forall(_ > bThr))
+    val prune = bThr < 0 ||
+      graft.plans.Lineage.estimateBytes(docs).forall(_ > bThr)
     val fullRaw = ranked.select(col("sid"), col("n"),
       posexplode(col("stoks")).as(Seq("pos", "tok")))
     val full =
       if (prune) fullRaw.where(BloomJoin.mightContain(
-        BloomJoin.bloomOf(pref.select(col("tok")), "tok", bloomItems),
+        BloomJoin.bloomOf(pref.select(col("tok")), "tok", BloomItems),
         col("tok")))
       else fullRaw
     // guard on prefix-token corpus df — the per-token candidate volume;
@@ -766,19 +769,12 @@ object SetSimJoin {
     * inside the stored corpus are the PRIOR audits' output and are not
     * re-emitted: incremental(stored, batch) ∪ prior == rebuild over
     * stored ∪ batch (spec-pinned).
-    *
-    * @param bloomItems sizing for the batch-token Bloom that prunes the
-    *                   union-side prefix exchange (see below); ≤ 0
-    *                   disables the prune — the measurement escape hatch
-    *                   of the Bloom A/B (BASELINE.md *Adaptive Bloom
-    *                   pruning across the set-similarity family*, round 14).
     */
   def incrementalJaccardPairs(spark: org.apache.spark.sql.SparkSession,
                               path: String, newDocs: DataFrame,
                               idCol: String, toksCol: String,
                               threshold: Double,
                               maxBucket: Int = 10000,
-                              bloomItems: Long = 1000000L,
                               hotBucketSalt: Int = -1,
                               observeSalt: Option[String] = None): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0,
@@ -845,11 +841,10 @@ object SetSimJoin {
     val batchSlimBytes = 24L * (bRows + bToks)
     val bThr = spark.sessionState.conf.autoBroadcastJoinThreshold
     val fitsBroadcast = bThr >= 0 && batchSlimBytes <= bThr
-    val prune = bloomItems > 0 && !fitsBroadcast
     val aPruned =
-      if (prune)
+      if (!fitsBroadcast)
         prefAll.where(BloomJoin.mightContain(
-          BloomJoin.bloomOf(prefBatch.select(col("tok")), "tok", bloomItems),
+          BloomJoin.bloomOf(prefBatch.select(col("tok")), "tok", BloomItems),
           col("tok")))
       else prefAll
     val a = aPruned.select(col("tok"), col("sid").as("a"),
@@ -1284,7 +1279,6 @@ object SetSimJoin {
                                   idCol: String, toksCol: String,
                                   threshold: Double,
                                   maxBucket: Int = 10000,
-                                  bloomItems: Long = 1000000L,
                                   hotBucketSalt: Int = -1,
                                   observeSalt: Option[String] = None): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0,
@@ -1371,11 +1365,10 @@ object SetSimJoin {
     val batchSlimBytes = 24L * (bRows + bToks)
     val bThr = spark.sessionState.conf.autoBroadcastJoinThreshold
     val fitsBroadcast = bThr >= 0 && batchSlimBytes <= bThr
-    val pruneOn = bloomItems > 0 && !fitsBroadcast
     def bloomPrune(df: DataFrame, tokens: DataFrame): DataFrame =
-      if (pruneOn)
+      if (!fitsBroadcast)
         df.where(BloomJoin.mightContain(
-          BloomJoin.bloomOf(tokens.select(col("tok")), "tok", bloomItems),
+          BloomJoin.bloomOf(tokens.select(col("tok")), "tok", BloomItems),
           col("tok")))
       else df
     // Below the threshold the batch-derived join input must BROADCAST

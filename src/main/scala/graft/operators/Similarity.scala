@@ -299,10 +299,10 @@ object Similarity {
     *  - convergence: the spherical objective Σ cos(v, c(v)) is
     *    non-decreasing under Lloyd steps — one scalar action per round
     *    is the stop test, the driver never sees vectors;
-    *  - rounds use the LogicalRDD + persist/unpersist pattern measured
-    *    in [[graft.operators.Dedup.connectedComponents]]: O(1) logical
-    *    plan per round, previous round's blocks released explicitly;
-    *    the returned centroids are GC-owned ([[graft.plans.Lineage]]).
+    *  - rounds are [[graft.plans.Lineage.scoped]] rounds, the shape
+    *    measured in [[graft.operators.Dedup.connectedComponents]]: O(1)
+    *    logical plan per round, previous round's blocks released
+    *    explicitly.
     *
     * Empty cells keep their previous centroid. Objective history is
     * exposed for tests; float summation order makes exact centroid
@@ -318,57 +318,51 @@ object Similarity {
       corpus: DataFrame, k: Int, maxIter: Int = 10,
       idCol: String = "vec_id",
       vecCol: String = "embedding"): (DataFrame, Seq[Double]) = {
-    val spark = corpus.sparkSession
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    def cut(df: DataFrame): DataFrame =
-      spark.createDataFrame(df.rdd, df.schema).persist(lvl)
-    val vecs = cut(corpus.select(col(idCol).as("id"),
-                                 asDouble(col(vecCol)).as("v")))
-    var cents = cut(vecs.filter(col("id") < k)
-      .select(col("id").as("cell"), col("v").as("cv")))
-    val history = scala.collection.mutable.ArrayBuffer.empty[Double]
-    var i = 0
-    var done = false
-    while (!done && i < maxIter) {
-      // assignment is consumed TWICE (objective + centroid update), so
-      // it is the round's persisted artifact — the objective action
-      // fills its cache, the update reads the cache
-      val assigned = cut(vecs.crossJoin(broadcast(cents))
-        .select(col("id"), col("v"), col("cell"),
-                cosine(col("v"), col("cv")).as("csim"))
-        .groupBy("id")
-        .agg(max_by(struct(col("cell"), col("v")),
-                    struct(col("csim"), (-col("cell")).as("nc"))).as("best"),
-             max(col("csim")).as("bc"))
-        .select(col("best.cell").as("cell"), col("best.v").as("v"), col("bc")))
-      val objective = assigned.agg(sum(col("bc"))).head().getDouble(0)
-      val meanParts = assigned
-        .select(col("cell"), posexplode(col("v")).as(Seq("pos", "x")))
-        .groupBy("cell", "pos").agg(avg(col("x")).as("m"))
-        .groupBy("cell")
-        .agg(transform(array_sort(collect_list(struct(col("pos"), col("m")))),
-                       s => s.getField("m")).as("ncv"))
-      // empty cells keep the previous centroid
-      val newCents = cut(cents
-        .join(meanParts, Seq("cell"), "left")
-        .select(col("cell"), coalesce(col("ncv"), col("cv")).as("cv")))
-      newCents.count() // materialize (k rows) before parents release
-      cents.unpersist(blocking = false)
-      assigned.unpersist(blocking = false)
-      cents = newCents
-      // non-decreasing by Lloyd; stop when the gain vanishes
-      done = history.nonEmpty && objective - history.last < 1e-9
-      history += objective
-      i += 1
+    graft.plans.Lineage.scoped { scope =>
+      val vecs = scope.round(corpus.select(col(idCol).as("id"),
+                                           asDouble(col(vecCol)).as("v")))
+      var cents = scope.round(vecs.filter(col("id") < k)
+        .select(col("id").as("cell"), col("v").as("cv")))
+      val history = scala.collection.mutable.ArrayBuffer.empty[Double]
+      var i = 0
+      var done = false
+      while (!done && i < maxIter) {
+        // assignment is consumed TWICE (objective + centroid update), so
+        // it is the round's persisted artifact — the objective action
+        // fills its cache, the update reads the cache
+        val assigned = scope.round(vecs.crossJoin(broadcast(cents))
+          .select(col("id"), col("v"), col("cell"),
+                  cosine(col("v"), col("cv")).as("csim"))
+          .groupBy("id")
+          .agg(max_by(struct(col("cell"), col("v")),
+                      struct(col("csim"), (-col("cell")).as("nc"))).as("best"),
+               max(col("csim")).as("bc"))
+          .select(col("best.cell").as("cell"), col("best.v").as("v"), col("bc")))
+        val objective = assigned.agg(sum(col("bc"))).head().getDouble(0)
+        val meanParts = assigned
+          .select(col("cell"), posexplode(col("v")).as(Seq("pos", "x")))
+          .groupBy("cell", "pos").agg(avg(col("x")).as("m"))
+          .groupBy("cell")
+          .agg(transform(array_sort(collect_list(struct(col("pos"), col("m")))),
+                         s => s.getField("m")).as("ncv"))
+        // empty cells keep the previous centroid
+        val newCents = scope.round(cents
+          .join(meanParts, Seq("cell"), "left")
+          .select(col("cell"), coalesce(col("ncv"), col("cv")).as("cv")))
+        newCents.count() // materialize (k rows) before parents release
+        scope.release(cents)
+        scope.release(assigned)
+        cents = newCents
+        // non-decreasing by Lloyd; stop when the gain vanishes
+        done = history.nonEmpty && objective - history.last < 1e-9
+        history += objective
+        i += 1
+      }
+      // the returned centroids outlive the call (ivfTopK consumes them in
+      // both the assignment and the query-probe join): one k-row job
+      // copies the last round into a checkpoint
+      (cents.localCheckpoint(true), history.toSeq)
     }
-    // the returned centroids outlive the call (ivfTopK consumes them in
-    // both the assignment and the query-probe join), so they are copied
-    // into a GC-owned checkpoint (one k-row job) before the last round
-    // and the vectors are released (the graft.plans.Lineage rule)
-    val fitted = cents.localCheckpoint(true)
-    cents.unpersist(blocking = false)
-    vecs.unpersist(blocking = false)
-    (fitted, history.toSeq)
   }
 
   /** IVF probe: score only corpus vectors in the query's `nProbe`

@@ -1,6 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.storage.StorageLevel
 
 /** Bytes-targeted widths for materialization (lineage-cut) boundaries.
   *
@@ -35,19 +36,21 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * instead of trusting stats on a stats-less leaf.
   *
   * Lifetime rule for every frame an operator materializes:
-  *  - a frame that OUTLIVES the call (it is returned, or the returned
-  *    lazy plan reads it) is materialized with `localCheckpoint`, as
-  *    [[cut]] does. That adds no CacheManager entry: its blocks are an
-  *    RDD-level persist that Spark's ContextCleaner frees once no
-  *    caller can reach the frame. It is GC-owned, so two callers
-  *    sharing a session never evict each other's frames and repeated
-  *    calls accumulate nothing.
   *  - a frame that DIES inside the call (loop rounds, an input shared
-  *    by jobs the call itself runs) is persisted and explicitly
-  *    unpersisted before the call returns.
+  *    by jobs the call itself runs) goes through [[scoped]], which
+  *    unpersists it when the body returns or throws.
+  *  - a frame that OUTLIVES the call (it is returned, or the returned
+  *    lazy plan reads it) is a `localCheckpoint`, as [[cut]] takes. It
+  *    adds no CacheManager entry: its blocks are an RDD-level persist
+  *    that Spark's ContextCleaner frees once no caller can reach the
+  *    frame, so two callers sharing a session never evict each other's
+  *    frames and repeated calls accumulate nothing. Taken from a
+  *    scope's frames it is eager (`localCheckpoint(true)`), or its
+  *    first read recomputes the released rounds.
   * Lazy `localCheckpoint(false)` runs no job when called, unless its
   * plan holds an exchange: AQE then materializes that stage at call
-  * time (the same work, run earlier).
+  * time (the same work, run earlier). Its jobs never appear in the
+  * consumer's final plan; tests read them with `graft.plans.CutPlan`.
   */
 object Lineage {
 
@@ -130,14 +133,39 @@ object Lineage {
     */
   def cut(df: DataFrame,
           targetPartitionBytes: Long = DefaultTargetPartitionBytes,
-          maxPartitions: Int = 1 << 20): DataFrame = {
-    val out = df.coalesce(targetWidth(df, targetPartitionBytes, maxPartitions))
-    // dev drill-down: GRAFT_CUT_EXPLAIN=1 prints the physical plan the
-    // checkpoint materialization will execute (the stage-attribution
-    // blind spot — checkpoint jobs never appear in the final plan)
-    if (sys.env.contains("GRAFT_CUT_EXPLAIN"))
-      println("[lineage-cut plan]\n" +
-        out.queryExecution.executedPlan.toString.take(4000))
-    out.localCheckpoint(false)
+          maxPartitions: Int = 1 << 20): DataFrame =
+    df.coalesce(targetWidth(df, targetPartitionBytes, maxPartitions))
+      .localCheckpoint(false)
+
+  /** The frames one [[scoped]] call materializes; each is
+    * `MEMORY_AND_DISK` and lazy (the first action fills its cache). */
+  final class Scope private[Lineage] () {
+    private[Lineage] val held =
+      scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+
+    /** `df`'s rows under a single LogicalRDD leaf, persisted: an
+      * iterated frame's plan stays O(1) per round instead of embedding
+      * every earlier round. The rows lose their partitioning. */
+    def round(df: DataFrame): DataFrame =
+      persist(df.sparkSession.createDataFrame(df.rdd, df.schema))
+
+    /** `df` persisted as is, partitioning kept. */
+    def persist(df: DataFrame): DataFrame = {
+      held += df
+      df.persist(StorageLevel.MEMORY_AND_DISK)
+    }
+
+    /** Unpersists one frame before the scope closes. */
+    def release(df: DataFrame): Unit = {
+      held -= df
+      df.unpersist(blocking = false)
+    }
+  }
+
+  /** Runs `body` with a [[Scope]] and unpersists every frame the scope
+    * still holds when `body` returns or throws. */
+  def scoped[T](body: Scope => T): T = {
+    val scope = new Scope
+    try body(scope) finally scope.held.foreach(_.unpersist(blocking = false))
   }
 }

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables._
+import graft.plans.Lineage
 import graft.functions.TextFunctions
 
 /** Statistical and scalar-function breadth: bivariate statistics,
@@ -292,11 +293,12 @@ object StatsExtSuite extends QuerySuite {
       import s.implicits._
       val toks = documents(s, d).select(col("source"),
         explode(TextFunctions.tokens(col("text"))).as("tok"))
-      val sk = graft.operators.SketchStats.shardCms(toks, "source", "tok")
-        .persist()
-      val merged = graft.operators.SketchStats.mergedCms(sk)
-      val nTotal = sk.agg(sum(col("n_items"))).head().getLong(0)
-      sk.unpersist(blocking = false)
+      val (merged, nTotal) = Lineage.scoped { scope =>
+        val sk = scope.persist(
+          graft.operators.SketchStats.shardCms(toks, "source", "tok"))
+        (graft.operators.SketchStats.mergedCms(sk),
+          sk.agg(sum(col("n_items"))).head().getLong(0))
+      }
       val slack = math.ceil(0.001 * nTotal).toLong
       val top = toks.groupBy("tok").agg(count(lit(1)).as("exact_cnt"))
         .orderBy(desc("exact_cnt"), asc("tok")).limit(10).collect()
@@ -370,17 +372,17 @@ object StatsExtSuite extends QuerySuite {
       import s.implicits._
       val vals = documents(s, d).select(col("source"),
         size(TextFunctions.tokens(col("text"))).cast("double").as("n_toks"))
-      val sk = graft.operators.SketchStats
-        .shardKll(vals, "source", "n_toks", k = 16384).persist()
       val ranks = Seq(0.25, 0.5, 0.75, 0.9)
-      val perShard = sk.collect().toSeq.map { r =>
-        val qs = graft.operators.SketchStats
-          .kllQuantiles(r.getAs[Array[Byte]]("kll"), ranks)
-        (r.getString(0), r.getLong(1),
-         qs(0).toLong, qs(1).toLong, qs(2).toLong, qs(3).toLong)
+      val (perShard, merged) = Lineage.scoped { scope =>
+        val sk = scope.persist(graft.operators.SketchStats
+          .shardKll(vals, "source", "n_toks", k = 16384))
+        (sk.collect().toSeq.map { r =>
+          val qs = graft.operators.SketchStats
+            .kllQuantiles(r.getAs[Array[Byte]]("kll"), ranks)
+          (r.getString(0), r.getLong(1),
+           qs(0).toLong, qs(1).toLong, qs(2).toLong, qs(3).toLong)
+        }, graft.operators.SketchStats.mergedKll(sk, k = 16384))
       }
-      val merged = graft.operators.SketchStats.mergedKll(sk, k = 16384)
-      sk.unpersist(blocking = false)
       require(!merged.isEstimationMode,
         s"q_kll_quantiles: ${merged.getN} values exceeded k=16384 — the " +
         "sketch compacted into (nondeterministic) estimation mode and can " +
@@ -662,17 +664,17 @@ object StatsExtSuite extends QuerySuite {
       graft.operators.SketchStats.saveStates(
         graft.operators.SketchStats.shardKll(vals, "source", "n_toks",
           k = 16384), path)
-      val loaded = graft.operators.SketchStats.loadStates(s, path)
-        .filter(col("source").isin("src0", "src1")).persist()
       val ranks = Seq(0.25, 0.5, 0.75, 0.9)
-      val perShard = loaded.collect().toSeq.map { r =>
-        val qs = graft.operators.SketchStats
-          .kllQuantiles(r.getAs[Array[Byte]]("kll"), ranks)
-        (r.getString(0), r.getLong(1),
-         qs(0).toLong, qs(1).toLong, qs(2).toLong, qs(3).toLong)
+      val (perShard, merged) = Lineage.scoped { scope =>
+        val loaded = scope.persist(graft.operators.SketchStats
+          .loadStates(s, path).filter(col("source").isin("src0", "src1")))
+        (loaded.collect().toSeq.map { r =>
+          val qs = graft.operators.SketchStats
+            .kllQuantiles(r.getAs[Array[Byte]]("kll"), ranks)
+          (r.getString(0), r.getLong(1),
+           qs(0).toLong, qs(1).toLong, qs(2).toLong, qs(3).toLong)
+        }, graft.operators.SketchStats.mergedKll(loaded, k = 16384))
       }
-      val merged = graft.operators.SketchStats.mergedKll(loaded, k = 16384)
-      loaded.unpersist(blocking = false)
       require(!merged.isEstimationMode,
         s"q_kll_stored: ${merged.getN} values exceeded k=16384 — " +
         "estimation mode is nondeterministic and cannot value-match " +
@@ -799,23 +801,24 @@ object StatsExtSuite extends QuerySuite {
       graft.operators.SketchStats.saveStates(
         graft.operators.SketchStats.shardFreqItems(toks, "source", "tok",
           maxMapSize = 128), path)
-      val loaded = graft.operators.SketchStats.loadStates(s, path).persist()
-      val perShard = loaded.select(col("source"), col("fi")).collect().toSeq
-        .flatMap { r =>
-          val sk = org.apache.datasketches.frequencies.ItemsSketch.getInstance(
-            org.apache.datasketches.memory.Memory.wrap(
-              r.getAs[Array[Byte]]("fi")),
-            new org.apache.datasketches.common.ArrayOfStringsSerDe)
-          require(sk.getMaximumError == 0,
-            "q_fi_stored: shard state purged into estimating mode; raise " +
-            "maxMapSize (estimating-mode [lb,ub] contract is spec-pinned)")
-          graft.operators.SketchStats.frequentItems(sk).take(3).zipWithIndex
-            .map { case ((t, est, _, _), i) =>
-              (r.getString(0), i + 1L, t, est) }
-        }
-      val merged = graft.operators.SketchStats
-        .mergedFreqItems(loaded, maxMapSize = 128)
-      loaded.unpersist(blocking = false)
+      val (perShard, merged) = Lineage.scoped { scope =>
+        val loaded = scope.persist(
+          graft.operators.SketchStats.loadStates(s, path))
+        (loaded.select(col("source"), col("fi")).collect().toSeq
+          .flatMap { r =>
+            val sk = org.apache.datasketches.frequencies.ItemsSketch.getInstance(
+              org.apache.datasketches.memory.Memory.wrap(
+                r.getAs[Array[Byte]]("fi")),
+              new org.apache.datasketches.common.ArrayOfStringsSerDe)
+            require(sk.getMaximumError == 0,
+              "q_fi_stored: shard state purged into estimating mode; raise " +
+              "maxMapSize (estimating-mode [lb,ub] contract is spec-pinned)")
+            graft.operators.SketchStats.frequentItems(sk).take(3).zipWithIndex
+              .map { case ((t, est, _, _), i) =>
+                (r.getString(0), i + 1L, t, est) }
+          },
+          graft.operators.SketchStats.mergedFreqItems(loaded, maxMapSize = 128))
+      }
       require(merged.getMaximumError == 0,
         "q_fi_stored: merged state purged into estimating mode; raise " +
         "maxMapSize (estimating-mode [lb,ub] contract is spec-pinned)")

@@ -130,6 +130,50 @@ class EntryPointsSpec extends AnyFunSuite {
     assert(found.isEmpty, s"hand-rolled store idioms under graft/operators: $found")
   }
 
+  /** The hand-rolled materializations that `Lineage.scoped` replaced,
+    * found in comment-stripped `code`: a persist on anything but the
+    * scope (call sites name their `Lineage.Scope` `scope`), an
+    * unpersist, and a `createDataFrame` call whose arguments read an
+    * `.rdd` (the LogicalRDD round-trip). */
+  private def materializationIdioms(code: String): Seq[String] = {
+    val roundTrips = """\bcreateDataFrame\s*\(""".r.findAllMatchIn(code)
+      .filter { m =>
+        // the call's arguments: up to the parenthesis that closes it
+        var depth = 1
+        var i = m.end
+        while (depth > 0 && i < code.length) {
+          if (code(i) == '(') depth += 1 else if (code(i) == ')') depth -= 1
+          i += 1
+        }
+        """\.rdd\b""".r.findFirstIn(code.substring(m.end, i)).nonEmpty
+      }.map(_ => "createDataFrame(.rdd)")
+    ("""(?<!\bscope)\.persist\s*\(""".r.findAllIn(code).map(_ => "persist") ++
+      """\.unpersist\s*\(""".r.findAllIn(code).map(_ => "unpersist") ++
+      roundTrips).toSeq
+  }
+
+  test("operators and queries materialize through Lineage.scoped or a checkpoint") {
+    // the detector itself: each replaced idiom is found, including a
+    // round-trip whose `.rdd` sits in a nested call, while lookalike
+    // calls are not
+    val probe =
+      "object O {\n  df.persist(lvl)\n  w.unpersist(blocking = false)\n" +
+      "  spark.createDataFrame(df.rdd, df.schema)\n" +
+      "  spark.createDataFrame(\n    base.select(col(\"s\")).rdd, schema)\n" +
+      "  spark.createDataFrame(java.util.List.of(Row(1)), schema)\n" +
+      "  scope.persist(df)\n  spark.createDataFrame(df.rddLike, schema)\n}\n"
+    assert(materializationIdioms(probe) == Seq("persist", "unpersist",
+      "createDataFrame(.rdd)", "createDataFrame(.rdd)"))
+    val found = Seq("operators", "queries").flatMap { pkg =>
+      sources(Paths.get(s"src/main/scala/graft/$pkg"))
+        .toSeq.sortBy(_._1).flatMap { case (f, code) =>
+          materializationIdioms(code).map(i => s"$pkg/$f: $i")
+        }
+    }
+    assert(found.isEmpty,
+      s"hand-rolled materializations under graft/operators or graft/queries: $found")
+  }
+
   test("session builders are created only in GraftSession") {
     val builderCall = """SparkSession\s*\.\s*builder\b""".r
     val callers = Seq("src/main/scala", "src/test/scala").flatMap { root =>

@@ -1,13 +1,12 @@
 package graft
 
-import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
-import org.apache.spark.sql.execution.{QueryExecution, RDDScanExec, SparkPlan}
+import org.apache.spark.sql.execution.{RDDScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.execution.joins.BaseJoinExec
-import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
+import graft.plans.CutPlan
 
 /** Physical-plan invariants (SURVEY.md §4.2): these are the properties
   * that make the plans survive a 100× scale-up — filters reaching the
@@ -40,28 +39,10 @@ class PlanSpec extends AnyFunSuite {
 
   /** The plan that materializes packing's own lineage cut, the narrow
     * `(id, n_tokens)` frame its range exchange samples, while gate
-    * `name` is built. A cut is a lazy `localCheckpoint`, which reports
-    * to query-execution listeners under that action name; the events
-    * arrive asynchronously, so this waits for the first matching one.
-    */
-  private def packingCutPlan(name: String): SparkPlan = {
-    val seen = new LinkedBlockingQueue[SparkPlan]
-    val listener = new QueryExecutionListener {
-      override def onSuccess(action: String, qe: QueryExecution,
-                             durationNs: Long): Unit =
-        if (action == "localCheckpoint" &&
-            qe.analyzed.output.map(_.name) == Seq("id", "n_tokens"))
-          seen.add(finalPlan(qe.executedPlan))
-      override def onFailure(action: String, qe: QueryExecution,
-                             e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
-      SparkEntry.queries(name)(spark, sf)
-      Option(seen.poll(30, TimeUnit.SECONDS))
-        .getOrElse(fail(s"$name: packing's (id, n_tokens) cut never ran"))
-    } finally spark.listenerManager.unregister(listener)
-  }
+    * `name` is built. */
+  private def packingCutPlan(name: String): SparkPlan =
+    finalPlan(CutPlan.capture(spark, Seq("id", "n_tokens"))(
+      SparkEntry.queries(name)(spark, sf))._2)
 
   /** The survivor-cut contract of a packing pipeline. Packing always
     * cuts its narrow input before the range exchange, so the final plan

@@ -84,6 +84,17 @@ class CacheEvictionSpec extends AnyFunSuite {
       .toDF("vec_id", "embedding")
   }
 
+  /** 24 deterministic 8-d vectors for the PQ family, shifted per tag. */
+  private def pqVectors(tag: String) = {
+    val shift = if (tag == "a") 0.0 else 0.3
+    (0L until 24L).map(i =>
+        (i, Array.tabulate(8)(j => math.sin(i * 0.7 + j * 1.3) + shift)))
+      .toDF("vec_id", "embedding")
+  }
+
+  private val pqQueries = Seq((100L, Array.tabulate(8)(j => math.cos(j))))
+    .toDF("query_id", "query_vec")
+
   private def labeled(tag: String) = corpus(tag)
     .select($"doc_id", ($"doc_id" % 2).cast("int").as("y"),
       split($"text", " ").as("toks"))
@@ -152,6 +163,34 @@ class CacheEvictionSpec extends AnyFunSuite {
     LinearClassifier.trainScoreBinary(labeled(t), "doc_id", "toks", "y",
       numBuckets = 64, iters = 2)
       .select($"doc_id", $"n_features", round($"score", 3), $"pred_label"))
+
+  // trained codebooks come out of the Lloyd loop; adc compared rounded
+  lifetime("Pq.ivfPqTopK, trained codebooks")(t =>
+    Pq.ivfPqTopK(pqVectors(t), pqQueries, k = 3, nCells = 2, nProbe = 2,
+        m = 2, ksub = 4, trainIters = 2)
+      .select($"query_id", $"rank", $"neighbor_id", round($"adc", 6)))
+
+  test("Opq.opqTrain: codebooks leave no cache entry and are freed by GC") {
+    // not a `lifetime` case: each outer iteration's codebooks and codes
+    // are checkpoints the call drops, so the GC may free them during a
+    // second call
+    spark.sharedState.cacheManager.clearCache()
+    val baseline = persistentIds()
+    def trainOnce(): Unit = {
+      val (_, cb, _) = Opq.opqTrain(pqVectors("a"), m = 2, ksub = 4,
+        outerIters = 2)
+      assert(cacheEntries == 0,
+        "opqTrain must release every Lloyd round before returning")
+      assert(rows(cb).nonEmpty)
+    }
+    trainOnce()
+    eventually(timeout(Span(60, Seconds)), interval(Span(200, Millis))) {
+      System.gc()
+      val leaked = persistentIds() -- baseline
+      assert(leaked.isEmpty,
+        s"persistent RDDs $leaked outlived every reference to them")
+    }
+  }
 
   test("sequential Bpe.train and WordPiece.train leave no cache entry") {
     // both return an eager merge list, so the persisted per-iteration

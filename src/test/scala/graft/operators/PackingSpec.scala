@@ -1,11 +1,9 @@
 package graft.operators
 
-import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
-import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
+import graft.plans.CutPlan
 
 class PackingSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -124,26 +122,12 @@ class PackingSpec extends AnyFunSuite {
   /** `build`'s result with the plan of the `(id, n_tokens, part)`
     * checkpoint packing takes while it runs. The range exchange and the
     * partition-id column are materialized there, so the returned
-    * frame's plan only scans them. Listener events arrive
-    * asynchronously; this waits for the first matching one.
+    * frame's plan only scans them.
     */
   private def withPartedPlan[T](build: => T): (T, String) = {
-    val seen = new LinkedBlockingQueue[String]
-    val listener = new QueryExecutionListener {
-      override def onSuccess(action: String, qe: QueryExecution,
-                             durationNs: Long): Unit =
-        if (action == "localCheckpoint" &&
-            qe.analyzed.output.map(_.name) == Seq("id", "n_tokens", "part"))
-          seen.add(qe.executedPlan.toString)
-      override def onFailure(action: String, qe: QueryExecution,
-                             e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
-      val out = build
-      (out, Option(seen.poll(30, TimeUnit.SECONDS))
-        .getOrElse(fail("packing's (id, n_tokens, part) checkpoint never ran")))
-    } finally spark.listenerManager.unregister(listener)
+    val (out, parted) =
+      CutPlan.capture(spark, Seq("id", "n_tokens", "part"))(build)
+    (out, parted.toString)
   }
 
   test("plan shape: range-partitioned, never a global single-partition sort") {

@@ -1,6 +1,8 @@
 package graft.plans
 
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
 
@@ -16,6 +18,24 @@ class LineageSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def defaultPar = 2 * spark.sparkContext.defaultParallelism
+
+  /** CacheManager entry count via reflection — it exposes isEmpty but
+    * not size. */
+  private def cacheEntries: Int = {
+    val cm = spark.sharedState.cacheManager
+    val f = cm.getClass.getDeclaredField("cachedData")
+    f.setAccessible(true)
+    f.get(cm).asInstanceOf[IndexedSeq[_]].size
+  }
+
+  private def persistentIds(): Set[Int] =
+    spark.sparkContext.getPersistentRDDs.keysIterator.toSet
+
+  private def counts = (1 to 200).map(i => (i % 7, i.toLong)).toDF("k", "v")
+    .groupBy("k").agg(sum("v").as("s"))
+
+  private def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toString).toSeq.sorted
 
   test("widthForBytes: defaultParallelism floor, bytes term, loud cap") {
     assert(Lineage.widthForBytes(spark, BigInt(0)) == defaultPar)
@@ -90,5 +110,53 @@ class LineageSpec extends AnyFunSuite {
     val narrow = Lineage.cut(df.coalesce(4).withColumn("z2", col("id")),
       targetPartitionBytes = 1L, maxPartitions = 1000)
     assert(narrow.rdd.getNumPartitions == 4)
+  }
+
+  test("scoped: a body that throws after two rounds leaves nothing cached") {
+    spark.sharedState.cacheManager.clearCache()
+    val before = persistentIds()
+    val ex = intercept[IllegalStateException] {
+      Lineage.scoped { scope =>
+        val r1 = scope.round(counts)
+        r1.count()
+        val r2 = scope.round(r1.filter(col("s") > 100))
+        r2.count()
+        assert(cacheEntries == 2)
+        assert((persistentIds() -- before).size == 2)
+        throw new IllegalStateException("refused")
+      }
+    }
+    assert(ex.getMessage == "refused")
+    assert(cacheEntries == 0, "a thrown body left its rounds cached")
+    val left = persistentIds() -- before
+    assert(left.isEmpty, s"a thrown body left persistent RDDs $left")
+  }
+
+  test("scoped: a checkpoint taken inside the scope reads after it closes") {
+    spark.sharedState.cacheManager.clearCache()
+    val expected = rows(counts)
+    val kept = Lineage.scoped { scope =>
+      val r = scope.round(counts)
+      r.count()
+      r.localCheckpoint(true)
+    }
+    assert(cacheEntries == 0)
+    assert(rows(kept) == expected)
+  }
+
+  test("scoped: a round is one persisted LogicalRDD leaf; release drops it") {
+    spark.sharedState.cacheManager.clearCache()
+    val src = counts.join(counts.withColumnRenamed("s", "s2"), "k")
+    Lineage.scoped { scope =>
+      val r = scope.round(src)
+      val plan = r.queryExecution.analyzed
+      assert(plan.isInstanceOf[LogicalRDD] && plan.children.isEmpty,
+        s"a round must be a single LogicalRDD leaf:\n$plan")
+      assert(r.schema == src.schema)
+      assert(r.storageLevel == StorageLevel.MEMORY_AND_DISK)
+      assert(cacheEntries == 1)
+      scope.release(r)
+      assert(cacheEntries == 0)
+    }
   }
 }

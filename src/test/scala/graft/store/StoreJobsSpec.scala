@@ -20,12 +20,13 @@ class StoreJobsSpec extends AnyFunSuite {
 
   /** The probes an append above the stored range may run besides its
     * writes, by call site: the PQ append's one width probe over every
-    * row, and the OPQ append's own width probe and empty-batch check
-    * (its rotated batch then skips the PQ probe). A probe over a local
-    * batch runs on the driver, with no job. */
+    * row, and the OPQ append's one probe, which checks the widths and
+    * refuses an empty batch (its rotated batch then skips the PQ
+    * probe). A filter-and-limit probe over a local batch runs on the
+    * driver, with no job; the OPQ probe's sort runs one. */
   private val appendProbes = Map(
     "IVF-PQ index" -> Set("collect at Pq.scala"),
-    "OPQ index" -> Set("collect at Opq.scala", "count at Opq.scala"))
+    "OPQ index" -> Set("collect at Opq.scala"))
 
   private def site(job: String): String = job.takeWhile(_ != ':')
 
