@@ -1,7 +1,10 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
+
+import graft.plans.Lineage
 
 /** The dashboard's analytics surface (SURVEY.md §3.3,
   * /root/reference/streamlit_app.py) as a parameterized query layer:
@@ -20,8 +23,43 @@ import org.apache.spark.sql.functions._
   */
 object Dashboard {
 
-  /** S8 — memoize the cleaned frame across interactions. */
-  def cached(df: DataFrame): DataFrame = df.cache()
+  /** S8 — memoize the cleaned frame across interactions, at a width
+    * sized from its planned bytes: `ceil(bytes /
+    * Lineage.DefaultTargetPartitionBytes)`, at least 1. The bytes are
+    * [[Lineage.estimateBytes]], so sizing runs no job. When there is no
+    * estimate, or the width is not below the frame's own (or that is
+    * not known without a job), the frame is cached as it is
+    * (`coalesce` never grows a frame, and a plain cache keeps the
+    * frame's partitioning).
+    *
+    * A snapshot that fits one partition is cached as one. The cached
+    * relation then reports `SinglePartition`, which satisfies every
+    * distribution Catalyst requires, so an aggregate, `ORDER BY`,
+    * window or CTE over it plans no exchange and runs as one job.
+    * [[Lineage.widthForBytes]] is not used: its floor of
+    * 2 × defaultParallelism suits CPU-dense post-cut stages, while an
+    * interactive call over a small cache costs job and exchange
+    * floors, not per-row CPU.
+    *
+    * The caller owns the cache and unpersists the returned frame.
+    */
+  def cached(df: DataFrame): DataFrame = {
+    val target = Lineage.DefaultTargetPartitionBytes
+    Lineage.estimateBytes(df)
+      .map(bytes => ((bytes + target - 1) / target).max(1))
+      .filter(width => inputWidth(df).exists(width < _)) match {
+      case Some(width) => df.coalesce(width.toInt).cache()
+      case None => df.cache()
+    }
+  }
+
+  /** `df`'s partition count, read without a job: an adaptive plan
+    * settles its count only when its stages run, so it has none. */
+  private def inputWidth(df: DataFrame): Option[Int] =
+    df.queryExecution.executedPlan match {
+      case _: AdaptiveSparkPlanExec => None
+      case plan => Some(plan.execute().getNumPartitions)
+    }
 
   /** A6 — the selectable value domain of one column, sorted, nulls out.
     *

@@ -47,6 +47,10 @@ import org.apache.spark.storage.StorageLevel
   *    frames and repeated calls accumulate nothing. Taken from a
   *    scope's frames it is eager (`localCheckpoint(true)`), or its
   *    first read recomputes the released rounds.
+  *  - a frame a CALLER keeps across many calls (the dashboard's
+  *    interactive snapshot, `graft.operators.Dashboard.cached`) is a
+  *    CacheManager entry the caller owns and unpersists. It is the one
+  *    cache under graft/operators and graft/queries (EntryPointsSpec).
   * Lazy `localCheckpoint(false)` runs no job when called, unless its
   * plan holds an exchange: AQE then materializes that stage at call
   * time (the same work, run earlier). Its jobs never appear in the

@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * (/root/reference/musemotion-queries.sql) re-expressed as ANSI Spark
   * SQL over the canonical EV schema — the drop-in surface for a user of
   * the reference: register the cleaned EV frame (and the utilities dim)
-  * as views, run the same thirteen statements through Catalyst.
+  * as views, run its eleven SELECT statements through Catalyst.
   *
   * Dialect translation decisions (SURVEY.md §7.4):
   *  - backticks/MySQL quoting dropped; canonical column names

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.scalatest.concurrent.Eventually._
 import org.scalatest.funsuite.AnyFunSuite
@@ -15,8 +16,8 @@ import graft.SparkTestSession
   *    that die inside the call were released, and the surviving ones
   *    are checkpoints, not cached plans);
   *  - `A = op(x)`, then `B = op(y)`, then consuming `A` returns the rows
-  *    `op(x)` returns alone, and the materializations created by A's
-  *    call are still registered: a second caller does not evict them;
+  *    `op(x)` returns alone, and the materializations A's plan reads
+  *    are still registered: a second caller does not evict them;
   *  - once both results are dropped, a GC returns the registered
   *    persistent RDDs to what they were before the calls.
   *
@@ -43,6 +44,13 @@ class CacheEvictionSpec extends AnyFunSuite {
     */
   private def persistentIds(): Set[Int] =
     spark.sparkContext.getPersistentRDDs.keysIterator.toSet
+
+  /** Ids of the RDDs `df`'s plan reads as leaves: the checkpoints its
+    * call handed back. Intermediate checkpoints the call dropped are
+    * not among them. */
+  private def readIds(df: DataFrame): Set[Int] =
+    df.queryExecution.analyzed.collectLeaves()
+      .collect { case r: LogicalRDD => r.rdd.id }.toSet
 
   private def rows(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).toSeq.sorted
@@ -109,8 +117,8 @@ class CacheEvictionSpec extends AnyFunSuite {
       "a consumed result must leave no CacheManager entry")
     val before = persistentIds()
     val a = op("a")
-    val ownedByA = persistentIds() -- before
-    assert(ownedByA.nonEmpty,
+    val ownedByA = readIds(a)
+    assert(ownedByA.nonEmpty && ownedByA.subsetOf(persistentIds() -- before),
       "the call must register the materialization its result reads")
     val b = op("b")
     assert(rows(a) == expected,
@@ -170,26 +178,11 @@ class CacheEvictionSpec extends AnyFunSuite {
         m = 2, ksub = 4, trainIters = 2)
       .select($"query_id", $"rank", $"neighbor_id", round($"adc", 6)))
 
-  test("Opq.opqTrain: codebooks leave no cache entry and are freed by GC") {
-    // not a `lifetime` case: each outer iteration's codebooks and codes
-    // are checkpoints the call drops, so the GC may free them during a
-    // second call
-    spark.sharedState.cacheManager.clearCache()
-    val baseline = persistentIds()
-    def trainOnce(): Unit = {
-      val (_, cb, _) = Opq.opqTrain(pqVectors("a"), m = 2, ksub = 4,
-        outerIters = 2)
-      assert(cacheEntries == 0,
-        "opqTrain must release every Lloyd round before returning")
-      assert(rows(cb).nonEmpty)
-    }
-    trainOnce()
-    eventually(timeout(Span(60, Seconds)), interval(Span(200, Millis))) {
-      System.gc()
-      val leaked = persistentIds() -- baseline
-      assert(leaked.isEmpty,
-        s"persistent RDDs $leaked outlived every reference to them")
-    }
+  // codebooks come out of opqTrain's outer loop, which drops each
+  // earlier iteration's checkpoints; centroids compared rounded
+  lifetime("Opq.opqTrain, codebooks") { t =>
+    val (_, cb, _) = Opq.opqTrain(pqVectors(t), m = 2, ksub = 4, outerIters = 2)
+    cb.select($"sub", $"code", transform($"cv", v => round(v, 6)).as("cv"))
   }
 
   test("sequential Bpe.train and WordPiece.train leave no cache entry") {

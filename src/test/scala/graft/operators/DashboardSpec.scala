@@ -1,7 +1,11 @@
 package graft.operators
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
+import graft.store.StoreTestKit.jobsOf
 
 class DashboardSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -67,5 +71,77 @@ class DashboardSpec extends AnyFunSuite {
       .as[(String, Long)].collect().toSeq
     assert(got == Seq(("TESLA", 2L), ("FORD", 1L), ("KIA", 1L)))
     assert(Dashboard.groupedCounts(ev, "make", topK = 1).count() == 1)
+  }
+
+  private object Plans extends AdaptiveSparkPlanHelper
+
+  /** The partitions `df` reads, without a job (its plan holds no
+    * exchange). */
+  private def width(df: DataFrame): Int =
+    df.queryExecution.executedPlan.execute().getNumPartitions
+
+  /** Collects `df` and returns the exchanges of its executed plan
+    * (adaptive stages and subqueries included) and its job count. */
+  private def run(df: DataFrame): (Seq[Exchange], Int) = {
+    val (_, jobs) = jobsOf(spark)(df.collect())
+    (Plans.collectWithSubqueries(df.queryExecution.executedPlan) {
+      case e: Exchange => e }, jobs.size)
+  }
+
+  test("cached: a frame under the target is one partition; calls over it plan no exchange") {
+    import org.apache.spark.sql.functions._
+    val src = spark.range(0, 1000, 1, 4).select(
+      concat(lit("V"), col("id")).as("vin"),
+      element_at(array(lit("Seattle"), lit("Tacoma"), lit("Olympia")),
+        (col("id") % 3 + 1).cast("int")).as("city"),
+      element_at(array(lit("TESLA"), lit("KIA"), lit("FORD"), lit("BMW")),
+        (col("id") % 4 + 1).cast("int")).as("make"),
+      (col("id") % 300).as("electric_range"))
+    assert(width(src) == 4)
+    val cache = Dashboard.cached(src)
+    try {
+      assert(width(cache) == 1)
+      assert(cache.count() == 1000)
+      val f = Dashboard.applySelections(cache,
+        Map("city" -> Seq("Seattle", "Tacoma"), "make" -> Seq[String]()))
+      cache.createOrReplaceTempView("dashboard_cache")
+      val calls = Seq(
+        "kpis" -> Dashboard.kpis(f, "vin", Seq("electric_range")),
+        "groupedCounts" -> Dashboard.groupedCounts(f, "make"),
+        "aggregate and sort" -> spark.sql(
+          """SELECT make, COUNT(*) AS cnt FROM dashboard_cache
+             GROUP BY make HAVING COUNT(*) > 1 ORDER BY cnt DESC, make"""))
+      calls.foreach { case (name, df) =>
+        val (exchanges, jobs) = run(df)
+        assert(exchanges.isEmpty, s"$name planned $exchanges")
+        assert(jobs == 1, s"$name ran $jobs jobs")
+      }
+    } finally {
+      spark.catalog.dropTempView("dashboard_cache")
+      cache.unpersist(blocking = true)
+    }
+  }
+
+  test("cached: a frame planned over the target keeps its width") {
+    // about 16 GB planned: wider than 8 partitions at 64 MB each
+    val src = spark.range(0, 2000000000L, 1, 8).toDF()
+    val ((cache, w), jobs) = jobsOf(spark) {
+      val c = Dashboard.cached(src)
+      (c, width(c))
+    }
+    try {
+      assert(w == 8)
+      assert(jobs.isEmpty, s"sizing ran $jobs")
+    } finally cache.unpersist(blocking = true)
+  }
+
+  test("cached: a frame with no size estimate keeps its width") {
+    import org.apache.spark.sql.Row
+    val rdd = spark.sparkContext.parallelize(Seq(Row("V1"), Row("V2"), Row("V3")), 3)
+    val src = spark.createDataFrame(rdd, ev.select("vin").schema)
+    assert(graft.plans.Lineage.estimateBytes(src).isEmpty)
+    val cache = Dashboard.cached(src)
+    try assert(width(cache) == 3)
+    finally cache.unpersist(blocking = true)
   }
 }

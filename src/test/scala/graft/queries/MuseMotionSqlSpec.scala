@@ -2,9 +2,11 @@ package graft.queries
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
+import graft.operators.Dashboard
 
-/** The reference's thirteen-statement SQL surface runs end-to-end on an
-  * EV fixture through Catalyst (SURVEY.md §3 "fourth surface").
+/** The reference's SQL surface, its eleven SELECT statements, runs
+  * end-to-end on an EV fixture through Catalyst (SURVEY.md §3 "fourth
+  * surface").
   */
 class MuseMotionSqlSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -23,18 +25,36 @@ class MuseMotionSqlSpec extends AnyFunSuite {
     ).toDF("vin", "city", "year", "make", "model", "vehicle_type",
       "eligibility", "electric_range", "vehicle_id", "utility",
       "latitude", "longitude")
-    val utilities = Seq(
-      (1, "PSE", "West"), (2, "AVISTA", "East"), (3, "UNUSED", "North"))
-      .toDF("utility_id", "utility_name", "region")
     MuseMotionSql.register(ev, utilities)
     ev
   }
+
+  private lazy val utilities = Seq(
+    (1, "PSE", "West"), (2, "AVISTA", "East"), (3, "UNUSED", "North"))
+    .toDF("utility_id", "utility_name", "region")
 
   test("all statements parse and execute through Catalyst") {
     fixture
     MuseMotionSql.runAll(spark).foreach { case (name, df) =>
       assert(df.columns.nonEmpty, s"$name produced no schema")
       df.collect()
+    }
+  }
+
+  test("every statement returns the same rows over the dashboard cache") {
+    val ev = fixture
+    def results() = MuseMotionSql.runAll(spark).map { case (name, df) =>
+      name -> df.collect().toSeq }
+    val plain = results()
+    val cache = Dashboard.cached(ev)
+    try {
+      MuseMotionSql.register(cache, utilities)
+      results().zip(plain).foreach { case ((name, got), (_, want)) =>
+        assert(got == want, s"$name over the cache")
+      }
+    } finally {
+      MuseMotionSql.register(ev, utilities)
+      cache.unpersist(blocking = true)
     }
   }
 
