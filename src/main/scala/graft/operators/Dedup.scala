@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import graft.functions.TextFunctions
 import graft.store.{Manifest, Store}
 
@@ -779,6 +780,11 @@ object Dedup {
     * dropped by the [[lshCandidatePairs]] `maxBucket` contract, bounding
     * the worst case at buckets·maxBucket².
     *
+    * A batch within the broadcast bound takes the batch-probe route
+    * instead ([[BatchProbe]]): collected once, its band keys filter one
+    * narrow scan of the corpus signatures, and the survivors' tokens are
+    * verified in one `InSet`-filtered corpus scan, with no exchange.
+    *
     * Id spaces of `newBatch` and `corpus` must be disjoint (standard for
     * ingest — new docs get new ids); signatures/tokens are looked up per
     * SIDE, so a collision would silently pair the wrong documents.
@@ -803,7 +809,22 @@ object Dedup {
       numBands: Int = 8,
       maxBucket: Int = 200,
       expectedBatchBands: Long = 1000000L,
-      corpusSigs: Option[DataFrame] = None): DataFrame = {
+      corpusSigs: Option[DataFrame] = None): DataFrame =
+    collectSigBatch(newBatch, idCol, textCol, shingleK, numHashes, numBands)
+      .flatMap(b => nearDupProbe(b, corpus, minJaccard, idCol, textCol,
+        shingleK, numHashes, numBands, maxBucket, corpusSigs))
+      .getOrElse(incrementalNearDupExchange(newBatch, corpus, minJaccard,
+        idCol, textCol, shingleK, numHashes, numBands, maxBucket,
+        expectedBatchBands, corpusSigs))
+
+  /** [[incrementalNearDupPairs]] above the broadcast bound: the batch's
+    * bucket keys reach the corpus band stream as a Bloom filter, and the
+    * two sides meet in exchanges. */
+  private def incrementalNearDupExchange(
+      newBatch: DataFrame, corpus: DataFrame, minJaccard: Double,
+      idCol: String, textCol: String, shingleK: Int, numHashes: Int,
+      numBands: Int, maxBucket: Int, expectedBatchBands: Long,
+      corpusSigs: Option[DataFrame]): DataFrame = {
     val rowsPerBand = numHashes / numBands
     // both signature sides are read several times by the returned lazy
     // plan, so they outlive the call: GC-owned (the graft.plans.Lineage
@@ -864,6 +885,131 @@ object Dedup {
       .filter(col("jaccard") >= minJaccard)
       .select(col("a"), col("b"), round(col("jaccard"), 6).as("jaccard"))
   }
+
+  /** A batch held on the driver for the batch-probe route ([[BatchProbe]]):
+    * per document with a signature, its id, signature, band buckets
+    * (band, bh) and distinct tokens. */
+  private final case class SigBatch(rows: IndexedSeq[Row], idType: DataType) {
+    def id(i: Int): Any = rows(i).get(0)
+    def sig(i: Int): Seq[Long] = rows(i).getSeq[Long](1)
+    def buckets(i: Int): Set[(Int, Long)] =
+      rows(i).getSeq[Row](2).map(r => (r.getInt(0), r.getLong(1))).toSet
+    def toks(i: Int): Seq[String] = rows(i).getSeq[String](3)
+  }
+
+  /** The batch's signature rows in one collect, when the batch is planned
+    * within the broadcast bound and its collected bytes (id, signature,
+    * buckets and token characters) fit it too; None otherwise. */
+  private def collectSigBatch(newBatch: DataFrame, idCol: String,
+                              textCol: String, shingleK: Int, numHashes: Int,
+                              numBands: Int): Option[SigBatch] =
+    BatchProbe.plannedBound(newBatch).flatMap { bound =>
+      require(numHashes <= seedPerms.length, s"numHashes > ${seedPerms.length}")
+      val rowBytes = 8L + 8L * numHashes + 12L * numBands
+      val attrs = newBatch
+        .select(col(idCol).as("id"), tokenHashes(col(textCol)).as("th"),
+          TextFunctions.distinctTokens(col(textCol)).as("ta"))
+        .select(col("id"), graft.functions.MinhashSig.minhash_sig(
+          col("th"), shingleK, numHashes).as("sig"), col("ta"))
+        .where(col("sig").isNotNull)
+        .select(col("id"), col("sig"),
+          bands(col("sig"), numBands, numHashes / numBands).as("bd"), col("ta"))
+      val rows = BatchProbe.collectCapped(attrs, bound / rowBytes + 1)
+      val bytes = rows.map(r => rowBytes +
+        r.getSeq[String](3).map(t => 8L + t.length).sum).sum
+      if (bytes > bound) None
+      else Some(SigBatch(rows.toIndexedSeq, attrs.schema("id").dataType))
+    }
+
+  /** [[incrementalNearDupPairs]] on the batch-probe route, or None when
+    * the stored hits for the batch's buckets exceed buckets ×
+    * (maxBucket + 1): the caller falls back to the exchange plan, so no
+    * collect is unbounded.
+    *
+    *  - One narrow scan of the corpus signatures returns the rows whose
+    *    band hash is one of the batch's, each with its
+    *    matched buckets and the batch documents whose signature agrees
+    *    within the estimate slack (`sig_agree` against the batch
+    *    signatures, a plan constant).
+    *  - The skew guard runs on the driver over those rows: a bucket
+    *    holding more than `maxBucket` rows on either side is dropped, and
+    *    a pair survives when it shares a bucket that is kept.
+    *  - The returned plan scans `corpus`, keeps the surviving ids (an
+    *    index keyed by corpus id, holding each one's batch partners),
+    *    tokenizes only those rows, and verifies each against its
+    *    partners' tokens.
+    */
+  private def nearDupProbe(b: SigBatch, corpus: DataFrame, minJaccard: Double,
+                           idCol: String, textCol: String, shingleK: Int,
+                           numHashes: Int, numBands: Int, maxBucket: Int,
+                           corpusSigs: Option[DataFrame]): Option[DataFrame] =
+    graft.plans.Lineage.scoped { scope =>
+      // a corpus signature pass, when no stored one is given, is read by
+      // this call's one job only; persisted so the hit filter's pushdown
+      // below the projection cannot run the minhash twice
+      val cSigs = corpusSigs.getOrElse(scope.persist(
+        signatures(corpus, idCol, textCol, shingleK, numHashes)))
+      val buckets = b.rows.indices.map(b.buckets)
+      val batchCount = buckets.flatten.groupMapReduce(identity)(_ => 1)(_ + _)
+      val postType = ArrayType(StructType(Seq(StructField("band", IntegerType),
+        StructField("i", IntegerType))))
+      val bucketIndex = BatchProbe.index(
+        buckets.zipWithIndex.flatMap { case (bs, i) => bs.map(k => (k, i)) }
+          .groupBy(_._1._2).toSeq.map { case (bh, ps) =>
+            (bh, bh, ps.map { case ((band, _), i) => Row(band, i) }) },
+        LongType, postType)
+      val sigs = BatchProbe.data(b.rows.indices.map(b.sig),
+        ArrayType(ArrayType(LongType)))
+      val partners = filter(array_distinct(flatten(transform(col("hits"), x =>
+          transform(filter(coalesce(bucketIndex.lookup(x.getField("bh"),
+              x.getField("bh")), array().cast(postType)),
+            p => p.getField("band") === x.getField("band")),
+            p => p.getField("i"))))),
+        i => signatureSimilarity(element_at(sigs, i + 1), col("sig")) >=
+          minJaccard - 0.15)
+      val idType = cSigs.schema("id").dataType
+      val cap = batchCount.size.toLong * (maxBucket + 1)
+      val hitRows = if (batchCount.isEmpty) Array.empty[Row] else BatchProbe.collectCapped(cSigs
+          .select(col("id"), col("sig"), filter(
+            bands(col("sig"), numBands, numHashes / numBands),
+            x => bucketIndex.lookup(x.getField("bh"), x.getField("bh")).isNotNull).as("hits"))
+          .where(size(col("hits")) > 0)
+          .select(col("id"), xxhash64(col("id")).as("idh"), col("hits"),
+            partners.as("partners")), cap + 1)
+      if (hitRows.length > cap) None
+      else {
+        def hitsOf(r: Row) = r.getSeq[Row](2).map(x => (x.getInt(0), x.getLong(1)))
+          .filter(batchCount.contains)
+        val storedCount = hitRows.toSeq.flatMap(hitsOf)
+          .groupMapReduce(identity)(_ => 1)(_ + _)
+        def kept(k: (Int, Long)) =
+          batchCount(k) <= maxBucket && storedCount(k) <= maxBucket
+        // (corpus id, its hash, the batch rows it verifies against)
+        val cands = hitRows.toSeq.flatMap { r =>
+          val hit = hitsOf(r).toSet
+          val is = r.getSeq[Int](3).filter(i => (buckets(i) & hit).exists(kept))
+          if (is.isEmpty) None else Some((r.get(0), r.getLong(1), is))
+        }
+        val verifyIndex = BatchProbe.index(
+          cands.groupBy(_._1).toSeq.map { case (id, cs) =>
+            (cs.head._2, id, cs.flatMap(_._3).distinct) },
+          idType, ArrayType(IntegerType))
+        val ids = BatchProbe.data(b.rows.indices.map(b.id), ArrayType(b.idType))
+        val toks = BatchProbe.data(b.rows.indices.map(b.toks),
+          ArrayType(ArrayType(StringType)))
+        val cid = col(idCol).cast(idType)
+        Some(corpus.select(cid.as("b"), verifyIndex.lookup(xxhash64(cid), cid).as("is"),
+            col(textCol))
+          .where(col("is").isNotNull)
+          .select(col("b"), explode(col("is")).as("i"),
+            TextFunctions.distinctTokens(col(textCol)).as("tb"))
+          .select(element_at(ids, col("i") + 1).as("a"), col("b"),
+            element_at(toks, col("i") + 1).as("ta"), col("tb"))
+          .withColumn("jaccard", jaccardTokens(col("ta"), col("tb")))
+          .filter(col("jaccard") >= minJaccard)
+          .select(col("a"), col("b"), round(col("jaccard"), 6).as("jaccard")))
+      }
+    }
 
   /** Fuzzy benchmark decontamination: flag TRAIN documents whose
     * n-gram-set Jaccard against any EVAL document clears `minJaccard` —

@@ -1,7 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import graft.store.{Manifest, Store}
 
 /** Exact all-pairs set-similarity join via PREFIX FILTERING (the
@@ -126,6 +129,11 @@ object SetSimJoin {
   private def guardHint(hotBucketSalt: Int): String =
     if (hotBucketSalt != 0) "salted cap " else ""
 
+  /** The skew guard's refusal after "… collects c docs ". */
+  private def guardAdvice(hotBucketSalt: Int, guardCap: Long): String =
+    s"(> ${guardHint(hotBucketSalt)}$guardCap); raise the threshold, " +
+      "pre-dedup, or raise maxBucket/hotBucketSalt knowingly"
+
   /** Salt-event visibility (VERDICT r17 #4): when `observeAs` is set,
     * a CollectMetrics node (`Dataset.observe`) over the guard's own
     * bucket counts publishes `salted_buckets` — the number of buckets
@@ -249,9 +257,7 @@ object SetSimJoin {
         when(coalesce(col("w.c"), lit(0L)) > guardCap,
           raise_error(concat(lit("setSimJoin: prefix token '"),
             col("w.tok"), lit("' collects "), col("w.c"),
-            lit(s" docs (> ${guardHint(hotBucketSalt)}" +
-              s"$guardCap); raise the threshold, " +
-              "pre-dedup, or raise maxBucket/hotBucketSalt knowingly"))))
+            lit(" docs " + guardAdvice(hotBucketSalt, guardCap)))))
           .otherwise(lit(1)).as("guard_ok"))
     val a = pref.select(col("tok"), col("sid").as("a"),
       col("n").as("na"), col("pos").as("pa"))
@@ -409,9 +415,7 @@ object SetSimJoin {
         when(coalesce(col("w.df"), lit(0L)) > guardCap,
           raise_error(concat(lit("containmentPairs: prefix token '"),
             col("w.tok"), lit("' has corpus df "), col("w.df"),
-            lit(s" (> ${guardHint(hotBucketSalt)}" +
-              s"$guardCap); raise the threshold, " +
-              "pre-dedup, or raise maxBucket/hotBucketSalt knowingly"))))
+            lit(" " + guardAdvice(hotBucketSalt, guardCap)))))
           .otherwise(lit(1)).as("guard_ok"))
     val a = pref.select(col("tok"), col("sid").as("a"),
       col("n").as("na"), col("pos").as("pa"))
@@ -769,6 +773,12 @@ object SetSimJoin {
     * inside the stored corpus are the PRIOR audits' output and are not
     * re-emitted: incremental(stored, batch) ∪ prior == rebuild over
     * stored ∪ batch (spec-pinned).
+    *
+    * A batch within the broadcast bound takes the batch-probe route
+    * ([[BatchProbe]]): collected once, checked for id collisions
+    * against the manifest's id range, and probed in-row by one narrow
+    * scan; its skew guard refuses at call time. A larger batch meets the
+    * stored prefixes in exchanges.
     */
   def incrementalJaccardPairs(spark: org.apache.spark.sql.SparkSession,
                               path: String, newDocs: DataFrame,
@@ -779,6 +789,24 @@ object SetSimJoin {
                               observeSalt: Option[String] = None): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0,
       s"incrementalJaccardPairs: threshold must be in (0,1], got $threshold")
+    val m = setsManifest(spark, path)
+    collectSetsBatch(m, newDocs, idCol, toksCol, threshold) match {
+      case Some(b) =>
+        jaccardBatchProbe(spark, path, m, b, threshold, maxBucket, hotBucketSalt,
+          observeSalt)
+      case None =>
+        incrementalJaccardExchange(spark, path, newDocs, idCol, toksCol,
+          threshold, maxBucket, hotBucketSalt, observeSalt)
+    }
+  }
+
+  /** [[incrementalJaccardPairs]] above the broadcast bound: the batch
+    * side and the stored prefixes meet in exchanges. */
+  private def incrementalJaccardExchange(
+      spark: org.apache.spark.sql.SparkSession, path: String,
+      newDocs: DataFrame, idCol: String, toksCol: String, threshold: Double,
+      maxBucket: Int, hotBucketSalt: Int,
+      observeSalt: Option[String]): DataFrame = {
     val batchCut = graft.plans.Lineage.cut(
       orderedSetsRaw(newDocs, idCol, toksCol))
     val (stored, bRows, bToks) = loadSetsWithBatchStats(spark, path,
@@ -817,9 +845,7 @@ object SetSimJoin {
         when(coalesce(col("w.c"), lit(0L)) > guardCap,
           raise_error(concat(lit("incrementalJaccardPairs: prefix token '"),
             col("w.tok"), lit("' collects "), col("w.c"),
-            lit(s" docs (> ${guardHint(hotBucketSalt)}" +
-              s"$guardCap); raise the threshold, " +
-              "pre-dedup, or raise maxBucket/hotBucketSalt knowingly"))))
+            lit(" docs " + guardAdvice(hotBucketSalt, guardCap)))))
           .otherwise(lit(1)).as("guard_ok"))
     // The a-side is the UNION's prefixes — archive-sized — but only
     // rows whose token appears in some BATCH prefix can ever join the
@@ -897,6 +923,296 @@ object SetSimJoin {
           (col("na") + col("nb") - col("inter")).cast("double"), 6)
           .as("jaccard"))
       .filter(col("jaccard") >= threshold)
+  }
+
+  // ---- batch-probe route of the incremental audits ---------------------
+
+  /** A batch held on the driver ([[BatchProbe]]): its (sid, stoks, n)
+    * rows with n ≥ 1, each with the xxhash64 of its tokens. */
+  private final case class SetsBatch(rows: IndexedSeq[Row], sidType: DataType,
+                                     tokType: DataType, threshold: Double) {
+    def sid(i: Int): Any = rows(i).get(0)
+    def toks(i: Int): Seq[Any] = rows(i).getSeq[Any](1)
+    def n(i: Int): Int = rows(i).getInt(2)
+    private def hashes(i: Int): Seq[Long] = rows(i).getSeq[Long](3)
+    /** The [[prefixLen]] of row i, computed as Spark computes it. */
+    def prefixLen(i: Int): Int = n(i) - math.ceil(threshold * n(i) - 1e-9).toInt + 1
+    def prefix(i: Int): Seq[Any] = toks(i).take(prefixLen(i))
+
+    private val schema = StructType(Seq(StructField("sid", sidType),
+      StructField("stoks", ArrayType(tokType)), StructField("n", IntegerType)))
+    private def slim = rows.map(r => Row(r.get(0), r.get(1), r.get(2)))
+
+    /** The (sid, stoks, n) rows as a local relation. */
+    def frame(spark: org.apache.spark.sql.SparkSession): DataFrame =
+      spark.createDataFrame(slim.asJava, schema)
+
+    /** The (sid, stoks, n) rows as one array literal, row i at i + 1. */
+    def literal: Column = BatchProbe.data(slim, ArrayType(schema))
+
+    /** An index from each token among the first `len(i)` of row i to
+      * its postings (i, p), p its 0-based position in row i. */
+    def postings(len: Int => Int): BatchProbe.Index = {
+      val entries = for {
+        i <- rows.indices
+        p <- 0 until len(i) if toks(i)(p) != null
+      } yield (hashes(i)(p), toks(i)(p), Row(i, p))
+      BatchProbe.index(
+        entries.groupBy(_._2).toSeq.map { case (t, ps) => (ps.head._1, t, ps.map(_._3)) },
+        tokType, PostingsType)
+    }
+  }
+
+  private val PostingsType = ArrayType(StructType(Seq(
+    StructField("i", IntegerType), StructField("p", IntegerType))))
+
+  /** Prefix length n − ⌈t·n⌉ + 1, the ⌈⌉ taken over t·n − 1e-9 (the
+    * [[jaccardPairs]] epsilon). */
+  private def prefixLen(n: Column, threshold: Double): Column =
+    (n - ceil(lit(threshold) * n - lit(1e-9)) + 1).cast("int")
+
+  /** The batch's rows in one collect, when the batch is planned within
+    * the broadcast bound and its measured slim bytes (24 B per row and
+    * per token, the exchange plan's `fitsBroadcast` measure) fit it too;
+    * None otherwise, and when its tokens are not of a keyable type equal
+    * to the stored one. Rows with no token are dropped on the driver:
+    * as a Spark filter the derived-size predicate would be pushed into
+    * the caller's plan (the [[jaccardPairs]] pushed-predicate lesson). */
+  private def collectSetsBatch(m: Manifest, newDocs: DataFrame, idCol: String,
+                               toksCol: String,
+                               threshold: Double): Option[SetsBatch] =
+    BatchProbe.plannedBound(newDocs).flatMap { bound =>
+      val sets = orderedSetsRaw(newDocs, idCol, toksCol)
+      def elem(s: StructType) = s("stoks").dataType.asInstanceOf[ArrayType].elementType
+      val tokType = elem(sets.schema)
+      if (!BatchProbe.keyable(tokType) || tokType != elem(m.schemas(SetsTable))) None
+      else {
+        val rows = BatchProbe.collectCapped(sets.select(col("sid"), col("stoks"),
+            col("n"), transform(col("stoks"), t => xxhash64(t)).as("th")),
+            bound / 24 + 1)
+          .filter(_.getInt(2) >= 1)
+        val slimBytes = 24L * (rows.length + rows.map(_.getInt(2).toLong).sum)
+        if (slimBytes > bound) None
+        else Some(SetsBatch(rows.toIndexedSeq, sets.schema("sid").dataType,
+          tokType, threshold))
+      }
+    }
+
+  /** Eager refusal of a batch whose ids collide with stored ids (the
+    * [[batchStatsRequireDisjoint]] contract) for a batch on the driver:
+    * no job when the batch's id range misses the manifest's
+    * ([[Store.disjointIds]]); otherwise one narrow scan of the stored
+    * ids filtered by the batch's ids as a literal set. */
+  private def requireDisjointBatch(spark: org.apache.spark.sql.SparkSession,
+                                   path: String, m: Manifest, b: SetsBatch,
+                                   op: String): Unit = {
+    val ids = b.rows.indices.map(b.sid).filter(_ != null)
+    val range =
+      if (ids.isEmpty || !Store.integral(b.sidType)) None
+      else {
+        val ls = ids.map(_.asInstanceOf[Number].longValue)
+        Some((ls.min, ls.max))
+      }
+    val collide = !Store.disjointIds(m, SetsTable, ids.size, range) &&
+      BatchProbe.collectCapped(Store.table(spark, path, m, SetsTable)
+        .select(col("sid")).where(BatchProbe.isIn(col("sid"), ids, b.sidType)), 1)
+        .nonEmpty
+    require(!collide, s"$op: batch ids collide with stored ids — re-id the " +
+      "batch or rebuild with saveSets")
+  }
+
+  /** The skew guard of a probe audit, at call time: `counts` (token →
+    * bucket count), computed only when the stored rows plus the batch
+    * rows could exceed the cap (the manifest's row count says so) or
+    * salt events are observed, must stay within the cap. Returns the
+    * counts, which the output publishes as salt events. */
+  private def probeGuard(m: Manifest, b: SetsBatch, maxBucket: Int,
+                         hotBucketSalt: Int, observeSalt: Option[String],
+                         refusal: (Any, Long) => String)(
+                         counts: => Map[Any, Long]): Map[Any, Long] = {
+    val guardCap = saltedGuardCap(maxBucket, hotBucketSalt)
+    val c =
+      if (observeSalt.isEmpty && m.rows(SetsTable) + b.rows.length <= guardCap)
+        Map.empty[Any, Long]
+      else counts
+    c.maxByOption(_._2).foreach { case (tok, n) =>
+      require(n <= guardCap, refusal(tok, n) + guardAdvice(hotBucketSalt, guardCap))
+    }
+    c
+  }
+
+  /** One narrow job over the stored rows: per token, the number of rows
+    * whose `hits` (tokens, each at most once per row) hold it, and the
+    * tokens some row's `marks` hold. Each partition returns its partial
+    * counts, at most one entry per token the columns admit. */
+  private def storedHits(stored: DataFrame, hits: Column,
+                         marks: Column): (Map[Any, Long], Set[Any]) = {
+    val parts = stored.select(hits.as("hit"), marks.as("mark"))
+      .rdd.mapPartitions { it =>
+        val c = scala.collection.mutable.HashMap.empty[Any, Long]
+        val marked = scala.collection.mutable.HashSet.empty[Any]
+        it.foreach { r =>
+          r.getSeq[Any](0).foreach(t => c(t) = c.getOrElse(t, 0L) + 1L)
+          marked ++= r.getSeq[Any](1)
+        }
+        c.iterator.map { case (t, n) => (t, n, marked(t)) }
+      }.collect()
+    (parts.toSeq.groupMapReduce(_._1)(_._2)(_ + _), parts.filter(_._3).map(_._1).toSet)
+  }
+
+  /** `stored` counts plus one per batch row holding the token. */
+  private def plusBatch(stored: Map[Any, Long],
+                        batchHits: Seq[Seq[Any]]): Map[Any, Long] =
+    (stored.toSeq ++ batchHits.flatten.map(_ -> 1L)).groupMapReduce(_._1)(_._2)(_ + _)
+
+  /** Salt events published as constants: an empty result still reports
+    * them. */
+  private def observeCounts(out: DataFrame, counts: Map[Any, Long],
+                            maxBucket: Int,
+                            observeSalt: Option[String]): DataFrame =
+    observeSalt.fold(out) { nm =>
+      val salted = counts.values.count(_ > maxBucket).toLong
+      val top = counts.values.maxOption.getOrElse(0L)
+      out.observe(nm, coalesce(max(lit(salted)), lit(salted)).as("salted_buckets"),
+        coalesce(max(lit(top)), lit(top)).as("max_bucket"))
+    }
+
+  /** Stored ∪ batch rows (sid, stoks, n, isb), `isb` marking the batch. */
+  private def unionRows(spark: org.apache.spark.sql.SparkSession,
+                        stored: DataFrame, b: SetsBatch): DataFrame =
+    stored.select(col("sid"), col("stoks"), col("n"), lit(false).as("isb"))
+      .unionByName(b.frame(spark).withColumn("isb", lit(true)))
+
+  /** The batch rows a row meets through `toks` (its tokens, each at its
+    * position) looked up in `index`: one (i, pr, po) per batch row i, at
+    * the positions in the row (pr) and in row i (po) of their minimal
+    * shared token. Both sides sort in the same value order, so that
+    * token is first in both, and the positional filter is the exchange
+    * plan's. Sorted by i. */
+  private def probeHits(toks: Column, index: BatchProbe.Index): Column =
+    array_sort(flatten(transform(toks, (t, pr) =>
+      transform(coalesce(index.lookup(xxhash64(t), t), array().cast(PostingsType)),
+        e => struct(e.getField("i").as("i"), pr.as("pr"), e.getField("p").as("po"))))))
+
+  /** The first entry per batch row of a [[probeHits]] column `h`. */
+  private def firstPerRow(h: Column): Column =
+    filter(h, (x, j) => j === 0 ||
+      element_at(h, greatest(j, lit(1))).getField("i") =!= x.getField("i"))
+
+  /** [[incrementalJaccardPairs]] on the batch-probe route: the batch's
+    * sets and a prefix-token index over them ride the plan as literals,
+    * and one narrow scan over stored ∪ batch probes each row in-row:
+    * the row's prefix tokens look up the batch prefix index (the prefix
+    * filter: a qualifying pair shares a prefix token), the first hit
+    * per batch row passes the positional filter, and survivors
+    * intersect the two sets exactly. A batch row finds the other batch
+    * rows the same way; such a pair is kept once, by `a < b`. The skew
+    * guard counts union prefix rows per batch prefix token. Salting is
+    * moot here: no exchange holds a bucket. */
+  private def jaccardBatchProbe(spark: org.apache.spark.sql.SparkSession,
+                                path: String, m: Manifest, b: SetsBatch,
+                                threshold: Double, maxBucket: Int,
+                                hotBucketSalt: Int,
+                                observeSalt: Option[String]): DataFrame = {
+    val op = "incrementalJaccardPairs"
+    requireDisjointBatch(spark, path, m, b, op)
+    val stored = Store.table(spark, path, m, SetsTable)
+    val prefix = slice(col("stoks"), lit(1), prefixLen(col("n"), threshold))
+    val counts = probeGuard(m, b, maxBucket, hotBucketSalt, observeSalt,
+        (tok, c) => s"$op: prefix token '$tok' collects $c docs ") {
+      val batchPrefixes = b.rows.indices.map(i => b.prefix(i).filter(_ != null))
+      val toks = batchPrefixes.flatten.distinct
+      plusBatch(storedHits(stored, filter(prefix, t => BatchProbe.isIn(t, toks, b.tokType)),
+        array().cast(ArrayType(b.tokType)))._1, batchPrefixes)
+    }
+    val sets = b.literal
+    val alpha = ceil(lit(threshold / (1.0 + threshold)) *
+      (col("n") + col("o.n")) - lit(1e-9))
+    val rowCols = Seq(col("sid"), col("stoks"), col("n"), col("isb"))
+    val out = unionRows(spark, stored, b)
+      .select(rowCols :+ probeHits(prefix, b.postings(b.prefixLen)).as("h"): _*)
+      .select(rowCols :+ explode(firstPerRow(col("h"))).as("x"): _*)
+      .select(rowCols ++ Seq(col("x.pr").as("pa"), col("x.po").as("pb"),
+        element_at(sets, col("x.i") + 1).as("o")): _*)
+      .filter(col("sid") =!= col("o.sid") &&
+        (!col("isb") || col("sid") < col("o.sid")) &&
+        least(col("n") - col("pa"), col("o.n") - col("pb")) >= alpha)
+      .select(least(col("sid"), col("o.sid")).as("a"),
+        greatest(col("sid"), col("o.sid")).as("b"),
+        size(array_intersect(col("stoks"), col("o.stoks"))).cast("long").as("inter"),
+        col("n").as("na"), col("o.n").as("nb"))
+      .select(col("a"), col("b"), col("inter"),
+        round(col("inter") /
+          (col("na") + col("nb") - col("inter")).cast("double"), 6)
+          .as("jaccard"))
+      .filter(col("jaccard") >= threshold)
+    observeCounts(out, counts, maxBucket, observeSalt)
+  }
+
+  /** [[incrementalContainmentPairs]] on the batch-probe route: one
+    * narrow scan over stored ∪ batch, the batch as literals, finds both
+    * candidate branches of the exchange plan in-row:
+    *
+    *  - the row contained in a batch row: the row's prefix tokens look up
+    *    an index of every batch token;
+    *  - a batch row contained in a stored row: the stored row's tokens
+    *    look up the batch prefix index (a batch row inside another
+    *    batch row is the first branch's).
+    *
+    * The first hit per batch row and direction passes the size and
+    * positional filters, and survivors intersect the two sets exactly.
+    * The skew guard counts the union df of each union prefix token the
+    * batch carries, as the exchange plan's does. */
+  private def containmentBatchProbe(spark: org.apache.spark.sql.SparkSession,
+                                    path: String, m: Manifest, b: SetsBatch,
+                                    threshold: Double, maxBucket: Int,
+                                    hotBucketSalt: Int,
+                                    observeSalt: Option[String]): DataFrame = {
+    val op = "incrementalContainmentPairs"
+    requireDisjointBatch(spark, path, m, b, op)
+    val stored = Store.table(spark, path, m, SetsTable)
+    val prefix = slice(col("stoks"), lit(1), prefixLen(col("n"), threshold))
+    val counts = probeGuard(m, b, maxBucket, hotBucketSalt, observeSalt,
+        (tok, c) => s"$op: prefix token '$tok' has corpus df $c ") {
+      // the union df of each token the batch carries, kept for the
+      // tokens some union prefix holds
+      val batchToks = b.rows.indices.map(i => b.toks(i).filter(_ != null))
+      val toks = batchToks.flatten.distinct
+      val (df, storedPrefix) = storedHits(stored,
+        filter(col("stoks"), t => BatchProbe.isIn(t, toks, b.tokType)),
+        filter(prefix, t => BatchProbe.isIn(t, toks, b.tokType)))
+      val inPrefix = storedPrefix ++ b.rows.indices.flatMap(b.prefix)
+      plusBatch(df, batchToks).filter(e => inPrefix(e._1))
+    }
+    val sets = b.literal
+    def dir(h: Column, rowContained: Boolean) = transform(firstPerRow(h), x =>
+      struct(x.getField("i").as("i"), x.getField("pr").as("pr"),
+        x.getField("po").as("po"), lit(rowContained).as("rc")))
+    val rowCols = Seq(col("sid"), col("stoks"), col("n"))
+    val na = when(col("x.rc"), col("n")).otherwise(col("o.n"))
+    val nb = when(col("x.rc"), col("o.n")).otherwise(col("n"))
+    val pa = when(col("x.rc"), col("x.pr")).otherwise(col("x.po"))
+    val pb = when(col("x.rc"), col("x.po")).otherwise(col("x.pr"))
+    val alpha = ceil(lit(threshold) * col("na") - lit(1e-9))
+    val out = unionRows(spark, stored, b)
+      .select(rowCols ++ Seq(
+        probeHits(prefix, b.postings(b.n)).as("h1"),
+        filter(probeHits(col("stoks"), b.postings(b.prefixLen)),
+          _ => !col("isb")).as("h2")): _*)
+      .select(rowCols :+ explode(concat(dir(col("h1"), rowContained = true),
+        dir(col("h2"), rowContained = false))).as("x"): _*)
+      .select(rowCols ++ Seq(col("x"), element_at(sets, col("x.i") + 1).as("o")): _*)
+      .select(rowCols ++ Seq(col("o"), na.as("na"), nb.as("nb"), pa.as("pa"),
+        pb.as("pb"), when(col("x.rc"), col("sid")).otherwise(col("o.sid")).as("a"),
+        when(col("x.rc"), col("o.sid")).otherwise(col("sid")).as("b")): _*)
+      .filter(col("a") =!= col("b") && col("nb") >= alpha &&
+        least(col("na") - col("pa"), col("nb") - col("pb")) >= alpha)
+      .select(col("a"), col("b"), col("na"),
+        size(array_intersect(col("stoks"), col("o.stoks"))).cast("long").as("inter"))
+      .select(col("a"), col("b"), col("inter"),
+        round(col("inter") / col("na").cast("double"), 6).as("containment"))
+      .filter(col("containment") >= threshold)
+    observeCounts(out, counts, maxBucket, observeSalt)
   }
 
   // ---- percolated containment: compiled registry, arriving docs -------
@@ -1273,6 +1589,8 @@ object SetSimJoin {
     * branch is the scale story: the STORED corpus' instance rows are
     * pruned by the (small) batch's prefix-token Bloom, so each audit
     * touches the store in proportion to the batch, not the archive.
+    * A batch within the broadcast bound takes the batch-probe route
+    * instead, as [[incrementalJaccardPairs]] does.
     */
   def incrementalContainmentPairs(spark: org.apache.spark.sql.SparkSession,
                                   path: String, newDocs: DataFrame,
@@ -1284,6 +1602,24 @@ object SetSimJoin {
     require(threshold > 0.0 && threshold <= 1.0,
       s"incrementalContainmentPairs: threshold must be in (0,1], got " +
         s"$threshold")
+    val m = setsManifest(spark, path)
+    collectSetsBatch(m, newDocs, idCol, toksCol, threshold) match {
+      case Some(b) =>
+        containmentBatchProbe(spark, path, m, b, threshold, maxBucket,
+          hotBucketSalt, observeSalt)
+      case None =>
+        incrementalContainmentExchange(spark, path, newDocs, idCol, toksCol,
+          threshold, maxBucket, hotBucketSalt, observeSalt)
+    }
+  }
+
+  /** [[incrementalContainmentPairs]] above the broadcast bound: both
+    * candidate branches meet the batch in exchanges. */
+  private def incrementalContainmentExchange(
+      spark: org.apache.spark.sql.SparkSession, path: String,
+      newDocs: DataFrame, idCol: String, toksCol: String, threshold: Double,
+      maxBucket: Int, hotBucketSalt: Int,
+      observeSalt: Option[String]): DataFrame = {
     val batchCut = graft.plans.Lineage.cut(
       orderedSetsRaw(newDocs, idCol, toksCol))
     val (stored0, bRows, bToks) = loadSetsWithBatchStats(spark, path,
@@ -1335,9 +1671,7 @@ object SetSimJoin {
         when(coalesce(col("w.df"), lit(0L)) > guardCap,
           raise_error(concat(lit("incrementalContainmentPairs: prefix " +
             "token '"), col("w.tok"), lit("' has corpus df "), col("w.df"),
-            lit(s" (> ${guardHint(hotBucketSalt)}" +
-              s"$guardCap); raise the threshold, " +
-              "pre-dedup, or raise maxBucket/hotBucketSalt knowingly"))))
+            lit(" " + guardAdvice(hotBucketSalt, guardCap)))))
           .otherwise(lit(1)).as("guard_ok"))
     // hot set for the salted split: prefix tokens whose UNION-corpus df
     // exceeds maxBucket — the same measure the guard caps (per-token

@@ -142,7 +142,7 @@ object Store {
 
   // ---- write side -------------------------------------------------
 
-  private def integral(t: DataType): Boolean = t match {
+  private[graft] def integral(t: DataType): Boolean = t match {
     case ByteType | ShortType | IntegerType | LongType => true
     case _ => false
   }
@@ -331,20 +331,28 @@ object Store {
     left
   }
 
-  /** Refuses with `collision` when any of `ids` (`rows` rows, id range
-    * `range` when known) is already stored in `table`, deleting the
-    * uncommitted file-sets `written` first. The semi-join against the
-    * stored ids runs only when the ranges overlap or either is unknown
-    * (non-integral ids); disjoint integral ranges need no job. */
-  def requireFresh(spark: SparkSession, path: String, m: Manifest,
-                   table: String, idCol: String, ids: DataFrame, rows: Long,
-                   range: Option[(Long, Long)], written: Seq[FileSet],
-                   collision: String): Unit = {
-    val disjoint = rows == 0 || m.rows(table) == 0 ||
+  /** True when `rows` ids with id range `range` cannot collide with the
+    * ids `m` stores in `table`: either side is empty, or both ranges
+    * are known (integral ids) and do not overlap. Reads the manifest
+    * only. */
+  def disjointIds(m: Manifest, table: String, rows: Long,
+                  range: Option[(Long, Long)]): Boolean =
+    rows == 0 || m.rows(table) == 0 ||
       ((range, m.idRange(table)) match {
         case (Some((lo, hi)), Some((smin, smax))) => hi < smin || lo > smax
         case _ => false
       })
+
+  /** Refuses with `collision` when any of `ids` (`rows` rows, id range
+    * `range` when known) is already stored in `table`, deleting the
+    * uncommitted file-sets `written` first. The semi-join against the
+    * stored ids runs only when [[disjointIds]] cannot tell; disjoint
+    * integral ranges need no job. */
+  def requireFresh(spark: SparkSession, path: String, m: Manifest,
+                   table: String, idCol: String, ids: DataFrame, rows: Long,
+                   range: Option[(Long, Long)], written: Seq[FileSet],
+                   collision: String): Unit = {
+    val disjoint = disjointIds(m, table, rows, range)
     refuseIf(!disjoint && ids.select(col(idCol))
         .join(Store.table(spark, path, m, table).select(col(idCol)), Seq(idCol),
           "left_semi")

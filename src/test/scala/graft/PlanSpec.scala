@@ -1,11 +1,13 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.{RDDScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.scalatest.funsuite.AnyFunSuite
+import graft.operators.SetSimJoin
 import graft.plans.CutPlan
 
 /** Physical-plan invariants (SURVEY.md §4.2): these are the properties
@@ -31,6 +33,22 @@ class PlanSpec extends AnyFunSuite {
     */
   private def planNoExec(name: String): String =
     SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan.toString
+
+  /** The pre-execution plan of an incremental set audit on its exchange
+    * route: 200 stored sets and a 30-set local batch whose tokens are
+    * doubles, a type the batch-probe route does not key, so the small,
+    * sized batch keeps the exchange plan (measured and hinted). */
+  private def exchangeAuditPlan(
+      audit: (String, DataFrame) => DataFrame): String = {
+    import spark.implicits._
+    val rnd = new scala.util.Random(7)
+    def sets(ids: Range) = ids.map(i =>
+        i.toLong -> rnd.shuffle((0 until 60).map(_.toDouble)).take(12))
+      .toDF("doc_id", "toks")
+    val path = java.nio.file.Files.createTempDirectory("plan_inc").toString
+    SetSimJoin.saveSets(sets(0 until 200), "doc_id", "toks", path)
+    audit(path, sets(1000 until 1030)).queryExecution.executedPlan.toString
+  }
 
   private def finalPlan(p: SparkPlan): SparkPlan = p match {
     case a: AdaptiveSparkPlanExec => a.executedPlan
@@ -403,9 +421,22 @@ class PlanSpec extends AnyFunSuite {
     // saltedTokenJoin call: jaccard has one, containment one per
     // candidate branch), so bound the SHJ node count to that budget:
     // any demotion adds an SHJ beyond it and fails here.
-    for ((name, saltedJoins) <- Seq(
-        "q_incremental_setsim" -> 1, "q_incremental_containment" -> 2)) {
-      val s = planNoExec(name)
+    //
+    // The gates' batches fit the broadcast bound, so they take the
+    // batch-probe route: one scan with the batch as literals and no join
+    // to demote. The exchange plans keep the pin through a batch the
+    // route does not key ([[exchangeAuditPlan]]).
+    for (name <- Seq("q_incremental_setsim", "q_incremental_containment")) {
+      val probe = planNoExec(name)
+      assert(!probe.contains("Join"),
+        s"$name: the batch-probe route plans no join:\n$probe")
+    }
+    for ((name, saltedJoins, s) <- Seq(
+        ("incrementalJaccardPairs", 1, exchangeAuditPlan((p, b) =>
+          SetSimJoin.incrementalJaccardPairs(spark, p, b, "doc_id", "toks", 0.8))),
+        ("incrementalContainmentPairs", 2, exchangeAuditPlan((p, b) =>
+          SetSimJoin.incrementalContainmentPairs(spark, p, b, "doc_id", "toks",
+            0.9))))) {
       assert(!s.contains("SortMergeJoin"),
         s"$name: batch-side broadcast hint lost — a join demoted to a " +
         s"sort-merge join:\n$s")

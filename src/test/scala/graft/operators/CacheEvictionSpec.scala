@@ -156,8 +156,55 @@ class CacheEvictionSpec extends AnyFunSuite {
   lifetime("crossShardDedupClusters")(t =>
     Dedup.crossShardDedupClusters(sharded(t), shardCols = Seq("shard")))
 
-  lifetime("incrementalNearDupPairs")(t =>
-    Dedup.incrementalNearDupPairs(batch(t), corpus(t)))
+  // the exchange route: its signature frames are checkpoints
+  lifetime("incrementalNearDupPairs")(t => BatchProbeSpec.exchangeRoute(spark)(
+    Dedup.incrementalNearDupPairs(batch(t), corpus(t))))
+
+  /** For an audit on the batch-probe route, which materializes nothing:
+    * `A = op("a")` reads no checkpoint, `B = op("b")`, then `A` is
+    * consumed and returns `op("a")`'s rows alone; no CacheManager entry
+    * and no persistent RDD is left. */
+  private def probeRoute(name: String)(op: String => DataFrame): Unit =
+    test(s"$name, batch-probe route: nothing materialized, reads after a second call") {
+      spark.sharedState.cacheManager.clearCache()
+      val baseline = persistentIds()
+      val expected = rows(op("a"))
+      assert(expected.nonEmpty, "fixture must give the operator rows")
+      val a = op("a")
+      assert(readIds(a).isEmpty, "the probe route reads no checkpoint")
+      val b = op("b")
+      assert(rows(a) == expected,
+        "a second call must not change the first call's rows")
+      assert(rows(b).nonEmpty)
+      assert(cacheEntries == 0,
+        "consumed results must leave no CacheManager entry")
+      eventually(timeout(Span(60, Seconds)), interval(Span(200, Millis))) {
+        System.gc()
+        assert((persistentIds() -- baseline).isEmpty)
+      }
+    }
+
+  private def storeOf(tag: String, save: String => Unit): String = {
+    val p = java.nio.file.Files.createTempDirectory(s"evict_$tag").toString
+    save(p)
+    p
+  }
+
+  private def toks(df: DataFrame) =
+    df.select($"doc_id", split($"text", " ").as("toks"))
+
+  private lazy val setsPaths = Seq("a", "b").map(t => t -> storeOf(t,
+    SetSimJoin.saveSets(toks(corpus(t)), "doc_id", "toks", _))).toMap
+
+  private lazy val sigPaths = Seq("a", "b").map(t => t -> storeOf(t,
+    Dedup.saveSignatureStore(corpus(t), "doc_id", "text", _))).toMap
+
+  probeRoute("incrementalJaccardPairs")(t =>
+    SetSimJoin.incrementalJaccardPairs(spark, setsPaths(t), toks(batch(t)),
+      "doc_id", "toks", 0.8))
+
+  probeRoute("incrementalNearDupFromStore")(t =>
+    Dedup.incrementalNearDupFromStore(spark, sigPaths(t), batch(t), corpus(t)))
 
   lifetime("packByTokenBudget")(t =>
     Packing.packByTokenBudget(corpus(t), budget = 5L))

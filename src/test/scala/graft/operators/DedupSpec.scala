@@ -168,39 +168,43 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("incrementalNearDupPairs matches near and exact content, skips new") {
-    val corpus = Seq(
-      (1L, "the quick brown fox jumps over the lazy dog again and again"),
-      (2L, "completely different content about spark query engines at scale"))
-      .toDF("doc_id", "text")
-    val batch = Seq(
-      (10L, "the quick brown fox jumps over the lazy dog again and again"),      // exact dup → match 1
-      (11L, "the quick brown fox jumps over the lazy dog again and again zz"),   // appended-token near dup → match 1
-      (12L, "entirely novel text with no relation to anything stored before ok") // new → no match
-    ).toDF("doc_id", "text")
-    val pairs = Dedup.incrementalNearDupPairs(batch, corpus, minJaccard = 0.8)
-      .as[(Long, Long, Double)].collect().toSeq.sortBy(_._1)
-    assert(pairs.map(p => (p._1, p._2)) == Seq((10L, 1L), (11L, 1L)),
-      s"got $pairs")
-    assert(pairs.head._3 == 1.0)
+    BatchProbeSpec.onBothRoutes(spark) {
+      val corpus = Seq(
+        (1L, "the quick brown fox jumps over the lazy dog again and again"),
+        (2L, "completely different content about spark query engines at scale"))
+        .toDF("doc_id", "text")
+      val batch = Seq(
+        (10L, "the quick brown fox jumps over the lazy dog again and again"),      // exact dup → match 1
+        (11L, "the quick brown fox jumps over the lazy dog again and again zz"),   // appended-token near dup → match 1
+        (12L, "entirely novel text with no relation to anything stored before ok") // new → no match
+      ).toDF("doc_id", "text")
+      val pairs = Dedup.incrementalNearDupPairs(batch, corpus, minJaccard = 0.8)
+        .as[(Long, Long, Double)].collect().toSeq.sortBy(_._1)
+      assert(pairs.map(p => (p._1, p._2)) == Seq((10L, 1L), (11L, 1L)),
+        s"got $pairs")
+      assert(pairs.head._3 == 1.0)
+    }
   }
 
   test("incrementalNearDupPairs: precomputed corpus signatures give identical pairs") {
-    val corpus = Seq(
-      (1L, "the quick brown fox jumps over the lazy dog again and again"),
-      (2L, "completely different content about spark query engines at scale"))
-      .toDF("doc_id", "text")
-    val batch = Seq(
-      (10L, "the quick brown fox jumps over the lazy dog again and again"),
-      (12L, "entirely novel text with no relation to anything stored before ok"))
-      .toDF("doc_id", "text")
-    val stored = Dedup.signatures(corpus, "doc_id", "text", 5, 64)
-    val viaStored = Dedup.incrementalNearDupPairs(batch, corpus,
-        minJaccard = 0.8, corpusSigs = Some(stored))
-      .as[(Long, Long, Double)].collect().toSeq.sorted
-    val recomputed = Dedup.incrementalNearDupPairs(batch, corpus,
-        minJaccard = 0.8)
-      .as[(Long, Long, Double)].collect().toSeq.sorted
-    assert(viaStored == recomputed && viaStored.map(p => (p._1, p._2)) == Seq((10L, 1L)))
+    BatchProbeSpec.onBothRoutes(spark) {
+      val corpus = Seq(
+        (1L, "the quick brown fox jumps over the lazy dog again and again"),
+        (2L, "completely different content about spark query engines at scale"))
+        .toDF("doc_id", "text")
+      val batch = Seq(
+        (10L, "the quick brown fox jumps over the lazy dog again and again"),
+        (12L, "entirely novel text with no relation to anything stored before ok"))
+        .toDF("doc_id", "text")
+      val stored = Dedup.signatures(corpus, "doc_id", "text", 5, 64)
+      val viaStored = Dedup.incrementalNearDupPairs(batch, corpus,
+          minJaccard = 0.8, corpusSigs = Some(stored))
+        .as[(Long, Long, Double)].collect().toSeq.sorted
+      val recomputed = Dedup.incrementalNearDupPairs(batch, corpus,
+          minJaccard = 0.8)
+        .as[(Long, Long, Double)].collect().toSeq.sorted
+      assert(viaStored == recomputed && viaStored.map(p => (p._1, p._2)) == Seq((10L, 1L)))
+    }
   }
 
   test("crossShardDedupClusters: stored signature table gives identical clusters") {
@@ -228,8 +232,11 @@ class DedupSpec extends AnyFunSuite {
   test("incrementalNearDupPairs plan: bloom prunes the corpus band stream") {
     val corpus = Seq((1L, "alpha beta gamma delta")).toDF("doc_id", "text")
     val batch = Seq((10L, "alpha beta gamma delta")).toDF("doc_id", "text")
-    val plan = Dedup.incrementalNearDupPairs(batch, corpus)
-      .queryExecution.optimizedPlan.toString
+    // the exchange route's plan: a batch this small takes the
+    // batch-probe route, which has no band stream (BatchProbeSpec)
+    val plan = BatchProbeSpec.exchangeRoute(spark)(
+      Dedup.incrementalNearDupPairs(batch, corpus)
+        .queryExecution.optimizedPlan.toString)
     assert(plan.contains("might_contain"), s"no bloom probe in plan:\n$plan")
     // the candidate pipeline must be planned ONCE: exactly two probe
     // sites (the skew-guard count + the guarded stream, both over the

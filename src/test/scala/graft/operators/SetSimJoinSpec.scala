@@ -129,53 +129,57 @@ class SetSimJoinSpec extends AnyFunSuite {
   }
 
   test("incremental: batch pairs == rebuild restricted to batch members") {
-    val rnd = new scala.util.Random(13)
-    val vocab = (0 until 35).map(i => s"w$i")
-    def mk(ids: Range) = ids.map { id =>
-      val n = 3 + rnd.nextInt(8)
-      id.toLong -> rnd.shuffle(vocab).take(n).mkString(" ")
-    }
-    val stored = mk(0 until 40)
-    val batch = mk(100 until 130)
-    val all = stored ++ batch
-    val path = java.nio.file.Files.createTempDirectory("setsim_inc").toString
-    SetSimJoin.saveSets(toks(stored), "doc_id", "toks", path)
-    for (t <- Seq(0.5, 0.75, 1.0)) {
-      val inc = SetSimJoin.incrementalJaccardPairs(spark, path,
-          toks(batch), "doc_id", "toks", t)
-        .as[(Long, Long, Long, Double)].collect().toSet
-      val batchIds = batch.map(_._1).toSet
-      val expected = brute(all, t)
-        .filter(p => batchIds.contains(p._1) || batchIds.contains(p._2))
-      assert(inc == expected, s"threshold $t")
-      // incremental ∪ prior == rebuild over the union
-      assert(inc ++ brute(stored, t) == brute(all, t), s"threshold $t union")
+    BatchProbeSpec.onBothRoutes(spark) {
+      val rnd = new scala.util.Random(13)
+      val vocab = (0 until 35).map(i => s"w$i")
+      def mk(ids: Range) = ids.map { id =>
+        val n = 3 + rnd.nextInt(8)
+        id.toLong -> rnd.shuffle(vocab).take(n).mkString(" ")
+      }
+      val stored = mk(0 until 40)
+      val batch = mk(100 until 130)
+      val all = stored ++ batch
+      val path = java.nio.file.Files.createTempDirectory("setsim_inc").toString
+      SetSimJoin.saveSets(toks(stored), "doc_id", "toks", path)
+      for (t <- Seq(0.5, 0.75, 1.0)) {
+        val inc = SetSimJoin.incrementalJaccardPairs(spark, path,
+            toks(batch), "doc_id", "toks", t)
+          .as[(Long, Long, Long, Double)].collect().toSet
+        val batchIds = batch.map(_._1).toSet
+        val expected = brute(all, t)
+          .filter(p => batchIds.contains(p._1) || batchIds.contains(p._2))
+        assert(inc == expected, s"threshold $t")
+        // incremental ∪ prior == rebuild over the union
+        assert(inc ++ brute(stored, t) == brute(all, t), s"threshold $t union")
+      }
     }
   }
 
   test("incremental: append grows the stored state; collisions rejected") {
-    val rows1 = Seq((1L, "a b c"), (2L, "d e f"))
-    val rows2 = Seq((3L, "a b c"), (4L, "g h i"))
-    val path = java.nio.file.Files.createTempDirectory("setsim_app").toString
-    SetSimJoin.saveSets(toks(rows1), "doc_id", "toks", path)
-    SetSimJoin.appendSets(spark, path, toks(rows2), "doc_id", "toks")
-    // a later batch pairs against BOTH stored generations
-    val inc = SetSimJoin.incrementalJaccardPairs(spark, path,
-        toks(Seq((9L, "a b c"))), "doc_id", "toks", 1.0)
-      .as[(Long, Long, Long, Double)].collect().toSet
-    assert(inc.map(p => (p._1, p._2)) == Set((1L, 9L), (3L, 9L)))
-    intercept[IllegalArgumentException] {
-      SetSimJoin.appendSets(spark, path, toks(Seq((3L, "zz"))),
-        "doc_id", "toks")
+    BatchProbeSpec.onBothRoutes(spark) {
+      val rows1 = Seq((1L, "a b c"), (2L, "d e f"))
+      val rows2 = Seq((3L, "a b c"), (4L, "g h i"))
+      val path = java.nio.file.Files.createTempDirectory("setsim_app").toString
+      SetSimJoin.saveSets(toks(rows1), "doc_id", "toks", path)
+      SetSimJoin.appendSets(spark, path, toks(rows2), "doc_id", "toks")
+      // a later batch pairs against BOTH stored generations
+      val inc = SetSimJoin.incrementalJaccardPairs(spark, path,
+          toks(Seq((9L, "a b c"))), "doc_id", "toks", 1.0)
+        .as[(Long, Long, Long, Double)].collect().toSet
+      assert(inc.map(p => (p._1, p._2)) == Set((1L, 9L), (3L, 9L)))
+      intercept[IllegalArgumentException] {
+        SetSimJoin.appendSets(spark, path, toks(Seq((3L, "zz"))),
+          "doc_id", "toks")
+      }
+      // foreign manifests are rejected loudly
+      val bad = java.nio.file.Files.createTempDirectory("setsim_bad").toString
+      SetSimJoin.saveSets(toks(rows1), "doc_id", "toks", bad)
+      graft.store.StoreTestKit.stampForeign(spark, bad, "other-v9")
+      val ex = intercept[IllegalArgumentException] {
+        SetSimJoin.loadSets(spark, bad)
+      }
+      assert(ex.getMessage.contains("rebuild"))
     }
-    // foreign manifests are rejected loudly
-    val bad = java.nio.file.Files.createTempDirectory("setsim_bad").toString
-    SetSimJoin.saveSets(toks(rows1), "doc_id", "toks", bad)
-    graft.store.StoreTestKit.stampForeign(spark, bad, "other-v9")
-    val ex = intercept[IllegalArgumentException] {
-      SetSimJoin.loadSets(spark, bad)
-    }
-    assert(ex.getMessage.contains("rebuild"))
   }
 
   test("incremental audits refuse a foreign manifest") {
@@ -212,56 +216,60 @@ class SetSimJoinSpec extends AnyFunSuite {
 
   test("incremental containment: batch pairs == rebuild restricted; " +
        "union with prior == rebuild") {
-    val rnd = new scala.util.Random(23)
-    val vocab = (0 until 35).map(i => s"w$i")
-    def mk(ids: Range) = ids.map { id =>
-      val n = 2 + rnd.nextInt(9)
-      id.toLong -> rnd.shuffle(vocab).take(n).mkString(" ")
-    }
-    val stored = mk(0 until 40)
-    // batch includes genuine containment shapes: subsets of stored docs
-    val batch = mk(100 until 120) ++ stored.take(5).map { case (id, s) =>
-      (id + 500L) -> s.split(" ").take(math.max(1, s.split(" ").length / 2))
-        .mkString(" ")
-    }
-    val all = stored ++ batch
-    val path =
-      java.nio.file.Files.createTempDirectory("setsim_incc").toString
-    SetSimJoin.saveSets(toks(stored), "doc_id", "toks", path)
-    for (t <- Seq(0.5, 0.75, 0.9, 1.0)) {
-      val inc = SetSimJoin.incrementalContainmentPairs(spark, path,
-          toks(batch), "doc_id", "toks", t)
-        .as[(Long, Long, Long, Double)].collect().toSet
-      val batchIds = batch.map(_._1).toSet
-      val expected = bruteContainment(all, t)
-        .filter(p => batchIds.contains(p._1) || batchIds.contains(p._2))
-      assert(inc == expected, s"threshold $t")
-      // incremental ∪ prior == rebuild over the union (directed)
-      assert(inc ++ bruteContainment(stored, t) == bruteContainment(all, t),
-        s"threshold $t union")
+    BatchProbeSpec.onBothRoutes(spark) {
+      val rnd = new scala.util.Random(23)
+      val vocab = (0 until 35).map(i => s"w$i")
+      def mk(ids: Range) = ids.map { id =>
+        val n = 2 + rnd.nextInt(9)
+        id.toLong -> rnd.shuffle(vocab).take(n).mkString(" ")
+      }
+      val stored = mk(0 until 40)
+      // batch includes genuine containment shapes: subsets of stored docs
+      val batch = mk(100 until 120) ++ stored.take(5).map { case (id, s) =>
+        (id + 500L) -> s.split(" ").take(math.max(1, s.split(" ").length / 2))
+          .mkString(" ")
+      }
+      val all = stored ++ batch
+      val path =
+        java.nio.file.Files.createTempDirectory("setsim_incc").toString
+      SetSimJoin.saveSets(toks(stored), "doc_id", "toks", path)
+      for (t <- Seq(0.5, 0.75, 0.9, 1.0)) {
+        val inc = SetSimJoin.incrementalContainmentPairs(spark, path,
+            toks(batch), "doc_id", "toks", t)
+          .as[(Long, Long, Long, Double)].collect().toSet
+        val batchIds = batch.map(_._1).toSet
+        val expected = bruteContainment(all, t)
+          .filter(p => batchIds.contains(p._1) || batchIds.contains(p._2))
+        assert(inc == expected, s"threshold $t")
+        // incremental ∪ prior == rebuild over the union (directed)
+        assert(inc ++ bruteContainment(stored, t) == bruteContainment(all, t),
+          s"threshold $t union")
+      }
     }
   }
 
   test("incremental joins reject batch-stored id collisions eagerly — " +
        "even when the colliding docs are identical (empty pair output)") {
-    val path =
-      java.nio.file.Files.createTempDirectory("setsim_coll").toString
-    SetSimJoin.saveSets(toks(Seq((1L, "a b c"), (2L, "d e f"))),
-      "doc_id", "toks", path)
-    // the dangerous case: same id, same content — pair output would be
-    // EMPTY (a=b pairs are filtered), so an output-riding lazy guard
-    // would never fire; the eager check must
-    val dup = toks(Seq((1L, "a b c")))
-    val e1 = intercept[IllegalArgumentException] {
-      SetSimJoin.incrementalJaccardPairs(spark, path, dup,
-        "doc_id", "toks", 0.8)
+    BatchProbeSpec.onBothRoutes(spark) {
+      val path =
+        java.nio.file.Files.createTempDirectory("setsim_coll").toString
+      SetSimJoin.saveSets(toks(Seq((1L, "a b c"), (2L, "d e f"))),
+        "doc_id", "toks", path)
+      // the dangerous case: same id, same content — pair output would be
+      // EMPTY (a=b pairs are filtered), so an output-riding lazy guard
+      // would never fire; the eager check must
+      val dup = toks(Seq((1L, "a b c")))
+      val e1 = intercept[IllegalArgumentException] {
+        SetSimJoin.incrementalJaccardPairs(spark, path, dup,
+          "doc_id", "toks", 0.8)
+      }
+      assert(e1.getMessage.contains("collide"))
+      val e2 = intercept[IllegalArgumentException] {
+        SetSimJoin.incrementalContainmentPairs(spark, path, dup,
+          "doc_id", "toks", 0.8)
+      }
+      assert(e2.getMessage.contains("collide"))
     }
-    assert(e1.getMessage.contains("collide"))
-    val e2 = intercept[IllegalArgumentException] {
-      SetSimJoin.incrementalContainmentPairs(spark, path, dup,
-        "doc_id", "toks", 0.8)
-    }
-    assert(e2.getMessage.contains("collide"))
   }
 
   // ---- hot-bucket salted split (graceful degradation) ------------------
@@ -392,44 +400,46 @@ class SetSimJoinSpec extends AnyFunSuite {
   }
 
   test("salted split: incremental joins match brute where unsalted raises") {
-    val stored = hotCorpus(25) // ids 0..24, shared hotmark + fillers
-    val batch = (0 until 15).map(i =>
-      (1000L + i) -> (s"hotmark v$i " + (1 to 8).map(j => s"f$j")
-        .mkString(" ")))
-    val all = stored ++ batch
-    val batchIds = batch.map(_._1).toSet
-    val path = java.nio.file.Files.createTempDirectory("setsim_hsalt")
-      .toString
-    SetSimJoin.saveSets(toks(stored), "doc_id", "toks", path)
-    def msgs(t: Throwable): Seq[String] =
-      Option(t).toSeq.flatMap(e =>
-        Option(e.getMessage).toSeq ++ msgs(e.getCause))
-    // salting OFF: the shared fillers collect 40-doc buckets > maxBucket
-    val ex1 = intercept[Exception] {
-      SetSimJoin.incrementalJaccardPairs(spark, path, toks(batch),
-        "doc_id", "toks", 0.8, maxBucket = 10, hotBucketSalt = 0).collect()
+    BatchProbeSpec.onBothRoutes(spark) {
+      val stored = hotCorpus(25) // ids 0..24, shared hotmark + fillers
+      val batch = (0 until 15).map(i =>
+        (1000L + i) -> (s"hotmark v$i " + (1 to 8).map(j => s"f$j")
+          .mkString(" ")))
+      val all = stored ++ batch
+      val batchIds = batch.map(_._1).toSet
+      val path = java.nio.file.Files.createTempDirectory("setsim_hsalt")
+        .toString
+      SetSimJoin.saveSets(toks(stored), "doc_id", "toks", path)
+      def msgs(t: Throwable): Seq[String] =
+        Option(t).toSeq.flatMap(e =>
+          Option(e.getMessage).toSeq ++ msgs(e.getCause))
+      // salting OFF: the shared fillers collect 40-doc buckets > maxBucket
+      val ex1 = intercept[Exception] {
+        SetSimJoin.incrementalJaccardPairs(spark, path, toks(batch),
+          "doc_id", "toks", 0.8, maxBucket = 10, hotBucketSalt = 0).collect()
+      }
+      assert(msgs(ex1).exists(_.contains("maxBucket")))
+      // adaptive default: per-token salt from the union's bucket counts
+      val incJ = SetSimJoin.incrementalJaccardPairs(spark, path, toks(batch),
+          "doc_id", "toks", 0.8, maxBucket = 10)
+        .as[(Long, Long, Long, Double)].collect()
+      assert(incJ.length == incJ.toSet.size, "salted join duplicated pairs")
+      assert(incJ.toSet == brute(all, 0.8)
+        .filter(p => batchIds.contains(p._1) || batchIds.contains(p._2)))
+      assert(incJ.nonEmpty)
+      val ex2 = intercept[Exception] {
+        SetSimJoin.incrementalContainmentPairs(spark, path, toks(batch),
+          "doc_id", "toks", 0.9, maxBucket = 10, hotBucketSalt = 0).collect()
+      }
+      assert(msgs(ex2).exists(_.contains("maxBucket")))
+      val incC = SetSimJoin.incrementalContainmentPairs(spark, path,
+          toks(batch), "doc_id", "toks", 0.9, maxBucket = 10)
+        .as[(Long, Long, Long, Double)].collect()
+      assert(incC.length == incC.toSet.size, "salted join duplicated pairs")
+      assert(incC.toSet == bruteContainment(all, 0.9)
+        .filter(p => batchIds.contains(p._1) || batchIds.contains(p._2)))
+      assert(incC.nonEmpty)
     }
-    assert(msgs(ex1).exists(_.contains("maxBucket")))
-    // adaptive default: per-token salt from the union's bucket counts
-    val incJ = SetSimJoin.incrementalJaccardPairs(spark, path, toks(batch),
-        "doc_id", "toks", 0.8, maxBucket = 10)
-      .as[(Long, Long, Long, Double)].collect()
-    assert(incJ.length == incJ.toSet.size, "salted join duplicated pairs")
-    assert(incJ.toSet == brute(all, 0.8)
-      .filter(p => batchIds.contains(p._1) || batchIds.contains(p._2)))
-    assert(incJ.nonEmpty)
-    val ex2 = intercept[Exception] {
-      SetSimJoin.incrementalContainmentPairs(spark, path, toks(batch),
-        "doc_id", "toks", 0.9, maxBucket = 10, hotBucketSalt = 0).collect()
-    }
-    assert(msgs(ex2).exists(_.contains("maxBucket")))
-    val incC = SetSimJoin.incrementalContainmentPairs(spark, path,
-        toks(batch), "doc_id", "toks", 0.9, maxBucket = 10)
-      .as[(Long, Long, Long, Double)].collect()
-    assert(incC.length == incC.toSet.size, "salted join duplicated pairs")
-    assert(incC.toSet == bruteContainment(all, 0.9)
-      .filter(p => batchIds.contains(p._1) || batchIds.contains(p._2)))
-    assert(incC.nonEmpty)
   }
 
   test("salt events are OBSERVABLE without the abort (VERDICT r17 #4)") {
