@@ -1,7 +1,5 @@
 package graft.operators
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -129,6 +127,11 @@ object SetSimJoin {
   private def guardHint(hotBucketSalt: Int): String =
     if (hotBucketSalt != 0) "salted cap " else ""
 
+  /** Prefix length n − ⌈t·n⌉ + 1, the ⌈⌉ taken over t·n − 1e-9 (the
+    * [[jaccardPairs]] epsilon). */
+  private def prefixLen(n: Column, threshold: Double): Column =
+    (n - ceil(lit(threshold) * n - lit(1e-9)) + 1).cast("int")
+
   /** The skew guard's refusal after "… collects c docs ". */
   private def guardAdvice(hotBucketSalt: Int, guardCap: Long): String =
     s"(> ${guardHint(hotBucketSalt)}$guardCap); raise the threshold, " +
@@ -229,9 +232,8 @@ object SetSimJoin {
     // prefix rows are (pos, tok, sid, n) ONLY — the array stays behind
     // in `ranked` and is fetched per-side AFTER candidate pruning
     val pref = ranked.select(col("sid"), col("n"),
-      posexplode(slice(col("stoks"), lit(1),
-        (col("n") - ceil(lit(threshold) * col("n") - lit(1e-9)) + 1)
-          .cast("int"))).as(Seq("pos", "tok")))
+      posexplode(slice(col("stoks"), lit(1), prefixLen(col("n"), threshold)))
+        .as(Seq("pos", "tok")))
     // Skew guard: a prefix bucket larger than maxBucket is a loud
     // EXECUTION-TIME error, never a silent quadratic blowup — and never
     // a silent drop either ([[Dedup]]'s anti-join cap is correct for
@@ -357,9 +359,8 @@ object SetSimJoin {
         .select(col("sid"), col("stoks"), size(col("stoks")).as("n")))
     // contained-side prefix (epsilon ceiling — the jaccardPairs lesson)
     val pref = ranked.select(col("sid"), col("n"),
-      posexplode(slice(col("stoks"), lit(1),
-        (col("n") - ceil(lit(threshold) * col("n") - lit(1e-9)) + 1)
-          .cast("int"))).as(Seq("pos", "tok")))
+      posexplode(slice(col("stoks"), lit(1), prefixLen(col("n"), threshold)))
+        .as(Seq("pos", "tok")))
     // Container side: FULL slim instance rows with positions — but
     // BLOOM-PRUNED before the candidate exchange when the prefix frame
     // will not broadcast. Only instances whose token appears in SOME
@@ -814,9 +815,8 @@ object SetSimJoin {
     val batch = batchCut.filter(col("n") >= 1)
     val union = graft.plans.Lineage.cut(stored.unionByName(batch))
     def prefixes(ranked: DataFrame) = ranked.select(col("sid"), col("n"),
-      posexplode(slice(col("stoks"), lit(1),
-        (col("n") - ceil(lit(threshold) * col("n") - lit(1e-9)) + 1)
-          .cast("int"))).as(Seq("pos", "tok")))
+      posexplode(slice(col("stoks"), lit(1), prefixLen(col("n"), threshold)))
+        .as(Seq("pos", "tok")))
     val prefAll = prefixes(union)
     val prefBatch = prefixes(batch)
     // Guard/salt counts over batch-RELEVANT buckets only (VERDICT r16
@@ -928,10 +928,12 @@ object SetSimJoin {
   // ---- batch-probe route of the incremental audits ---------------------
 
   /** A batch held on the driver ([[BatchProbe]]): its (sid, stoks, n)
-    * rows with n ≥ 1, each with the xxhash64 of its tokens. */
-  private final case class SetsBatch(rows: IndexedSeq[Row], sidType: DataType,
-                                     tokType: DataType, threshold: Double) {
-    def sid(i: Int): Any = rows(i).get(0)
+    * rows with n ≥ 1, each with the xxhash64 of its tokens, and the ids
+    * of all its rows (the collision check's id set, which the exchange
+    * plan also takes before the n ≥ 1 filter). */
+  private final case class SetsBatch(rows: IndexedSeq[Row], ids: Seq[Any],
+                                     sidType: DataType, tokType: DataType,
+                                     threshold: Double) {
     def toks(i: Int): Seq[Any] = rows(i).getSeq[Any](1)
     def n(i: Int): Int = rows(i).getInt(2)
     private def hashes(i: Int): Seq[Long] = rows(i).getSeq[Long](3)
@@ -939,16 +941,24 @@ object SetSimJoin {
     def prefixLen(i: Int): Int = n(i) - math.ceil(threshold * n(i) - 1e-9).toInt + 1
     def prefix(i: Int): Seq[Any] = toks(i).take(prefixLen(i))
 
-    private val schema = StructType(Seq(StructField("sid", sidType),
-      StructField("stoks", ArrayType(tokType)), StructField("n", IntegerType)))
-    private def slim = rows.map(r => Row(r.get(0), r.get(1), r.get(2)))
-
-    /** The (sid, stoks, n) rows as a local relation. */
-    def frame(spark: org.apache.spark.sql.SparkSession): DataFrame =
-      spark.createDataFrame(slim.asJava, schema)
-
     /** The (sid, stoks, n) rows as one array literal, row i at i + 1. */
-    def literal: Column = BatchProbe.data(slim, ArrayType(schema))
+    lazy val literal: Column = BatchProbe.data(
+      rows.map(r => Row(r.get(0), r.get(1), r.get(2))),
+      ArrayType(StructType(Seq(StructField("sid", sidType),
+        StructField("stoks", ArrayType(tokType)), StructField("n", IntegerType)))))
+
+    /** The (sid, stoks, n) rows, read out of [[literal]] over a range.
+      * Not a local relation: Spark folds the projections above a local
+      * relation into it (ConvertToLocalRelation), so the probe of every
+      * batch row would run in the optimizer, interpreted, on the driver
+      * (measured on `q_setsim_removed` at sf0.1: most of its driver
+      * time). */
+    def frame(spark: org.apache.spark.sql.SparkSession): DataFrame = {
+      val n = rows.length
+      spark.range(0, n, 1, math.max(1, math.min(n, spark.sparkContext.defaultParallelism)))
+        .select(element_at(literal, col("id").cast("int") + 1).as("r"))
+        .select(col("r.sid"), col("r.stoks"), col("r.n"))
+    }
 
     /** An index from each token among the first `len(i)` of row i to
       * its postings (i, p), p its 0-based position in row i. */
@@ -966,11 +976,6 @@ object SetSimJoin {
   private val PostingsType = ArrayType(StructType(Seq(
     StructField("i", IntegerType), StructField("p", IntegerType))))
 
-  /** Prefix length n − ⌈t·n⌉ + 1, the ⌈⌉ taken over t·n − 1e-9 (the
-    * [[jaccardPairs]] epsilon). */
-  private def prefixLen(n: Column, threshold: Double): Column =
-    (n - ceil(lit(threshold) * n - lit(1e-9)) + 1).cast("int")
-
   /** The batch's rows in one collect, when the batch is planned within
     * the broadcast bound and its measured slim bytes (24 B per row and
     * per token, the exchange plan's `fitsBroadcast` measure) fit it too;
@@ -987,14 +992,16 @@ object SetSimJoin {
       val tokType = elem(sets.schema)
       if (!BatchProbe.keyable(tokType) || tokType != elem(m.schemas(SetsTable))) None
       else {
-        val rows = BatchProbe.collectCapped(sets.select(col("sid"), col("stoks"),
+        val all = BatchProbe.collectCapped(sets.select(col("sid"), col("stoks"),
             col("n"), transform(col("stoks"), t => xxhash64(t)).as("th")),
             bound / 24 + 1)
-          .filter(_.getInt(2) >= 1)
-        val slimBytes = 24L * (rows.length + rows.map(_.getInt(2).toLong).sum)
+        val rows = all.filter(_.getInt(2) >= 1)
+        // every collected row counts, so a collect cut short by the
+        // per-partition cap always exceeds the bound
+        val slimBytes = 24L * (all.length + rows.map(_.getInt(2).toLong).sum)
         if (slimBytes > bound) None
-        else Some(SetsBatch(rows.toIndexedSeq, sets.schema("sid").dataType,
-          tokType, threshold))
+        else Some(SetsBatch(rows.toIndexedSeq, all.map(_.get(0)).toSeq,
+          sets.schema("sid").dataType, tokType, threshold))
       }
     }
 
@@ -1006,7 +1013,7 @@ object SetSimJoin {
   private def requireDisjointBatch(spark: org.apache.spark.sql.SparkSession,
                                    path: String, m: Manifest, b: SetsBatch,
                                    op: String): Unit = {
-    val ids = b.rows.indices.map(b.sid).filter(_ != null)
+    val ids = b.ids.filter(_ != null)
     val range =
       if (ids.isEmpty || !Store.integral(b.sidType)) None
       else {
@@ -1632,9 +1639,8 @@ object SetSimJoin {
     val batch = batchCut.filter(col("n") >= 1)
     val union = graft.plans.Lineage.cut(stored.unionByName(batch))
     def prefixes(ranked: DataFrame) = ranked.select(col("sid"), col("n"),
-      posexplode(slice(col("stoks"), lit(1),
-        (col("n") - ceil(lit(threshold) * col("n") - lit(1e-9)) + 1)
-          .cast("int"))).as(Seq("pos", "tok")))
+      posexplode(slice(col("stoks"), lit(1), prefixLen(col("n"), threshold)))
+        .as(Seq("pos", "tok")))
     def fullInst(ranked: DataFrame) = ranked.select(col("sid"), col("n"),
       posexplode(col("stoks")).as(Seq("pos", "tok")))
     // value-order prefixes are per-doc facts, so prefixes(union) ⊇

@@ -73,4 +73,17 @@ class QuerySuiteSpec extends AnyFunSuite {
     val bad = out.filter("latitude IS NULL OR longitude IS NULL OR latitude <> c_custkey").count()
     assert(bad == 0)
   }
+
+  test("q_incremental_* gates answer the same rows on both audit routes") {
+    // the batch-probe route (a small batch, the session default) and the
+    // exchange route (broadcasts off)
+    def rows(q: String) =
+      SparkEntry.queries(q)(spark, sf).collect().map(_.toString).toSeq.sorted
+    for (q <- Seq("q_incremental_setsim", "q_incremental_neardup",
+                  "q_incremental_containment")) {
+      val probe = rows(q)
+      assert(probe.nonEmpty, q)
+      assert(probe == graft.operators.BatchProbeSpec.exchangeRoute(spark)(rows(q)), q)
+    }
+  }
 }
